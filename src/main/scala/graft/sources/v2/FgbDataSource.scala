@@ -1,19 +1,16 @@
 package graft.sources.v2
 
 import graft.geom.Envelope
-import graft.sources.{FlatGeobuf, GeoJson, GeoJsonIngest}
-import graft.sources.GeoJsonIngest.PropCell
+import graft.sources.FlatGeobuf
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.metric.CustomMetric
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
 
@@ -55,13 +52,8 @@ object FgbTable {
     * section — the format's own stable id, identical across pruned and
     * full scans (like geomedea's FeatureLocation).
     */
-  final case class FgbRow(source_file: String, feature_offset: Long,
-                          wkb: Array[Byte], props: Seq[PropCell],
-                          prop_keys: Seq[String], prop_vals: Seq[String],
-                          min_lng: Int, min_lat: Int, max_lng: Int, max_lat: Int)
-
-  def rowEncoder: ExpressionEncoder[FgbRow] = ExpressionEncoder[FgbRow]()
-  val Schema: StructType = rowEncoder.schema
+  val Schema: StructType =
+    FeatureRows.tableSchema(StructField("feature_offset", LongType, nullable = false))
 
   /** Surviving files with length and feature count. Fast path: a
     * directory written by the v2 writer carries the same `_manifest.tsv`
@@ -142,15 +134,7 @@ class FgbTable(path: String, tableSchema: StructType) extends Table with Support
   }
   override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
   : org.apache.spark.sql.connector.write.WriteBuilder = {
-    val s = info.schema()
-    require(s.fieldNames.contains("wkb") && s.fieldNames.contains("props"),
-      s"flatgeobuf write needs wkb + props columns; got ${s.fieldNames.mkString(",")}")
-    val expected = GeomedeaTable.Schema("props").dataType.catalogString
-    require(s(s.fieldIndex("props")).dataType.catalogString == expected,
-      s"props column must be array<PropCell> ($expected); " +
-        s"got ${s(s.fieldIndex("props")).dataType.catalogString}")
-    require(s(s.fieldIndex("wkb")).dataType == org.apache.spark.sql.types.BinaryType,
-      s"wkb column must be binary; got ${s(s.fieldIndex("wkb")).dataType.catalogString}")
+    FeatureRows.requireWritable("flatgeobuf", info.schema())
     new FgbWriteBuilder(path, info)
   }
 }
@@ -301,9 +285,6 @@ class FgbReaderFactory(bbox: Option[Envelope], required: StructType,
     val part = partition.asInstanceOf[GeomedeaPartition]
     val file = part.file
     new PartitionReader[InternalRow] {
-      private val serializer = FgbTable.rowEncoder.createSerializer()
-      private val full = FgbTable.Schema
-      private val proj = required.fields.map(f => (full.fieldIndex(f.name), f.dataType))
       private var bytesDecoded = 0L
       private var rowsDecoded = 0L
       private var rangedScan: FlatGeobuf.RangedFgbScan = null
@@ -315,8 +296,7 @@ class FgbReaderFactory(bbox: Option[Envelope], required: StructType,
       // declared BEFORE iter (class-body init order): the stream scans
       // capture it at construction. geometry-only block decode skips the
       // props vector copy + parse when no property column is projected.
-      private val geomOnly = !Set("props", "prop_keys", "prop_vals")
-        .exists(required.fieldNames.contains)
+      private val geomOnly = FeatureRows.geomOnly(required)
 
       private val iter = {
         val len = fs.getFileStatus(p).getLen
@@ -354,57 +334,17 @@ class FgbReaderFactory(bbox: Option[Envelope], required: StructType,
         limit.fold(raw)(raw.take)
       }
 
-      // Column-pruned DIRECT row building — same shape as the geomedea
-      // reader (guide §4): skip FgbRow + the whole-row encoder unless the
-      // nested `props` column is actually required.
-      private val fileUtf8 = org.apache.spark.unsafe.types.UTF8String.fromString(file)
-      private val needsEnv = Set("min_lng", "min_lat", "max_lng", "max_lat")
-        .exists(required.fieldNames.contains)
-      private val directGens:
-          Array[((Long, graft.codec.FeatureCodec.Feature), Envelope) => Any] =
-        if (required.fieldNames.contains("props")) null
-        else required.fields
-          .map[((Long, graft.codec.FeatureCodec.Feature), Envelope) => Any] {
-          f => f.name match {
-            case "source_file"    => (_, _) => fileUtf8
-            case "feature_offset" => (r, _) => r._1
-            case "wkb"            => (r, _) => graft.geom.Wkb.write(r._2.geom)
-            case "prop_keys"      => (r, _) =>
-              new org.apache.spark.sql.catalyst.util.GenericArrayData(
-                r._2.props.map(p =>
-                  org.apache.spark.unsafe.types.UTF8String.fromString(p._1)).toArray[Any])
-            case "prop_vals"      => (r, _) =>
-              new org.apache.spark.sql.catalyst.util.GenericArrayData(
-                r._2.props.map(p => org.apache.spark.unsafe.types.UTF8String.fromString(
-                  GeoJson.propValueString(p._2))).toArray[Any])
-            case "min_lng"        => (_, e) => e.minLng
-            case "min_lat"        => (_, e) => e.minLat
-            case "max_lng"        => (_, e) => e.maxLng
-            case "max_lat"        => (_, e) => e.maxLat
-            case other => throw new IllegalStateException(s"unknown fgb column $other")
-          }
-        }
+      // column-pruned direct row building, shared with the geomedea reader
+      private val toRow = FeatureRows.rowBuilder[Long](required, file) {
+        case "feature_offset" => off => off
+      }
 
       private var current: InternalRow = _
       override def next(): Boolean = {
         if (!iter.hasNext) return false
         val (off, f) = iter.next()
         rowsDecoded += 1
-        current =
-          if (directGens != null) {
-            val env = if (needsEnv) f.geom.envelope else null
-            new GenericInternalRow(directGens.map(g => g((off, f), env)))
-          } else {
-            val row = FgbTable.FgbRow(file, off, graft.geom.Wkb.write(f.geom),
-              f.props.map { case (k, v) => GeoJsonIngest.toCell(k, v) },
-              f.props.map(_._1),
-              f.props.map { case (_, v) => GeoJson.propValueString(v) },
-              f.geom.envelope.minLng, f.geom.envelope.minLat,
-              f.geom.envelope.maxLng, f.geom.envelope.maxLat)
-            val fullRow = serializer(row)
-            if (proj.length == full.length) fullRow.copy()
-            else new GenericInternalRow(proj.map { case (i, dt) => fullRow.get(i, dt) })
-          }
+        current = toRow(off, f)
         true
       }
       override def get(): InternalRow = current

@@ -1,13 +1,11 @@
 package graft.sources.v2
 
 import graft.codec.FeatureCodec.Feature
-import graft.sources.{FlatGeobuf, GeoJsonIngest}
+import graft.sources.FlatGeobuf
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.types.{BinaryType, StructType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
 
 /** Distributed `.fgb` writer: `df.write.format("flatgeobuf")
@@ -135,9 +133,6 @@ class FgbWriterFactory(path: String, schema: StructType, nodeSize: Int,
     new DataWriter[InternalRow] {
       private val wkbIdx = schema.fieldIndex("wkb")
       private val propsIdx = schema.fieldIndex("props")
-      private val propsType = schema(propsIdx).dataType
-      private val enc = ExpressionEncoder[GeomedeaWriterFactory.WRow]()
-      private val deser = enc.resolveAndBind().createDeserializer()
       // spill-backed (FlatGeobuf.FgbSpool): features spool to local temp
       // files and page out streaming, so task heap stays O(index + one
       // block) regardless of shard size
@@ -148,12 +143,9 @@ class FgbWriterFactory(path: String, schema: StructType, nodeSize: Int,
       private val tmp = s"_tmp_$fin.tmp"
       private var wroteTmp = false
 
-      override def write(record: InternalRow): Unit = {
-        val w = deser(new GenericInternalRow(Array[Any](
-          record.get(wkbIdx, BinaryType), record.get(propsIdx, propsType))))
-        spool.add(Feature(graft.geom.Wkb.read(w.wkb),
-          w.props.map(GeoJsonIngest.fromCell).toVector))
-      }
+      override def write(record: InternalRow): Unit =
+        spool.add(Feature(graft.geom.Wkb.read(record.getBinary(wkbIdx)),
+          FeatureRows.propsOf(record.getArray(propsIdx))))
 
       override def commit(): WriterCommitMessage = {
         val written = spool.commit { total =>

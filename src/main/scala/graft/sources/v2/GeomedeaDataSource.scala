@@ -1,19 +1,17 @@
 package graft.sources.v2
 
 import graft.geom.Envelope
-import graft.sources.{GeoJson, GeoJsonIngest, GeomedeaFile}
-import graft.sources.GeoJsonIngest.PropCell
+import graft.sources.GeomedeaFile
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.metric.CustomMetric
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
 
@@ -63,18 +61,13 @@ class GeomedeaDataSource extends TableProvider with DataSourceRegister {
 }
 
 object GeomedeaTable {
-  /** Output row: same surface as GeomedeaSpark.readDir + envelope stats.
-    * (page_offset, feature_offset) is the format's own stable
-    * FeatureLocation (`format.rs:4-10`), identical across pruned and full
-    * scans.
+  /** Output row ([[FeatureRows.tableSchema]]): (page_offset,
+    * feature_offset) is the format's own stable FeatureLocation
+    * (`format.rs:4-10`), identical across pruned and full scans.
     */
-  final case class GmRow(source_file: String, page_offset: Long, feature_offset: Int,
-                         wkb: Array[Byte], props: Seq[PropCell],
-                         prop_keys: Seq[String], prop_vals: Seq[String],
-                         min_lng: Int, min_lat: Int, max_lng: Int, max_lat: Int)
-
-  def rowEncoder: ExpressionEncoder[GmRow] = ExpressionEncoder[GmRow]()
-  val Schema: StructType = rowEncoder.schema
+  val Schema: StructType = FeatureRows.tableSchema(
+    StructField("page_offset", LongType, nullable = false),
+    StructField("feature_offset", IntegerType, nullable = false))
 
   val World: Envelope = Envelope(Int.MinValue, Int.MinValue, Int.MaxValue, Int.MaxValue)
 
@@ -229,7 +222,6 @@ object HeaderStat {
   */
 class GeomedeaStatsScan(path: String, stats: Seq[HeaderStat])
     extends Scan with Batch with SupportsReportStatistics {
-  import org.apache.spark.sql.types.{IntegerType, LongType, StructField}
   override def readSchema(): StructType = StructType(stats.map {
     case HeaderStat.CountRows => StructField("count", LongType, nullable = false)
     // min/max over zero rows is NULL (an empty lake has no extent)
@@ -287,17 +279,7 @@ class GeomedeaTable(path: String, tableSchema: StructType = GeomedeaTable.Schema
   }
   override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
   : org.apache.spark.sql.connector.write.WriteBuilder = {
-    val s = info.schema()
-    require(s.fieldNames.contains("wkb") && s.fieldNames.contains("props"),
-      s"geomedea write needs wkb + props columns; got ${s.fieldNames.mkString(",")}")
-    // fail structurally-wrong props at PLANNING (a clean driver error),
-    // not as a retried task failure on the cluster
-    val expected = GeomedeaTable.Schema("props").dataType.catalogString
-    require(s(s.fieldIndex("props")).dataType.catalogString == expected,
-      s"props column must be array<PropCell> ($expected); " +
-        s"got ${s(s.fieldIndex("props")).dataType.catalogString}")
-    require(s(s.fieldIndex("wkb")).dataType == org.apache.spark.sql.types.BinaryType,
-      s"wkb column must be binary; got ${s(s.fieldIndex("wkb")).dataType.catalogString}")
+    FeatureRows.requireWritable("geomedea", info.schema())
     new GeomedeaWriteBuilder(path, info)
   }
 }
@@ -480,50 +462,16 @@ class GeomedeaReaderFactory(bbox: Option[Envelope], required: StructType,
     val part = partition.asInstanceOf[GeomedeaPartition]
     val file = part.file
     new PartitionReader[InternalRow] {
-      private val serializer = GeomedeaTable.rowEncoder.createSerializer()
-      private val full = GeomedeaTable.Schema
-      private val proj = required.fields.map(f => (full.fieldIndex(f.name), f.dataType))
-      // Column-pruned DIRECT row building (guide §4: no per-row encoder):
-      // every required field except `props` (nested PropCell structs — the
-      // one shape the ExpressionEncoder earns its keep on) is cheap to
-      // emit by hand, so a pruned scan skips the full GmRow construction
-      // (Wkb.write, three props maps, a UTF8String per row) AND the
-      // whole-row serializer, building ONLY what the query asked for.
-      // Identical values to the encoder path — locked by DataSourceV2Spec
-      // row-equality across projections.
-      private val fileUtf8 = org.apache.spark.unsafe.types.UTF8String.fromString(file)
-      private val needsEnv = Set("min_lng", "min_lat", "max_lng", "max_lat")
-        .exists(required.fieldNames.contains)
+      // column-pruned direct row building: only the projected columns
+      // are generated, props included
+      private val toRow = FeatureRows.rowBuilder[(Long, Int)](required, file) {
+        case "page_offset"    => _._1
+        case "feature_offset" => _._2
+      }
       // geometry-only page decode: when no property column is projected,
       // the scan jumps over each feature's props bytes instead of
       // materializing strings/values the query never reads
-      private val geomOnly = !Set("props", "prop_keys", "prop_vals")
-        .exists(required.fieldNames.contains)
-      private val directGens:
-          Array[(((Long, Int), graft.codec.FeatureCodec.Feature), Envelope) => Any] =
-        if (required.fieldNames.contains("props")) null
-        else required.fields
-          .map[(((Long, Int), graft.codec.FeatureCodec.Feature), Envelope) => Any] {
-          f => f.name match {
-            case "source_file"    => (_, _) => fileUtf8
-            case "page_offset"    => (r, _) => r._1._1
-            case "feature_offset" => (r, _) => r._1._2
-            case "wkb"            => (r, _) => graft.geom.Wkb.write(r._2.geom)
-            case "prop_keys"      => (r, _) =>
-              new org.apache.spark.sql.catalyst.util.GenericArrayData(
-                r._2.props.map(p =>
-                  org.apache.spark.unsafe.types.UTF8String.fromString(p._1)).toArray[Any])
-            case "prop_vals"      => (r, _) =>
-              new org.apache.spark.sql.catalyst.util.GenericArrayData(
-                r._2.props.map(p => org.apache.spark.unsafe.types.UTF8String.fromString(
-                  GeoJson.propValueString(p._2))).toArray[Any])
-            case "min_lng"        => (_, e) => e.minLng
-            case "min_lat"        => (_, e) => e.minLat
-            case "max_lng"        => (_, e) => e.maxLng
-            case "max_lat"        => (_, e) => e.maxLat
-            case other => throw new IllegalStateException(s"unknown geomedea column $other")
-          }
-        }
+      private val geomOnly = FeatureRows.geomOnly(required)
       private var pagesDecoded = 0L
       private var bytesDecoded = 0L
       private var rowsDecoded = 0L
@@ -600,25 +548,9 @@ class GeomedeaReaderFactory(bbox: Option[Envelope], required: StructType,
       private var current: InternalRow = _
       override def next(): Boolean = {
         if (!iter.hasNext) return false
-        val loc = iter.next()
+        val (loc, f) = iter.next()
         rowsDecoded += 1
-        current =
-          if (directGens != null) {
-            val env = if (needsEnv) loc._2.geom.envelope else null
-            new GenericInternalRow(directGens.map(g => g(loc, env)))
-          } else {
-            val ((pageOff, featOff), f) = loc
-            val row = GeomedeaTable.GmRow(file, pageOff, featOff,
-              graft.geom.Wkb.write(f.geom),
-              f.props.map { case (k, v) => GeoJsonIngest.toCell(k, v) },
-              f.props.map(_._1),
-              f.props.map { case (_, v) => GeoJson.propValueString(v) },
-              f.geom.envelope.minLng, f.geom.envelope.minLat,
-              f.geom.envelope.maxLng, f.geom.envelope.maxLat)
-            val fullRow = serializer(row)
-            if (proj.length == full.length) fullRow.copy()
-            else new GenericInternalRow(proj.map { case (i, dt) => fullRow.get(i, dt) })
-          }
+        current = toRow(loc, f)
         true
       }
       override def get(): InternalRow = current

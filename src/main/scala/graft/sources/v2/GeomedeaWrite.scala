@@ -1,14 +1,11 @@
 package graft.sources.v2
 
 import graft.codec.FeatureCodec.Feature
-import graft.sources.{GeomedeaFile, GeoJsonIngest}
-import graft.sources.GeoJsonIngest.PropCell
+import graft.sources.GeomedeaFile
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.types.{BinaryType, StructType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
 
 /** Distributed `.geomedea` writer: `df.write.format("geomedea")
@@ -124,16 +121,6 @@ class GeomedeaWriterFactory(path: String, schema: StructType, compressed: Boolea
     new DataWriter[InternalRow] {
       private val wkbIdx = schema.fieldIndex("wkb")
       private val propsIdx = schema.fieldIndex("props")
-      private val propsType = schema(propsIdx).dataType
-      // deserialize through the SAME encoder shape the reader serializes
-      // with — PropCell field order/names are part of the bridge
-      // contract (validated at the driver in newWriteBuilder; re-checked
-      // here cheaply in case of schema drift)
-      private val enc = ExpressionEncoder[GeomedeaWriterFactory.WRow]()
-      require(propsType.catalogString == enc.schema(1).dataType.catalogString,
-        s"props column must be array<PropCell> (${enc.schema(1).dataType.catalogString}); " +
-          s"got ${propsType.catalogString}")
-      private val deser = enc.resolveAndBind().createDeserializer()
       // spill-backed: features are bincode-encoded on arrival and page
       // assembly streams from local temp files, so task heap stays
       // O(index + one page) regardless of shard size (ShardSpool docs)
@@ -145,12 +132,10 @@ class GeomedeaWriterFactory(path: String, schema: StructType, compressed: Boolea
       private val tmp = s"_tmp_$fin.tmp"
       private var wroteTmp = false
 
-      override def write(record: InternalRow): Unit = {
-        val w = deser(new GenericInternalRow(Array[Any](
-          record.get(wkbIdx, BinaryType), record.get(propsIdx, propsType))))
-        spool.add(Feature(graft.geom.Wkb.read(w.wkb),
-          w.props.map(GeoJsonIngest.fromCell).toVector))
-      }
+      // the props layout was checked at planning (FeatureRows.requireWritable)
+      override def write(record: InternalRow): Unit =
+        spool.add(Feature(graft.geom.Wkb.read(record.getBinary(wkbIdx)),
+          FeatureRows.propsOf(record.getArray(propsIdx))))
 
       override def commit(): WriterCommitMessage = {
         val written = spool.commit { total =>
@@ -183,8 +168,4 @@ class GeomedeaWriterFactory(path: String, schema: StructType, compressed: Boolea
       }
       override def close(): Unit = spool.delete()
     }
-}
-
-object GeomedeaWriterFactory {
-  final case class WRow(wkb: Array[Byte], props: Seq[PropCell])
 }

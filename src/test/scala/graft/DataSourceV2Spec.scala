@@ -336,27 +336,61 @@ class DataSourceV2Spec extends AnyFunSuite {
       Wkb.MultiLine(Vector(Array(pk(0, 0), pk(5, 5)), Array.empty)),
       Wkb.MultiPoly(Vector(Vector(outer), Vector.empty)),
       Wkb.Collection(Vector(Wkb.Pt(7, 7), Wkb.Line(Array(pk(1, 0), pk(0, 1))))))
+    // every scalar kind of the columnar bridge, plus one level of vec/map
     val feats = geoms.zipWithIndex.map { case (g, i) =>
       Feature(g, Vector(
-        "i" -> PInt64(i.toLong),
-        "v" -> PVec(Vector(PBool(i % 2 == 0), PString(s"elem$i"))),
-        "m" -> PMap(Vector("z" -> PFloat64(i * 0.5), "a" -> PUInt64(-1L)))))
+        "bool" -> PBool(i % 2 == 0),
+        "i8" -> PInt8((-i).toByte), "u8" -> PUInt8(250 + i % 6),
+        "i16" -> PInt16((-300 * i).toShort), "u16" -> PUInt16(65000 + i),
+        "i32" -> PInt32(-70000 * i), "u32" -> PUInt32(4000000000L + i),
+        "i" -> PInt64(i.toLong), "u64" -> PUInt64(-1L - i),
+        "f32" -> PFloat32(i * 0.25f), "f64" -> PFloat64(i * -1.5),
+        "bytes" -> PBytes(Array[Byte](i.toByte, -1, 0)), "string" -> PString(s"s\u00e9$i"),
+        "v" -> PVec(Vector(PBool(i % 2 == 0), PString(s"elem$i"), PInt32(-i), PUInt8(i))),
+        "m" -> PMap(Vector("z" -> PFloat64(i * 0.5), "a" -> PUInt64(-1L),
+          "b" -> PBytes(Array[Byte](7, i.toByte))))))
     }
     val s = spark
     import s.implicits._
     val df = feats.map(f => (Wkb.write(f.geom),
         f.props.map { case (k, v) => graft.sources.GeoJsonIngest.toCell(k, v) }))
       .toDF("wkb", "props")
-    val out = java.nio.file.Files.createTempDirectory("gm_geoms").toString + "/g"
-    df.repartition(3).write.format("geomedea").mode("append").save(out)
-    val back = spark.read.format("geomedea").load(out)
+    def readBack(format: String, dir: String) = spark.read.format(format).load(dir)
       .select("wkb", "props").as[(Array[Byte], Seq[graft.sources.GeoJsonIngest.PropCell])]
       .collect()
       .map { case (wkb, cells) =>
         (Wkb.asText(Wkb.read(wkb)), cells.map(graft.sources.GeoJsonIngest.fromCell).toVector)
       }.toSet
+    val out = java.nio.file.Files.createTempDirectory("gm_geoms").toString + "/g"
+    df.repartition(3).write.format("geomedea").mode("append").save(out)
     val expect = feats.map(f => (Wkb.asText(f.geom), f.props)).toSet
-    assert(back == expect)
+    assert(readBack("geomedea", out) == expect)
+    // the same frame through the FGB source: FGB stores vec/map as JSON,
+    // so the reference is the format's own decode of the written shards
+    val fgbOut = java.nio.file.Files.createTempDirectory("fgb_geoms").toString + "/g"
+    df.repartition(3).write.format("flatgeobuf").mode("append").save(fgbOut)
+    val fgbShards = new java.io.File(fgbOut).listFiles.filter(_.getName.endsWith(".fgb"))
+    val fgbExpect = fgbShards.toSeq.flatMap(f => graft.sources.FlatGeobuf.selectAll(
+      java.nio.file.Files.readAllBytes(f.toPath))).map(f => (Wkb.asText(f.geom), f.props)).toSet
+    assert(fgbExpect.size == feats.size)
+    assert(readBack("flatgeobuf", fgbOut) == fgbExpect)
+  }
+
+  test("declared schemas: the source tables and the props cell layout the bridges read") {
+    import org.apache.spark.sql.types.DataType
+    // the schemas the seed derived from its row case classes, nullability
+    // included (captured StructType.json)
+    val scalar = """{"type":"struct","fields":[{"name":"kind","type":"string","nullable":true,"metadata":{}},{"name":"b","type":"boolean","nullable":true,"metadata":{}},{"name":"i","type":"long","nullable":true,"metadata":{}},{"name":"d","type":"double","nullable":true,"metadata":{}},{"name":"s","type":"string","nullable":true,"metadata":{}},{"name":"bin","type":"binary","nullable":true,"metadata":{}}]}"""
+    val cell = s"""{"type":"struct","fields":[{"name":"key","type":"string","nullable":true,"metadata":{}},{"name":"kind","type":"string","nullable":true,"metadata":{}},{"name":"b","type":"boolean","nullable":true,"metadata":{}},{"name":"i","type":"long","nullable":true,"metadata":{}},{"name":"d","type":"double","nullable":true,"metadata":{}},{"name":"s","type":"string","nullable":true,"metadata":{}},{"name":"bin","type":"binary","nullable":true,"metadata":{}},{"name":"vec","type":{"type":"array","elementType":$scalar,"containsNull":true},"nullable":true,"metadata":{}},{"name":"kvs","type":{"type":"array","elementType":{"type":"struct","fields":[{"name":"k","type":"string","nullable":true,"metadata":{}},{"name":"v","type":$scalar,"nullable":true,"metadata":{}}]},"containsNull":true},"nullable":true,"metadata":{}}]}"""
+    def table(location: String) = s"""{"type":"struct","fields":[{"name":"source_file","type":"string","nullable":true,"metadata":{}},$location,{"name":"wkb","type":"binary","nullable":true,"metadata":{}},{"name":"props","type":{"type":"array","elementType":$cell,"containsNull":true},"nullable":true,"metadata":{}},{"name":"prop_keys","type":{"type":"array","elementType":"string","containsNull":true},"nullable":true,"metadata":{}},{"name":"prop_vals","type":{"type":"array","elementType":"string","containsNull":true},"nullable":true,"metadata":{}},{"name":"min_lng","type":"integer","nullable":false,"metadata":{}},{"name":"min_lat","type":"integer","nullable":false,"metadata":{}},{"name":"max_lng","type":"integer","nullable":false,"metadata":{}},{"name":"max_lat","type":"integer","nullable":false,"metadata":{}}]}"""
+    val gm = table("""{"name":"page_offset","type":"long","nullable":false,"metadata":{}},{"name":"feature_offset","type":"integer","nullable":false,"metadata":{}}""")
+    val fgb = table("""{"name":"feature_offset","type":"long","nullable":false,"metadata":{}}""")
+    assert(graft.sources.v2.GeomedeaTable.Schema == DataType.fromJson(gm))
+    assert(graft.sources.v2.FgbTable.Schema == DataType.fromJson(fgb))
+    // `.as[Seq[PropCell]]` in the bridges binds the props column by this type
+    assert(graft.sources.v2.FeatureRows.CellType ==
+      org.apache.spark.sql.Encoders.product[graft.sources.GeoJsonIngest.PropCell].schema)
+    assert(spark.read.format("geomedea").load(shardDir).schema == DataType.fromJson(gm))
   }
 
   /** 300-feature clustered file (many 256-byte pages) for the ranged
@@ -594,5 +628,67 @@ class DataSourceV2Spec extends AnyFunSuite {
     assert(cells.getString(0) == "i64")
     // single-file load works as well as directory load
     assert(df.count() == 40)
+  }
+
+  test("v2 writers and readers build rows without the task thread's context classloader") {
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite}
+    import org.apache.spark.sql.connector.write.{LogicalWriteInfo, PhysicalWriteInfo}
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    // Task threads run under whatever loader Spark installs (a per-session
+    // ExecutorClassLoader in local mode). The factories are driven here the
+    // way a task drives them, on a thread whose context loader sees only
+    // the JDK, so any classloader-dependent step (e.g. Scala reflection)
+    // fails deterministically instead of by test order.
+    val jdkOnly = new java.net.URLClassLoader(Array.empty[java.net.URL], null)
+    def onForeignThread[T](body: => T): T = {
+      var out: Either[Throwable, T] = Left(new IllegalStateException("thread did not run"))
+      val t = new Thread(() => out = try Right(body) catch { case e: Throwable => Left(e) })
+      t.setContextClassLoader(jdkOnly)
+      t.start(); t.join()
+      out.fold(e => throw e, identity)
+    }
+    val src = spark.read.format("geomedea").load(shardDir).select("wkb", "props")
+    val rows = src.queryExecution.toRdd.map(_.copy()).collect()
+    assert(rows.length == 80)
+    val none = CaseInsensitiveStringMap.empty()
+    def norm(r: org.apache.spark.sql.Row): String = r.toSeq.map {
+      case b: Array[Byte] => b.map("%02x".format(_)).mkString
+      case other          => String.valueOf(other)
+    }.mkString("|")
+    def table(format: String, dir: String): SupportsRead with SupportsWrite = format match {
+      case "geomedea" => new graft.sources.v2.GeomedeaTable(dir)
+      case _          => new graft.sources.v2.FgbTable(dir, graft.sources.v2.FgbTable.Schema)
+    }
+    for (format <- Seq("geomedea", "flatgeobuf")) {
+      val out = java.nio.file.Files.createTempDirectory(s"cl_$format").toString + "/o"
+      val write = table(format, out).newWriteBuilder(new LogicalWriteInfo {
+        override def queryId(): String = "cl"
+        override def schema(): org.apache.spark.sql.types.StructType = src.schema
+        override def options(): CaseInsensitiveStringMap = none
+      }).build().toBatch
+      val writers = write.createBatchWriterFactory(new PhysicalWriteInfo {
+        override def numPartitions(): Int = 1
+      })
+      val msg = onForeignThread {
+        val w = writers.createWriter(0, 0L)
+        try { rows.foreach(w.write); w.commit() } finally w.close()
+      }
+      write.commit(Array(msg))
+      // full read, every column (props included), same thread discipline
+      val scan = table(format, out).newScanBuilder(none).build()
+      val readers = scan.toBatch.createReaderFactory()
+      val back = onForeignThread {
+        scan.toBatch.planInputPartitions().toSeq.flatMap { p =>
+          val r = readers.createReader(p)
+          try Iterator.continually(r.next()).takeWhile(identity).map(_ => r.get().copy()).toVector
+          finally r.close()
+        }
+      }
+      val toRow = CatalystTypeConverters.createToScalaConverter(scan.readSchema())
+      val expect = spark.read.format(format).load(out).collect().map(norm).sorted.toSeq
+      assert(expect.length == 80)
+      assert(back.map(r => norm(toRow(r).asInstanceOf[org.apache.spark.sql.Row])).sorted == expect)
+    }
   }
 }

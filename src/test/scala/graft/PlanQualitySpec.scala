@@ -38,6 +38,25 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p)
   }
 
+  test("OpaquePure fences only the span parse, once, in the parse projection and the cell join") {
+    import graft.expr.OpaquePure
+    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+    // the fence blocks optimizer rewrites, so it belongs on the one
+    // expensive expression it was measured on (gmSpanFeature), nowhere else
+    val parsed = InterleavedDocs.withGeometry(InterleavedDocs.docs(spark, Sf))
+    for (df <- Seq(parsed, SpatialJoin.cellJoin(parsed, rects))) {
+      // optimizer run on the analyzed plan directly: `geo` caches this
+      // same parse, and the cache substitution would hide it
+      val fences = spark.sessionState.optimizer.execute(df.queryExecution.analyzed)
+        .flatMap(_.expressions.flatMap(_.collect { case o: OpaquePure => o }))
+      assert(fences.length == 1, fences)
+      assert(fences.forall {
+        case OpaquePure(s: StaticInvoke) => s.functionName == "spanFeature"
+        case _                           => false
+      }, fences)
+    }
+  }
+
   test("hilbertRangeJoin leaves the join strategy to Catalyst: broadcast when tiny, SHUFFLE when large") {
     // at test scale Catalyst auto-broadcasts the tiny build side — fine;
     // the strategy must NOT force a broadcast, so with auto-broadcast off
