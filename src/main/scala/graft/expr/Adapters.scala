@@ -289,10 +289,10 @@ object Adapters {
   }
 
   private def cachedGeom(wkb: Array[Byte]): Wkb.Geom = {
-    // tiny blobs (points, small rects) parse faster than they hash+probe;
-    // the cache exists for the repeated big build-side polygons
-    // (re-measured r6: threshold 21 — cache even small rects — moved the
-    // 2M-doc headline by < 1%, confirming parse ~ hash+probe at this size)
+    // tiny blobs (points, small rects) parse about as fast as they
+    // hash+probe (r6: caching rects too moved the headline < 1%); the cache
+    // is for repeated big polygons. The spatial joins filter on the build
+    // envelope first, so this re-parse runs only on envelope hits.
     if (wkb.length <= 96) return Wkb.read(wkb)
     val cache = geomCache.get()
     val k = new Key(wkb)

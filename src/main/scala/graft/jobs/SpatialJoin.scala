@@ -30,14 +30,19 @@ import org.apache.spark.sql.functions._
   *
   * Points DF contract: columns (lng, lat) scaled ints + carried columns.
   * Polys DF contract: (poly_id, poly_wkb, p_min_lng, p_min_lat, p_max_lng,
-  * p_max_lat).
+  * p_max_lat); p_* must bound poly_wkb. Every strategy but [[bruteForce]]
+  * refines envelope-then-PIP, which is exact: a closed-boundary PIP hit
+  * lies in its polygon's envelope. [[bruteForce]] runs PIP alone.
   */
 object SpatialJoin {
 
   val DefaultRes = 4
 
+  // envelope conjuncts first, so only envelope hits reach containsWkb
   private def refined(joined: DataFrame): DataFrame =
-    joined.where(stContains(col("poly_wkb"), col("lng"), col("lat")))
+    joined.where(col("lng") >= col("p_min_lng") && col("lng") <= col("p_max_lng") &&
+      col("lat") >= col("p_min_lat") && col("lat") <= col("p_max_lat") &&
+      stContains(col("poly_wkb"), col("lng"), col("lat")))
 
   /** Strategy 1: cell-cover equi-join (broadcast the exploded build side). */
   def cellJoin(points: DataFrame, polys: DataFrame, res: Int = DefaultRes): DataFrame = {
@@ -110,13 +115,8 @@ object SpatialJoin {
     val polyChunks = polys.withColumn("hchunk",
       explode(gmHilbertChunksEnv(col("p_min_lng"), col("p_min_lat"), col("p_max_lng"), col("p_max_lat"), res)))
     val pts = points.withColumn("hchunk", gmHilbertChunk(col("lng"), col("lat"), res))
-    // no broadcast() hint: this strategy exists for the both-sides-large
-    // case; the envelope pre-filter keeps chunk-collision false positives
-    // out of the PIP refinement
-    refined(pts.join(polyChunks, Seq("hchunk"), "inner")
-      .where(col("lng") >= col("p_min_lng") && col("lng") <= col("p_max_lng") &&
-        col("lat") >= col("p_min_lat") && col("lat") <= col("p_max_lat")))
-      .drop("hchunk")
+    // no broadcast() hint: this strategy exists for the both-sides-large case
+    refined(pts.join(polyChunks, Seq("hchunk"), "inner")).drop("hchunk")
   }
 
   /** Strategy 5 (DWithin): distance-within join — every (query, point)
@@ -238,9 +238,9 @@ object SpatialJoin {
       .select("query_id", "doc_id")
   }
 
-  /** Test oracle: brute-force cross join + exact predicate (tiny scale only). */
+  /** Test oracle: brute-force cross join + PIP alone (tiny scale only). */
   def bruteForce(points: DataFrame, polys: DataFrame): DataFrame =
-    refined(points.crossJoin(polys))
+    points.crossJoin(polys).where(stContains(col("poly_wkb"), col("lng"), col("lat")))
 
   /** bbox semi-join analog of the reference's select_bbox (S5): points whose
     * envelope intersects the query rect, closed-interval (bounds.rs:101-119).

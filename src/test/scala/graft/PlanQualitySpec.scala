@@ -38,6 +38,39 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p)
   }
 
+  test("cell joins run PIP last in the join condition, after the four envelope comparisons") {
+    import org.apache.spark.sql.catalyst.expressions.{And, BinaryComparison, Expression}
+    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+    import org.apache.spark.sql.execution.FilterExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    def isPip(e: Expression) = e match {
+      case s: StaticInvoke => s.functionName == "containsWkb"
+      case _               => false
+    }
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(a, b) => conjuncts(a) ++ conjuncts(b)
+      case other     => Seq(other)
+    }
+    val envelope = Set("p_min_lng", "p_max_lng", "p_min_lat", "p_max_lat")
+    for (df <- Seq(SpatialJoin.cellJoin(geo, rects), SpatialJoin.saltedCellJoin(geo, rects))) {
+      val sp = df.queryExecution.sparkPlan
+      val preds = sp.flatMap {
+        case j: BaseJoinExec => j.condition.toSeq
+        case f: FilterExec   => Seq(f.condition)
+        case _               => Nil
+      }.filter(_.exists(isPip))
+      assert(preds.length == 1, sp)
+      val cs = conjuncts(preds.head)
+      // evaluation is left to right and short-circuits: only envelope
+      // hits may reach the containsWkb call
+      assert(isPip(cs.last) && !cs.init.exists(_.exists(isPip)), preds.head)
+      val compared = cs.init.collect {
+        case c: BinaryComparison => c.references.map(_.name).filter(envelope)
+      }.flatten
+      assert(compared.toSet == envelope && compared.length == 4, preds.head)
+    }
+  }
+
   test("OpaquePure fences only the span parse, once, in the parse projection and the cell join") {
     import graft.expr.OpaquePure
     import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke

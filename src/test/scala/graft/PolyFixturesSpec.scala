@@ -40,6 +40,11 @@ class PolyFixturesSpec extends AnyFunSuite {
       df.select("poly_id", "doc_id").collect().map(r => (r.getLong(0), r.getString(1))).toSet
     val brute = key(SpatialJoin.bruteForce(geo, counties))
     assert(key(SpatialJoin.cellJoin(geo, counties, res = 6)) == brute)
+    // DefaultRes puts ~500 counties in the hot cluster's cell, so the
+    // envelope filter discards most cell candidates before PIP
+    assert(key(SpatialJoin.cellJoin(geo, counties)) == brute)
+    assert(key(SpatialJoin.saltedCellJoin(geo, counties)) == brute)
+    assert(key(SpatialJoin.hilbertRangeJoin(geo, counties)) == brute)
     assert(key(SpatialJoin.rtreeJoin(geo, counties)) == brute)
     assert(brute.nonEmpty) // hot cluster sits inside the US extent
   }

@@ -61,6 +61,76 @@ class SparkSpec extends AnyFunSuite {
     assert(top.getLong(1) > geo.count() / 2)
   }
 
+  test("every refining strategy equals brute force on vertices, edges, holes and envelope borders") {
+    import graft.geom.Wkb
+    val s = spark
+    import s.implicits._
+    val M = 1000000
+    def ring(pts: (Int, Int)*): Array[Long] =
+      (pts :+ pts.head).map { case (x, y) => Wkb.pack(x * M, y * M) }.toArray
+    val shapes: Seq[(Long, Wkb.Geom)] = Seq(
+      // sliver triangle: its envelope is ~80x the polygon's area
+      1L -> Wkb.Poly(Vector(ring((-500, -300), (-100, 100), (-150, 60)))),
+      2L -> Wkb.Poly(Vector(ring((100, 100), (500, 100), (500, 500), (100, 500)),
+        ring((200, 200), (300, 200), (300, 300), (200, 300)))),
+      3L -> Wkb.MultiPoly(Vector(
+        Vector(ring((600, -400), (700, -400), (700, -300), (600, -300))),
+        Vector(ring((800, -200), (1000, -200), (900, 0))))),
+      4L -> Wkb.read(Wkb.rectWkb(-1000 * M, 400 * M, -600 * M, 800 * M)))
+    val polys = shapes.map { case (id, g) =>
+      val e = g.envelope
+      (id, Wkb.write(g), e.minLng, e.minLat, e.maxLng, e.maxLat)
+    }.toDF("poly_id", "poly_wkb", "p_min_lng", "p_min_lat", "p_max_lng", "p_max_lat")
+    val rings = shapes.map(_._2).flatMap {
+      case Wkb.Poly(rs)      => rs
+      case Wkb.MultiPoly(ps) => ps.flatten
+      case g                 => fail(s"unexpected $g")
+    }
+    // every vertex and every edge midpoint (all coordinates are even, so
+    // midpoints lie exactly on their edge)
+    val onRings = rings.flatMap(r => r.indices.init.flatMap { i =>
+      val (a, b) = (r(i), r(i + 1))
+      Seq((Wkb.lngOf(a), Wkb.latOf(a)),
+        ((Wkb.lngOf(a) + Wkb.lngOf(b)) / 2, (Wkb.latOf(a) + Wkb.latOf(b)) / 2))
+    })
+    // envelope corners, and one scaled unit outside each envelope side
+    val aroundEnvelopes = shapes.map(_._2.envelope).flatMap { e =>
+      Seq((e.minLng, e.minLat), (e.maxLng, e.minLat), (e.minLng, e.maxLat), (e.maxLng, e.maxLat),
+        (e.minLng - 1, e.centerLat), (e.maxLng + 1, e.centerLat),
+        (e.centerLng, e.minLat - 1), (e.centerLng, e.maxLat + 1))
+    }
+    // interiors: triangle centroid, square body, hole, both multipart
+    // parts, the gap between them, and the rectangle
+    val inner = Seq((-250 * M, -46666667), (150 * M, 150 * M), (250 * M, 250 * M),
+      (650 * M, -350 * M), (900 * M, -100 * M), (750 * M, -250 * M), (-800 * M, 600 * M))
+    val pts = (onRings ++ aroundEnvelopes ++ inner).distinct.zipWithIndex
+      .map { case ((x, y), i) => (f"pt-$i%03d", x, y) }.toDF("doc_id", "lng", "lat")
+
+    val brute = rows(SpatialJoin.bruteForce(pts, polys), "poly_id", "doc_id")
+    val inEnvelope = rows(pts.crossJoin(polys).where(
+      col("lng").between(col("p_min_lng"), col("p_max_lng")) &&
+        col("lat").between(col("p_min_lat"), col("p_max_lat"))), "poly_id", "doc_id")
+    // the fixture reaches both sides of the envelope filter: envelope hits
+    // that PIP rejects, and PIP hits for every polygon
+    assert(brute.subsetOf(inEnvelope) && inEnvelope.size > brute.size)
+    assert(brute.map(_.head) == shapes.map(_._1).toSet)
+    for ((name, df) <- Seq(
+        "cellJoin" -> SpatialJoin.cellJoin(pts, polys),
+        "cellJoin res 6" -> SpatialJoin.cellJoin(pts, polys, res = 6),
+        "saltedCellJoin" -> SpatialJoin.saltedCellJoin(pts, polys),
+        "rtreeJoin" -> SpatialJoin.rtreeJoin(pts, polys),
+        "hilbertRangeJoin" -> SpatialJoin.hilbertRangeJoin(pts, polys)))
+      assert(rows(df, "poly_id", "doc_id") == brute, name)
+    assert(rows(SpatialJoin.antiJoin(pts, polys), "doc_id") ==
+      rows(pts, "doc_id") -- brute.map(_.tail))
+    val bruteZones = SpatialJoin.bruteForce(pts, polys).groupBy("poly_id")
+      .agg(count(lit(1)).as("n"),
+        min("lng").cast("long").as("z_min_lng"), min("lat").cast("long").as("z_min_lat"),
+        max("lng").cast("long").as("z_max_lng"), max("lat").cast("long").as("z_max_lat"))
+    val zoneCols = Seq("poly_id", "n", "z_min_lng", "z_min_lat", "z_max_lng", "z_max_lat")
+    assert(rows(SpatialJoin.zonalStats(pts, polys), zoneCols: _*) == rows(bruteZones, zoneCols: _*))
+  }
+
   test("distance-within join equals brute force at several radii, both join strategies") {
     val queries = InterleavedDocs.nationQueryPoints(spark, Sf)
     // radii straddling cell sizes at res 4 (225e6 x 112.5e6): sub-cell,
