@@ -18,15 +18,16 @@ import org.apache.spark.sql.functions._
   * `writer/mod.rs` always rebuilds the Hilbert order and the packed
   * R-tree from scratch). The distributed analog, per slice:
   *
-  *   pin the PLANNED shard set (a union of single-file scans, so the
-  *   read set is exactly the recorded list — not whatever a directory
-  *   listing says later) -> global extent (4-way min/max, map-side
-  *   combined) -> Hilbert key of each envelope center relative to that
-  *   extent -> `repartitionByRange(hilbert desc)` -> rewrite through the
-  *   distributed v2 writer into an INVISIBLE staging subdirectory ->
-  *   record the generation swap (condemned names + the exact replacement
-  *   names, [[LakeGenerations]]) -> rename replacements into the lake ->
-  *   delete EXACTLY the planned shards -> swap them in the manifest.
+  *   pin the PLANNED shard set (one scan over the listed shard files,
+  *   `load(paths*)`, so the read set is exactly the recorded list — not
+  *   whatever a directory listing says later) -> global extent (4-way
+  *   min/max, map-side combined) -> Hilbert key of each envelope center
+  *   relative to that extent -> `repartitionByRange(hilbert desc)` ->
+  *   rewrite through the distributed v2 writer into an INVISIBLE staging
+  *   subdirectory -> record the generation swap (condemned names + the
+  *   exact replacement names, [[LakeGenerations]]) -> rename replacements
+  *   into the lake -> delete EXACTLY the planned shards -> swap them in
+  *   the manifest.
   *
   * The targeted delete (not truncate-overwrite) is what makes the job
   * safe under concurrent APPENDS: a shard committed by another job at
@@ -54,11 +55,11 @@ import org.apache.spark.sql.functions._
   * At 100 TB this is one shuffle of the payload per slice (the honest
   * cost of re-clustering, identical to ingest) and should be scheduled
   * like any table-maintenance job: triggered when the manifest shows
-  * extent overlap, not per append. `maxShardsPerCall` bounds BOTH the
-  * union plan (the logical plan is O(planned shards) — a 100k-shard lake
-  * must not pay one 100k-way union on the driver) and the shuffle size:
-  * shards are ordered by the Hilbert position of their manifest extents
-  * and compacted in spatially-coherent slices, each its own bounded
+  * extent overlap, not per append. `maxShardsPerCall` bounds each swap
+  * (its condemned and replacement lists, its generation record), its
+  * shuffle, and the scan's planned file and partition lists: shards are
+  * ordered by the Hilbert position of their manifest extents and
+  * compacted in spatially-coherent slices, each its own bounded
   * pinned-set swap, so pruning improves slice by slice without the
   * caller hand-slicing.
   *
@@ -361,13 +362,13 @@ object Compact {
     val token = newToken("c")
     val stage = new Path(p, s"$StagePrefix$token")
     try {
-      // pinned read set: one single-file scan per PLANNED shard, unioned —
+      // pinned read set: one scan over exactly the PLANNED shard files —
       // rows from shards other jobs commit mid-compaction can never leak
-      // into the rewrite (and so never be duplicated by it). Envelope
-      // stats come straight off the scan; columns beyond the write
-      // contract are pruned.
-      val docs = shards.map(s => spark.read.format(format).load(s.getPath.toString))
-        .reduce(_ union _)
+      // into the rewrite (and so never be duplicated by it). One relation
+      // means one reader factory (one serialized Hadoop conf per task),
+      // not one per shard. Envelope stats come straight off the scan;
+      // columns beyond the write contract are pruned.
+      val docs = spark.read.format(format).load(shards.map(_.getPath.toString): _*)
         .select("wkb", "props", "min_lng", "min_lat", "max_lng", "max_lat")
       // r6: one stats+sample pass + exact bucket placement (the Ingest
       // pass-elimination applied to the rewrite — the containers are

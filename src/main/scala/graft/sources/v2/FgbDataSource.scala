@@ -23,7 +23,9 @@ import org.apache.spark.util.SerializableConfiguration
   * hit feature blocks in batched windows). Full scans stream block by
   * block with O(feature) memory. Together with the geomedea source this
   * reproduces the reference README's geomedea-vs-FGB comparison inside
-  * one engine, query for query.
+  * one engine, query for query. Like the geomedea source, `load(path)`
+  * reads one `.fgb` file or a directory of them and `load(paths*)` reads
+  * the listed ones as one table; writes and streams take one path.
   *
   * Pruning is a strict superset of the predicate; every pushed filter
   * stays residual, so correctness never depends on the index. The
@@ -39,10 +41,9 @@ class FgbDataSource extends TableProvider with DataSourceRegister {
   override def supportsExternalMetadata(): Boolean = true
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: java.util.Map[String, String]): Table = {
-    val path = Option(properties.get("path")).getOrElse(
-      throw new IllegalArgumentException(
-        "flatgeobuf source needs exactly one load(path) — a .fgb file or a directory of them"))
-    new FgbTable(path,
+    new FgbTable(GeomedeaTable.pathsOf(properties,
+      "flatgeobuf source needs load(path), load(paths*) or save(path) — " +
+        "each a .fgb file or a directory of them"),
       if (schema == null || schema.isEmpty) FgbTable.Schema else schema)
   }
 }
@@ -55,45 +56,28 @@ object FgbTable {
   val Schema: StructType =
     FeatureRows.tableSchema(StructField("feature_offset", LongType, nullable = false))
 
-  /** Surviving files with length and feature count. Fast path: a
-    * directory written by the v2 writer carries the same `_manifest.tsv`
-    * a geomedea lake does (validated for exact name+length coverage,
-    * else ignored) — ONE driver read plans a 100k-shard lake. Manifest
-    * extents were rounded OUTWARD from the header's degree envelope
-    * (or are the writer's exact ints), so manifest pruning is a strict
-    * superset of the predicate; a count-0 entry (spec: UNKNOWN) is
-    * never pruned, mirroring the header fallback below.
-    * Fallback: the header is read via two positioned range reads per
-    * file (12 bytes + header block), fanned out on a bounded pool like
-    * the geomedea planner; with a bbox, files whose header envelope
-    * misses the rect are dropped.
+  /** Surviving files with length and feature count
+    * ([[GeomedeaTable.planFiles]]). A v2-written directory carries the
+    * same `_manifest.tsv` a geomedea lake does. Manifest extents were
+    * rounded OUTWARD from the header's degree envelope (or are the
+    * writer's exact ints), so manifest pruning is a strict superset of
+    * the predicate; a count-0 entry (spec: UNKNOWN) is never pruned,
+    * mirroring the header fallback below. Fallback: the header is read
+    * via two positioned range reads per file (12 bytes + header block);
+    * with a bbox, files whose header envelope misses the rect are
+    * dropped.
     */
-  def scanFiles(path: String, bbox: Option[Envelope]): Seq[GeomedeaTable.ScanFile] = {
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val st = fs.getFileStatus(p)
-    val files =
-      if (st.isDirectory)
-        fs.listStatus(p).toSeq.filter(s => s.isFile && s.getPath.getName.endsWith(".fgb"))
-      else Seq(st)
-    if (st.isDirectory) GeomedeaManifest.validated(fs, p, files) match {
-      case Some(m) =>
-        return files.flatMap { f =>
-          val e = m(f.getPath.getName)
-          val keep = bbox match {
-            case None    => true
-            // extent None == count unknown/empty: keep (the FGB spec's
-            // features_count=0-means-unknown rule — never prune on it)
-            case Some(q) => e.extent.forall(_.intersects(q))
-          }
-          if (keep)
-            Some(GeomedeaTable.ScanFile(f.getPath.toString, f.getLen, e.count, e.validSplits))
-          else None
-        }.sortBy(_.path)
-      case _ => () // absent or stale: header-read fallback below
-    }
-    PlannerPool.mapFiles(files) { s =>
+  def scanFiles(paths: Seq[String], bbox: Option[Envelope]): Seq[GeomedeaTable.ScanFile] =
+    GeomedeaTable.planFiles(paths, ".fgb") { (f, e) =>
+      val keep = bbox match {
+        case None    => true
+        // extent None == count unknown/empty: keep (the FGB spec's
+        // features_count=0-means-unknown rule — never prune on it)
+        case Some(q) => e.extent.forall(_.intersects(q))
+      }
+      if (keep) Some(GeomedeaTable.ScanFile(f.getPath.toString, f.getLen, e.count, e.validSplits))
+      else None
+    } { (fs, s) =>
       require(s.getLen >= FlatGeobuf.Magic.length + 4,
         s"${s.getPath}: ${s.getLen} bytes is shorter than a FlatGeobuf magic+header " +
           "prefix — truncated or not an fgb file")
@@ -116,13 +100,16 @@ object FgbTable {
       }
       if (keep) Some(GeomedeaTable.ScanFile(s.getPath.toString, s.getLen, h.featuresCount))
       else None
-    }.flatten.sortBy(_.path)
-  }
+    }
+
+  /** [[scanFiles]] of one `load(path)`. */
+  def scanFiles(path: String, bbox: Option[Envelope]): Seq[GeomedeaTable.ScanFile] =
+    scanFiles(Seq(path), bbox)
 }
 
-class FgbTable(path: String, tableSchema: StructType) extends Table with SupportsRead
+class FgbTable(paths: Seq[String], tableSchema: StructType) extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite {
-  override def name(): String = s"flatgeobuf.`$path`"
+  override def name(): String = s"flatgeobuf.`${paths.mkString(",")}`"
   override def schema(): StructType = tableSchema
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
@@ -130,16 +117,16 @@ class FgbTable(path: String, tableSchema: StructType) extends Table with Support
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     require(tableSchema == FgbTable.Schema,
       "flatgeobuf reads use the source's own schema; user-specified read schemas are unsupported")
-    new FgbScanBuilder(path, BboxFilterAbsorber.fromOptions(options))
+    new FgbScanBuilder(paths, BboxFilterAbsorber.fromOptions(options))
   }
   override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
   : org.apache.spark.sql.connector.write.WriteBuilder = {
     FeatureRows.requireWritable("flatgeobuf", info.schema())
-    new FgbWriteBuilder(path, info)
+    new FgbWriteBuilder(GeomedeaTable.onePath(paths, "a flatgeobuf write"), info)
   }
 }
 
-class FgbScanBuilder(path: String,
+class FgbScanBuilder(paths: Seq[String],
                      optBbox: Option[Envelope] = None)
     extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
     with SupportsPushDownLimit with SupportsPushDownAggregates {
@@ -177,7 +164,7 @@ class FgbScanBuilder(path: String,
     * writers); otherwise Spark counts normally. The header reads this
     * decision costs are the same ones planning performs anyway.
     */
-  private lazy val allFiles: Seq[GeomedeaTable.ScanFile] = FgbTable.scanFiles(path, None)
+  private lazy val allFiles: Seq[GeomedeaTable.ScanFile] = FgbTable.scanFiles(paths, None)
 
   // the explicit bbox option restricts the scan like a filter would, so
   // a header-only count (whole-table) must not be offered with it set
@@ -196,18 +183,18 @@ class FgbScanBuilder(path: String,
     if (countPushed) {
       require(pushed.isEmpty && bbox.isEmpty,
         "COUNT(*) pushdown reached with filters absorbed — header-only count would be wrong")
-      new FgbCountScan(path, allFiles.map(_.count).sum)
-    } else new FgbScan(path, bbox, pushed, required, limit)
+      new FgbCountScan(paths, allFiles.map(_.count).sum)
+    } else new FgbScan(paths, bbox, pushed, required, limit)
   }
 }
 
 /** Complete-pushdown COUNT(*): one row from the already-read headers. */
-class FgbCountScan(path: String, total: Long) extends Scan with Batch with SupportsReportStatistics {
+class FgbCountScan(paths: Seq[String], total: Long) extends Scan with Batch with SupportsReportStatistics {
   override def readSchema(): StructType = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("count",
       org.apache.spark.sql.types.LongType, nullable = false)))
   override def toBatch: Batch = this
-  override def description(): String = s"FgbCountScan path=$path (header-only count)"
+  override def description(): String = s"FgbCountScan path=${paths.mkString(",")} (header-only count)"
   override def estimateStatistics(): Statistics = new Statistics {
     override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.of(16L)
     override def numRows(): java.util.OptionalLong = java.util.OptionalLong.of(1L)
@@ -218,19 +205,19 @@ class FgbCountScan(path: String, total: Long) extends Scan with Batch with Suppo
     GeomedeaStatsReaderFactory(Array[Any](total))
 }
 
-class FgbScan(path: String, bbox: Option[Envelope], pushed: Array[Filter],
+class FgbScan(paths: Seq[String], bbox: Option[Envelope], pushed: Array[Filter],
               required: StructType, limit: Option[Int] = None)
     extends Scan with Batch with SupportsReportStatistics {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
-    s"FgbScan path=$path bbox=${bbox.getOrElse("all")} limit=${limit.getOrElse(-1)} " +
+    s"FgbScan path=${paths.mkString(",")} bbox=${bbox.getOrElse("all")} limit=${limit.getOrElse(-1)} " +
       s"PushedFilters: [${pushed.mkString(", ")}]"
 
   override def supportedCustomMetrics(): Array[CustomMetric] =
     Array(new GmBytesMetric, new GmRowsMetric)
 
-  private lazy val keptFiles: Seq[GeomedeaTable.ScanFile] = FgbTable.scanFiles(path, bbox)
+  private lazy val keptFiles: Seq[GeomedeaTable.ScanFile] = FgbTable.scanFiles(paths, bbox)
 
   /** With a pushed limit and no bbox, only enough files to cover it are
     * planned when every count is KNOWN; an unknown (0) count could hide
@@ -274,7 +261,8 @@ class FgbScan(path: String, bbox: Option[Envelope], pushed: Array[Filter],
     */
   override def toMicroBatchStream(checkpointLocation: String)
   : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new FgbMicroBatchStream(path, bbox, required, checkpointLocation)
+    new FgbMicroBatchStream(GeomedeaTable.onePath(paths, "a flatgeobuf stream"), bbox,
+      required, checkpointLocation)
 }
 
 class FgbReaderFactory(bbox: Option[Envelope], required: StructType,

@@ -2,7 +2,7 @@ package graft.sources.v2
 
 import graft.geom.Envelope
 import graft.sources.GeomedeaFile
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -21,6 +21,11 @@ import org.apache.spark.util.SerializableConfiguration
   * pruning as the reference's `select_bbox` (`reader.rs:313-346`), driven
   * by ordinary Catalyst `WHERE` filters on the envelope stat columns
   * instead of a side-channel parameter.
+  *
+  * `load(path)` reads one `.geomedea` file or a directory of them;
+  * `load(paths*)` reads the listed files and directories as one table
+  * (one scan, every planner over the same concatenated file list).
+  * Writes and streams take one path.
   *
   * Scale shape: one input partition per `.geomedea` file (the format is a
   * single-node container; a data lake of them fans out per file, same as
@@ -52,10 +57,9 @@ class GeomedeaDataSource extends TableProvider with DataSourceRegister {
   override def supportsExternalMetadata(): Boolean = true
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: java.util.Map[String, String]): Table = {
-    val path = Option(properties.get("path")).getOrElse(
-      throw new IllegalArgumentException(
-        "geomedea source needs exactly one load/save(path) — a .geomedea file or a directory of them"))
-    new GeomedeaTable(path,
+    new GeomedeaTable(GeomedeaTable.pathsOf(properties,
+      "geomedea source needs load(path), load(paths*) or save(path) — " +
+        "each a .geomedea file or a directory of them"),
       if (schema == null || schema.isEmpty) GeomedeaTable.Schema else schema)
   }
 }
@@ -111,42 +115,75 @@ object GeomedeaTable {
       }
     }
 
-  /** Surviving files with byte length and header feature count. Fast
-    * path: a directory written by the v2 writer carries a
-    * [[GeomedeaManifest]] — extents/counts for the whole lake in ONE
-    * driver read (validated against the listing: exact file-name
-    * coverage with matching byte lengths, else ignored), so a 100k-shard
-    * lake plans without 100k header round trips on every query.
-    * Fallback: one 45-byte head read per file (the format's analog of a
-    * parquet footer read), fanned out on a bounded pool — serial
-    * object-store round trips would make PLANNING the bottleneck
-    * (Spark's own parquet footer reads use the same trick). With a
-    * bbox, files whose R-tree ROOT bounds (= manifest extent) miss the
-    * rect are dropped. Re-sorted by path for deterministic planning.
+  /** The load's path list. `DataFrameReader.load(paths*)` hands one path
+    * as the `path` option and several as `paths`, a JSON array (the same
+    * reading as Spark's file sources).
     */
-  def scanFiles(path: String, bbox: Option[Envelope]): Seq[ScanFile] = {
+  def pathsOf(properties: java.util.Map[String, String], missing: String): Seq[String] = {
+    val listed = Option(properties.get("paths")).toSeq.flatMap(json =>
+      new com.fasterxml.jackson.databind.ObjectMapper().readValue(json, classOf[Array[String]]))
+    val paths = listed ++ Option(properties.get("path"))
+    if (paths.isEmpty) throw new IllegalArgumentException(missing)
+    paths
+  }
+
+  /** Writes and streams address one location; only batch reads take a list. */
+  def onePath(paths: Seq[String], use: String): String = {
+    require(paths.size == 1,
+      s"$use takes exactly one path; got ${paths.size}: ${paths.mkString(", ")}")
+    paths.head
+  }
+
+  /** Planning shared by both container sources: each entry of `paths` is
+    * one container file or a directory of them. A directory written by
+    * the v2 writer carries a [[GeomedeaManifest]] — extents/counts for the
+    * whole lake in ONE driver read (validated against the listing: exact
+    * file-name coverage with matching byte lengths, else ignored), so a
+    * 100k-shard lake plans without 100k header round trips on every
+    * query; its files go through `fromManifest`. Every other file (a
+    * listed file, or a directory without a valid manifest) goes through
+    * `fromHeader`, all of them fanned out on one bounded pool — serial
+    * object-store round trips would make PLANNING the bottleneck
+    * (Spark's own parquet footer reads use the same trick). Concatenated
+    * and re-sorted by path for deterministic planning.
+    */
+  private[v2] def planFiles(paths: Seq[String], suffix: String)(
+      fromManifest: (FileStatus, GeomedeaManifest.Entry) => Option[ScanFile])(
+      fromHeader: (FileSystem, FileStatus) => Option[ScanFile]): Seq[ScanFile] = {
     val conf = org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val st = fs.getFileStatus(p)
-    val files =
-      if (st.isDirectory)
-        fs.listStatus(p).toSeq.filter(s => s.isFile && s.getPath.getName.endsWith(".geomedea"))
-      else Seq(st)
-    if (st.isDirectory) GeomedeaManifest.validated(fs, p, files) match {
-      case Some(m) =>
-        return files.flatMap { f =>
-          val e = m(f.getPath.getName)
-          val keep = bbox match {
-            case None    => true
-            case Some(q) => e.extent.exists(_.intersects(q))
-          }
-          if (keep) Some(ScanFile(f.getPath.toString, f.getLen, e.count, e.validSplits, e.extent))
-          else None
-        }.sortBy(_.path)
-      case _ => () // absent or stale: header-read fallback below
+    val (described, unread) = paths.partitionMap { path =>
+      val p = new Path(path)
+      val fs = p.getFileSystem(conf)
+      val st = fs.getFileStatus(p)
+      if (!st.isDirectory) Right(Seq(fs -> st))
+      else {
+        val files =
+          fs.listStatus(p).toSeq.filter(s => s.isFile && s.getPath.getName.endsWith(suffix))
+        GeomedeaManifest.validated(fs, p, files) match {
+          case Some(m) => Left(files.flatMap(f => fromManifest(f, m(f.getPath.getName))))
+          case None    => Right(files.map(fs -> _)) // absent or stale: header reads
+        }
+      }
     }
-    PlannerPool.mapFiles(files) { s =>
+    val headed = PlannerPool.mapFiles(unread.flatten) { case (fs, s) => fromHeader(fs, s) }
+    (described.flatten ++ headed.flatten).sortBy(_.path)
+  }
+
+  /** Surviving files with byte length and header feature count
+    * ([[planFiles]]): manifest entries, or one 45-byte head read per
+    * file (the format's analog of a parquet footer read). With a bbox,
+    * files whose R-tree ROOT bounds (= manifest extent) miss the rect
+    * are dropped.
+    */
+  def scanFiles(paths: Seq[String], bbox: Option[Envelope]): Seq[ScanFile] =
+    planFiles(paths, ".geomedea") { (f, e) =>
+      val keep = bbox match {
+        case None    => true
+        case Some(q) => e.extent.exists(_.intersects(q))
+      }
+      if (keep) Some(ScanFile(f.getPath.toString, f.getLen, e.count, e.validSplits, e.extent))
+      else None
+    } { (fs, s) =>
       require(s.getLen >= graft.codec.FeatureCodec.HeaderBytes,
         s"${s.getPath}: ${s.getLen} bytes is shorter than a .geomedea header " +
           s"(${graft.codec.FeatureCodec.HeaderBytes}) — truncated or not a geomedea file")
@@ -161,8 +198,11 @@ object GeomedeaTable {
       }
       if (keep) Some(ScanFile(s.getPath.toString, s.getLen, count, Vector.empty,
         fileExtent(head))) else None
-    }.flatten.sortBy(_.path)
-  }
+    }
+
+  /** [[scanFiles]] of one `load(path)`. */
+  def scanFiles(path: String, bbox: Option[Envelope]): Seq[ScanFile] =
+    scanFiles(Seq(path), bbox)
 }
 
 /** Which per-file format invariant answers a pushed aggregate without
@@ -220,7 +260,7 @@ object HeaderStat {
   * from the same per-file header reads (or the one manifest read)
   * planning does — no page is ever decompressed, no feature decoded.
   */
-class GeomedeaStatsScan(path: String, stats: Seq[HeaderStat])
+class GeomedeaStatsScan(paths: Seq[String], stats: Seq[HeaderStat])
     extends Scan with Batch with SupportsReportStatistics {
   override def readSchema(): StructType = StructType(stats.map {
     case HeaderStat.CountRows => StructField("count", LongType, nullable = false)
@@ -229,7 +269,7 @@ class GeomedeaStatsScan(path: String, stats: Seq[HeaderStat])
   })
   override def toBatch: Batch = this
   override def description(): String =
-    s"GeomedeaStatsScan path=$path (header-only ${stats.mkString(",")})"
+    s"GeomedeaStatsScan path=${paths.mkString(",")} (header-only ${stats.mkString(",")})"
   // statically known: one short row — without this, a join against the
   // pushed aggregate would see default-huge stats and decline to broadcast
   override def estimateStatistics(): Statistics = new Statistics {
@@ -239,7 +279,7 @@ class GeomedeaStatsScan(path: String, stats: Seq[HeaderStat])
   override def planInputPartitions(): Array[InputPartition] =
     Array(GeomedeaPartition("<header-stats>"))
   override def createReaderFactory(): PartitionReaderFactory = {
-    val files = GeomedeaTable.scanFiles(path, None)
+    val files = GeomedeaTable.scanFiles(paths, None)
     // count-0 shards have no root node and map to extent None — they
     // contribute to COUNT (nothing) but must not poison the extent fold
     val extent = files.flatMap(_.extent).reduceOption(_ union _)
@@ -264,10 +304,10 @@ final case class GeomedeaStatsReaderFactory(values: Array[Any]) extends Partitio
     }
 }
 
-class GeomedeaTable(path: String, tableSchema: StructType = GeomedeaTable.Schema)
+class GeomedeaTable(paths: Seq[String], tableSchema: StructType = GeomedeaTable.Schema)
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite {
-  override def name(): String = s"geomedea.`$path`"
+  override def name(): String = s"geomedea.`${paths.mkString(",")}`"
   override def schema(): StructType = tableSchema
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
@@ -275,16 +315,16 @@ class GeomedeaTable(path: String, tableSchema: StructType = GeomedeaTable.Schema
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     require(tableSchema == GeomedeaTable.Schema,
       "geomedea reads use the source's own schema; user-specified read schemas are unsupported")
-    new GeomedeaScanBuilder(path, BboxFilterAbsorber.fromOptions(options))
+    new GeomedeaScanBuilder(paths, BboxFilterAbsorber.fromOptions(options))
   }
   override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
   : org.apache.spark.sql.connector.write.WriteBuilder = {
     FeatureRows.requireWritable("geomedea", info.schema())
-    new GeomedeaWriteBuilder(path, info)
+    new GeomedeaWriteBuilder(GeomedeaTable.onePath(paths, "a geomedea write"), info)
   }
 }
 
-class GeomedeaScanBuilder(path: String,
+class GeomedeaScanBuilder(paths: Seq[String],
                           optBbox: Option[graft.geom.Envelope] = None)
     extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
     with SupportsPushDownLimit with SupportsPushDownAggregates {
@@ -353,19 +393,19 @@ class GeomedeaScanBuilder(path: String,
         // turns silent wrong answers into an immediate error.
         require(pushed.isEmpty && bbox.isEmpty,
           "aggregate pushdown reached with filters absorbed — header-only answers would be wrong")
-        new GeomedeaStatsScan(path, stats)
-      case None => new GeomedeaScan(path, bbox, pushed, required, limit)
+        new GeomedeaStatsScan(paths, stats)
+      case None => new GeomedeaScan(paths, bbox, pushed, required, limit)
     }
   }
 }
 
-class GeomedeaScan(path: String, bbox: Option[Envelope], pushed: Array[Filter],
+class GeomedeaScan(paths: Seq[String], bbox: Option[Envelope], pushed: Array[Filter],
                    required: StructType, limit: Option[Int] = None)
     extends Scan with Batch with SupportsReportStatistics {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
-    s"GeomedeaScan path=$path bbox=${bbox.getOrElse("all")} " +
+    s"GeomedeaScan path=${paths.mkString(",")} bbox=${bbox.getOrElse("all")} " +
       s"limit=${limit.getOrElse(-1)} PushedFilters: [${pushed.mkString(", ")}]"
 
   /** SQL-UI scan metrics: decoded pages/bytes/rows summed across tasks —
@@ -375,7 +415,7 @@ class GeomedeaScan(path: String, bbox: Option[Envelope], pushed: Array[Filter],
   override def supportedCustomMetrics(): Array[CustomMetric] =
     Array(new GmPagesMetric, new GmBytesMetric, new GmRowsMetric)
 
-  private lazy val keptFiles: Seq[GeomedeaTable.ScanFile] = GeomedeaTable.scanFiles(path, bbox)
+  private lazy val keptFiles: Seq[GeomedeaTable.ScanFile] = GeomedeaTable.scanFiles(paths, bbox)
 
   /** With a pushed limit and no bbox (no residual filtering possible —
     * filters block limit pushdown upstream), only enough files to cover
@@ -421,7 +461,8 @@ class GeomedeaScan(path: String, bbox: Option[Envelope], pushed: Array[Filter],
     */
   override def toMicroBatchStream(checkpointLocation: String)
   : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new GeomedeaMicroBatchStream(path, bbox, required, checkpointLocation)
+    new GeomedeaMicroBatchStream(GeomedeaTable.onePath(paths, "a geomedea stream"), bbox,
+      required, checkpointLocation)
 }
 
 /** Sum-aggregated scan metrics. Concrete 0-arg classes, NOT a

@@ -46,6 +46,63 @@ class CompactionSpec extends AnyFunSuite {
     dir
   }
 
+  /** Three independent global-spread appends (extent ~= the whole lake —
+    * exactly what erodes pruning) through the v2 writer, so the manifest
+    * describes them.
+    */
+  private def appendGlobalSpread(dir: String): Unit = {
+    import spark.implicits._
+    for (a <- 0 until 3) {
+      (0 until 20).map { i =>
+        val id = (1000 + a * 100 + i).toLong
+        val lng = (if (i % 2 == 0) i % 10 else 100 + i % 10) * 1e7
+        (graft.geom.Wkb.write(graft.geom.Wkb.Pt(lng.toInt, (i / 2 * 1e7).toInt)),
+          Seq(graft.sources.GeoJsonIngest.toCell("doc",
+            graft.codec.FeatureCodec.PString(s"doc-$id")),
+            graft.sources.GeoJsonIngest.toCell("id",
+              graft.codec.FeatureCodec.PInt64(id))))
+      }.toDF("wkb", "props")
+        .repartition(1).write.format("geomedea").mode("append").save(dir)
+    }
+  }
+
+  /** The plans `body` executes (listener events drained before return). */
+  private def plansDuring(body: => Unit): Seq[org.apache.spark.sql.execution.QueryExecution] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.add(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+        seen.add(qe)
+    }
+    spark.listenerManager.register(listener)
+    try { body; org.apache.spark.GraftSparkShim.drainListeners(spark.sparkContext) }
+    finally spark.listenerManager.unregister(listener)
+    seen.toArray(Array.empty[QueryExecution]).toSeq
+  }
+
+  /** Asserts no plan holds a Union and every container scan plans exactly
+    * `pinned` (file names); returns how many scans were checked.
+    */
+  private def assertOneScanOver(plans: Seq[org.apache.spark.sql.execution.QueryExecution],
+                                pinned: Set[String]): Int = {
+    import org.apache.spark.sql.catalyst.plans.logical.Union
+    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
+    plans.map { qe =>
+      val plan = qe.optimizedPlan
+      assert(plan.collect { case u: Union => u }.isEmpty, s"Union in a compaction plan:\n$plan")
+      val scans = plan.collect { case r: DataSourceV2ScanRelation => r.scan }
+      assert(scans.size <= 1, s"more than one container scan in one plan:\n$plan")
+      scans.foreach { scan =>
+        val files = scan.toBatch.planInputPartitions().map(p =>
+          new org.apache.hadoop.fs.Path(p.asInstanceOf[graft.sources.v2.GeomedeaPartition].file).getName)
+        assert(files.toSet == pinned, s"scan planned ${files.toSet}, pinned $pinned")
+      }
+      scans.size
+    }.sum
+  }
+
   private def idsAt(dir: String): Set[(Long, Int, Int)] =
     spark.read.format("geomedea").load(dir)
       .select(element_at(col("prop_vals"), 2).cast("long"), col("min_lng"), col("min_lat"))
@@ -496,7 +553,6 @@ class CompactionSpec extends AnyFunSuite {
   }
 
   test("incremental compaction rewrites only the overspread appends and converges") {
-    import spark.implicits._
     // clustered baseline: 4 shards, each owning a contiguous Hilbert
     // range (small extent vs the union)
     val dir = overlappingLake(4)
@@ -504,21 +560,7 @@ class CompactionSpec extends AnyFunSuite {
     def names() = new java.io.File(dir).listFiles()
       .map(_.getName).filter(_.endsWith(".geomedea")).toSet
     val clustered = names()
-    // three independent global-spread appends (extent ~= the whole lake —
-    // exactly what erodes pruning) through the v2 writer, so the manifest
-    // describes them
-    for (a <- 0 until 3) {
-      (0 until 20).map { i =>
-        val id = (1000 + a * 100 + i).toLong
-        val lng = (if (i % 2 == 0) i % 10 else 100 + i % 10) * 1e7
-        (graft.geom.Wkb.write(graft.geom.Wkb.Pt(lng.toInt, (i / 2 * 1e7).toInt)),
-          Seq(graft.sources.GeoJsonIngest.toCell("doc",
-            graft.codec.FeatureCodec.PString(s"doc-$id")),
-            graft.sources.GeoJsonIngest.toCell("id",
-              graft.codec.FeatureCodec.PInt64(id))))
-      }.toDF("wkb", "props")
-        .repartition(1).write.format("geomedea").mode("append").save(dir)
-    }
+    appendGlobalSpread(dir)
     val rows = idsAt(dir)
     assert(rows.size == 140)
     // targetShardBytes = 1 disables the small-file criterion (tiny test
@@ -560,5 +602,38 @@ class CompactionSpec extends AnyFunSuite {
     val err2 = intercept[IllegalArgumentException](
       Compact.compact(spark, dir, targetShardBytes = 0))
     assert(err2.getMessage.contains("targetShardBytes"))
+  }
+
+  test("compaction reads its pinned shards as one scan: no Union, exactly the picked files") {
+    def shardBytes(dir: String): Map[String, Seq[Byte]] = new java.io.File(dir).listFiles()
+      .filter(_.getName.endsWith(".geomedea"))
+      .map(f => f.getName -> java.nio.file.Files.readAllBytes(f.toPath).toSeq).toMap
+    // full compaction pins every shard
+    val dir = overlappingLake(6)
+    val all = shardBytes(dir).keySet
+    val rows = idsAt(dir)
+    val full = plansDuring(Compact.compact(spark, dir, numShards = 4))
+    assert(assertOneScanOver(full, all) >= 1, "no container scan in the compaction plans")
+    assert(idsAt(dir) == rows)
+
+    // incremental pins only the picked appends; the clustered shards stay
+    // byte-identical
+    val clustered = shardBytes(dir)
+    appendGlobalSpread(dir)
+    val appended = shardBytes(dir).keySet -- clustered.keySet
+    assert(appended.size == 3)
+    val grown = idsAt(dir)
+    var picked = 0
+    val inc = plansDuring {
+      picked = Compact.incremental(spark, dir, numShards = 2, targetShardBytes = 1)
+    }
+    assert(picked == 3)
+    assert(assertOneScanOver(inc, appended) >= 1, "no container scan in the incremental plans")
+    val after = shardBytes(dir)
+    clustered.foreach { case (name, bytes) =>
+      assert(after.get(name).contains(bytes), s"unpicked shard $name was touched")
+    }
+    assert(appended.forall(n => !after.contains(n)))
+    assert(idsAt(dir) == grown)
   }
 }

@@ -657,8 +657,8 @@ class DataSourceV2Spec extends AnyFunSuite {
       case other          => String.valueOf(other)
     }.mkString("|")
     def table(format: String, dir: String): SupportsRead with SupportsWrite = format match {
-      case "geomedea" => new graft.sources.v2.GeomedeaTable(dir)
-      case _          => new graft.sources.v2.FgbTable(dir, graft.sources.v2.FgbTable.Schema)
+      case "geomedea" => new graft.sources.v2.GeomedeaTable(Seq(dir))
+      case _          => new graft.sources.v2.FgbTable(Seq(dir), graft.sources.v2.FgbTable.Schema)
     }
     for (format <- Seq("geomedea", "flatgeobuf")) {
       val out = java.nio.file.Files.createTempDirectory(s"cl_$format").toString + "/o"
@@ -689,6 +689,86 @@ class DataSourceV2Spec extends AnyFunSuite {
       val expect = spark.read.format(format).load(out).collect().map(norm).sorted.toSeq
       assert(expect.length == 80)
       assert(back.map(r => norm(toRow(r).asInstanceOf[org.apache.spark.sql.Row])).sorted == expect)
+    }
+  }
+
+  test("load(paths*): two listed shards of a three-shard lake read as the union of their single loads") {
+    import graft.sources.v2.{FgbCountScan, GeomedeaManifest, GeomedeaPartition, GeomedeaStatsScan}
+    // the third shard's points lie south-west of both others, so a leaked
+    // row changes every count, window and extent checked below
+    val farDir = java.nio.file.Files.createTempDirectory("gm_far").toString
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$farDir/far.geomedea"),
+      GeomedeaFile.write((0 until 30).map(i => Feature(
+        Wkb.Pt((-600000000 + i % 10 * 10000000), (-400000000 + i / 10 * 10000000)),
+        Vector("doc" -> PString(s"far-$i"), "id" -> PInt64(5000L + i)))),
+        compressed = true, pageSizeGoal = 256))
+    val src = spark.read.format("geomedea").load(shardDir)
+    val parts = Seq(src.where(col("min_lng") < 500000000), src.where(col("min_lng") >= 500000000),
+      spark.read.format("geomedea").load(farDir)).map(_.select("wkb", "props"))
+    val window = Envelope.fromDegrees(-70, -50, 10, 10) // west + far, not east
+    def rows(d: DataFrame): Seq[String] = d
+      .select(col("source_file"), col("feature_offset"), hex(col("wkb")),
+        col("prop_vals").cast("string"))
+      .collect().map(_.mkString("|")).sorted.toSeq
+    def scans(d: DataFrame) = d.queryExecution.optimizedPlan.collect {
+      case r: DataSourceV2ScanRelation => r.scan
+    }
+    def plannedFiles(d: DataFrame): Set[String] = scans(d).flatMap(_.toBatch.planInputPartitions()
+      .map(p => new org.apache.hadoop.fs.Path(p.asInstanceOf[GeomedeaPartition].file).getName)).toSet
+    for ((format, suffix) <- Seq("geomedea" -> ".geomedea", "flatgeobuf" -> ".fgb")) {
+      val out = java.nio.file.Files.createTempDirectory(s"multi_$format").toString + "/lake"
+      def shards(): Set[String] = Option(new java.io.File(out).listFiles).toSeq.flatten
+        .map(_.getName).filter(_.endsWith(suffix)).toSet
+      // one single-partition append per shard: west, east, far
+      val Seq(a, b, c) = parts.map { part =>
+        val before = shards()
+        part.repartition(1).write.format(format).mode("append").save(out)
+        val added = shards() -- before
+        assert(added.size == 1, s"$format: $added")
+        added.head
+      }
+      val lake = new org.apache.hadoop.fs.Path(out)
+      assert(GeomedeaManifest.read(lake.getFileSystem(spark.sessionState.newHadoopConf()), lake)
+        .map(_.keySet) == Some(Set(a, b, c)), format)
+      def load(names: String*) = spark.read.format(format).load(names.map(n => s"$out/$n"): _*)
+      val two = load(a, b)
+      val singles = load(a).unionByName(load(b))
+      val expect = rows(singles)
+      assert(expect.size == 80 && rows(load(c)).size == 30, format)
+
+      // full scan: the same rows, planned over exactly the two listed files
+      assert(rows(two) == expect, format)
+      assert(plannedFiles(two) == Set(a, b), format)
+      // bbox: east is pruned at planning, far was never listed
+      assert(rows(bboxWhere(two, window)) == rows(bboxWhere(singles, window)), format)
+      assert(rows(bboxWhere(two, window)).size == 40, format)
+      assert(plannedFiles(bboxWhere(two, window)) == Set(a), format)
+      // limit: a pushed limit below the total returns distinct listed rows;
+      // one above it returns them all
+      val limited = rows(two.limit(50))
+      assert(limited.size == 50 && limited.distinct.size == 50 && limited.forall(expect.contains),
+        format)
+      assert(plannedFiles(two.limit(50)).subsetOf(Set(a, b)), format)
+      assert(rows(two.limit(1000)) == expect, format)
+      // header-pushed COUNT(*) reads the listed headers only
+      val count = two.groupBy().count()
+      assert(scans(count).exists {
+        case _: GeomedeaStatsScan | _: FgbCountScan => true
+        case _                                      => false
+      }, s"$format: ${count.queryExecution.optimizedPlan}")
+      assert(count.head().getLong(0) == expect.size, format)
+
+      if (format == "geomedea") {
+        // header-pushed envelope MIN/MAX over the listed roots equals the
+        // decoded extent of the union (a residual filter blocks the push)
+        val cols = Seq(min("min_lng"), min("min_lat"), max("max_lng"), max("max_lat"))
+        val extent = two.groupBy().agg(cols.head, cols.tail: _*)
+        assert(scans(extent).exists(_.isInstanceOf[GeomedeaStatsScan]),
+          extent.queryExecution.optimizedPlan.toString)
+        val decoded = singles.where(col("feature_offset") >= 0).groupBy().agg(cols.head, cols.tail: _*)
+        assert(!scans(decoded).exists(_.isInstanceOf[GeomedeaStatsScan]))
+        assert(extent.head().toSeq == decoded.head().toSeq)
+      }
     }
   }
 }
