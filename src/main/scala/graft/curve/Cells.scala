@@ -15,6 +15,15 @@ import graft.geom.Envelope
   *
   * cellId = cx * 2^r + cy  (cx, cy ∈ [0, 2^r)).
   *
+  * Level-tagged keys number the cells of every level 0..MaxRes in one
+  * space: key(r, c) = (4^r − 1)/3 + c for the level-r cell id c. Level r's
+  * block starts right after the 1 + 4 + … + 4^(r−1) keys of the coarser
+  * levels, so keys of different levels never collide, and every key is
+  * below (4^(MaxRes+1) − 1)/3. A point has one key per level
+  * ([[pointKeys]]); an envelope is keyed at the one level its size picks
+  * ([[coverKeys]]), so a point/envelope key match means "same cell at the
+  * envelope's level" — the multi-level analog of an S2/H3 region coverer.
+  *
   * Separately, [[Hilbert]] supplies the space-filling-curve key used for
   * range partitioning / clustering; cells are the equi-join key.
   */
@@ -75,6 +84,40 @@ object Cells {
       x += 1
     }
     out
+  }
+
+  @inline private def levelBase(res: Int): Long = ((1L << (2 * res)) - 1) / 3
+
+  /** Level-tagged keys of a point's cells at levels 0..maxRes, coarsest
+    * first: exactly one key per level.
+    */
+  def pointKeys(lng: Int, lat: Int, maxRes: Int): Array[Long] = {
+    checkRes(maxRes)
+    val out = new Array[Long](maxRes + 1)
+    var r = 0
+    while (r <= maxRes) {
+      out(r) = levelBase(r) + cellX(lng, r) * cellsPerAxis(r) + cellY(lat, r)
+      r += 1
+    }
+    out
+  }
+
+  /** Level-tagged keys of an envelope's cover at the finest level
+    * r <= maxRes where the cover spans at most 2 cells on each axis: at
+    * most 4 keys whatever the envelope's size (level 0 is one cell). Cell
+    * edges nest, so a coarser level never spans more cells and the scan
+    * down from maxRes stops at the first fit. A point inside the closed
+    * envelope lies in one of these cells, and its [[pointKeys]] hold
+    * exactly one key of that level, so each envelope hit matches exactly
+    * once. Empty for an empty/inverted envelope, like [[cover]].
+    */
+  def coverKeys(env: Envelope, maxRes: Int): Array[Long] = {
+    checkRes(maxRes)
+    var r = maxRes
+    while (r > 0 && (cellX(env.maxLng, r) - cellX(env.minLng, r) > 1 ||
+        cellY(env.maxLat, r) - cellY(env.minLat, r) > 1)) r -= 1
+    val base = levelBase(r)
+    cover(env, r).map(_ + base)
   }
 
   /** Cover of a WKB geometry's envelope (StaticInvoke-friendly). */

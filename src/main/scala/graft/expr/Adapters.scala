@@ -38,6 +38,12 @@ object Adapters {
   def coverWkb(wkb: Array[Byte], res: Int): ArrayData =
     new GenericArrayData(Cells.cover(cachedEnvelope(wkb), res))
 
+  def pointKeys(lng: Int, lat: Int, maxRes: Int): ArrayData =
+    new GenericArrayData(Cells.pointKeys(lng, lat, maxRes))
+
+  def coverKeysEnv(minLng: Int, minLat: Int, maxLng: Int, maxLat: Int, maxRes: Int): ArrayData =
+    new GenericArrayData(Cells.coverKeys(graft.geom.Envelope(minLng, minLat, maxLng, maxLat), maxRes))
+
   def kring(cell: Long, res: Int, k: Int): ArrayData =
     new GenericArrayData(Cells.kRing(cell, res, k))
 

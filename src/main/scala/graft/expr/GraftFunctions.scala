@@ -120,6 +120,18 @@ object GraftFunctions {
     inv(Adapters.getClass, ArrayType(LongType, containsNull = false), "coverEnv",
       Seq(i(minLng), i(minLat), i(maxLng), i(maxLat), ex(lit(res))))
 
+  /** Level-tagged cell keys of a point, one per level 0..maxRes. */
+  def gmPointKeys(lng: Column, lat: Column, maxRes: Int): Column =
+    inv(Adapters.getClass, ArrayType(LongType, containsNull = false), "pointKeys",
+      Seq(i(lng), i(lat), ex(lit(maxRes))))
+
+  /** Level-tagged cell keys of an envelope at its own level (<= maxRes):
+    * at most 4 (see [[graft.curve.Cells.coverKeys]]).
+    */
+  def gmCoverKeys(minLng: Column, minLat: Column, maxLng: Column, maxLat: Column, maxRes: Int): Column =
+    inv(Adapters.getClass, ArrayType(LongType, containsNull = false), "coverKeysEnv",
+      Seq(i(minLng), i(minLat), i(maxLng), i(maxLat), ex(lit(maxRes))))
+
   def gmKRing(cell: Column, res: Int, k: Column): Column =
     inv(Adapters.getClass, ArrayType(LongType, containsNull = false), "kring",
       Seq(l(cell), ex(lit(res)), i(k)))

@@ -1,5 +1,6 @@
 package graft.jobs
 
+import graft.curve.Cells
 import graft.expr.GraftFunctions._
 import graft.geom.Envelope
 import graft.index.PackedRTree
@@ -11,19 +12,24 @@ import org.apache.spark.sql.functions._
   * (closed-boundary point-in-polygon — results must be identical; the
   * brute-force cross join is the test oracle):
   *
-  *  1. [[cellJoin]] — both sides keyed by grid cell (H3/S2 analog,
-  *     SURVEY.md §2.11): polygons explode to their cell cover, points map
-  *     to one cell, equi-join on cell, exact ST_Contains refinement. The
-  *     cell key makes the join a plain hash/broadcast equi-join Catalyst
-  *     can plan and AQE can re-balance; no theta-join cross product.
+  *  1. [[cellJoin]] — both sides keyed by level-tagged grid cell (H3/S2
+  *     analog, SURVEY.md §2.11): each polygon explodes to at most 4 keys
+  *     at the finest level where its envelope spans at most 2x2 cells,
+  *     points to one key per level, equi-join on the key, exact
+  *     ST_Contains refinement. The level comes from each polygon's own
+  *     envelope, so a dense cluster of small polygons never shares one
+  *     coarse hot cell. The key makes the join a plain hash/broadcast
+  *     equi-join Catalyst can plan and AQE can re-balance; no theta-join
+  *     cross product.
   *  2. [[rtreeJoin]] — the reference's packed-R-tree path (SURVEY.md §2.10):
   *     tree built once on the driver over build-side envelopes
   *     (writer: packed_r_tree/writer.rs:41-84), shipped to executors as a
   *     literal byte blob, probed per row (reader: packed_r_tree/reader.rs:
   *     25-49) producing candidate indices, then exact refinement. No
   *     shuffle of the probe side at all.
-  *  3. [[saltedCellJoin]] — cellJoin with the hot-cell skew handled
-  *     explicitly: build rows replicate x saltFactor, probe rows pick a
+  *  3. [[saltedCellJoin]] — a single-level cell join ([[DefaultRes]])
+  *     with the hot-cell skew handled explicitly, for when the planner may
+  *     pick a shuffle: build rows replicate x saltFactor, probe rows pick a
   *     deterministic salt, so one hot cell spreads over saltFactor tasks
   *     (north_rule requires explicit skew handling; AQE skew join remains
   *     on as backstop).
@@ -36,6 +42,11 @@ import org.apache.spark.sql.functions._
   */
 object SpatialJoin {
 
+  /** Fixed cell level of the single-level strategies: [[saltedCellJoin]],
+    * [[distanceJoin]] and [[polyPolyJoin]]. [[cellJoin]], [[antiJoin]] and
+    * [[zonalStats]] pick a level per polygon instead (capped at
+    * Cells.MaxRes by default).
+    */
   val DefaultRes = 4
 
   // envelope conjuncts first, so only envelope hits reach containsWkb
@@ -44,11 +55,15 @@ object SpatialJoin {
       col("lat") >= col("p_min_lat") && col("lat") <= col("p_max_lat") &&
       stContains(col("poly_wkb"), col("lng"), col("lat")))
 
-  /** Strategy 1: cell-cover equi-join (broadcast the exploded build side). */
-  def cellJoin(points: DataFrame, polys: DataFrame, res: Int = DefaultRes): DataFrame = {
+  /** Strategy 1: multi-level cell-key equi-join (broadcast the exploded
+    * build side, at most 4 rows per polygon). `res` caps the finest level.
+    * Exact with no dedup: a point in a polygon's envelope matches exactly
+    * one of its keys (see [[Cells.coverKeys]]).
+    */
+  def cellJoin(points: DataFrame, polys: DataFrame, res: Int = Cells.MaxRes): DataFrame = {
     val polyCells = polys.withColumn("cell",
-      explode(gmCellCover(col("p_min_lng"), col("p_min_lat"), col("p_max_lng"), col("p_max_lat"), res)))
-    val pts = points.withColumn("cell", gmCell(col("lng"), col("lat"), res))
+      explode(gmCoverKeys(col("p_min_lng"), col("p_min_lat"), col("p_max_lng"), col("p_max_lat"), res)))
+    val pts = points.withColumn("cell", explode(gmPointKeys(col("lng"), col("lat"), res)))
     refined(pts.join(broadcast(polyCells), Seq("cell"), "inner")).drop("cell")
   }
 
@@ -138,12 +153,11 @@ object SpatialJoin {
                    res: Int = DefaultRes,
                    broadcastQueries: Boolean = true): DataFrame = {
     require(radius >= 0, s"radius must be >= 0; got $radius")
-    val minDim = math.min(graft.curve.Cells.cellWidth(res),
-      graft.curve.Cells.cellHeight(res))
+    val minDim = math.min(Cells.cellWidth(res), Cells.cellHeight(res))
     // clamp at the grid size BEFORE narrowing: kRing clips to the world
     // anyway, and an unclamped huge radius would overflow the Int and
     // silently shrink the ring (dropping matches)
-    val k = math.min(graft.curve.Cells.cellsPerAxis(res), radius / minDim + 1).toInt
+    val k = math.min(Cells.cellsPerAxis(res), radius / minDim + 1).toInt
     val qcells = queries
       .withColumn("cell",
         explode(gmKRing(gmCell(col("q_lng"), col("q_lat"), res), res, lit(k))))
@@ -163,7 +177,7 @@ object SpatialJoin {
     * or hash on a key, never a cross product, and the anti side
     * deduplicates matches map-side (semi-join output is id-only).
     */
-  def antiJoin(points: DataFrame, polys: DataFrame, res: Int = DefaultRes): DataFrame = {
+  def antiJoin(points: DataFrame, polys: DataFrame, res: Int = Cells.MaxRes): DataFrame = {
     val matched = cellJoin(points.select("doc_id", "lng", "lat"), polys, res)
       .select("doc_id").distinct()
     points.join(matched, Seq("doc_id"), "left_anti")
@@ -176,7 +190,7 @@ object SpatialJoin {
     * against the BROADCAST aggregate output (per-poly rows — tiny by the
     * cellJoin contract) — never a shuffle of either side.
     */
-  def zonalStats(points: DataFrame, polys: DataFrame, res: Int = DefaultRes): DataFrame = {
+  def zonalStats(points: DataFrame, polys: DataFrame, res: Int = Cells.MaxRes): DataFrame = {
     val zones = cellJoin(points, polys, res)
       .groupBy("poly_id")
       .agg(count(lit(1)).as("n"),

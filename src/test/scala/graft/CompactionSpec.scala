@@ -76,6 +76,9 @@ class CompactionSpec extends AnyFunSuite {
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
         seen.add(qe)
     }
+    // events of earlier actions still on the async bus would otherwise
+    // reach the new listener and be taken for plans of `body`
+    org.apache.spark.GraftSparkShim.drainListeners(spark.sparkContext)
     spark.listenerManager.register(listener)
     try { body; org.apache.spark.GraftSparkShim.drainListeners(spark.sparkContext) }
     finally spark.listenerManager.unregister(listener)

@@ -233,6 +233,71 @@ class CoreSpec extends AnyFunSuite {
     assert(Cells.tileX(t, 3) == 4L && Cells.tileY(t, 3) == 4L)
   }
 
+  test("cells: level-tagged keys — every point in an envelope matches exactly one cover key") {
+    import Cells._
+    def base(r: Int): Long = ((1L << (2 * r)) - 1) / 3
+    def levelOf(key: Long): Int = (0 to MaxRes).filter(r => base(r) <= key).max
+    val rnd = new scala.util.Random(20261017L)
+    def within(lo: Long, hi: Long): Int = (lo + (rnd.nextDouble() * (hi - lo)).toLong).toInt
+    val (wx0, wy0) = (WorldMinLng.toInt, WorldMinLat.toInt)
+    val (wx1, wy1) = ((WorldMinLng + WorldLngSpan).toInt, (WorldMinLat + WorldLatSpan).toInt)
+    def randomEnv(): Envelope = {
+      // log-uniform sides from one scaled unit to the world span
+      val w = math.exp(rnd.nextDouble() * math.log(WorldLngSpan.toDouble)).toLong
+      val h = math.exp(rnd.nextDouble() * math.log(WorldLatSpan.toDouble)).toLong
+      val x = within(WorldMinLng, WorldMinLng + WorldLngSpan - w)
+      val y = within(WorldMinLat, WorldMinLat + WorldLatSpan - h)
+      Envelope(x, y, (x + w).toInt, (y + h).toInt)
+    }
+    def onGrid(r: Int): Envelope = {
+      // edges exactly on level-r cell boundaries, 1..3 cells per side
+      val n = cellsPerAxis(r)
+      val cx = rnd.nextInt(n.toInt - 3).toLong; val cy = rnd.nextInt(n.toInt - 3).toLong
+      val (nx, ny) = (1 + rnd.nextInt(3), 1 + rnd.nextInt(3))
+      Envelope((WorldMinLng + cx * cellWidth(r)).toInt, (WorldMinLat + cy * cellHeight(r)).toInt,
+        (WorldMinLng + (cx + nx) * cellWidth(r)).toInt, (WorldMinLat + (cy + ny) * cellHeight(r)).toInt)
+    }
+    val envs = Seq(
+      Envelope(wx0, wy0, wx1, wy1),                          // the world
+      Envelope(Int.MinValue, Int.MinValue, Int.MaxValue, Int.MaxValue), // beyond it
+      Envelope(wx0, wy0, wx0, wy0), Envelope(wx1, wy1, wx1, wy1), Envelope(0, 0, 0, 0)) ++
+      Seq.fill(40) { val p = randomEnv(); Envelope(p.minLng, p.minLat, p.minLng, p.minLat) } ++
+      Seq.fill(40) { val e = randomEnv(); Envelope(wx0 - 5, e.minLat, e.maxLng, wy1 + 5) } ++ // clamped
+      Seq.fill(40) { val e = randomEnv(); Envelope(e.minLng, wy0, wx1, e.maxLat) } ++
+      Seq.fill(40)(onGrid(8)) ++ Seq.fill(40)(onGrid(9)) ++ Seq.fill(400)(randomEnv())
+    for (e <- envs; maxRes <- 0 to MaxRes) {
+      val keys = coverKeys(e, maxRes)
+      assert(keys.nonEmpty && keys.length <= 4 && keys.distinct.length == keys.length, e)
+      // one level, and the finest within maxRes whose cover spans <= 2x2
+      val lvl = levelOf(keys.head)
+      assert(lvl <= maxRes && keys.forall(levelOf(_) == lvl), e)
+      assert(keys.map(_ - base(lvl)).sorted.toSeq == cover(e, lvl).sorted.toSeq, e)
+      if (lvl < maxRes) assert(cellX(e.maxLng, lvl + 1) - cellX(e.minLng, lvl + 1) > 1 ||
+        cellY(e.maxLat, lvl + 1) - cellY(e.minLat, lvl + 1) > 1, e)
+      val keySet = keys.toSet
+      val xs = Seq(e.minLng, e.maxLng, ((e.minLng.toLong + e.maxLng) / 2).toInt, within(e.minLng, e.maxLng))
+      val ys = Seq(e.minLat, e.maxLat, ((e.minLat.toLong + e.maxLat) / 2).toInt, within(e.minLat, e.maxLat))
+      for (x <- xs; y <- ys) { // corners, edges and interior points
+        val pk = pointKeys(x, y, maxRes)
+        assert(pk.length == maxRes + 1)
+        assert(pk.count(keySet) == 1, s"$e maxRes $maxRes point ($x, $y)")
+        // key r is level r's cell: levels never collide
+        for (r <- 0 to maxRes) {
+          assert(levelOf(pk(r)) == r && pk(r) - base(r) == cellId(x, y, r))
+          assert(pk(r) < base(r + 1))
+        }
+      }
+    }
+    assert(coverKeys(Envelope(wx0, wy0, wx1, wy1), MaxRes).length == 4) // level 1: 2x2
+    assert(coverKeys(Envelope.empty, 4).isEmpty)
+    assert(coverKeys(Envelope(10, 10, -10, 10), MaxRes).isEmpty) // one axis inverted
+    assert(coverKeys(Envelope(10, 10, 10, -10), 0).isEmpty)
+    for (bad <- Seq(-1, MaxRes + 1)) {
+      intercept[IllegalArgumentException](pointKeys(0, 0, bad))
+      intercept[IllegalArgumentException](coverKeys(Envelope(0, 0, 1, 1), bad))
+    }
+  }
+
   test("delta-zigzag codec roundtrip + compactness") {
     assert(DeltaZigZag.zigzag(0L) == 0L && DeltaZigZag.zigzag(-1L) == 1L && DeltaZigZag.zigzag(1L) == 2L)
     assert(DeltaZigZag.unzigzag(DeltaZigZag.zigzag(-123456789L)) == -123456789L)

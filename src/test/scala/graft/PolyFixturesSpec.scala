@@ -40,13 +40,38 @@ class PolyFixturesSpec extends AnyFunSuite {
       df.select("poly_id", "doc_id").collect().map(r => (r.getLong(0), r.getString(1))).toSet
     val brute = key(SpatialJoin.bruteForce(geo, counties))
     assert(key(SpatialJoin.cellJoin(geo, counties, res = 6)) == brute)
-    // DefaultRes puts ~500 counties in the hot cluster's cell, so the
-    // envelope filter discards most cell candidates before PIP
+    // the default cap keys each county at its own level (8 or 9), so the
+    // hot cluster no longer shares one coarse cell with ~500 counties
     assert(key(SpatialJoin.cellJoin(geo, counties)) == brute)
     assert(key(SpatialJoin.saltedCellJoin(geo, counties)) == brute)
     assert(key(SpatialJoin.hilbertRangeJoin(geo, counties)) == brute)
     assert(key(SpatialJoin.rtreeJoin(geo, counties)) == brute)
     assert(brute.nonEmpty) // hot cluster sits inside the US extent
+  }
+
+  test("cellJoin work bound: key matches stay within 10x the result pairs; <= 4 build rows per polygon") {
+    import graft.curve.Cells
+    val geo = InterleavedDocs.withGeometry(InterleavedDocs.docs(spark, Sf))
+    val counties = PolyFixtures.usCountiesStandIn(spark)
+    def envelopes(df: org.apache.spark.sql.DataFrame): Seq[Envelope] =
+      df.select("p_min_lng", "p_min_lat", "p_max_lng", "p_max_lat").collect()
+        .map(r => Envelope(r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3))).toSeq
+    val world = Envelope(Cells.WorldMinLng.toInt, Cells.WorldMinLat.toInt,
+      (Cells.WorldMinLng + Cells.WorldLngSpan).toInt, (Cells.WorldMinLat + Cells.WorldLatSpan).toInt)
+    val countyEnvs = envelopes(counties)
+    for (e <- countyEnvs ++ envelopes(InterleavedDocs.nationRects(spark, Sf)) :+ world)
+      assert(Cells.coverKeys(e, Cells.MaxRes).length <= 4, e)
+    // build rows per key, then every doc's keys probe them: the rows the
+    // join condition sees before refinement
+    val perKey = countyEnvs.flatMap(e => Cells.coverKeys(e, Cells.MaxRes))
+      .groupBy(identity).map { case (k, v) => k -> v.length.toLong }
+    val pts = geo.select("lng", "lat").collect().map(r => (r.getInt(0), r.getInt(1)))
+    val matches = pts.iterator.map { case (x, y) =>
+      Cells.pointKeys(x, y, Cells.MaxRes).iterator.map(perKey.getOrElse(_, 0L)).sum
+    }.sum
+    val results = SpatialJoin.bruteForce(geo, counties).count()
+    info(s"${pts.length} docs: $matches key matches for $results result pairs")
+    assert(results > 0 && matches <= 10 * results, s"$matches matches for $results results")
   }
 
   test("Describe.layout/summary and the Info CLI reflect the written table") {

@@ -131,6 +131,74 @@ class SparkSpec extends AnyFunSuite {
     assert(rows(SpatialJoin.zonalStats(pts, polys), zoneCols: _*) == rows(bruteZones, zoneCols: _*))
   }
 
+  test("mixed-size polygons: multi-level cellJoin, antiJoin and zonalStats equal brute force") {
+    import graft.curve.Cells
+    import graft.geom.Wkb
+    import graft.table.PolyFixtures
+    val s = spark
+    import s.implicits._
+    val M = 1000000
+    val (wx0, wy0) = (Cells.WorldMinLng.toInt, Cells.WorldMinLat.toInt)
+    val (wx1, wy1) = (-wx0, -wy0)
+    // a point-sized rectangle on a level-9-only cell corner (odd indices)
+    val (px, py) = ((Cells.WorldMinLng + 301 * Cells.cellWidth(9)).toInt,
+      (Cells.WorldMinLat + 77 * Cells.cellHeight(9)).toInt)
+    def asPolys(df: DataFrame, idOffset: Long): Seq[(Long, Array[Byte], Envelope)] =
+      df.select("poly_id", "poly_wkb", "p_min_lng", "p_min_lat", "p_max_lng", "p_max_lat").collect()
+        .map(r => (r.getLong(0) + idOffset, r.getAs[Array[Byte]](1),
+          Envelope(r.getInt(2), r.getInt(3), r.getInt(4), r.getInt(5)))).toSeq
+    val sliver = Wkb.Poly(Vector(Seq((-500, -300), (-100, 100), (-150, 60), (-500, -300))
+      .map { case (x, y) => Wkb.pack(x * M, y * M) }.toArray))
+    val shapes = asPolys(PolyFixtures.usCountiesStandIn(spark), 0L) ++ asPolys(rects, 10000L) ++
+      Seq(20000L -> Wkb.rectWkb(wx0, wy0, wx1, wy1), 20001L -> Wkb.rectWkb(px, py, px, py),
+        20002L -> Wkb.write(sliver)).map { case (id, wkb) => (id, wkb, Wkb.read(wkb).envelope) }
+    val polys = shapes.map { case (id, wkb, e) => (id, wkb, e.minLng, e.minLat, e.maxLng, e.maxLat) }
+      .toDF("poly_id", "poly_wkb", "p_min_lng", "p_min_lat", "p_max_lng", "p_max_lat")
+    def levelOf(key: Long): Int = (0 to Cells.MaxRes).filter(r => ((1L << (2 * r)) - 1) / 3 <= key).max
+    // per polygon: its envelope corners, one unit outside two sides, and
+    // points on (and one unit below) every cell edge crossing its envelope
+    // at the level each tested cap keys it at, plus where those edges cross
+    val pts = shapes.flatMap { case (_, _, e) =>
+      val edges = Seq(Cells.MaxRes, 6, 4).map(m => levelOf(Cells.coverKeys(e, m).head)).distinct
+        .map { l =>
+          val xs = (Cells.cellX(e.minLng, l) + 1 to Cells.cellX(e.maxLng, l))
+            .map(cx => (Cells.WorldMinLng + cx * Cells.cellWidth(l)).toInt)
+          val ys = (Cells.cellY(e.minLat, l) + 1 to Cells.cellY(e.maxLat, l))
+            .map(cy => (Cells.WorldMinLat + cy * Cells.cellHeight(l)).toInt)
+          xs.flatMap(x => Seq((x, e.minLat), (x - 1, e.maxLat))) ++
+            ys.flatMap(y => Seq((e.minLng, y), (e.maxLng, y - 1))) ++
+            (for (x <- xs; y <- ys) yield (x, y))
+        }
+      Seq((e.minLng, e.minLat), (e.maxLng, e.maxLat), (e.minLng, e.maxLat), (e.maxLng, e.minLat),
+        (e.minLng - 1, e.minLat), (e.maxLng + 1, e.maxLat)) ++ edges.flatten
+    }.distinct.zipWithIndex.map { case ((x, y), i) => (f"pt-$i%06d", x, y) }
+      .toDF("doc_id", "lng", "lat").cache()
+
+    val bruteDf = SpatialJoin.bruteForce(pts, polys).cache()
+    val brute = rows(bruteDf, "poly_id", "doc_id")
+    // every polygon has a hit, and some points (outside the world) have none
+    assert(brute.map(_.head) == shapes.map(_._1).toSet)
+    val anti = rows(pts, "doc_id") -- brute.map(_.tail)
+    assert(anti.nonEmpty)
+    for ((name, df) <- Seq(
+        "cellJoin" -> SpatialJoin.cellJoin(pts, polys),
+        "cellJoin res 0" -> SpatialJoin.cellJoin(pts, polys, res = 0),
+        "cellJoin res 4" -> SpatialJoin.cellJoin(pts, polys, res = 4),
+        "cellJoin res 6" -> SpatialJoin.cellJoin(pts, polys, res = 6))) {
+      val got = df.select("poly_id", "doc_id").collect().map(_.toSeq)
+      assert(got.length == brute.size, s"$name: ${got.length} rows for ${brute.size} pairs")
+      assert(got.toSet == brute, name)
+    }
+    assert(rows(SpatialJoin.antiJoin(pts, polys), "doc_id") == anti)
+    val zoneCols = Seq("poly_id", "n", "z_min_lng", "z_min_lat", "z_max_lng", "z_max_lat")
+    val bruteZones = bruteDf.groupBy("poly_id")
+      .agg(count(lit(1)).as("n"),
+        min("lng").cast("long").as("z_min_lng"), min("lat").cast("long").as("z_min_lat"),
+        max("lng").cast("long").as("z_max_lng"), max("lat").cast("long").as("z_max_lat"))
+    assert(rows(SpatialJoin.zonalStats(pts, polys), zoneCols: _*) == rows(bruteZones, zoneCols: _*))
+    bruteDf.unpersist(); pts.unpersist()
+  }
+
   test("distance-within join equals brute force at several radii, both join strategies") {
     val queries = InterleavedDocs.nationQueryPoints(spark, Sf)
     // radii straddling cell sizes at res 4 (225e6 x 112.5e6): sub-cell,
