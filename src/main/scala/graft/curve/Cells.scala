@@ -102,6 +102,13 @@ object Cells {
     out
   }
 
+  /** The level a level-tagged key belongs to. */
+  def keyLevel(key: Long): Int = {
+    var r = 0
+    while (r < MaxRes && levelBase(r + 1) <= key) r += 1
+    r
+  }
+
   /** Level-tagged keys of an envelope's cover at the finest level
     * r <= maxRes where the cover spans at most 2 cells on each axis: at
     * most 4 keys whatever the envelope's size (level 0 is one cell). Cell

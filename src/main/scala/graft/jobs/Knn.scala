@@ -2,80 +2,103 @@ package graft.jobs
 
 import graft.curve.Cells
 import graft.expr.GraftFunctions._
+import graft.geom.Envelope
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Exact kNN via cell-ring expansion (SURVEY.md §2.11), planned in two
-  * Spark jobs:
+/** Exact kNN from a sampled distance bound (SURVEY.md §2.11). The point
+  * side is scanned exactly twice, whatever k or the data skew:
   *
-  *  1. per-cell doc counts (one groupBy over <= 4^res cells) are collected
-  *     to the driver — the moral equivalent of the reference's packed
-  *     R-tree level: a tiny summary that prunes the probe;
-  *  2. each query widens a Chebyshev ring over those counts until it
-  *     provably contains k candidates, then inflates it to the
-  *     exclusion-safe radius R with R*minDim >= (r+1)*sqrt(cw^2+ch^2)
-  *     (any point outside ring R is farther than every point inside ring
-  *     r), and a single cell equi-join + per-query bounded top-k agg
-  *     finishes. Ring planning runs on the driver (broadcast join) for
-  *     small query sets and inside an executor flatMap (shuffle join)
-  *     past [[MaxQueries]] — same math, same results.
+  *  1. **Sample.** The point rows with the [[SampleRows]] smallest
+  *     `xxhash64(doc_id, lng, lat)` are collected (one job, no shuffle; the
+  *     driver holds at most the cap whatever any size estimate says).
+  *  2. **Bound.** For each query, D is the k-th smallest sampled dist2, or
+  *     +∞ when the sample has fewer than k rows. Sampled rows are real
+  *     rows, so at least k points lie within D: D bounds the true k-th
+  *     distance from above, exactly, for any sample.
+  *  3. **Keyed probe.** The box q ± (ceil(sqrt(D)) + 1), clamped to the
+  *     Int range, is covered by at most 4 level-tagged keys
+  *     ([[Cells.coverKeys]]); an infinite D probes the one level-0 (world)
+  *     cell. The +1 absorbs double rounding; the inclusive `dist2 <= D`
+  *     in the join condition decides membership: every row that can
+  *     rank reaches the window, and only rows within D do.
+  *  4. **Native top-k.** `row_number() over (partition by query_id order
+  *     by dist2, doc_id)` with `rank <= k`. For k up to
+  *     `spark.sql.optimizer.windowGroupLimitThreshold` (default 1000)
+  *     Catalyst plans a partial `WindowGroupLimit` below the exchange, so
+  *     each map task cuts every query to k rows before the shuffle; past
+  *     it the window still ranks exactly, over the unlimited rows. Strings
+  *     order as UTF-8 bytes, Spark's and the DuckDB oracle's order.
   *
-  * No driver loop of Spark jobs, no iterative re-scans: the doc side is
-  * touched exactly twice regardless of k or data skew. Distances are
-  * squared Euclidean in scaled-int space computed in double (dx*dx +
-  * dy*dy, IEEE-reproducible by the DuckDB oracle); ties break on doc_id.
+  * Distances are squared Euclidean in scaled-int space computed in double
+  * (dx*dx + dy*dy, IEEE-reproducible by the DuckDB oracle, and by
+  * [[bound]], so a sampled row's D is the very dist2 the filter sees);
+  * ties break on doc_id. Points with a null coordinate never match.
   */
 object Knn {
 
-  /** Res 7 (128x128 grid), not the join default 4: kNN pays per CANDIDATE
-    * row (each one runs the top-k aggregator), and at res 4 a 22.5 x
-    * 11.25 degree cell swallows the whole hot cluster — any query whose
-    * inflated ring touches that cell drags ~90% of the table through the
-    * aggregate. Smaller cells tighten the rings (measured on the 2M-doc
-    * bench: 0.85 s at res 4, 0.57 s at res 6, 0.52 s at res 7 — past
-    * that, ring-planning fan-out eats the candidate savings), and the
-    * result is EXACT at any res — the exclusion-safe ring inflation in
-    * [[safeRadius]] does not depend on the cell size. The histogram stays
-    * driver-bounded (<= 4^7 = 16384 entries).
-    */
-  val DefaultRes = 7
-
   /** Past this many queries the probe side stops being broadcastable and
-    * [[knn]] switches to the distributed expansion automatically.
+    * [[knn]] switches to the distributed probe automatically.
     */
   val MaxQueries = 100000
 
-  /** Exclusion-safe probe radius for one query cell: widen a Chebyshev
-    * ring until the histogram proves it holds k candidates, then inflate
-    * so any point outside the returned ring is farther than every point
-    * inside the counted one. The +1 guards the boundary-tie case (an
-    * outside point at exactly the exclusion distance competing with an
-    * equal-distance inside point). Pure — runs on the driver for small
-    * query sets and inside the executor flatMap for large ones.
+  /** Hard cap on the sampled point rows the bound is taken from. */
+  val SampleRows = 4096
+
+  /** The non-null (lng, lat) of the point rows with the [[SampleRows]]
+    * smallest `xxhash64(doc_id, lng, lat)` (ties broken on the row itself,
+    * so two calls return the same rows): a top-k sort, one Spark job.
     */
-  private def safeRadius(cellCounts: Map[Long, Long], qcell: Long, k: Int, res: Int,
-                         perAxis: Long, diag: Double, minDim: Double): Int = {
-    def ringCount(r: Int): Long =
-      Cells.kRing(qcell, res, r).iterator.map(c => cellCounts.getOrElse(c, 0L)).sum
-    var r = 0
-    while (r < perAxis && ringCount(r) < k) r += 1
-    math.min(perAxis.toDouble, math.ceil((r + 1) * diag / minDim) + 1).toInt
+  private[graft] def sample(points: DataFrame): Array[(Int, Int)] =
+    points.select(col("doc_id"), col("lng").cast("int").as("lng"), col("lat").cast("int").as("lat"))
+      .where(col("lng").isNotNull && col("lat").isNotNull)
+      .orderBy(xxhash64(col("doc_id"), col("lng"), col("lat")), col("doc_id"), col("lng"), col("lat"))
+      .limit(SampleRows).select("lng", "lat")
+      .collect().map(r => (r.getInt(0), r.getInt(1)))
+
+  /** The k-th smallest dist2 from (qlng, qlat) over the sample, by a
+    * bounded max-heap (O(S log k)); +∞ when the sample has fewer than k
+    * rows.
+    */
+  private def bound(sample: Array[(Int, Int)], qlng: Int, qlat: Int, k: Int): Double =
+    if (k < 1 || sample.length < k) Double.PositiveInfinity
+    else {
+      val heap = scala.collection.mutable.PriorityQueue.empty(Ordering.Double.TotalOrdering)
+      sample.foreach { case (lng, lat) =>
+        val dx = (lng.toLong - qlng).toDouble
+        val dy = (lat.toLong - qlat).toDouble
+        val d = dx * dx + dy * dy
+        if (heap.size < k) heap.enqueue(d)
+        else if (d < heap.head) { heap.dequeue(); heap.enqueue(d) }
+      }
+      heap.head
+    }
+
+  /** One query's bound and the level-tagged keys covering every point
+    * within it. Pure: runs on the driver for broadcastable query sets and
+    * in the executor flatMap past them.
+    */
+  private def probe(sample: Array[(Int, Int)], qlng: Int, qlat: Int, k: Int): (Double, Array[Long]) = {
+    val d = bound(sample, qlng, qlat, k)
+    if (d.isInfinite) (d, Cells.pointKeys(qlng, qlat, 0))
+    else {
+      val r = math.ceil(math.sqrt(d)).toLong + 1
+      def c(v: Long): Int = math.max(Int.MinValue.toLong, math.min(Int.MaxValue.toLong, v)).toInt
+      (d, Cells.coverKeys(Envelope(c(qlng - r), c(qlat - r), c(qlng + r), c(qlat + r)), Cells.MaxRes))
+    }
   }
 
   /** points: (doc_id, lng, lat, ...); queries: (query_id, q_lng, q_lat).
     * Returns (query_id, rank, doc_id, dist2), rank 1..k. Exact.
     *
-    * Query sets up to `maxBroadcast` rows are ring-planned on the driver
-    * and broadcast into the cell join (probe side never shuffles). Larger
-    * sets switch AUTOMATICALLY to the same algorithm run distributed: the
-    * per-cell histogram (O(4^res), data-bound not query-bound) is
-    * broadcast to executors, each query plans its own ring inside a
-    * flatMap, and the cell join shuffles both sides. Results are
-    * identical; only the join strategy changes. At doc-scale query sets
-    * raise `res` so the cell key space (4^res) comfortably exceeds the
-    * shuffle partition count — res 4's 256 keys would make a skewy
-    * shuffle — and AQE's skew-join handles residual hot cells.
+    * Query sets up to `maxBroadcast` rows are planned on the driver and
+    * broadcast into the key join (the point side never shuffles), and
+    * points emit keys only at the levels those probes use. Larger sets
+    * switch AUTOMATICALLY to the same plan run distributed: the sample is
+    * broadcast, each query plans its own probe inside a flatMap, points
+    * emit every level 0..MaxRes, and the key join shuffles both sides.
+    * Results are identical; only the join strategy changes.
     *
     * The broadcastability probe evaluates the query plan once (a
     * short-circuiting `limit(maxBroadcast+1)`), and the distributed
@@ -83,119 +106,49 @@ object Knn {
     * before calling, and never pass a non-deterministic one (a
     * re-sampled plan could diverge between probe and join).
     */
-  def knn(points: DataFrame, queries: DataFrame, k: Int, res: Int = DefaultRes,
+  def knn(points: DataFrame, queries: DataFrame, k: Int,
           maxBroadcast: Int = MaxQueries): DataFrame = {
-    val perAxis = Cells.cellsPerAxis(res)
-    val cw = Cells.cellWidth(res).toDouble
-    val ch = Cells.cellHeight(res).toDouble
-    val minDim = math.min(cw, ch)
-    val diag = math.sqrt(cw * cw + ch * ch)
-
-    val pts = points
-      .select(col("doc_id"), col("lng"), col("lat"))
-      .withColumn("cell", gmCell(col("lng"), col("lat"), res))
-
-    // job 1: tiny per-cell histogram -> driver (<= 4^res rows)
-    val cellCounts: Map[Long, Long] = pts.groupBy("cell").count()
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-
     val spark = points.sparkSession
     import spark.implicits._
 
-    // driver-side ring planning while the query set is broadcastable; the
-    // limit bounds the probing collect itself, so an oversized set costs
-    // maxBroadcast+1 rows of driver memory, never the full set
-    // same casts as the distributed branch below: the driver branch must
-    // not crash on int query ids / long coords the other path accepts
-    val qRows: Array[Row] = queries.select(col("query_id").cast("long"),
-        col("q_lng").cast("int"), col("q_lat").cast("int"))
-      .limit(maxBroadcast + 1).collect()
-    val broadcastable = qRows.length <= maxBroadcast
-    val qcells: DataFrame = if (broadcastable) {
-      val probeCells: Seq[(Long, Int, Int, Long)] = qRows.toSeq.flatMap { row =>
-        val qid = row.getLong(0)
-        val qlng = row.getInt(1); val qlat = row.getInt(2)
-        val qcell = Cells.cellId(qlng, qlat, res)
-        val safe = safeRadius(cellCounts, qcell, k, res, perAxis, diag, minDim)
-        Cells.kRing(qcell, res, safe).map(c => (qid, qlng, qlat, c))
+    val smp = sample(points)
+    // same casts in both branches: the driver branch must not crash on
+    // int query ids / long coords the other path accepts
+    val qs = queries.select(col("query_id").cast("long"), col("q_lng").cast("int"),
+      col("q_lat").cast("int"))
+    // the limit bounds the branch-picking collect itself: an oversized set
+    // costs maxBroadcast+1 rows of driver memory, never the full set
+    val qRows: Array[Row] = qs.limit(maxBroadcast + 1).collect()
+    val (probes, levels) = if (qRows.length <= maxBroadcast) {
+      val planned = qRows.toSeq.flatMap { row =>
+        val (qid, qlng, qlat) = (row.getLong(0), row.getInt(1), row.getInt(2))
+        val (d, keys) = probe(smp, qlng, qlat, k)
+        keys.map(key => (qid, qlng, qlat, d, key))
       }
-      broadcast(probeCells.toDF("query_id", "q_lng", "q_lat", "cell"))
+      (broadcast(planned.toDF("query_id", "q_lng", "q_lat", "bound", "key")),
+        planned.map(p => Cells.keyLevel(p._5)).distinct)
     } else {
-      // distributed fallback: same ring planning, executor-side. The
-      // histogram is the only driver state and it is data-bound.
-      val bc = spark.sparkContext.broadcast(cellCounts)
-      val kk = k; val rr = res; val pa = perAxis; val dg = diag; val md = minDim
-      queries.select(col("query_id").cast("long"), col("q_lng").cast("int"),
-          col("q_lat").cast("int"))
-        .as[(Long, Int, Int)]
-        .flatMap { case (qid, qlng, qlat) =>
-          val qcell = Cells.cellId(qlng, qlat, rr)
-          val safe = safeRadius(bc.value, qcell, kk, rr, pa, dg, md)
-          Cells.kRing(qcell, rr, safe).map(c => (qid, qlng, qlat, c))
-        }
-        .toDF("query_id", "q_lng", "q_lat", "cell")
+      val bc = spark.sparkContext.broadcast(smp)
+      val kk = k
+      (qs.as[(Long, Int, Int)].flatMap { case (qid, qlng, qlat) =>
+        val (d, keys) = probe(bc.value, qlng, qlat, kk)
+        keys.map(key => (qid, qlng, qlat, d, key))
+      }.toDF("query_id", "q_lng", "q_lat", "bound", "key"), 0 to Cells.MaxRes)
     }
 
-    // job 2: single cell equi-join, then a bounded top-k AGGREGATION per
-    // query. Spark plans the typed Aggregator as a two-phase hash
-    // aggregate, so with skewed data (the hot cluster collapses into one
-    // cell) each map task combines its candidates down to <= k rows per
-    // query BEFORE the shuffle — the partial top-k that round 1's bare
-    // `row_number() over (partition by query_id)` lacked (measured
-    // 39.5 s -> 6.2 s at sf0.1) now falls out of map-side combine, with
-    // the scan->join->project pipeline staying whole-stage-codegen up to
-    // the aggregate (the round-2 mapPartitions pass broke codegen and
-    // paid row ser/de per candidate). Exactness: the global top-k is
-    // contained in the union of per-partition top-ks, and the
-    // aggregator's (dist2, doc_id-binary) order IS the rank order, so no
-    // window is needed at all — rank = position in the merged buffer.
+    val top = if (levels.isEmpty) 0 else levels.max
+    val pk = gmPointKeys(col("lng"), col("lat"), top)
+    val keys = if (levels.size == top + 1) pk else filter(pk, (_, level) => level.isin(levels: _*))
+    val pts = points.select(col("doc_id"), col("lng"), col("lat"), explode(keys).as("key"))
     val dx = (col("lng").cast("long") - col("q_lng").cast("long")).cast("double")
     val dy = (col("lat").cast("long") - col("q_lat").cast("long")).cast("double")
-    val joined = pts.join(qcells, Seq("cell"), "inner")
+    val w = Window.partitionBy(col("query_id")).orderBy(col("dist2").asc, col("doc_id").asc)
+    pts.join(probes, "key")
       .withColumn("dist2", dx * dx + dy * dy)
-      .select("query_id", "doc_id", "dist2")
-    val topk = udaf(new TopKAgg(k), org.apache.spark.sql.Encoders.product[Cand])
-    joined.groupBy("query_id")
-      .agg(topk(col("doc_id"), col("dist2")).as("tk"))
-      .select(col("query_id"), posexplode(col("tk")))
-      .select(col("query_id"), (col("pos") + 1).as("rank"),
-        col("col.doc_id").as("doc_id"), col("col.dist2").as("dist2"))
-  }
-
-  final case class Cand(doc_id: String, dist2: Double)
-
-  /** Bounded exact top-k aggregator over (doc_id, dist2), ordered by
-    * (dist2 asc, doc_id asc in UTF-8 BINARY order — Spark's and the
-    * DuckDB oracle's string order, not Java's UTF-16 compareTo, which
-    * disagrees on supplementary-plane ids; nulls first, matching SQL asc
-    * nulls-first). The buffer is the sorted top-k itself, so `finish`
-    * emits ranks directly and memory is O(k) per query per task.
-    */
-  final class TopKAgg(k: Int)
-      extends org.apache.spark.sql.expressions.Aggregator[Cand, Seq[Cand], Seq[Cand]] {
-    private def lt(a: Cand, b: Cand): Boolean = {
-      val c = java.lang.Double.compare(a.dist2, b.dist2)
-      if (c != 0) c < 0
-      else if (a.doc_id == null) b.doc_id != null
-      else if (b.doc_id == null) false
-      else org.apache.spark.unsafe.types.UTF8String.fromString(a.doc_id)
-        .binaryCompare(org.apache.spark.unsafe.types.UTF8String.fromString(b.doc_id)) < 0
-    }
-    private def insert(buf: Seq[Cand], c: Cand): Seq[Cand] =
-      if (buf.length >= k && !lt(c, buf.last)) buf
-      else {
-        val idx = buf.indexWhere(x => lt(c, x))
-        val i = if (idx < 0) buf.length else idx
-        (buf.take(i) :+ c) ++ buf.drop(i).take(k - i - 1)
-      }
-    override def zero: Seq[Cand] = Vector.empty
-    override def reduce(buf: Seq[Cand], c: Cand): Seq[Cand] = insert(buf, c)
-    override def merge(a: Seq[Cand], b: Seq[Cand]): Seq[Cand] = b.foldLeft(a)(insert)
-    override def finish(r: Seq[Cand]): Seq[Cand] = r
-    override def bufferEncoder: org.apache.spark.sql.Encoder[Seq[Cand]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Cand]]()
-    override def outputEncoder: org.apache.spark.sql.Encoder[Seq[Cand]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Cand]]()
+      .where(col("dist2") <= col("bound"))
+      .withColumn("rank", row_number().over(w))
+      .where(col("rank") <= k)
+      .select("query_id", "rank", "doc_id", "dist2")
   }
 
   /** Test/oracle brute force: window top-k over the full cross join. */

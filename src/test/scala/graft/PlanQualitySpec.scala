@@ -122,6 +122,34 @@ class PlanQualitySpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
+  test("kNN plans a bound-filtered broadcast key join and a partial WindowGroupLimit below the exchange — no aggregate") {
+    import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, Expression, LessThanOrEqual}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.execution.window.{Partial, WindowGroupLimitExec}
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(a, b) => conjuncts(a) ++ conjuncts(b)
+      case other     => Seq(other)
+    }
+    val queries = InterleavedDocs.nationQueryPoints(spark, Sf)
+    val p = graft.jobs.Knn.knn(geo, queries, 3).queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case other                    => other
+    }
+    val joins = p.collect { case j: BroadcastHashJoinExec => j }
+    assert(joins.length == 1, p)
+    assert(joins.head.condition.toSeq.flatMap(conjuncts).exists {
+      case LessThanOrEqual(_, a: AttributeReference) => a.name == "bound"
+      case _                                         => false
+    }, s"the dist2 <= bound filter must sit in the join condition:\n$p")
+    val partialBelowExchange = p.collect { case x: ShuffleExchangeExec => x }.exists(
+      _.child.exists { case w: WindowGroupLimitExec => w.mode == Partial; case _ => false })
+    assert(partialBelowExchange, s"expected a partial WindowGroupLimit below the exchange:\n$p")
+    assert(p.collect { case a: BaseAggregateExec => a }.isEmpty, s"kNN must not aggregate:\n$p")
+  }
+
   test("as-of join plans as union + ONE key shuffle + window — no join node at all") {
     val ev = spark.read.parquet(s"$Sf/events.parquet")
     val p = ev.where(col("event_type") === "purchase").select("event_id", "user_id", "ts")

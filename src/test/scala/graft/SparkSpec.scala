@@ -345,6 +345,97 @@ class SparkSpec extends AnyFunSuite {
       s"distributed kNN fallback must expand rings executor-side:\n$plan")
   }
 
+  test("kNN sampled bound: both branches equal brute force on edge fixtures") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(6)
+    // a hot 2x2-degree cluster larger than the sample cap, sparse world points
+    val hot = (0 until 6000).map(i => (f"h$i%05d", Option(-1190000000 + rnd.nextInt(20000000)),
+      Option(340000000 + rnd.nextInt(20000000))))
+    val sparse = (0 until 400).map(i => (f"s$i%04d", Option(rnd.nextInt(3600000) * 1000 - 1800000000),
+      Option(rnd.nextInt(1800000) * 1000 - 900000000)))
+    // world edges and corners, and points past the world edge
+    val edges = for {
+      (x, i) <- Seq(-1800000000, 0, 1800000000, 2000000000, Int.MaxValue).zipWithIndex
+      (y, j) <- Seq(-900000000, 0, 900000000, Int.MinValue).zipWithIndex
+    } yield (s"e$i$j", Option(x), Option(y))
+    // 15 duplicates at a query's own location (D = 0 for k <= 15)
+    val dups = (0 until 15).map(i => (f"d$i%02d", Option(500000000), Option(-200000000)))
+    // six points tied at distance 1000 from (7e8, 1e8); their ids order
+    // differently as UTF-8 bytes and as UTF-16 chars
+    val tieIds = Seq("t\uFFFF", "t\uD83D\uDE00", "t\uE000", "t\uD800\uDC00", "ta", "t\u00E9")
+    val ties = tieIds.zip(Seq((1000, 0), (-1000, 0), (0, 1000), (0, -1000), (600, 800), (-600, -800)))
+      .map { case (id, (dx, dy)) => (id, Option(700000000 + dx), Option(100000000 + dy)) }
+    val nulls = Seq(("n0", None, Option(340000000)), ("n1", Option(-1180000000), None),
+      ("n2", None, None))
+    def pointsOf(rs: Seq[(String, Option[Int], Option[Int])]) = rs.toDF("doc_id", "lng", "lat")
+    val all = pointsOf(hot ++ sparse ++ edges ++ dups ++ ties ++ nulls)
+    val queries = Seq(
+      (1L, -1180000000, 350000000), (2L, -1190000000, 340000000), (3L, -1170000000, 360000000),
+      (4L, -1000000000, 300000000), (5L, 1000000000, -500000000), (6L, -1800000000, -900000000),
+      (7L, 1800000000, 900000000), (8L, Int.MaxValue, Int.MaxValue), (9L, Int.MinValue, Int.MinValue),
+      (10L, 500000000, -200000000), (11L, 700000000, 100000000), (12L, 0, 0))
+      .toDF("query_id", "q_lng", "q_lat")
+    val cols = Seq("query_id", "rank", "doc_id", "dist2")
+    def check(points: DataFrame, k: Int): Unit = {
+      val brute = Knn.bruteForce(points.where(col("lng").isNotNull && col("lat").isNotNull), queries, k)
+        .select(cols.map(col): _*).collect().map(_.toSeq)
+      for (mb <- Seq(Knn.MaxQueries, 0)) {
+        val got = Knn.knn(points, queries, k, maxBroadcast = mb)
+          .select(cols.map(col): _*).collect().map(_.toSeq)
+        assert(got.length == brute.length && got.toSet == brute.toSet, s"k=$k maxBroadcast=$mb")
+      }
+    }
+    for (k <- Seq(1, 3, 10, Knn.SampleRows + 1)) check(all, k)
+    // the tie query keeps the UTF-8 order of the tied ids
+    val tied = Knn.knn(all, queries.where(col("query_id") === 11L), 3).orderBy("rank")
+      .collect().map(_.getString(2)).toSeq
+    assert(tied == tieIds.sortWith((a, b) =>
+      java.util.Arrays.compareUnsigned(a.getBytes("UTF-8"), b.getBytes("UTF-8")) < 0).take(3), tied)
+    // D = 0: the duplicates fill the top-10 of their own location
+    assert(Knn.knn(all, queries.where(col("query_id") === 10L), 10)
+      .where(col("dist2") === 0.0).count() == 10)
+    // k larger than the point count, an empty point side, nulls only
+    check(pointsOf(edges ++ ties ++ nulls), 100)
+    check(pointsOf(Nil), 3)
+    assert(Knn.knn(pointsOf(Nil), queries, 3).count() == 0)
+    check(pointsOf(nulls), 2)
+  }
+
+  test("kNN sample: at most SampleRows rows, the smallest hashes, the same rows, one Spark job") {
+    val n = 3 * Knn.SampleRows
+    val points = spark.range(n).select(format_string("p%06d", col("id")).as("doc_id"),
+      ((col("id") * 7919) % 3600000 * 1000 - 1800000000).cast("int").as("lng"),
+      ((col("id") * 104729) % 1800000 * 1000 - 900000000).cast("int").as("lat"))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def sampled(df: DataFrame): (Seq[(Int, Int)], Int) = {
+      org.apache.spark.GraftSparkShim.drainListeners(spark.sparkContext)
+      jobs.set(0)
+      val s = Knn.sample(df).toSeq
+      org.apache.spark.GraftSparkShim.drainListeners(spark.sparkContext)
+      (s, jobs.get())
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (a, jobsA) = sampled(points)
+      val (b, jobsB) = sampled(points)
+      assert(a.length == Knn.SampleRows && a == b)
+      assert(jobsA == 1 && jobsB == 1, s"sample jobs: $jobsA, $jobsB")
+      // they are the rows with the smallest xxhash64(doc_id, lng, lat)
+      val expected = points.select(xxhash64(col("doc_id"), col("lng"), col("lat")), col("doc_id"),
+          col("lng"), col("lat")).collect()
+        .sortBy(r => (r.getLong(0), r.getString(1))).take(Knn.SampleRows)
+        .map(r => (r.getInt(2), r.getInt(3))).toSeq
+      assert(a.sorted == expected.sorted)
+      // fewer rows than the cap: all of them
+      val (few, _) = sampled(points.limit(100))
+      assert(few.sorted == points.limit(100).collect().map(r => (r.getInt(1), r.getInt(2))).toSeq.sorted)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("bbox filter equals brute-force predicate and respects closed intervals") {
     val q = Envelope(-1183000000, 335000000, -1170000000, 345000000)
     val got = rows(SpatialJoin.bboxFilter(geo, q), "doc_id")
