@@ -189,8 +189,8 @@ object GraftFunctions {
     inv(Adapters.getClass, ArrayType(LongType, containsNull = false), "hilbertChunksEnv",
       Seq(i(minLng), i(minLat), i(maxLng), i(maxLat), ex(lit(res))))
 
-  /** Range bucket against a DESC-sorted boundary literal (sampling-free
-    * range partitioning: the caller supplies exact boundaries).
+  /** Range bucket against a DESC-sorted boundary literal: the number of
+    * boundaries above `key` (the caller cuts the boundaries).
     */
   def gmRangeBucketDesc(key: Column, boundaries: Array[Long]): Column =
     inv(Adapters.getClass, IntegerType, "rangeBucketDesc",

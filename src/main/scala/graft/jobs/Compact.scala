@@ -20,9 +20,9 @@ import org.apache.spark.sql.functions._
   *
   *   pin the PLANNED shard set (one scan over the listed shard files,
   *   `load(paths*)`, so the read set is exactly the recorded list — not
-  *   whatever a directory listing says later) -> global extent (4-way
-  *   min/max, map-side combined) -> Hilbert key of each envelope center
-  *   relative to that extent -> `repartitionByRange(hilbert desc)` ->
+  *   whatever a directory listing says later) -> [[Ingest.layout]]: the
+  *   global extent and a capped center sample in one job, then Hilbert
+  *   ranges cut from the sample and placed by `repartitionById` ->
   *   rewrite through the distributed v2 writer into an INVISIBLE staging
   *   subdirectory -> record the generation swap (condemned names + the
   *   exact replacement names, [[LakeGenerations]]) -> rename replacements
@@ -370,18 +370,10 @@ object Compact {
       // columns beyond the write contract are pruned.
       val docs = spark.read.format(format).load(shards.map(_.getPath.toString): _*)
         .select("wkb", "props", "min_lng", "min_lat", "max_lng", "max_lat")
-      // r6: one stats+sample pass + exact bucket placement (the Ingest
-      // pass-elimination applied to the rewrite — the containers are
-      // decoded twice per slice, not three times; the hash sample keys on
-      // wkb since container rows carry no doc_id). Thin samples fall back
-      // to the classic extent + sampling exchange. Within-shard ordering
-      // is the container writer's own job either way.
-      val (ext, sample) = Ingest.extentAndSample(docs, math.max(4096, n * 128),
-        org.apache.spark.sql.functions.xxhash64(col("wkb")))
-      val laidOut = Ingest.exactClustered(docs, ext, sample, n)
-        .getOrElse(Ingest.withHilbert(docs, ext)
-          .repartitionByRange(n, col("hilbert").desc))
-      val clustered = laidOut
+      // the Ingest layout, hash-sampled on wkb (container rows carry no
+      // doc_id): the containers are decoded twice per slice. Within-shard
+      // ordering is the container writer's own job.
+      val clustered = Ingest.layout(docs, n, col("wkb"))
         .select("wkb", "props")
         .write.format(format).mode("append")
         .option("shardToken", token)

@@ -1,20 +1,23 @@
 package graft.jobs
 
+import graft.curve.Hilbert
 import graft.expr.GraftFunctions._
 import graft.geom.Envelope
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Ingest = the reference's Writer pipeline restated as two Spark jobs
-  * (SURVEY.md §3.1):
+/** Ingest = the reference's Writer pipeline (SURVEY.md §3.1) restated as
+  * one sampled range layout and a zstd parquet write:
   *
-  *  pass 1: global extent aggregation (the reference's buffer pass,
-  *          `writer/mod.rs:54-65`) — a 4-way min/max, map-side combined;
-  *  pass 2: Hilbert key relative to that extent (`writer/hilbert.rs:70-78`),
-  *          then `repartitionByRange` + `sortWithinPartitions` on the key
-  *          **descending** — the reference sorts descending
-  *          (`writer/mod.rs:77-82`, note the reversed comparator) and the
-  *          golden ordering tests depend on it — then a zstd parquet write.
+  *  - extent + sample (the reference's buffer pass, `writer/mod.rs:54-65`):
+  *    ONE Spark job observes the exact 4-way envelope min/max while it
+  *    collects a capped hash sample of the envelope centers ([[layout]]);
+  *  - Hilbert key relative to that extent (`writer/hilbert.rs:70-78`),
+  *    range boundaries cut from the sample on the driver, rows placed by
+  *    `repartitionById`, then `sortWithinPartitions` on the key
+  *    **descending** — the reference sorts descending
+  *    (`writer/mod.rs:77-82`, note the reversed comparator) and the golden
+  *    ordering tests depend on it.
   *
   * The written layout is the distributed analog of the reference's
   * Hilbert-clustered pages: range partitions = pages, parquet row-group
@@ -26,7 +29,7 @@ import org.apache.spark.sql.functions._
   */
 object Ingest {
 
-  /** Pass 1: dataset extent over the envelope stat columns. */
+  /** Dataset extent over the envelope stat columns. */
   def extent(docsGeo: DataFrame): Envelope = {
     val r = docsGeo.agg(
       min("min_lng"), min("min_lat"), max("max_lng"), max("max_lat")).head()
@@ -34,87 +37,59 @@ object Ingest {
     else Envelope(r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3))
   }
 
-  /** Pass 2 input: add the Hilbert key of each doc's envelope center
-    * relative to the dataset extent.
+  /** Center of the per-row envelope on one axis, the same unsigned-half-width
+    * arithmetic as bounds.rs:90-99 (exact for points: center == the point).
     */
-  def withHilbert(docsGeo: DataFrame, ext: Envelope): DataFrame = {
-    // center of the per-row envelope, same unsigned-half-width arithmetic
-    // as bounds.rs:90-99 (exact for points: center == the point)
-    val cLng = (col("min_lng") + shiftright(col("max_lng").cast("long") - col("min_lng"), 1)).cast("int")
-    val cLat = (col("min_lat") + shiftright(col("max_lat").cast("long") - col("min_lat"), 1)).cast("int")
+  private def center(lo: String, hi: String): Column =
+    (col(lo) + shiftright(col(hi).cast("long") - col(lo), 1)).cast("int")
+
+  /** Add the Hilbert key of each doc's envelope center relative to the
+    * dataset extent.
+    */
+  def withHilbert(docsGeo: DataFrame, ext: Envelope): DataFrame =
     docsGeo.withColumn("hilbert",
-      gmHilbert(cLng, cLat, lit(ext.minLng), lit(ext.minLat), lit(ext.maxLng), lit(ext.maxLat)))
+      gmHilbert(center("min_lng", "max_lng"), center("min_lat", "max_lat"),
+        lit(ext.minLng), lit(ext.minLat), lit(ext.maxLng), lit(ext.maxLat)))
+
+  /** One Spark job over `docs`: the exact dataset extent, observed on the
+    * way, and the envelope centers of the `min(N, max(4096, 128·n))` rows
+    * with the smallest `xxhash64(key, center)` ([[Knn.sample]]). The cap
+    * holds whatever any size estimate says.
+    */
+  private[graft] def extentAndSample(docs: DataFrame, n: Int, key: Column)
+  : (Envelope, Array[(Int, Int)]) = {
+    val obs = Observation()
+    val smp = Knn.sample(
+      docs.observe(obs, min("min_lng").as("x0"), min("min_lat").as("y0"),
+        max("max_lng").as("x1"), max("max_lat").as("y1")),
+      math.max(Knn.SampleRows, 128 * n), key,
+      center("min_lng", "max_lng"), center("min_lat", "max_lat"))
+    val e = obs.get
+    if (e("x0") == null) (Envelope.empty, smp)
+    else (Envelope(e("x0").asInstanceOf[Int], e("y0").asInstanceOf[Int],
+      e("x1").asInstanceOf[Int], e("y1").asInstanceOf[Int]), smp)
   }
 
-  /** Full clustered layout: returns the DataFrame laid out in descending
-    * Hilbert order across `numPartitions` range partitions.
+  /** The Hilbert range layout shared by [[write]] and [[Compact]]: `docs`
+    * plus its `hilbert` column, in `n` partitions of disjoint descending
+    * Hilbert ranges — partition 0 holds the LARGEST keys, null keys go
+    * last. Boundaries are the n-quantiles of the sampled keys, cut on the
+    * driver; `repartitionById` places each row. A sample thinner than 4n
+    * rows is every row, so its quantiles are exact. Rows are NOT sorted
+    * within partitions: [[write]] sorts, container writers sort per shard.
     */
-  def clustered(docsGeo: DataFrame, numPartitions: Int): DataFrame = {
-    val ext = extent(docsGeo)
-    withHilbert(docsGeo, ext)
-      .repartitionByRange(numPartitions, col("hilbert").desc)
-      .sortWithinPartitions(col("hilbert").desc)
+  private[jobs] def layout(docs: DataFrame, n: Int, key: Column): DataFrame = {
+    val (ext, smp) = extentAndSample(docs, n, key)
+    val hs = smp.map { case (x, y) => Hilbert.scaled(x, y, ext) }.sorted(Ordering[Long].reverse)
+    val boundaries =
+      if (hs.isEmpty) Array.empty[Long]
+      else Array.tabulate(n - 1)(i => hs(((i + 1).toLong * hs.length / n).toInt))
+    withHilbert(docs, ext)
+      .withColumn("__bucket",
+        coalesce(gmRangeBucketDesc(col("hilbert"), boundaries), lit(n - 1)))
+      .repartitionById(n, col("__bucket"))
+      .drop("__bucket")
   }
-
-  /** One pass over `docsGeo` yielding BOTH the dataset extent and a
-    * deterministic hash sample of row-envelope centers (packed
-    * lng<<32|lat longs) — the boundary material for sampling-free range
-    * partitioning (guide §2.4: `repartitionByRange` would run a whole
-    * second pass over the parse lineage just to sample its boundaries).
-    * The sample rate 1/p is a power of two from the plan's size estimate;
-    * the estimate only shapes the SAMPLE SIZE (boundary balance), never
-    * correctness — callers fall back to the sampling exchange when the
-    * sample is too thin to cut `numPartitions` balanced ranges.
-    */
-  private[jobs] def extentAndSample(docsGeo: DataFrame, targetSample: Int,
-                                    hashCol: org.apache.spark.sql.Column)
-  : (Envelope, Seq[Long]) = {
-    val estRows = (docsGeo.queryExecution.optimizedPlan.stats.sizeInBytes / 64)
-      .min(java.lang.Long.MAX_VALUE).toLong max 1L
-    val p = java.lang.Long.highestOneBit(math.max(1L, estRows / math.max(1, targetSample)))
-    val cLng = (col("min_lng") + shiftright(col("max_lng").cast("long") - col("min_lng"), 1))
-      .cast("int")
-    val cLat = (col("min_lat") + shiftright(col("max_lat").cast("long") - col("min_lat"), 1))
-      .cast("int")
-    val packed = shiftleft(cLng.cast("long"), 32)
-      .bitwiseOR(cLat.cast("long").bitwiseAND(lit(0xFFFFFFFFL)))
-    val r = docsGeo.agg(
-      min("min_lng"), min("min_lat"), max("max_lng"), max("max_lat"),
-      collect_list(when(hashCol.bitwiseAND(lit(p - 1)) === 0, packed))
-        .as("sample")).head()
-    if (r.isNullAt(0)) (Envelope.empty, Seq.empty)
-    else (Envelope(r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3)), r.getSeq[Long](4))
-  }
-
-  /** Exact Hilbert-range layout from a pre-computed extent + center
-    * sample: boundaries cut on the driver, rows placed with the exact
-    * bucket shuffle (no `repartitionByRange` sampling pass). None when
-    * the sample is too thin to cut `numPartitions` balanced ranges —
-    * callers fall back to the sampling exchange. Partition 0 holds the
-    * LARGEST hilbert keys, matching `repartitionByRange(desc)`; rows are
-    * NOT sorted within partitions (callers that need it sort, container
-    * writers sort internally).
-    */
-  private[jobs] def exactClustered(docsGeo: DataFrame, ext: Envelope,
-                                   sample: Seq[Long], numPartitions: Int)
-  : Option[DataFrame] =
-    if (sample.length < 4 * numPartitions || numPartitions <= 1) None
-    else {
-      val hs = sample.map(c =>
-        graft.curve.Hilbert.scaledHilbert((c >> 32).toInt, c.toInt,
-          ext.minLng, ext.minLat, ext.maxLng, ext.maxLat))
-        .sorted(Ordering[Long].reverse).toIndexedSeq
-      val boundaries = Array.tabulate(numPartitions - 1) { i =>
-        hs(((i + 1).toLong * hs.length / numPartitions).toInt)
-      }
-      val bucketed = withHilbert(docsGeo, ext)
-        .withColumn("__bucket",
-          coalesce(graft.expr.GraftFunctions.gmRangeBucketDesc(col("hilbert"), boundaries),
-            lit(numPartitions - 1))) // null hilbert sorts last, like hilbert DESC
-      Some(org.apache.spark.sql.GraftSqlShim
-        .repartitionByBucket(bucketed, numPartitions, "__bucket")
-        .drop("__bucket"))
-    }
 
   /** Write the clustered table + a NEW `_lineage/v=N` manifest snapshot
     * (N strictly increasing — emulated Iceberg snapshot history: readers
@@ -123,32 +98,17 @@ object Ingest {
     * create, which the filesystem makes atomic). The docs dir itself is
     * last-writer-wins like a compaction rewrite. Returns the lineage DF.
     *
-    * Layout pass structure (r6): ONE stats+sample pass ([[extentAndSample]])
-    * replaces the r5 extent pass + `repartitionByRange`'s own sampling
-    * pass — the parse lineage is now scanned twice total (stats, then the
-    * shuffle map side) instead of three times. Hilbert range boundaries
-    * are cut from the sampled centers on the driver and rows are placed
-    * with an exact bucket shuffle (`GraftSqlShim.repartitionByBucket`).
-    * The written layout contract is unchanged: descending-contiguous
-    * disjoint Hilbert ranges across files, descending order within each
-    * file. A too-thin sample (tiny input or a wild size estimate) falls
-    * back to the classic sampling exchange ([[clustered]]).
+    * The parse lineage of `docsGeo` is scanned twice for the layout (the
+    * extent+sample job, then the exchange's map side) and the output once
+    * more for the lineage. The written layout contract: descending-
+    * contiguous disjoint Hilbert ranges across files, descending order
+    * within each file.
     */
   def write(docsGeo: DataFrame, outDir: String, numPartitions: Int,
             codec: String = "zstd"): DataFrame = {
     val spark = docsGeo.sparkSession
-    val (ext, sample) =
-      extentAndSample(docsGeo, math.max(4096, numPartitions * 128), xxhash64(col("doc_id")))
-    val laidOut = exactClustered(docsGeo, ext, sample, numPartitions)
-      .map(_.sortWithinPartitions(col("hilbert").desc))
-      .getOrElse {
-        // thin sample: one balanced range per partition is not derivable —
-        // use the classic sampling exchange (extent already known)
-        withHilbert(docsGeo, ext)
-          .repartitionByRange(numPartitions, col("hilbert").desc)
-          .sortWithinPartitions(col("hilbert").desc)
-      }
-    laidOut
+    layout(docsGeo, numPartitions, col("doc_id"))
+      .sortWithinPartitions(col("hilbert").desc)
       .write.mode(SaveMode.Overwrite)
       .option("compression", codec)
       // zstd level 1, not the parquet default (3): measured 2.1x faster

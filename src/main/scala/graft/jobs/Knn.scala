@@ -3,7 +3,7 @@ package graft.jobs
 import graft.curve.Cells
 import graft.expr.GraftFunctions._
 import graft.geom.Envelope
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -46,15 +46,19 @@ object Knn {
   /** Hard cap on the sampled point rows the bound is taken from. */
   val SampleRows = 4096
 
-  /** The non-null (lng, lat) of the point rows with the [[SampleRows]]
-    * smallest `xxhash64(doc_id, lng, lat)` (ties broken on the row itself,
-    * so two calls return the same rows): a top-k sort, one Spark job.
+  /** The non-null (lng, lat) of the `rows` rows with the smallest
+    * `xxhash64(key, lng, lat)` (ties broken on the row itself, so two calls
+    * return the same rows): a top-k sort, one Spark job, and the driver
+    * holds at most `rows` rows whatever any size estimate says. kNN samples
+    * its point side; [[Ingest]] samples envelope centers for its layout.
     */
-  private[graft] def sample(points: DataFrame): Array[(Int, Int)] =
-    points.select(col("doc_id"), col("lng").cast("int").as("lng"), col("lat").cast("int").as("lat"))
+  private[graft] def sample(points: DataFrame, rows: Int = SampleRows,
+                            key: Column = col("doc_id"), lng: Column = col("lng"),
+                            lat: Column = col("lat")): Array[(Int, Int)] =
+    points.select(key.as("key"), lng.cast("int").as("lng"), lat.cast("int").as("lat"))
       .where(col("lng").isNotNull && col("lat").isNotNull)
-      .orderBy(xxhash64(col("doc_id"), col("lng"), col("lat")), col("doc_id"), col("lng"), col("lat"))
-      .limit(SampleRows).select("lng", "lat")
+      .orderBy(xxhash64(col("key"), col("lng"), col("lat")), col("key"), col("lng"), col("lat"))
+      .limit(rows).select("lng", "lat")
       .collect().map(r => (r.getInt(0), r.getInt(1)))
 
   /** The k-th smallest dist2 from (qlng, qlat) over the sample, by a

@@ -2,44 +2,14 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** Bridge into `private[sql]` Column <-> Expression conversion (Spark 4
-  * moved Column onto ColumnNodes; `classic.ExpressionUtils` is the
-  * sanctioned converter but is sql-package-private).
+/** The two `private[sql]` entry points graft needs, and nothing else:
+  * Column <-> Expression conversion (Spark 4 moved Column onto
+  * ColumnNodes; `classic.ExpressionUtils` is the sanctioned converter but
+  * is sql-package-private) and a test hook for extension check rules.
   */
 object GraftSqlShim {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
-
-  /** EXACT bucket placement: shuffle `df` so that every row lands in the
-    * partition named by its `bucketCol` value (an Int in [0, n)) —
-    * the missing DataFrame primitive behind sampling-free range
-    * partitioning. `repartitionByRange` must first run a whole extra
-    * pass over the child plan to SAMPLE partition boundaries; when the
-    * caller already knows the boundaries (graft's ingest derives them
-    * from the same single pass that computes the dataset extent), this
-    * places rows directly. Row values and the per-partition layout
-    * contract are untouched; only the exchange differs.
-    *
-    * Implementation: the child's InternalRow RDD (UnsafeRows — copied,
-    * the scan reuses buffers) keyed by the bucket, shuffled with an
-    * identity partitioner, and rewrapped as a DataFrame with the same
-    * schema via `internalCreateDataFrame`.
-    */
-  def repartitionByBucket(df: Dataset[Row], n: Int, bucketCol: String): Dataset[Row] = {
-    val classicDf = df.asInstanceOf[classic.Dataset[Row]]
-    val spark = classicDf.sparkSession
-    val schema = df.schema
-    val idx = schema.fieldIndex(bucketCol)
-    require(n > 0, s"bucket count must be positive, got $n")
-    val rdd = classicDf.queryExecution.toRdd
-      .mapPartitions(it => it.map(r => (r.getInt(idx), r.copy())))
-      .partitionBy(new org.apache.spark.Partitioner {
-        override def numPartitions: Int = n
-        override def getPartition(key: Any): Int = key.asInstanceOf[Int]
-      })
-      .map(_._2)
-    spark.internalCreateDataFrame(rdd, schema)
-  }
 
   /** Test hook: run an extensions object's injected check rules against a
     * session (what session construction does with

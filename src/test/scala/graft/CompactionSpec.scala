@@ -66,25 +66,6 @@ class CompactionSpec extends AnyFunSuite {
     }
   }
 
-  /** The plans `body` executes (listener events drained before return). */
-  private def plansDuring(body: => Unit): Seq[org.apache.spark.sql.execution.QueryExecution] = {
-    import org.apache.spark.sql.execution.QueryExecution
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        seen.add(qe)
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
-        seen.add(qe)
-    }
-    // events of earlier actions still on the async bus would otherwise
-    // reach the new listener and be taken for plans of `body`
-    org.apache.spark.GraftSparkShim.drainListeners(spark.sparkContext)
-    spark.listenerManager.register(listener)
-    try { body; org.apache.spark.GraftSparkShim.drainListeners(spark.sparkContext) }
-    finally spark.listenerManager.unregister(listener)
-    seen.toArray(Array.empty[QueryExecution]).toSeq
-  }
-
   /** Asserts no plan holds a Union and every container scan plans exactly
     * `pinned` (file names); returns how many scans were checked.
     */
@@ -615,7 +596,7 @@ class CompactionSpec extends AnyFunSuite {
     val dir = overlappingLake(6)
     val all = shardBytes(dir).keySet
     val rows = idsAt(dir)
-    val full = plansDuring(Compact.compact(spark, dir, numShards = 4))
+    val full = PlansDuring(spark)(Compact.compact(spark, dir, numShards = 4))
     assert(assertOneScanOver(full, all) >= 1, "no container scan in the compaction plans")
     assert(idsAt(dir) == rows)
 
@@ -627,7 +608,7 @@ class CompactionSpec extends AnyFunSuite {
     assert(appended.size == 3)
     val grown = idsAt(dir)
     var picked = 0
-    val inc = plansDuring {
+    val inc = PlansDuring(spark) {
       picked = Compact.incremental(spark, dir, numShards = 2, targetShardBytes = 1)
     }
     assert(picked == 3)
@@ -638,5 +619,33 @@ class CompactionSpec extends AnyFunSuite {
     }
     assert(appended.forall(n => !after.contains(n)))
     assert(idsAt(dir) == grown)
+  }
+
+  test("compaction of 0, 1 and 3 rows into 4 shards: same rows, disjoint descending ranges") {
+    for (k <- Seq(0, 1, 3)) {
+      val dir = java.nio.file.Files.createTempDirectory(s"gm_compact_small_$k").toString
+      // one shard per row (an empty shard for 0 rows): overlapping appends
+      val feats = (0 until k).map(i => Seq(pt(i * 40 - 50, i * 20 - 20, i.toLong)))
+      for ((fs, f) <- (if (k == 0) Seq(Seq.empty[Feature]) else feats).zipWithIndex)
+        java.nio.file.Files.write(java.nio.file.Paths.get(f"$dir/append-$f%02d.geomedea"),
+          GeomedeaFile.write(fs, compressed = true, pageSizeGoal = 256))
+      val before = idsAt(dir)
+      assert(before.size == k)
+      Compact.compact(spark, dir, numShards = 4)
+      assert(idsAt(dir) == before, s"$k rows")
+      // shards in partition order (one token, zero-padded partition ids):
+      // every key of an earlier shard is above every key of a later one
+      val ext = graft.jobs.Ingest.extent(spark.read.format("geomedea").load(dir))
+      val perShard = new java.io.File(dir).listFiles().map(_.getName)
+        .filter(_.endsWith(".geomedea")).sorted.toSeq
+        .map(n => graft.jobs.Ingest.withHilbert(spark.read.format("geomedea").load(s"$dir/$n"), ext)
+          .select("hilbert").collect().map(_.getLong(0)).toSeq)
+        .filter(_.nonEmpty)
+      assert(perShard.map(_.size).sum == k, s"$k rows: $perShard")
+      perShard.sliding(2).foreach {
+        case Seq(a, b) => assert(a.min > b.max, s"$k rows: $perShard")
+        case _ => ()
+      }
+    }
   }
 }

@@ -290,6 +290,42 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(n > 0 && n == SpatialJoin.bboxFilter(randomT, cold).count())
   }
 
+  test("Ingest.write and a compaction rewrite each run ONE repartitionById exchange and no RDD node") {
+    import graft.jobs.Compact
+    import org.apache.spark.sql.catalyst.plans.physical.ShufflePartitionIdPassThrough
+    import org.apache.spark.sql.execution.{ExternalRDD, LogicalRDD, QueryExecution}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val s = spark
+    import s.implicits._
+    val aqe = new AdaptiveSparkPlanHelper {}
+    def check(what: String, plans: Seq[QueryExecution]): Unit = {
+      // counted in the executed (final adaptive) plans, query stages included
+      val passThrough = plans.map(qe => aqe.collect(qe.executedPlan) {
+        case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[ShufflePartitionIdPassThrough] => e
+      }.size).sum
+      assert(passThrough == 1, s"$what: $passThrough ShufflePartitionIdPassThrough exchanges in\n" +
+        plans.map(_.executedPlan).mkString("\n"))
+      plans.foreach { qe =>
+        val rdds = qe.analyzed.collectWithSubqueries {
+          case r: LogicalRDD     => r
+          case r: ExternalRDD[_] => r
+        }
+        assert(rdds.isEmpty, s"$what: RDD node in\n${qe.analyzed}")
+      }
+    }
+    val out = java.nio.file.Files.createTempDirectory("graft_pq_layout").toString
+    check("Ingest.write", PlansDuring(spark)(Ingest.write(geo, out, numPartitions = 4)))
+
+    val lake = java.nio.file.Files.createTempDirectory("graft_pq_compact").toString
+    val feats = geo.select("wkb", "doc_id").as[(Array[Byte], String)].collect().toSeq
+      .map { case (wkb, id) => (wkb, Seq(graft.sources.GeoJsonIngest.toCell("doc",
+        graft.codec.FeatureCodec.PString(id)))) }
+    feats.grouped(feats.size / 2 + 1).foreach(part =>
+      part.toDF("wkb", "props").repartition(1).write.format("geomedea").mode("append").save(lake))
+    check("Compact.compact", PlansDuring(spark)(Compact.compact(spark, lake, numShards = 2)))
+  }
+
   test("salting divides the hot cell's largest shuffle key ~saltFactor x (deterministic A/B)") {
     // Wall-clock A/B is noise-fragile in this sandbox (measured 5-50x
     // exogenous stalls), so the salting benefit is recorded as the thing

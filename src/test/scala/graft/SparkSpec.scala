@@ -527,6 +527,77 @@ class SparkSpec extends AnyFunSuite {
     assert(graft.table.Describe.summary(spark, out).head().getLong(0) == 100L)
   }
 
+  test("layout sample: at most the cap, one Spark job and the exact extent, whatever the size estimate") {
+    val s = spark
+    import s.implicits._
+    val parts = 4
+    val cap = math.max(Knn.SampleRows, 128 * parts)
+    val n = 3 * cap
+    // boxes of varied width over the world, so centers differ from corners
+    def box(i: Int): (Int, Int, Int, Int) = {
+      val x = ((i * 7919L) % 3600000 * 1000 - 1800000000).toInt
+      val y = ((i * 104729L) % 1800000 * 1000 - 900000000).toInt
+      (x, y, x + (i % 1000) * 1000, y + (i % 7) * 1000)
+    }
+    // a compressed geomedea lake: its scan reports file bytes, which here
+    // are fewer than 64 per row
+    val lake = java.nio.file.Files.createTempDirectory("graft_cap_lake").toString
+    (0 until n).map { i =>
+      val (x0, y0, x1, y1) = box(i)
+      (graft.geom.Wkb.rectWkb(x0, y0, x1, y1),
+        Seq(graft.sources.GeoJsonIngest.toCell("id", graft.codec.FeatureCodec.PInt64(i.toLong))))
+    }.toDF("wkb", "props").repartition(2).write.format("geomedea").mode("append").save(lake)
+    val lakeDocs = spark.read.format("geomedea").load(lake)
+      .select("wkb", "min_lng", "min_lat", "max_lng", "max_lat")
+    assert(lakeDocs.queryExecution.optimizedPlan.stats.sizeInBytes < BigInt(64L * n))
+    // an RDD-backed frame: no estimate at all (the default size)
+    val rddDocs = spark.createDataFrame(spark.sparkContext.parallelize(
+      (0 until n).map { i => val (x0, y0, x1, y1) = box(i); (f"d$i%06d", x0, y0, x1, y1) }, 3))
+      .toDF("doc_id", "min_lng", "min_lat", "max_lng", "max_lat")
+    assert(rddDocs.queryExecution.optimizedPlan.stats.sizeInBytes >=
+      BigInt(spark.sessionState.conf.defaultSizeInBytes))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      for ((docs, key) <- Seq(lakeDocs -> col("wkb"), rddDocs -> col("doc_id"))) {
+        org.apache.spark.GraftSparkShim.drainListeners(spark.sparkContext)
+        jobs.set(0)
+        val (ext, smp) = Ingest.extentAndSample(docs, parts, key)
+        org.apache.spark.GraftSparkShim.drainListeners(spark.sparkContext)
+        assert(smp.length == cap, s"sampled ${smp.length} rows, cap $cap")
+        assert(jobs.get() == 1, s"extent + sample jobs: ${jobs.get()}")
+        assert(ext == Ingest.extent(docs))
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("ingest of 0, 1 and 3 rows into 4 partitions: same rows, disjoint descending ranges, lineage sums") {
+    for (k <- Seq(0, 1, 3)) {
+      val in = geo.orderBy("doc_id").limit(k)
+      val out = java.nio.file.Files.createTempDirectory(s"graft_small_$k").toString
+      val lineage = Ingest.write(in, out, numPartitions = 4)
+      val written = spark.read.parquet(s"$out/docs")
+      assert(rows(written, "doc_id", "hilbert") ==
+        rows(Ingest.withHilbert(in, Ingest.extent(in)), "doc_id", "hilbert"), s"$k rows")
+      assert(lineage.agg(coalesce(sum("rows"), lit(0L))).head().getLong(0) == k, s"$k rows")
+      // files in partition order: each holds a descending run of keys, and
+      // every key of an earlier file is above every key of a later one
+      val perFile = written.withColumn("file", input_file_name())
+        .select("file", "hilbert").collect()
+        .groupBy(_.getString(0)).toSeq.sortBy(_._1)
+        .map(_._2.map(_.getLong(1)).toSeq)
+      perFile.foreach(h => assert(h == h.sorted(Ordering[Long].reverse), s"$k rows: $perFile"))
+      perFile.sliding(2).foreach {
+        case Seq(a, b) => assert(a.min > b.max, s"$k rows: $perFile")
+        case _ => ()
+      }
+    }
+  }
+
   test("S6/S7 object-store scan planning: split batching is config-driven like the reference's range merging") {
     // The reference's HTTP reader merges nearby byte ranges (threshold
     // 16,000 bytes, packed_r_tree/reader.rs:159-161) and batches feature
