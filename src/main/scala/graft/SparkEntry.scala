@@ -189,7 +189,7 @@ object SparkEntry {
     }),
 
     // COUNT(*) through the DataSourceV2's aggregate pushdown: the count
-    // comes from the shard headers alone (GeomedeaStatsScan — asserted
+    // comes from the shard headers alone (HeaderStatsScan — asserted
     // in the spec); shards written by the distributed v2 writer
     "q19_dsv2_count" -> ((s, dir) => {
       val out = writeDsv2Shards(s, dir, "graft_dsv2c", _.repartition(4))
@@ -198,7 +198,7 @@ object SparkEntry {
 
     // lake extent through the DSv2 aggregate pushdown: filterless
     // min/max over the envelope columns folds from the per-shard R-tree
-    // ROOT bounds alone (GeomedeaStatsScan — asserted in the spec), the
+    // ROOT bounds alone (HeaderStatsScan — asserted in the spec), the
     // header-only analog of the reference's `info` extent summary
     "q48_dsv2_extent" -> ((s, dir) => {
       val out = writeDsv2Shards(s, dir, "graft_dsv2e", _.repartition(4))

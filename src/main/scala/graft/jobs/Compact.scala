@@ -2,7 +2,7 @@ package graft.jobs
 
 import graft.curve.Hilbert
 import graft.geom.Envelope
-import graft.sources.v2.{GeomedeaManifest, LakeGenerations}
+import graft.sources.v2.{ContainerFormat, GeomedeaManifest, LakeGenerations}
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -101,9 +101,10 @@ object Compact {
     *    actual total is floored at the slice count (a slice cannot merge
     *    into another slice's output by construction); callers that need
     *    exactly `numShards` must leave `maxShardsPerCall` at 0.
-    *  - `format`: `"geomedea"` (default) or `"flatgeobuf"` — both DSv2
-    *    sources share the row surface (wkb/props + envelope stats) and
-    *    the same commit protocol, so one maintenance job serves both.
+    *  - `format`: a [[ContainerFormat]] name, `"geomedea"` (default) or
+    *    `"flatgeobuf"` — one DSv2 source serves both (same row surface,
+    *    same commit protocol), so one maintenance job does too;
+    *    `compressed` only applies where the format compresses (geomedea).
     *  - `maxShardsPerCall`: 0 = one swap over every shard; n > 0 bounds
     *    each swap's planned set to n spatially-ordered shards.
     */
@@ -113,7 +114,7 @@ object Compact {
               format: String = "geomedea",
               maxShardsPerCall: Int = 0): Int = {
     validateArgs(numShards, targetShardBytes, maxShardsPerCall)
-    val suffix = suffixFor(format)
+    val fmt = formatNamed(format)
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(p)) return 0
@@ -122,11 +123,11 @@ object Compact {
         "cannot overwrite a file path with a shard dir)")
     finishPendingSwap(fs, p)
     val shards =
-      fs.listStatus(p).toSeq.filter(s => s.isFile && s.getPath.getName.endsWith(suffix))
+      fs.listStatus(p).toSeq.filter(s => s.isFile && s.getPath.getName.endsWith(fmt.suffix))
     if (shards.isEmpty) return 0
     rewriteSlices(spark, p, fs, shards, numShards, compressed, targetShardBytes,
-      format, suffix, maxShardsPerCall)
-    fs.listStatus(p).count(s => s.isFile && s.getPath.getName.endsWith(suffix))
+      fmt, maxShardsPerCall)
+    fs.listStatus(p).count(s => s.isFile && s.getPath.getName.endsWith(fmt.suffix))
   }
 
   private def validateArgs(numShards: Int, targetShardBytes: Long,
@@ -143,12 +144,9 @@ object Compact {
   private def newToken(prefix: String): String =
     prefix + java.util.UUID.randomUUID().toString.replace("-", "").take(15)
 
-  private def suffixFor(format: String): String = format match {
-    case "geomedea"   => ".geomedea"
-    case "flatgeobuf" => ".fgb"
-    case other => throw new IllegalArgumentException(
-      s"unsupported compaction format '$other' (geomedea | flatgeobuf)")
-  }
+  private def formatNamed(format: String): ContainerFormat =
+    ContainerFormat.named(format).getOrElse(throw new IllegalArgumentException(
+      s"unsupported compaction format '$format' (geomedea | flatgeobuf)"))
 
   /** Shared rewrite loop: slice `picked` (spatially when over the cap),
     * apportion the output shard budget by byte share of the PICKED set,
@@ -157,7 +155,7 @@ object Compact {
   private def rewriteSlices(spark: SparkSession, p: Path, fs: FileSystem,
                             picked: Seq[FileStatus], numShards: Int,
                             compressed: Boolean, targetShardBytes: Long,
-                            format: String, suffix: String,
+                            fmt: ContainerFormat,
                             maxShardsPerCall: Int,
                             // reuse the caller's manifest read when it has one;
                             // only consulted when slicing actually happens
@@ -175,7 +173,7 @@ object Compact {
         if (numShards > 0)
           math.max(1L, math.round(numShards.toDouble * sliceBytes / totalBytes)).toInt
         else math.max(1L, (sliceBytes + targetShardBytes - 1) / targetShardBytes).toInt
-      compactSet(spark, p, fs, slice, n, compressed, format, suffix)
+      compactSet(spark, p, fs, slice, n, compressed, fmt)
     }
   }
 
@@ -225,19 +223,19 @@ object Compact {
                   spreadFactor: Double = 4.0): Int = {
     validateArgs(numShards, targetShardBytes, maxShardsPerCall)
     require(spreadFactor > 1.0, s"spreadFactor must be > 1; got $spreadFactor")
-    val suffix = suffixFor(format)
+    val fmt = formatNamed(format)
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(p) || !fs.getFileStatus(p).isDirectory) return 0
     val log = finishPendingSwap(fs, p)
     val shards =
-      fs.listStatus(p).toSeq.filter(s => s.isFile && s.getPath.getName.endsWith(suffix))
+      fs.listStatus(p).toSeq.filter(s => s.isFile && s.getPath.getName.endsWith(fmt.suffix))
     val manifest = GeomedeaManifest.read(fs, p).getOrElse(Map.empty)
     val picked = pickCandidates(shards, targetShardBytes, spreadFactor,
       manifest, log)
     if (picked.size < 2) return 0
     rewriteSlices(spark, p, fs, picked, numShards, compressed, targetShardBytes,
-      format, suffix, maxShardsPerCall, Some(manifest))
+      fmt, maxShardsPerCall, Some(manifest))
     picked.size
   }
 
@@ -257,7 +255,7 @@ object Compact {
   def retire(spark: SparkSession, dir: String,
              condemn: FileStatus => Boolean,
              format: String = "geomedea"): Int = {
-    val suffix = suffixFor(format)
+    val suffix = formatNamed(format).suffix
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(p) || !fs.getFileStatus(p).isDirectory) return 0
@@ -358,7 +356,7 @@ object Compact {
     */
   private def compactSet(spark: SparkSession, p: Path, fs: FileSystem,
                          shards: Seq[FileStatus], n: Int, compressed: Boolean,
-                         format: String, suffix: String): Unit = {
+                         fmt: ContainerFormat): Unit = {
     val token = newToken("c")
     val stage = new Path(p, s"$StagePrefix$token")
     try {
@@ -368,17 +366,16 @@ object Compact {
       // means one reader factory (one serialized Hadoop conf per task),
       // not one per shard. Envelope stats come straight off the scan;
       // columns beyond the write contract are pruned.
-      val docs = spark.read.format(format).load(shards.map(_.getPath.toString): _*)
+      val docs = spark.read.format(fmt.name).load(shards.map(_.getPath.toString): _*)
         .select("wkb", "props", "min_lng", "min_lat", "max_lng", "max_lat")
       // the Ingest layout, hash-sampled on wkb (container rows carry no
       // doc_id): the containers are decoded twice per slice. Within-shard
       // ordering is the container writer's own job.
-      val clustered = Ingest.layout(docs, n, col("wkb"))
+      Ingest.layout(docs, n, col("wkb"))
         .select("wkb", "props")
-        .write.format(format).mode("append")
+        .write.format(fmt.name).mode("append")
         .option("shardToken", token)
-      (if (format == "geomedea") clustered.option("compressed", compressed.toString)
-       else clustered)
+        .options(fmt.compressionOptions(compressed))
         .save(stage.toString)
     } catch {
       case t: Throwable =>
@@ -388,7 +385,7 @@ object Compact {
         throw t
     }
     val replacements = fs.listStatus(stage).toSeq
-      .filter(s => s.isFile && s.getPath.getName.endsWith(suffix))
+      .filter(s => s.isFile && s.getPath.getName.endsWith(fmt.suffix))
       .map(_.getPath.getName)
     val condemned = shards.map(_.getPath.getName)
     // the record makes the swap durable + resumable; from here every

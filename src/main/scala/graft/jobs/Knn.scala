@@ -51,13 +51,17 @@ object Knn {
     * return the same rows): a top-k sort, one Spark job, and the driver
     * holds at most `rows` rows whatever any size estimate says. kNN samples
     * its point side; [[Ingest]] samples envelope centers for its layout.
+    * The hash is a projected column, so it is taken once per row; as a
+    * sort expression the top-k comparator would rehash both rows at every
+    * comparison (Ingest and Compact hash the whole wkb).
     */
   private[graft] def sample(points: DataFrame, rows: Int = SampleRows,
                             key: Column = col("doc_id"), lng: Column = col("lng"),
                             lat: Column = col("lat")): Array[(Int, Int)] =
     points.select(key.as("key"), lng.cast("int").as("lng"), lat.cast("int").as("lat"))
       .where(col("lng").isNotNull && col("lat").isNotNull)
-      .orderBy(xxhash64(col("key"), col("lng"), col("lat")), col("key"), col("lng"), col("lat"))
+      .withColumn("hash", xxhash64(col("key"), col("lng"), col("lat")))
+      .orderBy(col("hash"), col("key"), col("lng"), col("lat"))
       .limit(rows).select("lng", "lat")
       .collect().map(r => (r.getInt(0), r.getInt(1)))
 

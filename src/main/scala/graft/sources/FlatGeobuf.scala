@@ -682,6 +682,7 @@ object FlatGeobuf {
     */
   final case class FgbSpoolWritten(extent: Envelope, featureCount: Long, totalBytes: Long,
                                    splits: Vector[Long] = Vector.empty)
+      extends FeatureSpool.Written
 
   /** Spill-backed FGB shard writer — the [[graft.sources.ShardSpool]]
     * analog for the FlatGeobuf container: O(index + one block) heap.
@@ -704,7 +705,8 @@ object FlatGeobuf {
     * arrival order (asserted in PropertiesSpec).
     */
   final class FgbSpool(name: String = "graft", nodeSize: Int = DefaultNodeSize,
-                       splitGranularity: Long = ShardSpool.DefaultSplitGranularity) {
+                       splitGranularity: Long = ShardSpool.DefaultSplitGranularity)
+      extends FeatureSpool {
     require(nodeSize >= 2 && nodeSize <= 0xFFFF,
       s"nodeSize must be in [2, 65535]; got $nodeSize")
 

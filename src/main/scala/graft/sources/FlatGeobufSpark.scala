@@ -4,6 +4,7 @@ import graft.codec.FeatureCodec.Feature
 import graft.sources.GeoJsonIngest.PropCell
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.v2.ContainerWriterFactory.MaxFileBytes
 
 /** Spark <-> FlatGeobuf bridge, shaped exactly like [[GeomedeaSpark]] —
   * the reference's bridge replays features into ANY geozero format and
@@ -12,7 +13,8 @@ import org.apache.spark.sql.functions._
   * way their `.geomedea` files do.
   *
   * The container is a single-node format; [[read]]/[[write]] are the
-  * driver-side interop twins (bounded by [[GeomedeaSpark.MaxFileBytes]])
+  * driver-side interop twins (bounded by the v2 writer's shard cap,
+  * [[v2.ContainerWriterFactory.MaxFileBytes]])
   * and [[readDir]] is the fan-out scan over a directory of `.fgb` files
   * with per-file bbox pruning via the embedded packed R-tree — the same
   * scale shape as the geomedea directory scan.
@@ -25,8 +27,7 @@ object FlatGeobufSpark {
   def read(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
     val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
-    require(bytes.length <= GeomedeaSpark.MaxFileBytes,
-      s"${bytes.length} bytes > ${GeomedeaSpark.MaxFileBytes}")
+    require(bytes.length <= MaxFileBytes, s"${bytes.length} bytes > $MaxFileBytes")
     val rows = FlatGeobuf.selectAll(bytes).zipWithIndex.map { case (f, i) =>
       GeoJsonIngest.FeatRow(i.toLong, graft.geom.Wkb.write(f.geom),
         f.props.map { case (k, v) => GeoJsonIngest.toCell(k, v) },
@@ -79,8 +80,7 @@ object FlatGeobufSpark {
         Feature(graft.geom.Wkb.read(wkb), cells.map(GeoJsonIngest.fromCell).toVector)
       }
     val bytes = FlatGeobuf.write(feats.toSeq, nodeSize = nodeSize)
-    require(bytes.length <= GeomedeaSpark.MaxFileBytes,
-      s"${bytes.length} bytes > ${GeomedeaSpark.MaxFileBytes}")
+    require(bytes.length <= MaxFileBytes, s"${bytes.length} bytes > $MaxFileBytes")
     java.nio.file.Files.write(java.nio.file.Paths.get(path), bytes)
   }
 }

@@ -5,6 +5,7 @@ import graft.expr.GraftFunctions._
 import graft.sources.GeoJsonIngest.PropCell
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.v2.ContainerWriterFactory.MaxFileBytes
 
 /** Spark <-> single-file container bridge: lets a reference user's
   * existing `.geomedea` files flow through the engine (S8/S9 for the
@@ -12,14 +13,13 @@ import org.apache.spark.sql.functions._
   *
   * The container is a single-node format (one header + one index +
   * sequential pages), so [[read]] decodes on the driver and
-  * parallelizes rows, and [[write]] collects — both bounded by
-  * [[MaxFileBytes]]. The 100 TB path is `Ingest.write`'s parquet layout;
-  * this bridge is for interop at the reference's own file sizes (its
-  * published fixtures are 5-13 MB).
+  * parallelizes rows, and [[write]] collects — both bounded by the v2
+  * writer's shard cap ([[v2.ContainerWriterFactory.MaxFileBytes]]). The
+  * 100 TB path is `Ingest.write`'s parquet layout; this bridge is for
+  * interop at the reference's own file sizes (its published fixtures are
+  * 5-13 MB).
   */
 object GeomedeaSpark {
-
-  val MaxFileBytes: Long = 256L << 20
 
   /** .geomedea file -> the engine's geometry frame (wkb + typed props +
     * envelope stat columns), in the file's Hilbert layout order.

@@ -69,9 +69,31 @@ object ShardSpool {
   }
 }
 
+/** A spill-backed single-shard writer, as the DSv2 container writer
+  * drives it: features in, one container file out at [[commit]].
+  */
+trait FeatureSpool {
+  def add(f: Feature): Unit
+  def commit(open: Long => OutputStream): FeatureSpool.Written
+  def delete(): Unit
+}
+
+object FeatureSpool {
+  /** What a commit wrote: the manifest entry's extent, count, byte
+    * length and intra-shard split boundaries.
+    */
+  trait Written {
+    def extent: Envelope
+    def featureCount: Long
+    def totalBytes: Long
+    def splits: Vector[Long]
+  }
+}
+
 final class ShardSpool(compressed: Boolean,
                        pageSizeGoal: Long = GeomedeaFile.DefaultPageSizeGoal,
-                       splitGranularity: Long = ShardSpool.DefaultSplitGranularity) {
+                       splitGranularity: Long = ShardSpool.DefaultSplitGranularity)
+    extends FeatureSpool {
 
   /** `splits`: absolute page-boundary offsets sampled every
     * ~`splitGranularity` encoded bytes (first = data-section start),
@@ -82,6 +104,7 @@ final class ShardSpool(compressed: Boolean,
   final case class SpoolWritten(extent: Envelope, pageCount: Long,
                                 featureCount: Long, totalBytes: Long,
                                 splits: Vector[Long] = Vector.empty)
+      extends FeatureSpool.Written
 
   private val spoolPath: Path =
     Files.createTempFile(ShardSpool.spillDir(), "graft-spool", ".feat")

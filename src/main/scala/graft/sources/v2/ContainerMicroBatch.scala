@@ -5,11 +5,11 @@ import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFacto
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, SupportsTriggerAvailableNow}
 import org.apache.spark.util.SerializableConfiguration
 
-/** Streaming READ side of the `.geomedea` lake — the inverse of the
+/** Streaming READ side of a container lake — the inverse of the
   * streaming->native-format sink (`streaming/StreamIngest` +
-  * foreachBatch writer): `spark.readStream.format("geomedea")
-  * .load(dir)` tails a directory that another job keeps appending
-  * shards to, emitting each NEW shard's features exactly once.
+  * foreachBatch writer): `spark.readStream.format("geomedea" |
+  * "flatgeobuf").load(dir)` tails a directory that another job keeps
+  * appending shards to, emitting each NEW shard's features exactly once.
   *
   * Offsets are GENERATION-QUALIFIED name sets: `(generation, shard
   * names emitted within that generation)`. Shard names are
@@ -31,35 +31,10 @@ import org.apache.spark.util.SerializableConfiguration
   * ceiling). In-flight `_tmp_` names are invisible by construction
   * (suffix filter), so a batch never observes a half-written shard.
   */
-/** Shared by both streaming planners: expand full-scan (no-bbox)
-  * partitions at the manifest's split boundaries, under the SAME rules
-  * as the batch planners — boundaries are consumed only off an entry
-  * whose recorded byte length matches the live file (a compaction or
-  * out-of-protocol rewrite invalidates by length), shape-validated
-  * ([[GeomedeaManifest.Entry.validSplits]]), and the readers re-derive
-  * the data-section base from the authoritative header, so a stale list
-  * that survives both checks still fails LOUDLY instead of shifting
-  * location ids. A backlogged stream that receives one huge compacted
-  * shard decodes it as several tasks instead of one serial read.
-  */
-private[v2] object StreamSplits {
-  def expand(fs: FileSystem, dir: Path, statuses: Seq[FileStatus],
-             kept: Seq[String]): Array[InputPartition] = {
-    val lenByName = statuses.map(s => s.getPath.getName -> s.getLen).toMap
-    val manifest = GeomedeaManifest.read(fs, dir).getOrElse(Map.empty)
-      .filter { case (n, e) => lenByName.get(n).contains(e.len) }
-    kept.flatMap { x =>
-      manifest.get(new Path(x).getName) match {
-        case Some(e) => GeomedeaTable.splitPartitions(x, e.len, e.validSplits)
-        case _       => Seq(GeomedeaPartition(x))
-      }
-    }.map(p => p: InputPartition).toArray
-  }
-}
-
-class GeomedeaMicroBatchStream(path: String, bbox: Option[graft.geom.Envelope],
-                               required: org.apache.spark.sql.types.StructType,
-                               checkpointLocation: String)
+class ContainerMicroBatchStream(format: ContainerFormat, path: String,
+                                bbox: Option[graft.geom.Envelope],
+                                required: org.apache.spark.sql.types.StructType,
+                                checkpointLocation: String)
     extends MicroBatchStream with SupportsTriggerAvailableNow {
 
   private val conf = new SerializableConfiguration(
@@ -73,7 +48,7 @@ class GeomedeaMicroBatchStream(path: String, bbox: Option[graft.geom.Envelope],
     if (!f.exists(p)) Seq.empty
     else if (f.getFileStatus(p).isFile) Seq(f.getFileStatus(p))
     else f.listStatus(p).toSeq
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".geomedea"))
+      .filter(s => s.isFile && s.getPath.getName.endsWith(format.suffix))
       .sortBy(_.getPath.toString)
   }
 
@@ -105,151 +80,60 @@ class GeomedeaMicroBatchStream(path: String, bbox: Option[graft.geom.Envelope],
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val statuses = listStatuses()
-    val fresh = GeomedeaOffset.resolveFresh(path, fs, new Path(path),
-      statuses.map(_.getPath.toString),
-      start.asInstanceOf[GeomedeaOffset], end.asInstanceOf[GeomedeaOffset])
-    // same planning-time file pruning as the batch scan: with a bbox
-    // (the `bbox` READ OPTION — Spark's MicroBatchExecution builds this
-    // scan straight from newScanBuilder and never calls pushFilters, so
-    // the option is the streaming push channel), new shards whose root
-    // bounds miss the rect are skipped
-    // ENTIRELY (the offset still advances past them — offsets track
-    // names, not survivors, so pruned shards never replan). Filters stay
-    // residual, so pruning is a superset and Spark re-applies them.
-    // Extents come from the _manifest.tsv when its entries match the
-    // live byte lengths (one read for the whole batch; a stale
-    // same-named entry with a wrong extent could otherwise prune a
-    // fresh intersecting shard — and offsets advance past pruned names,
-    // so the loss would be silent and permanent) and a POOLED header
-    // fan-out otherwise — a large backlog must not serialize planning
-    // on one object-store round trip per shard.
-    val kept = bbox match {
-      case None => fresh
-      case Some(q) =>
-        val dir = new Path(path)
-        val f = fs
-        val lenByName = statuses.map(s => s.getPath.getName -> s.getLen).toMap
-        val manifest = GeomedeaManifest.read(f, dir).getOrElse(Map.empty)
-          .filter { case (n, e) => lenByName.get(n).contains(e.len) }
-        val (known, unknown) = fresh.partition(x =>
-          manifest.contains(new Path(x).getName))
-        val keptKnown = known.filter(x =>
-          manifest(new Path(x).getName).extent.exists(_.intersects(q)))
-        val keptUnknown = PlannerPool.mapFiles(unknown) { x =>
-          val p = new Path(x)
-          val st = f.getFileStatus(p)
-          val head = new Array[Byte](math.min(GeomedeaTable.HeadBytes.toLong, st.getLen).toInt)
-          val in = f.open(p)
-          try in.readFully(0, head) finally in.close()
-          if (GeomedeaTable.fileExtent(head).exists(_.intersects(q))) Some(x) else None
-        }.flatten
-        (keptKnown ++ keptUnknown).sorted
-    }
-    // no bbox: full-scan partitions split at the manifest's sampled
-    // boundaries (bbox partitions stay whole-file — the indexed reader
-    // scans per file, and a split copy of it would re-emit hits)
-    if (bbox.isEmpty) StreamSplits.expand(fs, new Path(path), statuses, kept)
-    else kept.map(x => GeomedeaPartition(x): InputPartition).toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new GeomedeaReaderFactory(bbox = bbox, required = required, limit = None, conf = conf)
-
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
-}
-
-/** Streaming READ of a `.fgb` lake — same generation-qualified offset /
-  * exactly-once model as [[GeomedeaMicroBatchStream]] (shards are
-  * immutable once commit-renamed by [[FgbWrite]], `_tmp_` invisible,
-  * compaction resumes via [[LakeGenerations]]), with bbox-option pruning
-  * of new shards from their header envelopes (read via two positioned
-  * range reads each, pooled).
-  */
-class FgbMicroBatchStream(path: String, bbox: Option[graft.geom.Envelope],
-                          required: org.apache.spark.sql.types.StructType,
-                          checkpointLocation: String)
-    extends MicroBatchStream with SupportsTriggerAvailableNow {
-
-  private val conf = new SerializableConfiguration(
-    org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
-
-  private def fs: FileSystem = new Path(path).getFileSystem(conf.value)
-
-  private def listShardStatuses(): Seq[FileStatus] = {
-    val p = new Path(path)
+    val dir = new Path(path)
     val f = fs
-    if (!f.exists(p)) Seq.empty
-    else if (f.getFileStatus(p).isFile) Seq(f.getFileStatus(p))
-    else f.listStatus(p).toSeq
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".fgb"))
-      .sortBy(_.getPath.toString)
-  }
-
-  private def listShards(): Seq[String] = listShardStatuses().map(_.getPath.toString)
-
-  private var availableNowTarget: Option[GeomedeaOffset] = None
-  private def snapshot(): GeomedeaOffset =
-    GeomedeaOffset.snapshot(fs, new Path(path), () => listShards())
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowTarget = Some(snapshot())
-  override def latestOffset(): Offset = availableNowTarget.getOrElse(snapshot())
-  override def latestOffset(start: Offset,
-                            limit: org.apache.spark.sql.connector.read.streaming.ReadLimit): Offset =
-    latestOffset()
-  override def initialOffset(): Offset =
-    GeomedeaOffset(LakeGenerations.currentGen(fs, new Path(path)), Seq.empty)
-  override def deserializeOffset(json: String): Offset = GeomedeaOffset.fromJson(json)
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val statuses = listShardStatuses()
-    val fresh = GeomedeaOffset.resolveFresh(path, fs, new Path(path),
+    val fresh = GeomedeaOffset.resolveFresh(path, f, dir,
       statuses.map(_.getPath.toString),
       start.asInstanceOf[GeomedeaOffset], end.asInstanceOf[GeomedeaOffset])
-    // same manifest fast path + length validation as the geomedea stream:
-    // one `_manifest.tsv` read covers the batch (entries whose recorded
-    // length disagrees with the live file fall back to a header read —
-    // a stale same-named entry must never silently prune a fresh shard,
-    // offsets advance past pruned names); manifest extents are scaled
-    // ints rounded OUTWARD at write, so pruning stays a superset
-    val kept = bbox match {
-      case None => fresh
-      case Some(q) =>
-        val f = fs
-        val dir = new Path(path)
-        val lenByName = statuses.map(s => s.getPath.getName -> s.getLen).toMap
-        val manifest = GeomedeaManifest.read(f, dir).getOrElse(Map.empty)
-          .filter { case (n, e) => lenByName.get(n).contains(e.len) }
-        val (known, unknown) = fresh.partition(x => manifest.contains(new Path(x).getName))
-        // forall, not exists: extent None == count 0 == UNKNOWN in the
-        // FGB spec — never prune on it (mirrors FgbTable.scanFiles; the
-        // geomedea stream prunes None because there count 0 means empty)
-        val keptKnown = known.filter(x =>
-          manifest(new Path(x).getName).extent.forall(_.intersects(q)))
-        val keptUnknown = PlannerPool.mapFiles(unknown) { x =>
-          val in = f.open(new Path(x))
-          val h =
-            try graft.sources.FlatGeobuf.readHeaderRanged((off, k) => {
-              val b = new Array[Byte](k); in.readFully(off, b); b
-            })
-            finally in.close()
-          val keep = h.envelope.forall { case (mnx, mny, mxx, mxy) =>
-            !(mxx < q.minLng / 1e7 || mxy < q.minLat / 1e7 ||
-              mnx > q.maxLng / 1e7 || mny > q.maxLat / 1e7)
+    // manifest entries are used only when their recorded byte length
+    // matches the live file: a compaction or out-of-protocol rewrite
+    // invalidates by length. One read serves the whole batch.
+    val lenByName = statuses.map(s => s.getPath.getName -> s.getLen).toMap
+    val manifest = GeomedeaManifest.read(f, dir).getOrElse(Map.empty)
+      .filter { case (n, e) => lenByName.get(n).contains(e.len) }
+    bbox match {
+      case None =>
+        // full-scan partitions split at the manifest's sampled boundaries
+        // under the SAME rules as the batch planner: shape-validated
+        // ([[GeomedeaManifest.Entry.validSplits]]), and the readers
+        // re-derive the data-section base from the authoritative header,
+        // so a stale list that survives both checks still fails LOUDLY
+        // instead of shifting location ids. A backlogged stream that
+        // receives one huge compacted shard decodes it as several tasks.
+        fresh.flatMap { x =>
+          manifest.get(new Path(x).getName) match {
+            case Some(e) => ContainerTable.splitPartitions(x, e.len, e.validSplits)
+            case _       => Seq(GeomedeaPartition(x))
           }
-          if (keep) Some(x) else None
+        }.map(p => p: InputPartition).toArray
+      case Some(q) =>
+        // same planning-time file pruning as the batch scan: with a bbox
+        // (the `bbox` READ OPTION — Spark's MicroBatchExecution builds this
+        // scan straight from newScanBuilder and never calls pushFilters,
+        // so the option is the streaming push channel), new shards that
+        // cannot intersect the rect ([[ContainerFormat.mayIntersect]]) are
+        // skipped ENTIRELY (the offset still advances past them — offsets
+        // track names, not survivors, so pruned shards never replan; a
+        // stale same-named manifest entry could therefore lose a fresh
+        // shard silently and permanently, hence the length check). Shards
+        // the manifest does not describe have their headers read on a
+        // POOLED fan-out — a large backlog must not serialize planning on
+        // one object-store round trip per shard. Filters stay residual, so
+        // pruning is a superset and Spark re-applies them. Partitions stay
+        // whole-file: the indexed reader scans per file, and a split copy
+        // of it would re-emit hits.
+        val (known, unknown) = fresh.partition(x => manifest.contains(new Path(x).getName))
+        val keptKnown = known.filter(x => format.mayIntersect(manifest(new Path(x).getName), q))
+        val keptUnknown = PlannerPool.mapFiles(unknown) { x =>
+          if (format.mayIntersect(format.headerEntry(f, f.getFileStatus(new Path(x))), q)) Some(x)
+          else None
         }.flatten
-        (keptKnown ++ keptUnknown).sorted
+        (keptKnown ++ keptUnknown).sorted.map(x => GeomedeaPartition(x): InputPartition).toArray
     }
-    // no bbox: full-scan partitions split at the manifest's sampled
-    // boundaries (bbox partitions stay whole-file — the indexed reader
-    // scans per file, and a split copy of it would re-emit hits)
-    if (bbox.isEmpty) StreamSplits.expand(fs, new Path(path), statuses, kept)
-    else kept.map(x => GeomedeaPartition(x): InputPartition).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new FgbReaderFactory(bbox, required, limit = None, conf = conf)
+    new ContainerReaderFactory(format, bbox, required, limit = None, conf = conf)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()

@@ -11,7 +11,7 @@ import java.nio.charset.StandardCharsets
   * query from one small file instead of 100k tiny range reads.
   *
   * Consistency model: advisory cache, never trusted blindly. The
-  * planner ([[GeomedeaTable.scanFiles]]) validates that the manifest
+  * planner ([[ContainerFormat.scanFiles]]) validates that the manifest
   * covers EXACTLY the listed `.geomedea` files with matching byte
   * lengths and silently falls back to header reads otherwise — so
   * hand-copied files, partial manifests, or a crash between delete and
@@ -31,7 +31,7 @@ import java.nio.charset.StandardCharsets
   * monotone in-range shape, and a reader fed a misaligned offset fails
   * LOUDLY on the page framing — never silently wrong rows.
   * Empty shards (count 0) store their inverted empty envelope and map
-  * to extent None, matching [[GeomedeaTable.fileExtent]] semantics.
+  * to extent None, matching [[ContainerFormat.Geomedea.fileExtent]] semantics.
   */
 object GeomedeaManifest {
 

@@ -4,7 +4,7 @@ import graft.codec.FeatureCodec.{Feature, PInt64, PString}
 import graft.geom.{Envelope, Wkb}
 import graft.jobs.Compact
 import graft.sources.GeomedeaFile
-import graft.sources.v2.{GeomedeaManifest, GeomedeaTable}
+import graft.sources.v2.{ContainerFormat, GeomedeaManifest}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -99,7 +99,7 @@ class CompactionSpec extends AnyFunSuite {
     assert(before.size == 120)
     // worst case: every appended shard overlaps the east rect -> planning
     // keeps all 6 files
-    assert(GeomedeaTable.scanFiles(dir, Some(east)).size == 6)
+    assert(ContainerFormat.Geomedea.scanFiles(dir, Some(east)).size == 6)
 
     val written = Compact.compact(spark, dir, numShards = 6)
     assert(written == 6)
@@ -110,10 +110,10 @@ class CompactionSpec extends AnyFunSuite {
     // rect now plans a STRICT subset of files (the two point clusters
     // are far apart on the curve, so at most half the shards + one
     // boundary shard can touch east)
-    val plannedEast = GeomedeaTable.scanFiles(dir, Some(east)).size
+    val plannedEast = ContainerFormat.Geomedea.scanFiles(dir, Some(east)).size
     assert(plannedEast < 6, s"expected < 6 planned files after compaction, got $plannedEast")
     val west = Envelope.fromDegrees(0, 0, 10, 10)
-    val plannedWest = GeomedeaTable.scanFiles(dir, Some(west)).size
+    val plannedWest = ContainerFormat.Geomedea.scanFiles(dir, Some(west)).size
     assert(plannedWest < 6, s"expected < 6 planned files after compaction, got $plannedWest")
     // both rects still return exactly their cluster
     val eastRows = spark.read.format("geomedea").load(dir)
@@ -210,11 +210,11 @@ class CompactionSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSet
     val before = ids()
     assert(before.size == 80)
-    assert(graft.sources.v2.FgbTable.scanFiles(dir, Some(east)).size == 4)
+    assert(ContainerFormat.FlatGeobuf.scanFiles(dir, Some(east)).size == 4)
     val written = Compact.compact(spark, dir, numShards = 4, format = "flatgeobuf")
     assert(written == 4)
     assert(ids() == before)
-    assert(graft.sources.v2.FgbTable.scanFiles(dir, Some(east)).size < 4)
+    assert(ContainerFormat.FlatGeobuf.scanFiles(dir, Some(east)).size < 4)
     assert(Compact.compact(spark, dir, numShards = 2, format = "geomedea") == 0) // wrong-suffix no-op
 
     // incremental maintenance serves .fgb lakes through the same picker:
@@ -252,7 +252,7 @@ class CompactionSpec extends AnyFunSuite {
     val east = Envelope.fromDegrees(100, 0, 110, 10)
     val before = idsAt(dir)
     assert(before.size == 180)
-    assert(GeomedeaTable.scanFiles(dir, Some(east)).size == 9)
+    assert(ContainerFormat.Geomedea.scanFiles(dir, Some(east)).size == 9)
     val written = Compact.compact(spark, dir, numShards = 6, maxShardsPerCall = 3)
     assert(idsAt(dir) == before, "sliced compaction must preserve every row byte-identically")
     // one generation recorded per slice, jointly condemning all 9 appends
@@ -265,11 +265,11 @@ class CompactionSpec extends AnyFunSuite {
     // every slice bounded: no generation condemned more than the cap
     assert(gens.forall(_.condemned.size <= 3))
     // pruning improved: the east rect no longer plans every shard
-    assert(GeomedeaTable.scanFiles(dir, Some(east)).size < written)
+    assert(ContainerFormat.Geomedea.scanFiles(dir, Some(east)).size < written)
     // a second, unsliced pass converges to fully-global clustering
     Compact.compact(spark, dir, numShards = 6)
     assert(idsAt(dir) == before)
-    assert(GeomedeaTable.scanFiles(dir, Some(east)).size <= 4)
+    assert(ContainerFormat.Geomedea.scanFiles(dir, Some(east)).size <= 4)
   }
 
   test("generation-record crash recovery: an interrupted swap is finished before planning") {
@@ -558,7 +558,7 @@ class CompactionSpec extends AnyFunSuite {
     // pruning restored: a west rect plans a strict subset again (before
     // incremental, the 3 global appends survived every rect)
     val west = Envelope.fromDegrees(0, 0, 10, 10)
-    assert(GeomedeaTable.scanFiles(dir, Some(west)).size < names().size)
+    assert(ContainerFormat.Geomedea.scanFiles(dir, Some(west)).size < names().size)
     // CONVERGED: the replacements own small Hilbert ranges now — repeated
     // maintenance calls are no-ops, never churn
     assert(Compact.incremental(spark, dir, numShards = 2, targetShardBytes = 1) == 0)

@@ -3,7 +3,7 @@ package graft
 import graft.codec.FeatureCodec.{Feature, PInt64, PString}
 import graft.geom.{Envelope, Wkb}
 import graft.sources.{GeomedeaFile, GeomedeaSpark}
-import graft.sources.v2.GeomedeaScan
+import graft.sources.v2.ContainerScan
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.functions._
@@ -46,13 +46,13 @@ class DataSourceV2Spec extends AnyFunSuite {
     df.where(col("max_lng") >= q.minLng && col("max_lat") >= q.minLat &&
       col("min_lng") <= q.maxLng && col("min_lat") <= q.maxLat)
 
-  private def scanOf(df: DataFrame): GeomedeaScan =
+  private def scanOf(df: DataFrame): ContainerScan =
     // logical plan, not executedPlan: AQE (any shuffle, e.g. ORDER BY)
     // hides the BatchScanExec inside AdaptiveSparkPlanExec
     df.queryExecution.optimizedPlan.collect {
       case r: DataSourceV2ScanRelation => r.scan
-    }.collectFirst { case s: GeomedeaScan => s }
-      .getOrElse(fail("no GeomedeaScan in plan"))
+    }.collectFirst { case s: ContainerScan => s }
+      .getOrElse(fail("no ContainerScan in plan"))
 
   test("full scan reads every feature of every shard with stable FeatureLocations") {
     val df = spark.read.format("geomedea").load(shardDir)
@@ -222,7 +222,7 @@ class DataSourceV2Spec extends AnyFunSuite {
     val scans = agg.queryExecution.optimizedPlan.collect {
       case r: DataSourceV2ScanRelation => r.scan
     }
-    assert(scans.exists(_.isInstanceOf[graft.sources.v2.GeomedeaStatsScan]),
+    assert(scans.exists(_.isInstanceOf[graft.sources.v2.HeaderStatsScan]),
       agg.queryExecution.optimizedPlan.toString)
     assert(agg.head().getLong(0) == 80)
     // filtered counts must NOT push (filters are residual): normal scan
@@ -230,7 +230,7 @@ class DataSourceV2Spec extends AnyFunSuite {
     val fScans = filtered.queryExecution.optimizedPlan.collect {
       case r: DataSourceV2ScanRelation => r.scan
     }
-    assert(!fScans.exists(_.isInstanceOf[graft.sources.v2.GeomedeaStatsScan]))
+    assert(!fScans.exists(_.isInstanceOf[graft.sources.v2.HeaderStatsScan]))
     assert(filtered.head().getLong(0) == 40)
   }
 
@@ -242,7 +242,7 @@ class DataSourceV2Spec extends AnyFunSuite {
     val scans = agg.queryExecution.optimizedPlan.collect {
       case r: DataSourceV2ScanRelation => r.scan
     }
-    assert(scans.exists(_.isInstanceOf[graft.sources.v2.GeomedeaStatsScan]),
+    assert(scans.exists(_.isInstanceOf[graft.sources.v2.HeaderStatsScan]),
       agg.queryExecution.optimizedPlan.toString)
     // ground truth through the NON-pushed path: a residual filter blocks
     // aggregate pushdown (ours always stay residual), forcing decode
@@ -251,7 +251,7 @@ class DataSourceV2Spec extends AnyFunSuite {
     val bScans = brute.queryExecution.optimizedPlan.collect {
       case r: DataSourceV2ScanRelation => r.scan
     }
-    assert(!bScans.exists(_.isInstanceOf[graft.sources.v2.GeomedeaStatsScan]))
+    assert(!bScans.exists(_.isInstanceOf[graft.sources.v2.HeaderStatsScan]))
     assert(agg.head().toSeq == brute.head().toSeq,
       "header-derived extent must equal the decoded aggregation exactly")
 
@@ -260,13 +260,13 @@ class DataSourceV2Spec extends AnyFunSuite {
     val wScans = wrongPair.queryExecution.optimizedPlan.collect {
       case r: DataSourceV2ScanRelation => r.scan
     }
-    assert(!wScans.exists(_.isInstanceOf[graft.sources.v2.GeomedeaStatsScan]))
+    assert(!wScans.exists(_.isInstanceOf[graft.sources.v2.HeaderStatsScan]))
     // and a mixed list with one unsupported aggregate rejects the whole push
     val mixed = df.groupBy().agg(min("min_lng"), avg("min_lat"))
     val mScans = mixed.queryExecution.optimizedPlan.collect {
       case r: DataSourceV2ScanRelation => r.scan
     }
-    assert(!mScans.exists(_.isInstanceOf[graft.sources.v2.GeomedeaStatsScan]))
+    assert(!mScans.exists(_.isInstanceOf[graft.sources.v2.HeaderStatsScan]))
     assert(mixed.head().getInt(0) == brute.head().getInt(0))
   }
 
@@ -385,8 +385,8 @@ class DataSourceV2Spec extends AnyFunSuite {
     def table(location: String) = s"""{"type":"struct","fields":[{"name":"source_file","type":"string","nullable":true,"metadata":{}},$location,{"name":"wkb","type":"binary","nullable":true,"metadata":{}},{"name":"props","type":{"type":"array","elementType":$cell,"containsNull":true},"nullable":true,"metadata":{}},{"name":"prop_keys","type":{"type":"array","elementType":"string","containsNull":true},"nullable":true,"metadata":{}},{"name":"prop_vals","type":{"type":"array","elementType":"string","containsNull":true},"nullable":true,"metadata":{}},{"name":"min_lng","type":"integer","nullable":false,"metadata":{}},{"name":"min_lat","type":"integer","nullable":false,"metadata":{}},{"name":"max_lng","type":"integer","nullable":false,"metadata":{}},{"name":"max_lat","type":"integer","nullable":false,"metadata":{}}]}"""
     val gm = table("""{"name":"page_offset","type":"long","nullable":false,"metadata":{}},{"name":"feature_offset","type":"integer","nullable":false,"metadata":{}}""")
     val fgb = table("""{"name":"feature_offset","type":"long","nullable":false,"metadata":{}}""")
-    assert(graft.sources.v2.GeomedeaTable.Schema == DataType.fromJson(gm))
-    assert(graft.sources.v2.FgbTable.Schema == DataType.fromJson(fgb))
+    assert(graft.sources.v2.ContainerFormat.Geomedea.schema == DataType.fromJson(gm))
+    assert(graft.sources.v2.ContainerFormat.FlatGeobuf.schema == DataType.fromJson(fgb))
     // `.as[Seq[PropCell]]` in the bridges binds the props column by this type
     assert(graft.sources.v2.FeatureRows.CellType ==
       org.apache.spark.sql.Encoders.product[graft.sources.GeoJsonIngest.PropCell].schema)
@@ -514,17 +514,17 @@ class DataSourceV2Spec extends AnyFunSuite {
       minLat = 880000000, maxLng = 1800000000, maxLat = 890000000)).toSeq
     GeomedeaManifest.write(fs, new org.apache.hadoop.fs.Path(out), forged, "forge")
     val q = Envelope.fromDegrees(0, 0, 10, 10)
-    assert(graft.sources.v2.GeomedeaTable.scanFiles(out, Some(q)).isEmpty,
+    assert(graft.sources.v2.ContainerFormat.Geomedea.scanFiles(out, Some(q)).isEmpty,
       "consistent manifest extents must drive file pruning")
     // STALENESS: drop one manifest line -> coverage check fails -> header
     // fallback gives the true answer again
     GeomedeaManifest.write(fs, new org.apache.hadoop.fs.Path(out), forged.tail, "stale")
-    assert(graft.sources.v2.GeomedeaTable.scanFiles(out, Some(q)).nonEmpty,
+    assert(graft.sources.v2.ContainerFormat.Geomedea.scanFiles(out, Some(q)).nonEmpty,
       "stale manifest must fall back to header reads")
     // and a wrong byte length is also rejected
     GeomedeaManifest.write(fs, new org.apache.hadoop.fs.Path(out),
       forged.map(e => e.copy(len = e.len + 1)), "badlen")
-    assert(graft.sources.v2.GeomedeaTable.scanFiles(out, Some(q)).nonEmpty)
+    assert(graft.sources.v2.ContainerFormat.Geomedea.scanFiles(out, Some(q)).nonEmpty)
     // manifest refresh is BEST-EFFORT: a corrupt foreign shard in the
     // dir must not fail a commit whose data already published (the
     // refresh degrades; planning falls back and names the bad file)
@@ -532,7 +532,7 @@ class DataSourceV2Spec extends AnyFunSuite {
       Array[Byte](1, 2, 3))
     src.select("wkb", "props").repartition(1)
       .write.format("geomedea").mode("append").save(out) // must not throw
-    val e = intercept[Exception](graft.sources.v2.GeomedeaTable.scanFiles(out, None))
+    val e = intercept[Exception](graft.sources.v2.ContainerFormat.Geomedea.scanFiles(out, None))
     assert(e.getMessage != null && e.getMessage.contains("junk.geomedea"))
   }
 
@@ -657,8 +657,8 @@ class DataSourceV2Spec extends AnyFunSuite {
       case other          => String.valueOf(other)
     }.mkString("|")
     def table(format: String, dir: String): SupportsRead with SupportsWrite = format match {
-      case "geomedea" => new graft.sources.v2.GeomedeaTable(Seq(dir))
-      case _          => new graft.sources.v2.FgbTable(Seq(dir), graft.sources.v2.FgbTable.Schema)
+      case "geomedea" => new graft.sources.v2.ContainerTable(graft.sources.v2.ContainerFormat.Geomedea, Seq(dir))
+      case _          => new graft.sources.v2.ContainerTable(graft.sources.v2.ContainerFormat.FlatGeobuf, Seq(dir), graft.sources.v2.ContainerFormat.FlatGeobuf.schema)
     }
     for (format <- Seq("geomedea", "flatgeobuf")) {
       val out = java.nio.file.Files.createTempDirectory(s"cl_$format").toString + "/o"
@@ -693,7 +693,7 @@ class DataSourceV2Spec extends AnyFunSuite {
   }
 
   test("load(paths*): two listed shards of a three-shard lake read as the union of their single loads") {
-    import graft.sources.v2.{FgbCountScan, GeomedeaManifest, GeomedeaPartition, GeomedeaStatsScan}
+    import graft.sources.v2.{GeomedeaManifest, GeomedeaPartition, HeaderStatsScan}
     // the third shard's points lie south-west of both others, so a leaked
     // row changes every count, window and extent checked below
     val farDir = java.nio.file.Files.createTempDirectory("gm_far").toString
@@ -753,8 +753,8 @@ class DataSourceV2Spec extends AnyFunSuite {
       // header-pushed COUNT(*) reads the listed headers only
       val count = two.groupBy().count()
       assert(scans(count).exists {
-        case _: GeomedeaStatsScan | _: FgbCountScan => true
-        case _                                      => false
+        case _: HeaderStatsScan => true
+        case _                  => false
       }, s"$format: ${count.queryExecution.optimizedPlan}")
       assert(count.head().getLong(0) == expect.size, format)
 
@@ -763,10 +763,10 @@ class DataSourceV2Spec extends AnyFunSuite {
         // decoded extent of the union (a residual filter blocks the push)
         val cols = Seq(min("min_lng"), min("min_lat"), max("max_lng"), max("max_lat"))
         val extent = two.groupBy().agg(cols.head, cols.tail: _*)
-        assert(scans(extent).exists(_.isInstanceOf[GeomedeaStatsScan]),
+        assert(scans(extent).exists(_.isInstanceOf[HeaderStatsScan]),
           extent.queryExecution.optimizedPlan.toString)
         val decoded = singles.where(col("feature_offset") >= 0).groupBy().agg(cols.head, cols.tail: _*)
-        assert(!scans(decoded).exists(_.isInstanceOf[GeomedeaStatsScan]))
+        assert(!scans(decoded).exists(_.isInstanceOf[HeaderStatsScan]))
         assert(extent.head().toSeq == decoded.head().toSeq)
       }
     }

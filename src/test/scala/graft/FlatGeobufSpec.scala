@@ -126,7 +126,7 @@ class FlatGeobufSpec extends AnyFunSuite {
     // unknown counts must not fake a 0-row statistic
     val scan = df.queryExecution.optimizedPlan.collect {
       case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r.scan
-    }.collectFirst { case s: graft.sources.v2.FgbScan => s }.get
+    }.collectFirst { case s: graft.sources.v2.ContainerScan => s }.get
     assert(!scan.estimateStatistics().numRows().isPresent)
   }
 
@@ -315,7 +315,7 @@ class FlatGeobufSpec extends AnyFunSuite {
       .forall(_.getString(0).endsWith("east.fgb")))
     val scan = pruned.queryExecution.optimizedPlan.collect {
       case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r.scan
-    }.collectFirst { case s: graft.sources.v2.FgbScan => s }.get
+    }.collectFirst { case s: graft.sources.v2.ContainerScan => s }.get
     assert(scan.description().contains("GreaterThanOrEqual(max_lng"), scan.description())
     assert(scan.toBatch.planInputPartitions().length == 1, "west file pruned at planning")
     assert(scan.estimateStatistics().numRows().getAsLong == 40)
@@ -363,18 +363,18 @@ class FlatGeobufSpec extends AnyFunSuite {
       }
     // COUNT(*) answered from headers via a one-row scan
     val agg = spark.read.format("flatgeobuf").load(dir).groupBy().count()
-    assert(scansOf(agg).exists(_.isInstanceOf[graft.sources.v2.FgbCountScan]),
+    assert(scansOf(agg).exists(_.isInstanceOf[graft.sources.v2.HeaderStatsScan]),
       agg.queryExecution.optimizedPlan.toString)
     assert(agg.head().getLong(0) == 80)
     // filtered counts fall back to a normal scan
     val filtered = spark.read.format("flatgeobuf").load(dir)
       .where(col("min_lng") >= 0).groupBy().count()
-    assert(!scansOf(filtered).exists(_.isInstanceOf[graft.sources.v2.FgbCountScan]))
+    assert(!scansOf(filtered).exists(_.isInstanceOf[graft.sources.v2.HeaderStatsScan]))
     assert(filtered.head().getLong(0) == 80)
     // limit pushdown: only enough files planned
     val lim = spark.read.format("flatgeobuf").load(dir).limit(10)
     assert(lim.count() == 10)
-    val scan = scansOf(lim).collectFirst { case s: graft.sources.v2.FgbScan => s }.get
+    val scan = scansOf(lim).collectFirst { case s: graft.sources.v2.ContainerScan => s }.get
     assert(scan.description().contains("limit=10"), scan.description())
     assert(scan.toBatch.planInputPartitions().length == 1)
     // a file with UNKNOWN count (spec 0) blocks the header-only COUNT
@@ -384,13 +384,71 @@ class FlatGeobufSpec extends AnyFunSuite {
       FlatGeobuf.write((0 until 5).map(i => pt(i, i, i.toLong))))
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir2/unknown.fgb"), handBuiltFgb(0))
     val agg2 = spark.read.format("flatgeobuf").load(dir2).groupBy().count()
-    assert(!scansOf(agg2).exists(_.isInstanceOf[graft.sources.v2.FgbCountScan]))
+    assert(!scansOf(agg2).exists(_.isInstanceOf[graft.sources.v2.HeaderStatsScan]))
     assert(agg2.head().getLong(0) == 6)
     val lim2 = spark.read.format("flatgeobuf").load(dir2).limit(6)
-    val scan2 = scansOf(lim2).collectFirst { case s: graft.sources.v2.FgbScan => s }.get
+    val scan2 = scansOf(lim2).collectFirst { case s: graft.sources.v2.ContainerScan => s }.get
     assert(scan2.toBatch.planInputPartitions().length == 2,
       "unknown counts must not short-cut file planning")
     assert(lim2.count() == 6)
+  }
+
+  test("format parity: an empty geomedea shard is pruned, an unknown-count FGB shard is kept; header aggregates follow") {
+    val spark = sparkSession
+    import org.apache.spark.sql.functions._
+    import graft.sources.GeomedeaFile
+    import graft.sources.v2.{ContainerFormat, ContainerMicroBatchStream, GeomedeaPartition, HeaderStatsScan}
+    def tmp(prefix: String) = java.nio.file.Files.createTempDirectory(prefix).toString
+    def put(dir: String, name: String, bytes: Array[Byte]): Unit =
+      java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/$name"), bytes)
+    // both lakes: 20 points far east of q, plus a shard whose header count
+    // is 0 — an EMPTY geomedea shard, an UNKNOWN-count FGB shard holding
+    // one point, (2.5, 1.5), inside q
+    val far = (0 until 20).map(i => pt(50 + i % 5, i / 5, i.toLong))
+    val gm = tmp("parity_gm")
+    put(gm, "far.geomedea", GeomedeaFile.write(far, compressed = true, pageSizeGoal = 256))
+    put(gm, "empty.geomedea", GeomedeaFile.write(Seq.empty, compressed = true, pageSizeGoal = 256))
+    val fgb = tmp("parity_fgb")
+    put(fgb, "far.fgb", FlatGeobuf.write(far))
+    put(fgb, "unknown.fgb", handBuiltFgb(0))
+    val q = Envelope.fromDegrees(0, 0, 10, 10)
+    val lakes = Seq((ContainerFormat.Geomedea, gm, Set.empty[String]),
+      (ContainerFormat.FlatGeobuf, fgb, Set("unknown.fgb")))
+    def name(f: String) = new org.apache.hadoop.fs.Path(f).getName
+    def planned(): Unit = lakes.foreach { case (fmt, dir, kept) =>
+      assert(fmt.scanFiles(dir, Some(q)).map(f => name(f.path)).toSet == kept, fmt.name)
+      val stream = new ContainerMicroBatchStream(fmt, dir, Some(q), fmt.schema, tmp("parity_ck"))
+      val parts = stream.planInputPartitions(stream.initialOffset(), stream.latestOffset())
+      assert(parts.map(p => name(p.asInstanceOf[GeomedeaPartition].file)).toSet == kept, fmt.name)
+    }
+    // from the headers, then from the manifest a v2 append publishes
+    // (its self-heal re-reads both hand-dropped shards)
+    planned()
+    lakes.foreach { case (fmt, dir, _) =>
+      spark.read.format(fmt.name).load(s"$dir/far${fmt.suffix}").select("wkb", "props")
+        .repartition(1).write.format(fmt.name).mode("append").save(dir)
+    }
+    planned()
+
+    def scans(df: org.apache.spark.sql.DataFrame) = df.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r.scan
+    }
+    def headerOnly(df: org.apache.spark.sql.DataFrame) = scans(df).exists(_.isInstanceOf[HeaderStatsScan])
+    // COUNT(*): accepted over an empty geomedea shard, refused over an
+    // unknown FGB count; both answers exact
+    val gmCount = spark.read.format("geomedea").load(gm).groupBy().count()
+    assert(headerOnly(gmCount) && gmCount.head().getLong(0) == 40)
+    val fgbCount = spark.read.format("flatgeobuf").load(fgb).groupBy().count()
+    assert(!headerOnly(fgbCount) && fgbCount.head().getLong(0) == 41)
+    // envelope MIN/MAX: geomedea only, even over an FGB lake of known counts
+    val known = tmp("parity_known")
+    put(known, "far.fgb", FlatGeobuf.write(far))
+    val cols = Seq(min("min_lng"), min("min_lat"), max("max_lng"), max("max_lat"))
+    val gmExtent = spark.read.format("geomedea").load(gm).groupBy().agg(cols.head, cols.tail: _*)
+    val fgbExtent = spark.read.format("flatgeobuf").load(known).groupBy().agg(cols.head, cols.tail: _*)
+    assert(headerOnly(gmExtent) && !headerOnly(fgbExtent))
+    assert(headerOnly(spark.read.format("flatgeobuf").load(known).groupBy().count()))
+    assert(gmExtent.head().toSeq == fgbExtent.head().toSeq)
   }
 
   test("distributed write: one executor-side .fgb shard per partition, roundtrip + overwrite") {
@@ -440,7 +498,7 @@ class FlatGeobufSpec extends AnyFunSuite {
   }
 
   test("manifest: fgb v2 writes publish _manifest.tsv and planning consumes it") {
-    import graft.sources.v2.{FgbTable, GeomedeaManifest}
+    import graft.sources.v2.{ContainerFormat, GeomedeaManifest}
     val spark = sparkSession
     import spark.implicits._
     val out = java.nio.file.Files.createTempDirectory("fgb_manifest").toString + "/m"
@@ -467,24 +525,24 @@ class FlatGeobufSpec extends AnyFunSuite {
       minLat = 880000000, maxLng = 1800000000, maxLat = 890000000)).toSeq
     GeomedeaManifest.write(fs, p, forged, "forge")
     val q = Envelope(0, 0, 10000000, 10000000)
-    assert(FgbTable.scanFiles(out, Some(q)).isEmpty,
+    assert(ContainerFormat.FlatGeobuf.scanFiles(out, Some(q)).isEmpty,
       "consistent manifest extents must drive fgb file pruning")
     // count-0 entries (spec: UNKNOWN) are never pruned even when forged
     GeomedeaManifest.write(fs, p, forged.map(_.copy(count = 0)), "unk")
-    assert(FgbTable.scanFiles(out, Some(q)).size == 4,
+    assert(ContainerFormat.FlatGeobuf.scanFiles(out, Some(q)).size == 4,
       "unknown-count manifest entries must never prune")
     // STALENESS: dropped line -> coverage fails -> header fallback answers
     GeomedeaManifest.write(fs, p, forged.tail, "stale")
-    assert(FgbTable.scanFiles(out, Some(q)).nonEmpty,
+    assert(ContainerFormat.FlatGeobuf.scanFiles(out, Some(q)).nonEmpty,
       "stale manifest must fall back to header reads")
     // wrong byte length is rejected too, and reads stay correct throughout
     GeomedeaManifest.write(fs, p, forged.map(e => e.copy(len = e.len + 1)), "badlen")
-    assert(FgbTable.scanFiles(out, Some(q)).nonEmpty)
+    assert(ContainerFormat.FlatGeobuf.scanFiles(out, Some(q)).nonEmpty)
     assert(spark.read.format("flatgeobuf").load(out).count() == 130)
   }
 
   test("manifest refresh is best-effort: a corrupt foreign shard never fails a commit") {
-    import graft.sources.v2.{FgbTable, GeomedeaManifest}
+    import graft.sources.v2.{ContainerFormat, GeomedeaManifest}
     val spark = sparkSession
     import spark.implicits._
     val out = java.nio.file.Files.createTempDirectory("fgb_junk").toString + "/m"
@@ -506,7 +564,7 @@ class FlatGeobufSpec extends AnyFunSuite {
     // listing (junk.fgb unreadable -> refresh skipped), so planning uses
     // the header fallback — which fails loudly ON the junk file, naming it
     assert(m.forall(_.size < 3))
-    val e = intercept[Exception](FgbTable.scanFiles(out, None))
+    val e = intercept[Exception](ContainerFormat.FlatGeobuf.scanFiles(out, None))
     assert(e.getMessage != null && e.getMessage.contains("junk.fgb"))
   }
 
@@ -636,7 +694,7 @@ class FlatGeobufSpec extends AnyFunSuite {
     assert(ids.length == 30 && ids.forall(_.toLong >= 1000L))
     val scan = out.queryExecution.optimizedPlan.collect {
       case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r.scan
-    }.collectFirst { case s: graft.sources.v2.FgbScan => s }.get
+    }.collectFirst { case s: graft.sources.v2.ContainerScan => s }.get
     assert(scan.toBatch.planInputPartitions().length == 1)
   }
 

@@ -326,6 +326,30 @@ class PlanQualitySpec extends AnyFunSuite {
     check("Compact.compact", PlansDuring(spark)(Compact.compact(spark, lake, numShards = 2)))
   }
 
+  test("the kNN and layout samples order by a projected hash column, not an xxhash64 sort expression") {
+    import graft.jobs.Knn
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, XxHash64}
+    import org.apache.spark.sql.execution.TakeOrderedAndProjectExec
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val aqe = new AdaptiveSparkPlanHelper {}
+    def check(what: String, plans: Seq[QueryExecution]): Unit = {
+      val topK = plans.flatMap(qe => aqe.collect(qe.executedPlan) { case t: TakeOrderedAndProjectExec => t })
+      assert(topK.size == 1, s"$what: ${topK.size} top-k sorts in\n" +
+        plans.map(_.executedPlan).mkString("\n"))
+      val order = topK.head.sortOrder
+      // every key a column the child already computed: the comparator
+      // evaluates no hash, so each row is hashed once, by the projection
+      assert(order.forall(_.child.isInstanceOf[Attribute]) &&
+        !order.exists(_.exists(_.isInstanceOf[XxHash64])), s"$what: sort order $order")
+    }
+    val points = spark.range(5000).select(format_string("p%06d", col("id")).as("doc_id"),
+      (col("id") * 7919 % 3600000).cast("int").as("lng"),
+      (col("id") * 104729 % 1800000).cast("int").as("lat"))
+    check("Knn.sample", PlansDuring(spark)(Knn.sample(points)))
+    check("Ingest layout sample", PlansDuring(spark)(Ingest.extentAndSample(geo, 4, col("wkb"))))
+  }
+
   test("salting divides the hot cell's largest shuffle key ~saltFactor x (deterministic A/B)") {
     // Wall-clock A/B is noise-fragile in this sandbox (measured 5-50x
     // exogenous stalls), so the salting benefit is recorded as the thing

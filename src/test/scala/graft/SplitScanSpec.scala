@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.v2.{GeomedeaManifest, GeomedeaTable}
+import graft.sources.v2.{ContainerFormat, GeomedeaManifest}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
@@ -144,23 +144,23 @@ class SplitScanSpec extends AnyFunSuite {
 
       // planner shape: one input partition per sampled boundary
       val schema =
-        if (format == "geomedea") GeomedeaTable.Schema else graft.sources.v2.FgbTable.Schema
+        if (format == "geomedea") ContainerFormat.Geomedea.schema else ContainerFormat.FlatGeobuf.schema
       val ck = java.nio.file.Files.createTempDirectory("gm_split_ck").toString
       val stream =
         if (format == "geomedea")
-          new graft.sources.v2.GeomedeaMicroBatchStream(dir, None, schema, ck)
+          new graft.sources.v2.ContainerMicroBatchStream(ContainerFormat.Geomedea, dir, None, schema, ck)
             .asInstanceOf[org.apache.spark.sql.connector.read.streaming.MicroBatchStream]
-        else new graft.sources.v2.FgbMicroBatchStream(dir, None, schema, ck)
+        else new graft.sources.v2.ContainerMicroBatchStream(ContainerFormat.FlatGeobuf, dir, None, schema, ck)
       val parts = stream.planInputPartitions(stream.initialOffset(), stream.latestOffset())
       assert(parts.length == entry.splits.size,
         s"streaming planner should split: got ${parts.length} for ${entry.splits.size} boundaries")
       // a bbox stream keeps whole-file partitions (indexed reader scans per file)
       val bboxStream =
         if (format == "geomedea")
-          new graft.sources.v2.GeomedeaMicroBatchStream(dir,
+          new graft.sources.v2.ContainerMicroBatchStream(ContainerFormat.Geomedea, dir,
             Some(graft.geom.Envelope(0, 0, Int.MaxValue, Int.MaxValue)), schema, ck)
             .asInstanceOf[org.apache.spark.sql.connector.read.streaming.MicroBatchStream]
-        else new graft.sources.v2.FgbMicroBatchStream(dir,
+        else new graft.sources.v2.ContainerMicroBatchStream(ContainerFormat.FlatGeobuf, dir,
           Some(graft.geom.Envelope(0, 0, Int.MaxValue, Int.MaxValue)), schema, ck)
       assert(bboxStream.planInputPartitions(bboxStream.initialOffset(),
         bboxStream.latestOffset()).length == 1)
@@ -180,7 +180,7 @@ class SplitScanSpec extends AnyFunSuite {
   test("geomedea: split boundaries are real page starts (ranged walk lands exactly on end)") {
     val dir = writeLake("geomedea", 3000)
     val entry = manifestOf(dir).values.head
-    val scanned = GeomedeaTable.scanFiles(dir, None)
+    val scanned = ContainerFormat.Geomedea.scanFiles(dir, None)
     assert(scanned.head.splits == entry.splits)
     // every adjacent pair is a decodable page-aligned range — implied by
     // the identical-rows test, asserted here against the raw file too
