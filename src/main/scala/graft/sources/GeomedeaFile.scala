@@ -228,6 +228,75 @@ object GeomedeaFile {
     */
   val PageBatchBytes: Int = (2 * DefaultPageSizeGoal * 1.1).toInt
 
+  @inline private def i32(b: Array[Byte], off: Int): Int =
+    (b(off) & 0xFF) | ((b(off + 1) & 0xFF) << 8) |
+      ((b(off + 2) & 0xFF) << 16) | ((b(off + 3) & 0xFF) << 24)
+
+  /** The packed R-tree's leaves intersecting q, found LEVEL BY LEVEL off
+    * positioned reads: only the children of intersecting nodes are ever
+    * requested, with node ranges closer than [[RangeMergeBytes]]
+    * coalesced into one `fetch` (`packed_r_tree/reader.rs:140-187`).
+    * `leaf(buf, off)` sees each hit leaf's 28 node bytes in tree (layout)
+    * order. Memory is one index level's fetched ranges, whatever the hit
+    * count.
+    */
+  private def descendIndex(fetch: (Long, Int) => Array[Byte], featureCount: Long,
+                           q: Envelope)(leaf: (Array[Byte], Int) => Unit): Unit = {
+    if (featureCount == 0) return
+    val leafStart = PackedRTree.nodeRangesByLevel(featureCount).last._1
+    val indexStart = FeatureCodec.HeaderBytes.toLong
+    var pending: Vector[(Long, Long)] = Vector((0L, 1L))
+    while (pending.nonEmpty) {
+      // coalesce node ranges whose byte gap is under the threshold
+      val merged = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+      pending.foreach { r =>
+        if (merged.nonEmpty &&
+          (r._1 - merged.last._2) * PackedRTree.NodeBytes <= RangeMergeBytes)
+          merged(merged.size - 1) = (merged.last._1, r._2)
+        else merged += r
+      }
+      val bufs = merged.map { case (s, e) =>
+        (s, fetch(indexStart + s * PackedRTree.NodeBytes,
+          ((e - s) * PackedRTree.NodeBytes).toInt))
+      }
+      val next = Vector.newBuilder[(Long, Long)]
+      // running cursor instead of a per-node lastIndexWhere: bufs are
+      // sorted by start and idx is globally ascending across pending
+      // (merged preserves pending's order), so the owning buffer only
+      // ever moves forward — O(1) amortized vs O(ranges) per node,
+      // which went quadratic-ish on wide levels with fragmented hits
+      var bi = 0
+      pending.foreach { case (s, e) =>
+        var idx = s
+        while (idx < e) {
+          while (bi + 1 < bufs.size && bufs(bi + 1)._1 <= idx) bi += 1
+          val (bs, buf) = bufs(bi)
+          val off = ((idx - bs) * PackedRTree.NodeBytes).toInt
+          val env = Envelope(i32(buf, off), i32(buf, off + 4),
+            i32(buf, off + 8), i32(buf, off + 12))
+          if (env.intersects(q)) {
+            if (idx >= leafStart) leaf(buf, off)
+            else PackedRTree.childrenRange(featureCount, idx).foreach(next += _)
+          }
+          idx += 1
+        }
+      }
+      pending = next.result()
+    }
+  }
+
+  /** How many features' envelopes intersect q (closed intervals), from
+    * the header and the index levels the descent needs — no page is
+    * read. Same leaves as [[selectBboxRange]] emits.
+    */
+  def countBboxRange(readRange: (Long, Int) => Array[Byte], q: Envelope): Long = {
+    val (_, _, featureCount) =
+      FeatureCodec.decodeHeader(new R(readRange(0, FeatureCodec.HeaderBytes)))
+    var n = 0L
+    descendIndex(readRange, featureCount, q)((_, _) => n += 1)
+    n
+  }
+
   /** Bounded-transfer indexed bbox scan (S7 — the reference's partial-
     * download raison d'être, `http_reader.rs:86-107` + range batching
     * `:121-187`): `readRange(offset, len)` is the ONLY I/O primitive
@@ -277,65 +346,18 @@ object GeomedeaFile {
       FeatureCodec.decodeHeader(new R(fetch(0, FeatureCodec.HeaderBytes)))
     def totalPages: Long = totalPagesV
 
-    @inline private def i32(b: Array[Byte], off: Int): Int =
-      (b(off) & 0xFF) | ((b(off + 1) & 0xFF) << 8) |
-        ((b(off + 2) & 0xFF) << 16) | ((b(off + 3) & 0xFF) << 24)
-
-    /** Leaf FeatureLocations intersecting q, in tree (layout) order —
-      * level-by-level descent fetching only surviving nodes' children.
+    /** Leaf FeatureLocations intersecting q, in tree (layout) order.
       * Because leaves were pushed in layout order, the emitted page
       * offsets are NON-DECREASING, which is what lets the page stage
       * stream through one forward window.
       */
     private val locs: Vector[(Long, Int)] = {
-      if (featureCount == 0) Vector.empty
-      else {
-        val ranges = PackedRTree.nodeRangesByLevel(featureCount)
-        val leafStart = ranges.last._1
-        val indexStart = FeatureCodec.HeaderBytes.toLong
-        val out = Vector.newBuilder[(Long, Int)]
-        var pending: Vector[(Long, Long)] = Vector((0L, 1L))
-        while (pending.nonEmpty) {
-          // coalesce node ranges whose byte gap is under the threshold
-          val merged = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-          pending.foreach { r =>
-            if (merged.nonEmpty &&
-              (r._1 - merged.last._2) * PackedRTree.NodeBytes <= RangeMergeBytes)
-              merged(merged.size - 1) = (merged.last._1, r._2)
-            else merged += r
-          }
-          val bufs = merged.map { case (s, e) =>
-            (s, fetch(indexStart + s * PackedRTree.NodeBytes,
-              ((e - s) * PackedRTree.NodeBytes).toInt))
-          }
-          val next = Vector.newBuilder[(Long, Long)]
-          // running cursor instead of a per-node lastIndexWhere: bufs are
-          // sorted by start and idx is globally ascending across pending
-          // (merged preserves pending's order), so the owning buffer only
-          // ever moves forward — O(1) amortized vs O(ranges) per node,
-          // which went quadratic-ish on wide levels with fragmented hits
-          var bi = 0
-          pending.foreach { case (s, e) =>
-            var idx = s
-            while (idx < e) {
-              while (bi + 1 < bufs.size && bufs(bi + 1)._1 <= idx) bi += 1
-              val (bs, buf) = bufs(bi)
-              val off = ((idx - bs) * PackedRTree.NodeBytes).toInt
-              val env = Envelope(i32(buf, off), i32(buf, off + 4),
-                i32(buf, off + 8), i32(buf, off + 12))
-              if (env.intersects(q)) {
-                if (idx >= leafStart)
-                  out += (((i32(buf, off + 16).toLong & 0xFFFFFFFFL) |
-                    (i32(buf, off + 20).toLong << 32), i32(buf, off + 24)))
-                else PackedRTree.childrenRange(featureCount, idx).foreach(next += _)
-              }
-              idx += 1
-            }
-          }
-          pending = next.result()
-        }
-        out.result()
+      val out = Vector.newBuilder[(Long, Int)]
+      descendIndex(fetch, featureCount, q) { (buf, off) =>
+        out += (((i32(buf, off + 16).toLong & 0xFFFFFFFFL) |
+          (i32(buf, off + 20).toLong << 32), i32(buf, off + 24)))
       }
+      out.result()
     }
 
     private val pageBase = FeatureCodec.HeaderBytes.toLong +

@@ -12,8 +12,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 /** What differs between the two single-file containers the DSv2 stack
   * serves ([[ContainerTable]], its scan, stream and writer). Everything
   * else — file planning over manifests and headers, limit planning,
-  * header-only aggregates, statistics, the commit/abort/manifest
-  * protocol, stream pruning — is written once against this descriptor.
+  * header-only aggregates, index-only window counts, statistics, the
+  * commit/abort/manifest protocol, stream pruning — is written once
+  * against this descriptor.
   */
 sealed abstract class ContainerFormat(val name: String, val suffix: String,
                                       location: StructField*) extends Serializable {
@@ -44,6 +45,18 @@ sealed abstract class ContainerFormat(val name: String, val suffix: String,
 
   /** Filterless aggregates the headers answer exactly (see [[HeaderStat]]). */
   def headerStats: Set[HeaderStat]
+
+  /** Whether every index leaf holds its feature's own scaled-int envelope —
+    * the very values of the envelope columns — so the exact side filters
+    * ([[BboxFilterAbsorber.exact]]) may be claimed as fully pushed and a
+    * window COUNT(*) answered by [[indexCount]].
+    */
+  def exactIndex: Boolean
+
+  /** How many of one file's features intersect `q` (closed intervals),
+    * from its header and index alone. Only asked when [[exactIndex]].
+    */
+  def indexCount(fs: FileSystem, path: Path, q: Envelope): Long
 
   /** The SQL-UI scan metrics the reader reports. */
   def metrics: Array[CustomMetric]
@@ -174,6 +187,16 @@ object ContainerFormat {
     val headerStats: Set[HeaderStat] = Set(HeaderStat.CountRows, HeaderStat.MinLng,
       HeaderStat.MinLat, HeaderStat.MaxLng, HeaderStat.MaxLat)
 
+    /** The writers key each leaf on `f.geom.envelope`, the value the
+      * reader derives the envelope columns from.
+      */
+    def exactIndex: Boolean = true
+
+    def indexCount(fs: FileSystem, path: Path, q: Envelope): Long = {
+      val in = fs.open(path)
+      try GeomedeaFile.countBboxRange(rangeReader(in), q) finally in.close()
+    }
+
     def metrics: Array[CustomMetric] = Array(new GmPagesMetric, new GmBytesMetric, new GmRowsMetric)
 
     // every branch STREAMS with bounded memory and bounded transfer —
@@ -295,6 +318,14 @@ object ContainerFormat {
       * wrong by a unit.
       */
     val headerStats: Set[HeaderStat] = Set(HeaderStat.CountRows)
+
+    /** Index nodes hold degree doubles, and foreign writers may store
+      * loose bounds or no index at all.
+      */
+    def exactIndex: Boolean = false
+
+    def indexCount(fs: FileSystem, path: Path, q: Envelope): Long =
+      throw new UnsupportedOperationException(s"$name index bounds are not exact")
 
     def metrics: Array[CustomMetric] = Array(new GmBytesMetric, new GmRowsMetric)
 

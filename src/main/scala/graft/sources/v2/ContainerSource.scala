@@ -42,15 +42,17 @@ import org.apache.spark.util.SerializableConfiguration
   *     pruned data never leaves storage OR decompresses — the reference's
   *     partial-download behavior (`http_reader.rs:86-107`) at both the
   *     transfer and the decode level.
-  * Pruning is a strict SUPERSET of the predicate (closed-interval R-tree
-  * intersection), so every pushed filter is also returned as a residual
-  * for Spark to re-evaluate — correctness never depends on the index.
-  *
   * Filter mapping (query rect q): `max_lng >= v` or `min_lng >= v` or
   * `lng = v` tighten q.minLng (a row's max >= min, so both imply
   * max_lng >= v — the intersection test's left bound); symmetrically for
   * the other three bounds. And() recurses; anything else is ignored
-  * (left to Spark).
+  * (left to Spark). The rect is a SUPERSET of the predicate, so a pushed
+  * filter stays a residual for Spark to re-evaluate — except, for a
+  * format whose index leaves hold the envelope columns' own values
+  * ([[ContainerFormat.exactIndex]]: geomedea), the sides that ARE the
+  * closed-interval intersection test ([[BboxFilterAbsorber.exact]]).
+  * Those are claimed as fully pushed; when every filter is, a window
+  * COUNT(*) is the count of intersecting index leaves ([[IndexCountScan]]).
   */
 abstract class ContainerSource(format: ContainerFormat)
     extends TableProvider with DataSourceRegister {
@@ -167,53 +169,70 @@ object HeaderStat {
   }
 }
 
-/** Complete-pushdown header aggregates: one partition, one row, computed
-  * from the builder's planned files (per-file header reads or the one
-  * manifest read) — no page is ever decompressed, no feature decoded.
+/** A complete-pushdown aggregate answered while Spark plans the query:
+  * one row, which Spark plans as a `LocalTableScanExec` — no input
+  * partition, no page decompressed, no feature decoded. (The aggregate's
+  * output projection over it still runs as one single-task job.)
   */
-class HeaderStatsScan(format: ContainerFormat, paths: Seq[String], stats: Seq[HeaderStat],
-                      files: Seq[ContainerTable.ScanFile])
-    extends Scan with Batch with SupportsReportStatistics {
+abstract class AnswerScan(stats: Seq[HeaderStat]) extends LocalScan with SupportsReportStatistics {
   override def readSchema(): StructType = StructType(stats.map {
     case HeaderStat.CountRows => StructField("count", LongType, nullable = false)
     // min/max over zero rows is NULL (an empty lake has no extent)
     case s => StructField(s.toString, IntegerType, nullable = true)
   })
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"HeaderStatsScan ${format.name} path=${paths.mkString(",")} " +
-      s"(header-only ${stats.mkString(",")})"
   // statically known: one short row — without this, a join against the
   // pushed aggregate would see default-huge stats and decline to broadcast
   override def estimateStatistics(): Statistics = new Statistics {
     override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.of(16L)
     override def numRows(): java.util.OptionalLong = java.util.OptionalLong.of(1L)
   }
-  override def planInputPartitions(): Array[InputPartition] =
-    Array(GeomedeaPartition("<header-stats>"))
-  override def createReaderFactory(): PartitionReaderFactory = {
+  /** The row's values, in `stats` order. */
+  protected def values: Array[Any]
+  private lazy val answer: Array[InternalRow] = Array(new GenericInternalRow(values))
+  override def rows(): Array[InternalRow] = answer
+}
+
+/** Filterless header aggregates, computed from the builder's planned
+  * files (per-file header reads or the one manifest read).
+  */
+class HeaderStatsScan(format: ContainerFormat, paths: Seq[String], stats: Seq[HeaderStat],
+                      files: Seq[ContainerTable.ScanFile])
+    extends AnswerScan(stats) {
+  override def description(): String =
+    s"HeaderStatsScan ${format.name} path=${paths.mkString(",")} " +
+      s"(header-only ${stats.mkString(",")})"
+  protected def values: Array[Any] = {
     // count-0 shards have no root node and map to extent None — they
     // contribute to COUNT (nothing) but must not poison the extent fold
     val extent = files.flatMap(_.extent).reduceOption(_ union _)
-    val values: Array[Any] = stats.map {
+    stats.map {
       case HeaderStat.CountRows => files.map(_.count).sum: Any
       case HeaderStat.MinLng    => extent.map(e => Int.box(e.minLng)).orNull: Any
       case HeaderStat.MinLat    => extent.map(e => Int.box(e.minLat)).orNull: Any
       case HeaderStat.MaxLng    => extent.map(e => Int.box(e.maxLng)).orNull: Any
       case HeaderStat.MaxLat    => extent.map(e => Int.box(e.maxLat)).orNull: Any
     }.toArray
-    HeaderStatsReaderFactory(values)
   }
 }
 
-final case class HeaderStatsReaderFactory(values: Array[Any]) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new PartitionReader[InternalRow] {
-      private var emitted = false
-      override def next(): Boolean = if (emitted) false else { emitted = true; true }
-      override def get(): InternalRow = new GenericInternalRow(values)
-      override def close(): Unit = ()
-    }
+/** A window COUNT(*) whose every filter was claimed exact: the sum, over
+  * the files the window keeps, of the index leaves intersecting `q`
+  * ([[ContainerFormat.indexCount]] — header and the needed index levels
+  * only), walked on the planner pool.
+  */
+class IndexCountScan(format: ContainerFormat, paths: Seq[String], stats: Seq[HeaderStat],
+                     q: Envelope, files: Seq[ContainerTable.ScanFile])
+    extends AnswerScan(stats) {
+  override def description(): String =
+    s"IndexCountScan ${format.name} path=${paths.mkString(",")} bbox=$q"
+  protected def values: Array[Any] = {
+    val conf = SparkSession.active.sessionState.newHadoopConf()
+    val n = PlannerPool.mapFiles(files) { f =>
+      val p = new Path(f.path)
+      format.indexCount(p.getFileSystem(conf), p, q)
+    }.sum
+    stats.map(_ => n: Any).toArray
+  }
 }
 
 class ContainerTable(format: ContainerFormat, paths: Seq[String],
@@ -248,58 +267,76 @@ class ContainerScanBuilder(format: ContainerFormat, paths: Seq[String],
   private val absorber = new BboxFilterAbsorber
   optBbox.foreach(absorber.seed)
   private var pushed = Array.empty[Filter]
+  private var residual = Array.empty[Filter]
   private var required: StructType = format.schema
   private var limit: Option[Int] = None
 
   /** Catalyst only offers the limit when no residual filter sits between
-    * LIMIT and the scan (we keep every filter residual, so a filtered
-    * query never reaches here). Partial push (return false): each
-    * partition emits at most `n` rows — decoding stops early and file
-    * planning keeps only enough files — and Spark still applies the
-    * global limit.
+    * LIMIT and the scan. Partial push (return false): each partition
+    * emits at most `n` rows — decoding stops early and file planning
+    * keeps only enough files — and Spark still applies the global limit.
     */
   override def pushLimit(n: Int): Boolean = { limit = Some(n); false }
 
   private var pushedStats: Option[Seq[HeaderStat]] = None
 
-  /** Every file of the table, planned once: the header reads an accepted
-    * aggregate is answered from are the ones its acceptance checked.
+  /** The query's files, planned once for whichever scan [[build]] makes:
+    * the header reads an accepted aggregate is answered from are the ones
+    * its acceptance checked. Filters are pushed before aggregates and
+    * the build, so the rect is final when this is first read.
     */
-  private lazy val allFiles: Seq[ContainerTable.ScanFile] = format.scanFiles(paths, None)
+  private lazy val files: Seq[ContainerTable.ScanFile] = format.scanFiles(paths, absorber.bbox)
 
   /** Filterless aggregates the format's headers answer exactly
     * ([[ContainerFormat.headerStats]]: COUNT(*), and for geomedea the
     * envelope MIN/MAX from the R-tree root bounds) are answered ENTIRELY
-    * from the headers: no page is ever decompressed, no feature decoded —
-    * and only when every planned count is known (an FGB count of 0 is
-    * UNKNOWN; otherwise Spark counts normally). Catalyst only offers
-    * aggregate pushdown when every filter was fully pushed; ours are
-    * always residual, so a filtered aggregate never reaches here. The
+    * from the headers — and only when every planned count is known (an
+    * FGB count of 0 is UNKNOWN; otherwise Spark counts normally). The
     * explicit bbox OPTION restricts the scan like a filter would, so
-    * header-only answers (whole-table) must not be offered with it set.
+    * whole-table answers are not offered with it set.
     */
   private def headerAnswer(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
   : Option[Seq[HeaderStat]] =
-    if (optBbox.isDefined) None
+    if (pushed.nonEmpty || optBbox.isDefined) None
     else HeaderStat.parse(agg).filter(stats =>
-      stats.forall(format.headerStats) && allFiles.forall(f => format.countKnown(f.count)))
+      stats.forall(format.headerStats) && files.forall(f => format.countKnown(f.count)))
+
+  /** COUNT(*) under a window whose every filter was claimed exact
+    * ([[pushFilters]]) is the count of intersecting index leaves.
+    * Catalyst only offers aggregates when no residual filter is left.
+    */
+  private def indexAnswer(
+      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
+  : Option[Seq[HeaderStat]] =
+    if (pushed.isEmpty || residual.nonEmpty) None
+    else HeaderStat.parse(agg).filter(_.forall(_ == HeaderStat.CountRows))
+
+  private def answer(
+      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
+  : Option[Seq[HeaderStat]] = headerAnswer(agg).orElse(indexAnswer(agg))
 
   override def supportCompletePushDown(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
-    headerAnswer(agg).isDefined
+    answer(agg).isDefined
 
   override def pushAggregation(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
-    pushedStats = headerAnswer(agg)
+    pushedStats = answer(agg)
     pushedStats.isDefined
   }
 
+  /** Every filter the rect absorbs is pushed (it prunes files, index
+    * subtrees and pages). The residual, for Spark to re-evaluate, is
+    * every filter except the exact sides ([[BboxFilterAbsorber.exact]]),
+    * which are claimed only for a format with an exact index, with no
+    * `bbox` option, and while the rect is not inverted.
+    */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    // superset semantics (see BboxFilterAbsorber): the absorbed rect's
-    // closed-interval intersection admits every row the filter admits
     pushed = filters.filter(absorber.absorb)
-    filters // all filters stay residual: the index prune is a superset
+    val claims = format.exactIndex && optBbox.isEmpty && !absorber.inverted
+    residual = if (claims) filters.filterNot(BboxFilterAbsorber.exact) else filters
+    residual
   }
   override def pushedFilters(): Array[Filter] = pushed
   /** Top-level column pruning only: Spark may hand us a NESTED-pruned
@@ -314,21 +351,27 @@ class ContainerScanBuilder(format: ContainerFormat, paths: Seq[String],
     val bbox = absorber.bbox
     pushedStats match {
       case Some(stats) =>
-        // invariant, enforced loudly: header-only answers are correct ONLY
-        // for an unfiltered table. Catalyst never offers aggregate pushdown
-        // while residual filters exist, and all our filters stay residual —
-        // but if a future change ever claims a filter as fully pushed, this
-        // turns silent wrong answers into an immediate error.
-        require(pushed.isEmpty && bbox.isEmpty,
-          "aggregate pushdown reached with filters absorbed — header-only answers would be wrong")
-        new HeaderStatsScan(format, paths, stats, allFiles)
-      case None => new ContainerScan(format, paths, bbox, pushed, required, limit)
+        // invariant, enforced loudly: header answers are whole-table, so
+        // they need no filter and no bbox; an index count (COUNT(*) only)
+        // needs every filter claimed exact. Anything else would be a
+        // silent wrong answer, so it is an immediate error instead.
+        val headerOnly = pushed.isEmpty && bbox.isEmpty
+        require(headerOnly || (pushed.nonEmpty && residual.isEmpty && format.exactIndex &&
+          stats.forall(_ == HeaderStat.CountRows)),
+          "aggregate pushdown reached with unclaimed filters — its answer would be wrong")
+        if (headerOnly) new HeaderStatsScan(format, paths, stats, files)
+        else new IndexCountScan(format, paths, stats, absorber.rect, files)
+      case None => new ContainerScan(format, paths, bbox, pushed, required, limit, () => files)
     }
   }
 }
 
+/** `planned` is the builder's file list for this query: a batch read
+  * plans it once, and a stream never does.
+  */
 class ContainerScan(format: ContainerFormat, paths: Seq[String], bbox: Option[Envelope],
-                    pushed: Array[Filter], required: StructType, limit: Option[Int] = None)
+                    pushed: Array[Filter], required: StructType, limit: Option[Int],
+                    planned: () => Seq[ContainerTable.ScanFile])
     extends Scan with Batch with SupportsReportStatistics {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -342,7 +385,7 @@ class ContainerScan(format: ContainerFormat, paths: Seq[String], bbox: Option[En
     */
   override def supportedCustomMetrics(): Array[CustomMetric] = format.metrics
 
-  private lazy val keptFiles: Seq[ContainerTable.ScanFile] = format.scanFiles(paths, bbox)
+  private lazy val keptFiles: Seq[ContainerTable.ScanFile] = planned()
 
   private def countsKnown: Boolean = keptFiles.forall(f => format.countKnown(f.count))
 

@@ -56,8 +56,8 @@ object Info {
        |""".stripMargin
   }
 
-  /** `info` for a shard LAKE (a directory of `.geomedea` or `.fgb`
-    * containers): shard/byte totals, manifest health (present + valid =
+  /** `info` for a shard LAKE (a directory of one
+    * [[graft.sources.v2.ContainerFormat]]'s containers): shard/byte totals, manifest health (present + valid =
     * one-read planning; stale = header-read fallback), and whether a
     * crashed compaction swap is pending — the three things an operator
     * checks before/after maintenance. Driver-side listing + one manifest
@@ -68,7 +68,9 @@ object Info {
 
   def main(args: Array[String]): Unit = {
     require(args.length == 1, "usage: graft.table.Info <tableDir | file.fgb>")
-    if (args(0).endsWith(".fgb")) { print(renderFgb(args(0))); return }
+    if (args(0).endsWith(graft.sources.v2.ContainerFormat.FlatGeobuf.suffix)) {
+      print(renderFgb(args(0))); return
+    }
     val spark = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
       .config("spark.ui.enabled", "false").getOrCreate()
@@ -76,18 +78,9 @@ object Info {
     // container-lake dirs get the lake summary; parquet tables the
     // ingest summary
     val p = new org.apache.hadoop.fs.Path(args(0))
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val suffixes = Seq(".geomedea", ".fgb")
-    // FILES only, like LakeHealth.describe — a parquet table containing a
-    // subdirectory named *.fgb must not misclassify as a lake
-    val lakeSuffix =
-      if (fs.exists(p) && fs.getFileStatus(p).isDirectory)
-        suffixes.find(sf => fs.listStatus(p).exists(s =>
-          s.isFile && s.getPath.getName.endsWith(sf)))
-      else None
-    lakeSuffix match {
-      case Some(sf) => print(renderLake(spark, args(0), sf))
-      case None     => print(render(spark, args(0)))
+    LakeHealth.lakeFormat(p.getFileSystem(spark.sessionState.newHadoopConf()), p) match {
+      case Some(f) => print(renderLake(spark, args(0), f.suffix))
+      case None    => print(render(spark, args(0)))
     }
     spark.stop()
   }

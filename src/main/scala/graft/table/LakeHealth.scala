@@ -1,8 +1,8 @@
 package graft.table
 
 import graft.jobs.{Compact, Ingest}
-import graft.sources.v2.{GeomedeaManifest, LakeGenerations}
-import org.apache.hadoop.fs.Path
+import graft.sources.v2.{ContainerFormat, GeomedeaManifest, LakeGenerations}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** One lake-health view over the engine's three on-disk layouts —
@@ -37,27 +37,33 @@ object LakeHealth {
                           pendingMaintenance: Boolean,
                           compactionCandidates: Long = 0L)
 
-  /** Classify `dir`: a directory holding `.geomedea`/`.fgb` shards is a
-    * container lake of that suffix; anything else readable is treated as
-    * a parquet table (with or without lineage).
+  /** The container format whose shards the directory `p` holds, if any.
+    * FILES only: a parquet table containing a subdirectory named `*.fgb`
+    * must not misclassify as a lake.
+    */
+  def lakeFormat(fs: FileSystem, p: Path): Option[ContainerFormat] =
+    if (fs.exists(p) && fs.getFileStatus(p).isDirectory) {
+      val files = fs.listStatus(p).filter(_.isFile).map(_.getPath.getName)
+      ContainerFormat.all.find(f => files.exists(_.endsWith(f.suffix)))
+    } else None
+
+  /** Classify `dir`: a directory holding container shards is a container
+    * lake of that format ([[lakeFormat]]); anything else readable is
+    * treated as a parquet table (with or without lineage).
     */
   def describe(spark: SparkSession, dir: String,
                targetShardBytes: Long = Compact.DefaultTargetShardBytes): Health = {
     val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val containerSuffix =
-      if (fs.exists(p) && fs.getFileStatus(p).isDirectory)
-        Seq(".geomedea", ".fgb").find(sf =>
-          fs.listStatus(p).exists(s => s.isFile && s.getPath.getName.endsWith(sf)))
-      else None
-    containerSuffix match {
-      case Some(sf) => containerLake(spark, dir, sf, targetShardBytes)
-      case None     => parquetTable(spark, dir)
+    lakeFormat(p.getFileSystem(spark.sessionState.newHadoopConf()), p) match {
+      case Some(f) => containerLake(spark, dir, f.suffix, targetShardBytes)
+      case None    => parquetTable(spark, dir)
     }
   }
 
   def containerLake(spark: SparkSession, dir: String, suffix: String,
                     targetShardBytes: Long = Compact.DefaultTargetShardBytes): Health = {
+    val format = ContainerFormat.all.find(_.suffix == suffix).getOrElse(
+      throw new IllegalArgumentException(s"no container format has the suffix $suffix"))
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val files = fs.listStatus(p).toSeq
@@ -73,7 +79,7 @@ object LakeHealth {
       else "absent (header-read fallback)"
     val log = LakeGenerations.read(fs, p)
     Health(
-      layout = if (suffix == ".fgb") "flatgeobuf" else "geomedea",
+      layout = format.name,
       files = files.size, bytes = files.map(_.getLen).sum,
       rows = valid.map(_.values.map(_.count).sum),
       manifestState = manifestState,

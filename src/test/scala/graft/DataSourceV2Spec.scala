@@ -225,7 +225,7 @@ class DataSourceV2Spec extends AnyFunSuite {
     assert(scans.exists(_.isInstanceOf[graft.sources.v2.HeaderStatsScan]),
       agg.queryExecution.optimizedPlan.toString)
     assert(agg.head().getLong(0) == 80)
-    // filtered counts must NOT push (filters are residual): normal scan
+    // filtered counts must NOT take the header answer (it is whole-table)
     val filtered = bboxWhere(df, Envelope.fromDegrees(100, 0, 110, 10)).groupBy().count()
     val fScans = filtered.queryExecution.optimizedPlan.collect {
       case r: DataSourceV2ScanRelation => r.scan
@@ -245,7 +245,8 @@ class DataSourceV2Spec extends AnyFunSuite {
     assert(scans.exists(_.isInstanceOf[graft.sources.v2.HeaderStatsScan]),
       agg.queryExecution.optimizedPlan.toString)
     // ground truth through the NON-pushed path: a residual filter blocks
-    // aggregate pushdown (ours always stay residual), forcing decode
+    // aggregate pushdown (a non-envelope column filter is never claimed),
+    // forcing decode
     val brute = df.where(col("feature_offset") >= 0).groupBy().agg(
       min("min_lng"), min("min_lat"), max("max_lng"), max("max_lat"), count("*"))
     val bScans = brute.queryExecution.optimizedPlan.collect {
