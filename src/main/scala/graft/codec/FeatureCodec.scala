@@ -81,8 +81,23 @@ object FeatureCodec {
     def i32(): Int = u32().toInt
     def f32(): Float = java.lang.Float.intBitsToFloat(i32())
     def f64(): Double = java.lang.Double.longBitsToDouble(u64())
-    def take(n: Int): Array[Byte] = { val v = java.util.Arrays.copyOfRange(bytes, pos, pos + n); pos += n; v }
-    def lenBytes(): Array[Byte] = take(u64().toInt)
+    /** The next `n` bytes. Checked against the bytes left first: a
+      * corrupt length must throw, not allocate (`copyOfRange` would pad a
+      * short read with zeros up to any size).
+      */
+    def take(n: Int): Array[Byte] = {
+      require(n >= 0 && n <= remaining, s"corrupt length $n at $pos: $remaining bytes left")
+      val v = java.util.Arrays.copyOfRange(bytes, pos, pos + n); pos += n; v
+    }
+    /** A u64 element count, each element at least `minBytes` wide,
+      * checked against the bytes left before anything is sized from it.
+      */
+    def count(minBytes: Int): Int = {
+      val n = u64()
+      require(n >= 0 && n <= remaining / minBytes, s"corrupt count $n at ${pos - 8}: $remaining bytes left")
+      n.toInt
+    }
+    def lenBytes(): Array[Byte] = take(count(1))
     def str(): String = new String(lenBytes(), StandardCharsets.UTF_8)
     def remaining: Int = bytes.length - pos
   }
@@ -110,7 +125,7 @@ object FeatureCodec {
   }
 
   private def readCoords(r: R): Array[Long] = {
-    val n = r.u64().toInt
+    val n = r.count(8)
     val out = new Array[Long](n)
     var i = 0
     while (i < n) { out(i) = Wkb.pack(r.i32(), r.i32()); i += 1 }
@@ -118,7 +133,7 @@ object FeatureCodec {
   }
 
   private def readRings(r: R): Vector[Array[Long]] =
-    Vector.fill(r.u64().toInt)(readCoords(r))
+    Vector.fill(r.count(8))(readCoords(r))
 
   def readGeometry(r: R): Wkb.Geom = r.u32() match {
     case 0 => Wkb.Pt(r.i32(), r.i32())
@@ -126,8 +141,8 @@ object FeatureCodec {
     case 2 => Wkb.Poly(readRings(r))
     case 3 => Wkb.MultiPt(readCoords(r))
     case 4 => Wkb.MultiLine(readRings(r))
-    case 5 => Wkb.MultiPoly(Vector.fill(r.u64().toInt)(readRings(r)))
-    case 6 => Wkb.Collection(Vector.fill(r.u64().toInt)(readGeometry(r)))
+    case 5 => Wkb.MultiPoly(Vector.fill(r.count(8))(readRings(r)))
+    case 6 => Wkb.Collection(Vector.fill(r.count(4))(readGeometry(r)))
     case v => throw new IllegalArgumentException(s"unknown Geometry variant $v")
   }
 
@@ -165,7 +180,7 @@ object FeatureCodec {
     case 10 => PFloat64(r.f64())
     case 11 => PBytes(r.lenBytes())
     case 12 => PString(r.str())
-    case 13 => PVec(Vector.fill(r.u64().toInt)(readValue(r)))
+    case 13 => PVec(Vector.fill(r.count(4))(readValue(r)))
     case 14 => PMap(readProps(r))
     case v  => throw new IllegalArgumentException(s"unknown PropertyValue variant $v")
   }
@@ -176,7 +191,7 @@ object FeatureCodec {
   }
 
   def readProps(r: R): Vector[(String, PValue)] =
-    Vector.fill(r.u64().toInt)((r.str(), readValue(r)))
+    Vector.fill(r.count(12))((r.str(), readValue(r)))
 
   // --- feature / header / page header ---------------------------------------
 
@@ -230,9 +245,6 @@ object FeatureCodec {
   def decodeHeader(r: R): (Boolean, Long, Long) = (r.u8() != 0, r.u64(), r.u64())
 
   /** 12-byte page header (`format.rs:13-24`, fixed size asserted :36-41). */
-  def encodePageHeader(encodedLen: Long, decodedLen: Long, featureCount: Long): Array[Byte] =
-    new W(12).u32(encodedLen).u32(decodedLen).u32(featureCount).result()
-
   def decodePageHeader(r: R): (Long, Long, Long) = (r.u32(), r.u32(), r.u32())
 
   val HeaderBytes = 17

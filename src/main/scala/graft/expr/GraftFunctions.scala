@@ -43,10 +43,6 @@ object GraftFunctions {
 
   // --- coordinate codec (F8: truncating quantization) ----------------------
 
-  /** degrees -> scaled i32, truncating toward zero (geometry/mod.rs:295-297). */
-  def stScaleUp(degrees: Column): Column =
-    inv(Adapters.getClass, IntegerType, "scaleUp", Seq(ex(degrees.cast(DoubleType))))
-
   /** scaled i32 -> degrees. */
   def stScaleDown(scaled: Column): Column =
     inv(Adapters.getClass, DoubleType, "scaleDown", Seq(i(scaled)))

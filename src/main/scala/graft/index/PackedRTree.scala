@@ -27,23 +27,88 @@ object PackedRTree {
   final val Branching = 16
   final val NodeBytes = 28
 
-  def nodesPerLevel(numLeaves: Long): Vector[Long] = {
+  /** Index node ranges closer than this are coalesced into one ranged
+    * read (`packed_r_tree/reader.rs:159-161` — "16,000 bytes ≈ 571 nodes",
+    * a tradeoff between request count and wasted transfer).
+    */
+  final val RangeMergeBytes = 16000L
+
+  /** Nodes per level, root level first, for a tree of `branching` fan-out
+    * (16 for geomedea, the header's `index_node_size` for FlatGeobuf).
+    */
+  def nodesPerLevel(numLeaves: Long, branching: Int = Branching): Vector[Long] = {
     if (numLeaves == 0) return Vector.empty
+    require(branching >= 2, s"branching factor $branching < 2")
     val levels = mutable.ArrayBuffer[Long](numLeaves)
     var n = numLeaves
     while (n > 1) {
-      n = (n + Branching - 1) / Branching
+      n = (n + branching - 1) / branching
       levels += n
     }
     levels.reverse.toVector
   }
 
-  def nodeCount(numLeaves: Long): Long = nodesPerLevel(numLeaves).sum
+  def nodeCount(numLeaves: Long, branching: Int = Branching): Long =
+    nodesPerLevel(numLeaves, branching).sum
 
   /** Ranges of node indices per level, root level first (`mod.rs:131-150`). */
-  def nodeRangesByLevel(numLeaves: Long): Vector[(Long, Long)] = {
+  def nodeRangesByLevel(numLeaves: Long, branching: Int = Branching): Vector[(Long, Long)] = {
     var off = 0L
-    nodesPerLevel(numLeaves).map { n => val r = (off, off + n); off += n; r }
+    nodesPerLevel(numLeaves, branching).map { n => val r = (off, off + n); off += n; r }
+  }
+
+  /** The ranged R-tree descent both container formats share
+    * (`packed_r_tree/reader.rs:140-187`): LEVEL BY LEVEL, only the children
+    * of intersecting nodes are ever read, with node ranges whose gap is at
+    * most [[RangeMergeBytes]] coalesced into one `fetch(offset, length)` (offsets
+    * relative to the index start). `hit(buf, off)` tests the node at
+    * `buf(off)`; `leaf(buf, off)` sees each hit leaf in tree (layout)
+    * order. Children come straight from the next level's range — each
+    * step is one level. Memory is one level's fetched ranges.
+    */
+  def descend(numLeaves: Long, branching: Int, nodeBytes: Int,
+              fetch: (Long, Int) => Array[Byte])(
+      hit: (Array[Byte], Int) => Boolean)(leaf: (Array[Byte], Int) => Unit): Unit = {
+    val levels = nodeRangesByLevel(numLeaves, branching)
+    var pending = mutable.ArrayBuffer[(Long, Long)]()
+    if (levels.nonEmpty) pending += levels.head
+    var lvl = 0
+    while (pending.nonEmpty) {
+      val merged = mutable.ArrayBuffer.empty[(Long, Long)]
+      pending.foreach { r =>
+        if (merged.nonEmpty && (r._1 - merged.last._2) * nodeBytes <= RangeMergeBytes)
+          merged(merged.size - 1) = (merged.last._1, r._2)
+        else merged += r
+      }
+      val bufs = merged.map { case (s, e) => (s, fetch(s * nodeBytes, ((e - s) * nodeBytes).toInt)) }
+      val isLeaf = lvl == levels.size - 1
+      val levelStart = levels(lvl)._1
+      val (childStart, childEnd) = if (isLeaf) (0L, 0L) else levels(lvl + 1)
+      val next = mutable.ArrayBuffer.empty[(Long, Long)]
+      // pending ascends and bufs are sorted by start, so the buffer that
+      // holds a node only ever moves forward
+      var bi = 0
+      pending.foreach { case (s, e) =>
+        var idx = s
+        while (idx < e) {
+          while (bi + 1 < bufs.size && bufs(bi + 1)._1 <= idx) bi += 1
+          val (bs, buf) = bufs(bi)
+          val off = ((idx - bs) * nodeBytes).toInt
+          if (hit(buf, off)) {
+            if (isLeaf) leaf(buf, off)
+            else {
+              val first = childStart + (idx - levelStart) * branching
+              val last = math.min(first + branching, childEnd)
+              if (next.nonEmpty && next.last._2 == first) next(next.size - 1) = (next.last._1, last)
+              else next += ((first, last))
+            }
+          }
+          idx += 1
+        }
+      }
+      pending = next
+      lvl += 1
+    }
   }
 
   def isLeafNode(numLeaves: Long, nodeIdx: Long): Boolean = {

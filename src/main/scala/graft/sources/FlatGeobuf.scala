@@ -3,6 +3,7 @@ package graft.sources
 import graft.codec.FeatureCodec._
 import graft.curve.Hilbert
 import graft.geom.{Envelope, ScaledCoord, Wkb}
+import graft.index.PackedRTree
 
 import java.nio.charset.StandardCharsets.UTF_8
 
@@ -158,9 +159,7 @@ object FlatGeobuf {
       slots = new Array[Int](numFields)
     }
     def slotByte(id: Int, v: Byte): Unit = { putByte(v); slots(id) = used }
-    def slotBool(id: Int, v: Boolean): Unit = slotByte(id, if (v) 1 else 0)
     def slotShort(id: Int, v: Int): Unit = { prep(2, 0); putShort(v); slots(id) = used }
-    def slotInt(id: Int, v: Int): Unit = { prep(4, 0); putInt(v); slots(id) = used }
     def slotLong(id: Int, v: Long): Unit = { prep(8, 0); putLong(v); slots(id) = used }
     def slotRef(id: Int, targetEndOff: Int): Unit = { putUOffset(targetEndOff); slots(id) = used }
     def endTable(): Int = {
@@ -501,20 +500,12 @@ object FlatGeobuf {
   // Packed Hilbert R-tree (FGB flavor: 40-byte f64 nodes, feature byte
   // offsets in leaves, first-child node index in internal nodes)
   // ---------------------------------------------------------------------------
-  private[sources] def levelBounds(numItems: Long, nodeSize: Int): Vector[(Long, Long)] = {
-    // identical shape math to ours at branching=nodeSize
-    var n = numItems
-    val sizes = scala.collection.mutable.ArrayBuffer[Long](n)
-    while (n > 1) { n = (n + nodeSize - 1) / nodeSize; sizes += n }
-    var off = 0L
-    sizes.reverse.map { s => val r = (off, off + s); off += s; r }.toVector
-  }
-
+  // the tree's shape is geomedea's at branching = nodeSize
   def treeBytes(numItems: Long, nodeSize: Int): Long =
-    if (numItems == 0) 0 else levelBounds(numItems, nodeSize).map(r => r._2 - r._1).sum * NodeBytes
+    PackedRTree.nodeCount(numItems, nodeSize) * NodeBytes
 
   private def buildTree(leaves: IndexedSeq[(Envelope, Long)], nodeSize: Int): Array[Byte] = {
-    val ranges = levelBounds(leaves.length.toLong, nodeSize)
+    val ranges = PackedRTree.nodeRangesByLevel(leaves.length.toLong, nodeSize)
     val total = ranges.map(r => r._2 - r._1).sum.toInt
     val bb = java.nio.ByteBuffer.allocate(total * NodeBytes)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
@@ -891,7 +882,7 @@ object FlatGeobuf {
       if (f == 0) (Array.empty[String], Array.empty[Int])
       else {
         val v = fb.indirect(f)
-        val n = fb.vecLen(v)
+        val n = fb.vecLenChecked(v, 4)
         val names = new Array[String](n); val types = new Array[Int](n)
         for (i <- 0 until n) {
           val c = fb.indirect(fb.vecElems(v) + 4 * i)
@@ -902,6 +893,7 @@ object FlatGeobuf {
       }
     }
     val count = { val f = fb.field(t, 8); if (f == 0) 0L else fb.i64(f) }
+    require(count >= 0, s"corrupt FGB features_count $count")
     val nodeSize = { val f = fb.field(t, 9); if (f == 0) DefaultNodeSize else fb.u16(f) }
     // spec minimum is 2 (0 = no index); 1 would make the level math loop
     // forever — fail corrupt/adversarial headers loudly instead
@@ -911,9 +903,13 @@ object FlatGeobuf {
     FgbHeader(name, env, gt, cn, ct, count, nodeSize, indexOff, indexOff + idxBytes)
   }
 
-  /** Full scan in file (Hilbert asc) order. */
+  /** Full scan in file (Hilbert asc) order. Materializes the whole file:
+    * the in-memory reference the streaming [[selectRangeStream]] is tested
+    * against.
+    */
   def selectAll(bytes: Array[Byte]): Vector[Feature] = {
     val h = readHeader(bytes)
+    require(h.featuresOffset <= bytes.length, s"corrupt header: features at ${h.featuresOffset}")
     val fb = new FbBuf(bytes)
     var pos = h.featuresOffset.toInt
     val out = Vector.newBuilder[Feature]
@@ -953,22 +949,29 @@ object FlatGeobuf {
     Feature(geom, props)
   }
 
-  /** Header via positioned range reads only: 12 bytes (magic + header
-    * length) then the header block — never the index or features.
+  /** Header of a `fileLen`-byte file via positioned range reads only: 12
+    * bytes (magic + header length) then the header block — never the
+    * index or features. The header length and the index size are checked
+    * against the file before anything is read or sized from them.
     */
-  def readHeaderRanged(readRange: (Long, Int) => Array[Byte]): FgbHeader = {
+  def readHeaderRanged(readRange: (Long, Int) => Array[Byte], fileLen: Long): FgbHeader = {
     val head = readRange(0, Magic.length + 4)
     require((0 until 7).forall(i => head(i) == Magic(i)), "not a FlatGeobuf file (bad magic)")
     val hdrLen = new FbBuf(head).i32(Magic.length)
-    readHeader(head ++ readRange((Magic.length + 4).toLong, hdrLen))
+    require(hdrLen >= 0 && Magic.length + 4L + hdrLen <= fileLen,
+      s"corrupt header length $hdrLen in a $fileLen-byte file")
+    val h = readHeader(head ++ readRange((Magic.length + 4).toLong, hdrLen))
+    require(h.featuresOffset <= fileLen,
+      s"corrupt header: ${h.featuresCount} features need an index past the $fileLen-byte file")
+    h
   }
 
   /** Bounded-transfer indexed bbox scan — the exact counterpart of
     * [[GeomedeaFile.selectBboxRange]] for the FGB layout (this pair is
     * what lets one engine reproduce the reference README's
     * geomedea-vs-FGB partial-download comparison): positioned range
-    * reads walk header -> needed index levels (node ranges coalesced
-    * under the same 16,000-byte threshold) -> hit feature blocks via
+    * reads walk header -> needed index levels (the same
+    * [[PackedRTree.descend]]) -> hit feature blocks via
     * batched forward windows (leaf offsets are non-decreasing because
     * leaves follow the Hilbert layout). Streams with O(window) memory.
     */
@@ -986,59 +989,19 @@ object FlatGeobuf {
       readRange(off, n)
     }
 
-    private val h = readHeaderRanged(fetch)
+    private val h = readHeaderRanged(fetch, fileLen)
 
     private val offsets: Vector[Long] = {
-      if (h.featuresCount == 0) Vector.empty
-      else {
-        require(h.nodeSize > 0, "FGB file has no index; use selectAll + filter")
-        val ranges = levelBounds(h.featuresCount, h.nodeSize)
-        val leafStart = ranges.last._1
-        val qMinX = deg(q.minLng); val qMinY = deg(q.minLat)
-        val qMaxX = deg(q.maxLng); val qMaxY = deg(q.maxLat)
-        val out = Vector.newBuilder[Long]
-        var pending: Vector[(Long, Long)] = Vector((0L, 1L))
-        while (pending.nonEmpty) {
-          val merged = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-          pending.foreach { r =>
-            if (merged.nonEmpty && (r._1 - merged.last._2) * NodeBytes <= GeomedeaFile.RangeMergeBytes)
-              merged(merged.size - 1) = (merged.last._1, r._2)
-            else merged += r
-          }
-          val bufs = merged.map { case (s, e) =>
-            (s, fetch(h.indexOffset + s * NodeBytes, ((e - s) * NodeBytes).toInt))
-          }
-          val next = Vector.newBuilder[(Long, Long)]
-          // running cursor instead of a per-node lastIndexWhere: bufs are
-          // sorted by start and idx is globally ascending across pending
-          // (merged preserves pending's order), so the owning buffer only
-          // ever moves forward — O(1) amortized vs O(ranges) per node,
-          // which went quadratic-ish on wide levels with fragmented hits
-          var bi = 0
-          pending.foreach { case (s, e) =>
-            var idx = s
-            while (idx < e) {
-              while (bi + 1 < bufs.size && bufs(bi + 1)._1 <= idx) bi += 1
-              val (bs, buf) = bufs(bi)
-              val fb = new FbBuf(buf)
-              val o = ((idx - bs) * NodeBytes).toInt
-              val inter = !(fb.f64(o + 16) < qMinX || fb.f64(o + 24) < qMinY ||
-                fb.f64(o) > qMaxX || fb.f64(o + 8) > qMaxY)
-              if (inter) {
-                if (idx >= leafStart) out += fb.i64(o + 32)
-                else {
-                  val li = ranges.indexWhere { case (ls, le) => idx >= ls && idx < le }
-                  val first = ranges(li + 1)._1 + (idx - ranges(li)._1) * h.nodeSize
-                  next += ((first, math.min(first + h.nodeSize, ranges(li + 1)._2)))
-                }
-              }
-              idx += 1
-            }
-          }
-          pending = next.result()
-        }
-        out.result()
-      }
+      require(h.featuresCount == 0 || h.nodeSize > 0, "FGB file has no index; use selectAll + filter")
+      val qMinX = deg(q.minLng); val qMinY = deg(q.minLat)
+      val qMaxX = deg(q.maxLng); val qMaxY = deg(q.maxLat)
+      val out = Vector.newBuilder[Long]
+      PackedRTree.descend(h.featuresCount, h.nodeSize, NodeBytes,
+        (off, len) => fetch(h.indexOffset + off, len)) { (buf, o) =>
+        val fb = new FbBuf(buf)
+        !(fb.f64(o + 16) < qMinX || fb.f64(o + 24) < qMinY || fb.f64(o) > qMaxX || fb.f64(o + 8) > qMaxY)
+      } { (buf, o) => out += new FbBuf(buf).i64(o + 32) }
+      out.result()
     }
 
     private var winStart = 0L
@@ -1078,60 +1041,23 @@ object FlatGeobuf {
                       batchBytes: Int = GeomedeaFile.PageBatchBytes): RangedFgbScan =
     new RangedFgbScan(readRange, fileLen, q, batchBytes)
 
-  /** Streaming full scan off a forward-only stream (skips the index),
-    * O(feature) memory, emitting (stable feature byte offset, feature).
-    * `onBlock(bytes)` fires per feature block.
-    */
-  def selectAllStream(in: java.io.DataInput, fileLen: Long,
-                      onBlock: Long => Unit = _ => (),
-                      geomOnly: Boolean = false): Iterator[(Long, Feature)] = {
-    val head12 = new Array[Byte](Magic.length + 4)
-    in.readFully(head12)
-    val hdrLen = new FbBuf(head12).i32(Magic.length)
-    val hdr = new Array[Byte](hdrLen)
-    in.readFully(hdr)
-    val h = readHeader(head12 ++ hdr)
-    var toSkip = h.featuresOffset - h.indexOffset
-    while (toSkip > 0) {
-      val skipped = in.skipBytes(math.min(toSkip, Int.MaxValue.toLong).toInt)
-      require(skipped > 0, "unexpected EOF while skipping the FGB index")
-      toSkip -= skipped
-    }
-    new Iterator[(Long, Feature)] {
-      private var pos = h.featuresOffset
-      override def hasNext: Boolean = pos < fileLen
-      override def next(): (Long, Feature) = {
-        val off = pos - h.featuresOffset
-        val sz = new Array[Byte](4)
-        in.readFully(sz)
-        val size = new FbBuf(sz).i32(0)
-        require(size > 0 && pos + 4 + size.toLong <= fileLen,
-          s"corrupt feature size $size at offset $pos")
-        val block = new Array[Byte](4 + size)
-        System.arraycopy(sz, 0, block, 0, 4)
-        in.readFully(block, 4, size)
-        onBlock(4L + size)
-        pos += 4L + size
-        (off, readFeature(new FbBuf(block), 0, h, geomOnly))
-      }
-    }
-  }
-
   /** Streaming scan of ONE block-aligned byte range `[start, end)` of
-    * the feature section — the split form of [[selectAllStream]] (the
-    * Parquet row-group-split analog), so one oversized `.fgb` shard can
-    * decode as several Spark input partitions. `in` must already be
-    * positioned at `start` (a writer-sampled feature-block boundary);
-    * `h` is the file's header (the caller reads it via positioned range
-    * reads). Emits the same (offset, feature) pairs as the unsplit scan.
-    * A misaligned boundary fails LOUDLY on the size-prefix framing.
+    * the feature section — the reader's one forward stream, O(feature)
+    * memory: a whole file is `[featuresOffset, fileLen)` (empty for a file
+    * with no features), an intra-shard split is a writer-sampled block run
+    * (the Parquet row-group-split analog), and a limit is a prefix of
+    * either. `in` must already be positioned at `start`; `h` is the file's
+    * header (the caller reads it via positioned range reads). Emits
+    * (stable feature byte offset, feature) pairs, the same as
+    * [[selectAll]]. A misaligned boundary fails LOUDLY on the size-prefix
+    * framing. `onBlock(bytes)` fires per feature block.
     */
   def selectRangeStream(in: java.io.DataInput, h: FgbHeader,
                         start: Long, end: Long,
                         onBlock: Long => Unit = _ => (),
                         geomOnly: Boolean = false): Iterator[(Long, Feature)] = {
-    require(start >= h.featuresOffset && start < end,
-      s"bad split range [$start,$end) for feature section at ${h.featuresOffset}")
+    require(start >= h.featuresOffset && start <= end,
+      s"bad block range [$start,$end) for feature section at ${h.featuresOffset}")
     new Iterator[(Long, Feature)] {
       private var pos = start
       override def hasNext: Boolean = pos < end
@@ -1166,7 +1092,7 @@ object FlatGeobuf {
       return FgbBboxRead(Vector.empty, 0, 0, 0)
     require(h.nodeSize > 0, "FGB file has no index; use selectAll + filter")
     val fb = new FbBuf(bytes)
-    val ranges = levelBounds(h.featuresCount, h.nodeSize)
+    val ranges = PackedRTree.nodeRangesByLevel(h.featuresCount, h.nodeSize)
     val leafStart = ranges.last._1
     val qMinX = deg(q.minLng); val qMinY = deg(q.minLat)
     val qMaxX = deg(q.maxLng); val qMaxY = deg(q.maxLat)

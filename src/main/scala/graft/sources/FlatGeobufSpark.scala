@@ -14,10 +14,9 @@ import graft.sources.v2.ContainerWriterFactory.MaxFileBytes
   *
   * The container is a single-node format; [[read]]/[[write]] are the
   * driver-side interop twins (bounded by the v2 writer's shard cap,
-  * [[v2.ContainerWriterFactory.MaxFileBytes]])
-  * and [[readDir]] is the fan-out scan over a directory of `.fgb` files
-  * with per-file bbox pruning via the embedded packed R-tree — the same
-  * scale shape as the geomedea directory scan.
+  * [[v2.ContainerWriterFactory.MaxFileBytes]]). A directory of `.fgb`
+  * files reads distributed, with per-file bbox pruning via the embedded
+  * packed R-tree, through `spark.read.format("flatgeobuf").load(dir)`.
   */
 object FlatGeobufSpark {
 
@@ -35,35 +34,6 @@ object FlatGeobufSpark {
         f.props.map { case (_, v) => GeoJson.propValueString(v) })
     }
     GeoJsonIngest.withEnvelope(rows.toDF())
-  }
-
-  /** Distributed scan over a DIRECTORY of .fgb files; an optional bbox
-    * prunes per file via the embedded index BEFORE decoding features.
-    */
-  def readDir(spark: SparkSession, dir: String,
-              bbox: Option[graft.geom.Envelope] = None): DataFrame = {
-    import spark.implicits._
-    val rows = spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.fgb")
-      .load(dir)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (path, bytes) =>
-          val feats = bbox match {
-            case Some(q) => FlatGeobuf.selectBbox(bytes, q).features
-            case None    => FlatGeobuf.selectAll(bytes)
-          }
-          feats.iterator.zipWithIndex.map { case (f, i) =>
-            (path, i.toLong, graft.geom.Wkb.write(f.geom),
-              f.props.map { case (k, v) => GeoJsonIngest.toCell(k, v) },
-              f.props.map(_._1),
-              f.props.map { case (_, v) => GeoJson.propValueString(v) })
-          }
-        }
-      }
-      .toDF("source_file", "feature_index", "wkb", "props", "prop_keys", "prop_vals")
-    GeoJsonIngest.withEnvelope(rows)
   }
 
   /** Geometry frame (wkb + props) -> .fgb file on disk (Hilbert-asc

@@ -28,6 +28,14 @@ import graft.index.PackedRTree
   *  - zstd page compression when `compressed` (level 0 = zstd default,
   *    `writer/mod.rs:333`) — compressed BYTES are zstd-version dependent,
   *    so byte goldens are asserted uncompressed only, roundtrips both.
+  *
+  * Readers: the DSv2 source reads in two shapes — [[selectPageRange]],
+  * one forward stream over a page-aligned byte range, and
+  * [[selectBboxRange]] / [[countBboxRange]], the ranged index descent.
+  * The in-memory readers over a whole file's bytes ([[selectAllLocated]],
+  * [[selectBboxCounted]]) are the independent references they are tested
+  * against. Every length read from the file is checked against the bytes
+  * left before anything is allocated from it.
   */
 object GeomedeaFile {
 
@@ -112,23 +120,57 @@ object GeomedeaFile {
     */
   val MaxDecodedPageBytes: Long = 1L << 30
 
-  private def decodePage(r: R, compressed: Boolean): (Array[Byte], Long) = {
-    val (encLen, decLen, count) = FeatureCodec.decodePageHeader(r)
-    require(decLen <= MaxDecodedPageBytes, s"corrupt page: decoded size $decLen")
-    val enc = r.take(encLen.toInt)
-    val dec =
-      if (compressed) com.github.luben.zstd.Zstd.decompress(enc, decLen.toInt)
-      else enc
-    require(dec.length.toLong == decLen, s"page decoded ${dec.length} != $decLen")
-    (dec, count)
+  /** Absolute offset of the page section: the header plus the index. */
+  def dataStart(featureCount: Long): Long =
+    FeatureCodec.HeaderBytes + PackedRTree.nodeCount(featureCount) * PackedRTree.NodeBytes
+
+  /** The 17-byte header `(compressed, pageCount, featureCount)` of a
+    * `fileLen`-byte file. Every feature has a 28-byte index leaf, so a
+    * feature count the file cannot hold is corruption — refused here,
+    * before any index or page size is derived from it.
+    */
+  def header(head: Array[Byte], fileLen: Long): (Boolean, Long, Long) = {
+    val h @ (_, _, featureCount) = FeatureCodec.decodeHeader(new R(head))
+    require(featureCount >= 0 &&
+      featureCount <= (fileLen - FeatureCodec.HeaderBytes) / PackedRTree.NodeBytes &&
+      dataStart(featureCount) <= fileLen,
+      s"corrupt header: $featureCount features in a $fileLen-byte file")
+    h
   }
 
-  private def featuresOfPage(body: Array[Byte], count: Long): Vector[Feature] = {
-    val r = new R(body)
-    Vector.fill(count.toInt) {
-      val len = r.u64().toInt
-      FeatureCodec.decodeFeature(r.take(len))
+  def header(bytes: Array[Byte]): (Boolean, Long, Long) = header(bytes, bytes.length.toLong)
+
+  /** A page header whose encoded body must fit in the `avail` bytes that
+    * follow it. Every size is checked before anything is allocated from
+    * it: an uncompressed body is its own decoded form, and each feature
+    * takes at least its 8-byte length prefix.
+    */
+  private def pageHeader(r: R, compressed: Boolean, avail: Long): (Int, Int, Int) = {
+    val (encLen, decLen, count) = FeatureCodec.decodePageHeader(r)
+    require(encLen <= avail, s"corrupt page: $encLen encoded bytes, $avail left")
+    require(decLen <= MaxDecodedPageBytes && (compressed || decLen == encLen) &&
+      count * 8 <= decLen, s"corrupt page: $encLen/$decLen bytes, $count features")
+    (encLen.toInt, decLen.toInt, count.toInt)
+  }
+
+  /** A page body's decoded bytes. A zstd frame that declares its content
+    * size must declare the page header's size, so a corrupt decoded
+    * length is refused before the output buffer is allocated.
+    */
+  private def inflate(enc: Array[Byte], compressed: Boolean, decLen: Int): Array[Byte] =
+    if (!compressed) enc
+    else {
+      val declared = com.github.luben.zstd.Zstd.getFrameContentSize(enc)
+      require(declared == decLen || declared == -1L,
+        s"corrupt page: zstd frame declares $declared bytes, header $decLen")
+      val dec = com.github.luben.zstd.Zstd.decompress(enc, decLen)
+      require(dec.length == decLen, s"page decoded ${dec.length} != $decLen")
+      dec
     }
+
+  private def decodePage(r: R, compressed: Boolean): (Array[Byte], Long) = {
+    val (encLen, decLen, count) = pageHeader(r, compressed, r.remaining - FeatureCodec.PageHeaderBytes)
+    (inflate(r.take(encLen), compressed, decLen), count.toLong)
   }
 
   /** Full scan (S4 twin): all features in layout (Hilbert desc) order. */
@@ -138,11 +180,12 @@ object GeomedeaFile {
   /** Full scan with each feature's `FeatureLocation = (page_starting_
     * offset, in-page offset)` — the format's own STABLE per-feature
     * identifier (`format.rs:4-10`), identical across full and bbox scans.
+    * Materializes the whole file: the in-memory reference the streaming
+    * [[selectPageRange]] is tested against.
     */
   def selectAllLocated(bytes: Array[Byte]): Vector[((Long, Int), Feature)] = {
-    val r = new R(bytes)
-    val (compressed, pageCount, featureCount) = FeatureCodec.decodeHeader(r)
-    r.take((PackedRTree.nodeCount(featureCount) * PackedRTree.NodeBytes).toInt) // skip index
+    val (compressed, pageCount, featureCount) = header(bytes)
+    val r = new R(bytes, dataStart(featureCount).toInt)
     var pageStart = 0L
     val out = Vector.newBuilder[((Long, Int), Feature)]
     (0L until pageCount).foreach { _ =>
@@ -152,74 +195,13 @@ object GeomedeaFile {
       var i = 0L
       while (i < count) {
         val featOff = pr.pos
-        val len = pr.u64().toInt
-        out += (((pageStart, featOff), FeatureCodec.decodeFeature(pr.take(len))))
+        out += (((pageStart, featOff), FeatureCodec.decodeFeature(pr.lenBytes())))
         i += 1
       }
       pageStart += (r.pos - before).toLong
     }
     out.result()
   }
-
-  /** Limited full scan (limit-pushdown path): decode pages ONLY until
-    * `n` features have been read — the remaining pages are never
-    * decompressed. Returns located features plus decode accounting.
-    */
-  final case class LimitedRead(features: Vector[((Long, Int), Feature)],
-                               pagesDecoded: Long, totalPages: Long,
-                               bytesDecoded: Long)
-
-  /** Range-read limited scan: `readRange(offset, len)` is the only I/O
-    * primitive (positioned read — FSDataInputStream.readFully or an HTTP
-    * range request), and the TRANSFER is bounded too: exactly the 17-byte
-    * header plus each needed page's 12-byte page header + encoded body,
-    * never the R-tree index or the remaining pages. The partial-download
-    * twin of the reference's HTTP reader, applied to LIMIT — and it works
-    * on files of ANY size (nothing ever materializes the whole file).
-    */
-  def selectLimitRange(readRange: (Long, Int) => Array[Byte], n: Int): LimitedRead = {
-    val hr = new R(readRange(0, FeatureCodec.HeaderBytes))
-    val (compressed, pageCount, featureCount) = FeatureCodec.decodeHeader(hr)
-    var pos = FeatureCodec.HeaderBytes.toLong +
-      PackedRTree.nodeCount(featureCount) * PackedRTree.NodeBytes
-    var pageStart = 0L
-    var bytesRead = 0L
-    val out = Vector.newBuilder[((Long, Int), Feature)]
-    var taken = 0
-    var pages = 0L
-    var pi = 0L
-    while (pi < pageCount && taken < n) {
-      val ph = new R(readRange(pos, FeatureCodec.PageHeaderBytes))
-      val (encLen, decLen, count) = FeatureCodec.decodePageHeader(ph)
-      require(decLen <= MaxDecodedPageBytes, s"corrupt page: decoded size $decLen")
-      val enc = readRange(pos + FeatureCodec.PageHeaderBytes, encLen.toInt)
-      val body =
-        if (compressed) com.github.luben.zstd.Zstd.decompress(enc, decLen.toInt) else enc
-      pages += 1
-      bytesRead += FeatureCodec.PageHeaderBytes + encLen
-      val pr = new R(body)
-      var i = 0L
-      while (i < count && taken < n) {
-        val featOff = pr.pos
-        val len = pr.u64().toInt
-        out += (((pageStart, featOff), FeatureCodec.decodeFeature(pr.take(len))))
-        taken += 1
-        i += 1
-      }
-      val pageBytes = FeatureCodec.PageHeaderBytes + encLen
-      pos += pageBytes
-      pageStart += pageBytes
-      pi += 1
-    }
-    LimitedRead(out.result(), pages, pageCount, bytesRead)
-  }
-
-  /** Index node-range merge threshold: two index read ranges closer than
-    * this are coalesced into one request (`packed_r_tree/reader.rs:159-161`
-    * — "16,000 bytes ≈ 571 nodes" tradeoff between request count and
-    * wasted transfer).
-    */
-  val RangeMergeBytes: Long = 16000L
 
   /** Page fetch window: 2 x page-size-goal with the reference's 1.1x
     * overfetch factor (`http_reader.rs:162,174-176`) — each request
@@ -232,66 +214,24 @@ object GeomedeaFile {
     (b(off) & 0xFF) | ((b(off + 1) & 0xFF) << 8) |
       ((b(off + 2) & 0xFF) << 16) | ((b(off + 3) & 0xFF) << 24)
 
-  /** The packed R-tree's leaves intersecting q, found LEVEL BY LEVEL off
-    * positioned reads: only the children of intersecting nodes are ever
-    * requested, with node ranges closer than [[RangeMergeBytes]]
-    * coalesced into one `fetch` (`packed_r_tree/reader.rs:140-187`).
-    * `leaf(buf, off)` sees each hit leaf's 28 node bytes in tree (layout)
-    * order. Memory is one index level's fetched ranges, whatever the hit
-    * count.
+  /** The index leaves intersecting q, in tree (layout) order, off
+    * positioned reads ([[PackedRTree.descend]]). `leaf(buf, off)` sees
+    * each hit leaf's 28 node bytes.
     */
   private def descendIndex(fetch: (Long, Int) => Array[Byte], featureCount: Long,
-                           q: Envelope)(leaf: (Array[Byte], Int) => Unit): Unit = {
-    if (featureCount == 0) return
-    val leafStart = PackedRTree.nodeRangesByLevel(featureCount).last._1
-    val indexStart = FeatureCodec.HeaderBytes.toLong
-    var pending: Vector[(Long, Long)] = Vector((0L, 1L))
-    while (pending.nonEmpty) {
-      // coalesce node ranges whose byte gap is under the threshold
-      val merged = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-      pending.foreach { r =>
-        if (merged.nonEmpty &&
-          (r._1 - merged.last._2) * PackedRTree.NodeBytes <= RangeMergeBytes)
-          merged(merged.size - 1) = (merged.last._1, r._2)
-        else merged += r
-      }
-      val bufs = merged.map { case (s, e) =>
-        (s, fetch(indexStart + s * PackedRTree.NodeBytes,
-          ((e - s) * PackedRTree.NodeBytes).toInt))
-      }
-      val next = Vector.newBuilder[(Long, Long)]
-      // running cursor instead of a per-node lastIndexWhere: bufs are
-      // sorted by start and idx is globally ascending across pending
-      // (merged preserves pending's order), so the owning buffer only
-      // ever moves forward — O(1) amortized vs O(ranges) per node,
-      // which went quadratic-ish on wide levels with fragmented hits
-      var bi = 0
-      pending.foreach { case (s, e) =>
-        var idx = s
-        while (idx < e) {
-          while (bi + 1 < bufs.size && bufs(bi + 1)._1 <= idx) bi += 1
-          val (bs, buf) = bufs(bi)
-          val off = ((idx - bs) * PackedRTree.NodeBytes).toInt
-          val env = Envelope(i32(buf, off), i32(buf, off + 4),
-            i32(buf, off + 8), i32(buf, off + 12))
-          if (env.intersects(q)) {
-            if (idx >= leafStart) leaf(buf, off)
-            else PackedRTree.childrenRange(featureCount, idx).foreach(next += _)
-          }
-          idx += 1
-        }
-      }
-      pending = next.result()
-    }
-  }
+                           q: Envelope)(leaf: (Array[Byte], Int) => Unit): Unit =
+    PackedRTree.descend(featureCount, PackedRTree.Branching, PackedRTree.NodeBytes,
+      (off, len) => fetch(FeatureCodec.HeaderBytes + off, len)) { (buf, off) =>
+      !(i32(buf, off + 8) < q.minLng || i32(buf, off + 12) < q.minLat ||
+        i32(buf, off) > q.maxLng || i32(buf, off + 4) > q.maxLat)
+    }(leaf)
 
   /** How many features' envelopes intersect q (closed intervals), from
     * the header and the index levels the descent needs — no page is
     * read. Same leaves as [[selectBboxRange]] emits.
     */
-  def countBboxRange(readRange: (Long, Int) => Array[Byte], q: Envelope): Long = {
-    val (_, _, featureCount) =
-      FeatureCodec.decodeHeader(new R(readRange(0, FeatureCodec.HeaderBytes)))
+  def countBboxRange(readRange: (Long, Int) => Array[Byte], fileLen: Long, q: Envelope): Long = {
+    val (_, _, featureCount) = header(readRange(0, FeatureCodec.HeaderBytes), fileLen)
     var n = 0L
     descendIndex(readRange, featureCount, q)((_, _) => n += 1)
     n
@@ -304,10 +244,9 @@ object GeomedeaFile {
     * request), and the transfer is bounded at every stage:
     *
     *  1. 17-byte header;
-    *  2. R-tree traversal LEVEL BY LEVEL — only the children of
-    *     intersecting nodes are ever requested, with node ranges closer
-    *     than [[RangeMergeBytes]] coalesced into one request
-    *     (`packed_r_tree/reader.rs:140-187` semantics);
+    *  2. the R-tree LEVEL BY LEVEL ([[PackedRTree.descend]]) — only the
+    *     children of intersecting nodes are ever requested, nearby node
+    *     ranges coalesced into one request;
     *  3. hit pages via a sequential [[PageBatchBytes]] fetch window —
     *     adjacent hit pages share one request, non-hit pages inside a
     *     window cost transfer but are never decompressed, and pages
@@ -343,7 +282,7 @@ object GeomedeaFile {
     }
 
     private val (compressed, totalPagesV, featureCount) =
-      FeatureCodec.decodeHeader(new R(fetch(0, FeatureCodec.HeaderBytes)))
+      header(fetch(0, FeatureCodec.HeaderBytes), fileLen)
     def totalPages: Long = totalPagesV
 
     /** Leaf FeatureLocations intersecting q, in tree (layout) order.
@@ -360,8 +299,7 @@ object GeomedeaFile {
       out.result()
     }
 
-    private val pageBase = FeatureCodec.HeaderBytes.toLong +
-      PackedRTree.nodeCount(featureCount) * PackedRTree.NodeBytes
+    private val pageBase = dataStart(featureCount)
     private var winStart = 0L
     private var win: Array[Byte] = null
     private var curPageOff = -1L
@@ -370,29 +308,28 @@ object GeomedeaFile {
 
     private def bodyFor(pageOff: Long): Array[Byte] = {
       if (pageOff == curPageOff) return curBody
+      val bodyAt = pageBase + pageOff + FeatureCodec.PageHeaderBytes
+      require(pageOff >= 0 && bodyAt <= fileLen, s"corrupt index: page offset $pageOff")
       if (win == null || pageOff < winStart ||
         pageOff + FeatureCodec.PageHeaderBytes > winStart + win.length) {
         win = fetch(pageBase + pageOff, batchBytes)
         winStart = pageOff
       }
       val rel = (pageOff - winStart).toInt
-      val (encLen, decLen, _) = FeatureCodec.decodePageHeader(new R(win, rel))
-      require(decLen <= MaxDecodedPageBytes, s"corrupt page: decoded size $decLen")
+      val (encLen, decLen, _) = pageHeader(new R(win, rel), compressed, fileLen - bodyAt)
       val bodyStart = rel + FeatureCodec.PageHeaderBytes
       val enc: Array[Byte] =
         if (bodyStart + encLen <= win.length)
-          java.util.Arrays.copyOfRange(win, bodyStart, bodyStart + encLen.toInt)
+          java.util.Arrays.copyOfRange(win, bodyStart, bodyStart + encLen)
         else { // page tail past the window: fetch exactly the remainder
           val have = math.max(0, win.length - bodyStart)
-          val rest = fetch(pageBase + pageOff + FeatureCodec.PageHeaderBytes + have,
-            (encLen - have).toInt)
-          val buf = new Array[Byte](encLen.toInt)
+          val rest = fetch(bodyAt + have, encLen - have)
+          val buf = new Array[Byte](encLen)
           if (have > 0) System.arraycopy(win, bodyStart, buf, 0, have)
           System.arraycopy(rest, 0, buf, have, rest.length)
           buf
         }
-      curBody =
-        if (compressed) com.github.luben.zstd.Zstd.decompress(enc, decLen.toInt) else enc
+      curBody = inflate(enc, compressed, decLen)
       curPageOff = pageOff
       _pagesDecoded += 1
       curBody
@@ -402,109 +339,54 @@ object GeomedeaFile {
     override def next(): ((Long, Int), Feature) = {
       val (po, fo) = it.next()
       val pr = new R(bodyFor(po), fo)
-      val len = pr.u64().toInt
-      ((po, fo), FeatureCodec.decodeFeature(pr.take(len)))
-    }
-  }
-
-  /** Streaming full scan: pages decode one at a time off a forward-only
-    * stream — O(page) memory regardless of file size (the reference
-    * reader's shape, `reader.rs:11-156`), vs [[selectAllLocated]]'s
-    * whole-file materialization. Same rows, same order, same stable
-    * FeatureLocations. `onPage(bytes)` fires per decoded page with its
-    * encoded size (page header included) for scan metrics.
-    */
-  /** `geomOnly = true` skips the per-feature props decode in place
-    * (pointer jump over the props bytes — no string/value allocation):
-    * for projections that need no property column. Emitted features then
-    * carry EMPTY props; the DSv2 reader asserts the projection before
-    * asking for it.
-    */
-  def selectAllStream(in: java.io.DataInput,
-                      onPage: Long => Unit = _ => (),
-                      geomOnly: Boolean = false): Iterator[((Long, Int), Feature)] = {
-    val head = new Array[Byte](FeatureCodec.HeaderBytes)
-    in.readFully(head)
-    val (compressed, pageCount, featureCount) = FeatureCodec.decodeHeader(new R(head))
-    var toSkip = PackedRTree.nodeCount(featureCount) * PackedRTree.NodeBytes
-    while (toSkip > 0) { // DataInput.skipBytes may skip less than asked
-      val skipped = in.skipBytes(math.min(toSkip, Int.MaxValue.toLong).toInt)
-      require(skipped > 0, "unexpected EOF while skipping the index section")
-      toSkip -= skipped
-    }
-    new Iterator[((Long, Int), Feature)] {
-      private var pageIdx = 0L
-      private var pageStart = 0L
-      private var inPage: Iterator[((Long, Int), Feature)] = Iterator.empty
-      private def advance(): Unit = while (!inPage.hasNext && pageIdx < pageCount) {
-        val ph = new Array[Byte](FeatureCodec.PageHeaderBytes)
-        in.readFully(ph)
-        val (encLen, decLen, count) = FeatureCodec.decodePageHeader(new R(ph))
-        require(decLen <= MaxDecodedPageBytes, s"corrupt page: decoded size $decLen")
-        val enc = new Array[Byte](encLen.toInt)
-        in.readFully(enc)
-        val body =
-          if (compressed) com.github.luben.zstd.Zstd.decompress(enc, decLen.toInt) else enc
-        val thisPageStart = pageStart
-        val pr = new R(body)
-        inPage = Iterator.fill(count.toInt) {
-          val featOff = pr.pos
-          val len = pr.u64().toInt
-          ((thisPageStart, featOff),
-            if (geomOnly) FeatureCodec.decodeFeatureGeomOnly(pr, len)
-            else FeatureCodec.decodeFeatureAt(pr, len))
-        }
-        onPage(FeatureCodec.PageHeaderBytes.toLong + encLen)
-        pageStart += FeatureCodec.PageHeaderBytes.toLong + encLen
-        pageIdx += 1
-      }
-      override def hasNext: Boolean = { advance(); inPage.hasNext }
-      override def next(): ((Long, Int), Feature) = { advance(); inPage.next() }
+      ((po, fo), FeatureCodec.decodeFeature(pr.lenBytes()))
     }
   }
 
   /** Streaming scan of ONE page-aligned byte range `[start, end)` of a
-    * container whose data section begins at `dataStart` — the split
-    * form of [[selectAllStream]], so one oversized shard can decode as
-    * several Spark input partitions (the Parquet row-group-split
-    * analog; the reference is single-node and has no counterpart).
-    * `in` must already be positioned at `start` (an absolute offset the
-    * writer sampled as a page boundary). Emits the same rows with the
-    * same stable FeatureLocations as the unsplit scan. Misaligned
-    * boundaries fail LOUDLY: page framing is validated per page and the
-    * walk must land exactly on `end`.
+    * container whose page section begins at `dataStart` — the reader's
+    * one forward stream (the reference reader's shape,
+    * `reader.rs:11-156`): a whole file is `[dataStart, fileLen)`, an
+    * intra-shard split is a manifest-sampled page run (the Parquet
+    * row-group-split analog), and a limit is a prefix of either. Pages
+    * decode one at a time, so memory is O(page) whatever the file size.
+    * `in` must already be positioned at `start`. Emits the same rows with
+    * the same stable FeatureLocations as [[selectAllLocated]]. Misaligned
+    * boundaries fail LOUDLY: each page is checked against `end` before its
+    * body is allocated, and the walk must land exactly on `end`.
+    * `onPage(bytes)` fires per decoded page with its encoded size (page
+    * header included). `geomOnly = true` skips each feature's props in
+    * place (no string/value allocation) and emits EMPTY props; the DSv2
+    * reader asks for it only when no property column is projected.
     */
   def selectPageRange(in: java.io.DataInput, compressed: Boolean,
                       start: Long, end: Long, dataStart: Long,
                       onPage: Long => Unit = _ => (),
                       geomOnly: Boolean = false): Iterator[((Long, Int), Feature)] = {
-    require(start >= dataStart && start < end,
-      s"bad split range [$start,$end) for data section at $dataStart")
+    require(start >= dataStart && start <= end,
+      s"bad page range [$start,$end) for data section at $dataStart")
     new Iterator[((Long, Int), Feature)] {
       private var absOff = start
       private var inPage: Iterator[((Long, Int), Feature)] = Iterator.empty
       private def advance(): Unit = while (!inPage.hasNext && absOff < end) {
         val ph = new Array[Byte](FeatureCodec.PageHeaderBytes)
         in.readFully(ph)
-        val (encLen, decLen, count) = FeatureCodec.decodePageHeader(new R(ph))
-        require(decLen <= MaxDecodedPageBytes, s"corrupt page: decoded size $decLen")
-        require(absOff + FeatureCodec.PageHeaderBytes + encLen <= end,
-          s"page at $absOff overruns split end $end — misaligned split boundary")
-        val enc = new Array[Byte](encLen.toInt)
+        val bodyAt = absOff + FeatureCodec.PageHeaderBytes
+        val (encLen, decLen, count) = pageHeader(new R(ph), compressed, end - bodyAt)
+        val enc = new Array[Byte](encLen)
         in.readFully(enc)
-        val body =
-          if (compressed) com.github.luben.zstd.Zstd.decompress(enc, decLen.toInt) else enc
+        val body = inflate(enc, compressed, decLen)
         val pageRelStart = absOff - dataStart
         val pr = new R(body)
-        inPage = Iterator.fill(count.toInt) {
+        inPage = Iterator.fill(count) {
           val featOff = pr.pos
-          val len = pr.u64().toInt
+          val len = pr.count(1)
           ((pageRelStart, featOff),
             if (geomOnly) FeatureCodec.decodeFeatureGeomOnly(pr, len)
             else FeatureCodec.decodeFeatureAt(pr, len))
         }
         onPage(FeatureCodec.PageHeaderBytes.toLong + encLen)
-        absOff += FeatureCodec.PageHeaderBytes.toLong + encLen
+        absOff = bodyAt + encLen
       }
       override def hasNext: Boolean = { advance(); inPage.hasNext }
       override def next(): ((Long, Int), Feature) = { advance(); inPage.next() }
@@ -535,8 +417,8 @@ object GeomedeaFile {
   }
 
   def selectBboxCounted(bytes: Array[Byte], q: Envelope): BboxRead = {
-    val r = new R(bytes)
-    val (compressed, pageCount, featureCount) = FeatureCodec.decodeHeader(r)
+    val (compressed, pageCount, featureCount) = header(bytes)
+    val r = new R(bytes, FeatureCodec.HeaderBytes)
     val treeBytes = r.take((PackedRTree.nodeCount(featureCount) * PackedRTree.NodeBytes).toInt)
     val pageSectionStart = r.pos
     val tree = new PackedRTree(featureCount, treeBytes)
@@ -552,14 +434,9 @@ object GeomedeaFile {
       pageOff -> body
     }.toMap
     val feats = locs.map { case (pageOff, featOff) =>
-      val pr = new R(byPage(pageOff), featOff)
-      val len = pr.u64().toInt
-      FeatureCodec.decodeFeature(pr.take(len))
+      FeatureCodec.decodeFeature(new R(byPage(pageOff), featOff).lenBytes())
     }
     BboxRead(feats, locs, byPage.size.toLong, pageCount, fetched,
       (bytes.length - pageSectionStart).toLong)
   }
-
-  def header(bytes: Array[Byte]): (Boolean, Long, Long) =
-    FeatureCodec.decodeHeader(new R(bytes))
 }

@@ -1,7 +1,6 @@
 package graft.sources
 
 import graft.codec.FeatureCodec.Feature
-import graft.expr.GraftFunctions._
 import graft.sources.GeoJsonIngest.PropCell
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -14,7 +13,9 @@ import graft.sources.v2.ContainerWriterFactory.MaxFileBytes
   * The container is a single-node format (one header + one index +
   * sequential pages), so [[read]] decodes on the driver and
   * parallelizes rows, and [[write]] collects — both bounded by the v2
-  * writer's shard cap ([[v2.ContainerWriterFactory.MaxFileBytes]]). The
+  * writer's shard cap ([[v2.ContainerWriterFactory.MaxFileBytes]]). A
+  * directory of `.geomedea` files reads distributed, with per-file index
+  * pruning, through `spark.read.format("geomedea").load(dir)`. The
   * 100 TB path is `Ingest.write`'s parquet layout; this bridge is for
   * interop at the reference's own file sizes (its published fixtures are
   * 5-13 MB).
@@ -24,8 +25,8 @@ object GeomedeaSpark {
   /** .geomedea file -> the engine's geometry frame (wkb + typed props +
     * envelope stat columns), in the file's Hilbert layout order.
     * feature_id is the layout-order index (a full scan sees every
-    * feature, so the index is a stable id here; the pruned [[readDir]]
-    * uses the format's FeatureLocation instead).
+    * feature, so the index is a stable id here; the DSv2 source emits the
+    * format's FeatureLocation instead, stable under pruning too).
     */
   def read(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
@@ -38,44 +39,6 @@ object GeomedeaSpark {
         f.props.map { case (_, v) => GeoJson.propValueString(v) })
     }
     GeoJsonIngest.withEnvelope(rows.toDF())
-  }
-
-  /** Distributed scan over a DIRECTORY of .geomedea files — the 100 TB
-    * interop shape (a data lake of reference-format files): Spark's
-    * binaryFile source plans one split per file, each executor decodes
-    * its files with the same driver-free codec, and an optional bbox
-    * prunes per file via the embedded R-tree BEFORE decoding features
-    * (the reference's indexed read, S5/S7, running fan-out-parallel).
-    */
-  def readDir(spark: SparkSession, dir: String,
-              bbox: Option[graft.geom.Envelope] = None): DataFrame = {
-    import spark.implicits._
-    val rows = spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.geomedea")
-      .load(dir)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (path, bytes) =>
-          // located variants: (page_offset, feature_offset) is the
-          // format's own per-feature id, IDENTICAL for the same feature
-          // whether the scan was pruned or full (a scan-relative index
-          // would not be)
-          val feats = bbox match {
-            case Some(q) => GeomedeaFile.selectBboxLocated(bytes, q)
-            case None    => GeomedeaFile.selectAllLocated(bytes)
-          }
-          feats.iterator.map { case ((pageOff, featOff), f) =>
-            (path, pageOff, featOff, graft.geom.Wkb.write(f.geom),
-              f.props.map { case (k, v) => GeoJsonIngest.toCell(k, v) },
-              f.props.map(_._1),
-              f.props.map { case (_, v) => GeoJson.propValueString(v) })
-          }
-        }
-      }
-      .toDF("source_file", "page_offset", "feature_offset", "wkb", "props",
-        "prop_keys", "prop_vals")
-    GeoJsonIngest.withEnvelope(rows)
   }
 
   /** Geometry frame (wkb + props) -> .geomedea file bytes on disk. The

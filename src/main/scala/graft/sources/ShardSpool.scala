@@ -133,11 +133,6 @@ final class ShardSpool(compressed: Boolean,
 
   def count: Int = n
 
-  /** Encoded-feature bytes spooled so far — a cheap lower bound on the
-    * final container size, available before commit.
-    */
-  def spooledBytes: Long = tail
-
   /** Assemble and stream the container. `open` receives the exact final
     * byte count (known before any destination I/O) and returns the sink
     * — the caller can enforce size guards and pick the path without the

@@ -53,19 +53,23 @@ sealed abstract class ContainerFormat(val name: String, val suffix: String,
     */
   def exactIndex: Boolean
 
-  /** How many of one file's features intersect `q` (closed intervals),
-    * from its header and index alone. Only asked when [[exactIndex]].
+  /** How many of one `len`-byte file's features intersect `q` (closed
+    * intervals), from its header and index alone. Only asked when
+    * [[exactIndex]].
     */
-  def indexCount(fs: FileSystem, path: Path, q: Envelope): Long
+  def indexCount(fs: FileSystem, path: Path, len: Long, q: Envelope): Long
 
   /** The SQL-UI scan metrics the reader reports. */
   def metrics: Array[CustomMetric]
 
-  /** One partition's feature iterator: bbox, limit, intra-shard split or
-    * full file.
+  /** One partition's feature iterator, in one of two shapes: with a bbox,
+    * the ranged index descent to the hit pages/blocks; otherwise one
+    * forward stream over a byte range — the partition's intra-shard split,
+    * or the whole data section. A pushed limit is the reader factory's
+    * prefix of either.
     */
   def decode(fs: FileSystem, part: GeomedeaPartition, bbox: Option[Envelope],
-             limit: Option[Int], geomOnly: Boolean): ContainerFormat.Decode[Loc]
+             geomOnly: Boolean): ContainerFormat.Decode[Loc]
 
   /** Validated write options -> a task-side spool factory. */
   def spool(options: CaseInsensitiveStringMap, splitGranularity: Long): () => FeatureSpool
@@ -128,7 +132,7 @@ object ContainerFormat {
   def named(name: String): Option[ContainerFormat] = all.find(_.name == name)
 
   /** One partition's open read: located features, the live (pages, bytes)
-    * decode counters, and the stream to close (null when none stays open).
+    * decode counters, and the stream to close.
     */
   final class Decode[L](val features: Iterator[(L, Feature)],
                         val counters: () => (Long, Long),
@@ -136,6 +140,20 @@ object ContainerFormat {
 
   private def rangeReader(in: FSDataInputStream): (Long, Int) => Array[Byte] =
     (off, k) => { val b = new Array[Byte](k); in.readFully(off, b); b }
+
+  /** The byte range a stream reads: the partition's split, checked
+    * against the section start the file's own header gives — a stale or
+    * forged boundary list fails loudly rather than emitting shifted
+    * location ids — or the whole section `[dataStart, len)`.
+    */
+  private def streamRange(part: GeomedeaPartition, dataStart: Long, len: Long): (Long, Long) =
+    if (part.start < 0) (dataStart, len)
+    else {
+      require(dataStart == part.dataStart,
+        s"${part.file}: manifest split base ${part.dataStart} != data section " +
+          s"at $dataStart — stale manifest splits; re-run a writer commit")
+      (part.start, part.end)
+    }
 
   /** The reference's `.geomedea` container: header, packed R-tree, pages. */
   case object Geomedea extends ContainerFormat("geomedea", ".geomedea",
@@ -177,7 +195,7 @@ object ContainerFormat {
       val in = fs.open(s.getPath)
       val head = new Array[Byte](math.min(HeadBytes.toLong, s.getLen).toInt)
       try in.readFully(0, head) finally in.close()
-      val count = FeatureCodec.decodeHeader(new FeatureCodec.R(head))._3
+      val count = GeomedeaFile.header(head, s.getLen)._3
       GeomedeaManifest.entryOf(s.getPath.getName, s.getLen, count,
         fileExtent(head).getOrElse(Envelope.empty))
     }
@@ -192,64 +210,43 @@ object ContainerFormat {
       */
     def exactIndex: Boolean = true
 
-    def indexCount(fs: FileSystem, path: Path, q: Envelope): Long = {
+    def indexCount(fs: FileSystem, path: Path, len: Long, q: Envelope): Long = {
       val in = fs.open(path)
-      try GeomedeaFile.countBboxRange(rangeReader(in), q) finally in.close()
+      try GeomedeaFile.countBboxRange(rangeReader(in), len, q) finally in.close()
     }
 
     def metrics: Array[CustomMetric] = Array(new GmPagesMetric, new GmBytesMetric, new GmRowsMetric)
 
-    // every branch STREAMS with bounded memory and bounded transfer —
+    // both shapes stream with bounded memory and bounded transfer —
     // nothing ever materializes a whole file, so shard size is
-    // unconstrained on the read side (the reference reader's O(page)
-    // shape, `reader.rs:11-156`)
+    // unconstrained on the read side
     def decode(fs: FileSystem, part: GeomedeaPartition, bbox: Option[Envelope],
-               limit: Option[Int], geomOnly: Boolean): Decode[Loc] = {
+               geomOnly: Boolean): Decode[Loc] = {
       val p = new Path(part.file)
-      var pages = 0L
-      var bytes = 0L
-      val onPage = (b: Long) => { pages += 1; bytes += b }
-      (bbox, limit) match {
-        case (Some(q), _) =>
+      val len = fs.getFileStatus(p).getLen
+      val in = fs.open(p)
+      bbox match {
+        case Some(q) =>
           // bounded TRANSFER bbox read (the reference's partial-download
           // path, http_reader.rs:86-107): positioned range reads walk
           // header -> needed index levels (range-merged) -> hit pages
           // (batched windows); pruned pages and index subtrees never
           // leave storage
-          val len = fs.getFileStatus(p).getLen
-          val in = fs.open(p)
           val scan = GeomedeaFile.selectBboxRange(rangeReader(in), len, q)
-          new Decode(limit.fold(scan: Iterator[(Loc, Feature)])(scan.take),
-            () => (scan.pagesDecoded, scan.bytesTransferred), in)
-        case (None, Some(n)) =>
-          // bounded transfer AND bounded decode: header + page prefix
-          // only, never the index or the remaining pages
-          val in = fs.open(p)
-          val read = try GeomedeaFile.selectLimitRange(rangeReader(in), n) finally in.close()
-          new Decode(read.features.iterator, () => (read.pagesDecoded, read.bytesDecoded), null)
-        case (None, None) if part.start >= 0 =>
-          // intra-shard split (manifest-sampled page boundary): positioned
-          // header read for the compressed flag — and to RE-DERIVE the
-          // data-section start from the authoritative header, refusing a
-          // stale/forged boundary list loudly rather than emitting shifted
-          // location ids
-          val in = fs.open(p)
+          new Decode(scan, () => (scan.pagesDecoded, scan.bytesTransferred), in)
+        case None =>
+          // positioned header read for the compressed flag and the data
+          // section start, then one page-by-page forward stream
           val head = new Array[Byte](FeatureCodec.HeaderBytes)
           in.readFully(0, head)
-          val (comp, _, fc) = FeatureCodec.decodeHeader(new FeatureCodec.R(head))
-          val realDataStart = FeatureCodec.HeaderBytes.toLong +
-            graft.index.PackedRTree.nodeCount(fc) * graft.index.PackedRTree.NodeBytes
-          require(realDataStart == part.dataStart,
-            s"${part.file}: manifest split base ${part.dataStart} != data section " +
-              s"at $realDataStart — stale manifest splits; re-run a writer commit")
-          in.seek(part.start)
-          new Decode(GeomedeaFile.selectPageRange(in, comp, part.start, part.end,
-            part.dataStart, onPage = onPage, geomOnly = geomOnly), () => (pages, bytes), in)
-        case (None, None) =>
-          // page-by-page streaming full scan: O(page) task memory
-          val in = fs.open(p)
-          new Decode(GeomedeaFile.selectAllStream(in, onPage = onPage, geomOnly = geomOnly),
-            () => (pages, bytes), in)
+          val (compressed, _, featureCount) = GeomedeaFile.header(head, len)
+          val dataStart = GeomedeaFile.dataStart(featureCount)
+          val (start, end) = streamRange(part, dataStart, len)
+          in.seek(start)
+          var pages = 0L
+          var bytes = 0L
+          new Decode(GeomedeaFile.selectPageRange(in, compressed, start, end, dataStart,
+            onPage = b => { pages += 1; bytes += b }, geomOnly = geomOnly), () => (pages, bytes), in)
       }
     }
 
@@ -293,7 +290,7 @@ object ContainerFormat {
         s"${s.getPath}: ${s.getLen} bytes is shorter than a FlatGeobuf magic+header " +
           "prefix — truncated or not an fgb file")
       val in = fs.open(s.getPath)
-      val h = try Fgb.readHeaderRanged(rangeReader(in)) finally in.close()
+      val h = try Fgb.readHeaderRanged(rangeReader(in), s.getLen) finally in.close()
       def lo(d: Double) = math.max(Int.MinValue.toDouble, math.floor(d * 1e7)).toInt
       def hi(d: Double) = math.min(Int.MaxValue.toDouble, math.ceil(d * 1e7)).toInt
       val ext = h.envelope match {
@@ -324,46 +321,32 @@ object ContainerFormat {
       */
     def exactIndex: Boolean = false
 
-    def indexCount(fs: FileSystem, path: Path, q: Envelope): Long =
+    def indexCount(fs: FileSystem, path: Path, len: Long, q: Envelope): Long =
       throw new UnsupportedOperationException(s"$name index bounds are not exact")
 
     def metrics: Array[CustomMetric] = Array(new GmBytesMetric, new GmRowsMetric)
 
     def decode(fs: FileSystem, part: GeomedeaPartition, bbox: Option[Envelope],
-               limit: Option[Int], geomOnly: Boolean): Decode[Loc] = {
+               geomOnly: Boolean): Decode[Loc] = {
       val p = new Path(part.file)
       val len = fs.getFileStatus(p).getLen
       val in = fs.open(p)
-      var bytes = 0L
-      val onBlock = (b: Long) => bytes += b
+      val header = Fgb.readHeaderRanged(rangeReader(in), len)
       // an index needs BOTH node_size > 0 and a trustworthy count (0 =
       // unknown, spec-legal for streamed writers); otherwise stream the
       // whole file — Spark re-applies the residual filters either way
-      val header = Fgb.readHeaderRanged(rangeReader(in))
-      val indexed = header.nodeSize > 0 && header.featuresCount > 0
-      val (raw, counters) = bbox match {
-        case Some(q) if indexed =>
+      bbox.filter(_ => header.nodeSize > 0 && header.featuresCount > 0) match {
+        case Some(q) =>
           // bounded transfer: header -> needed index levels -> hit blocks
           val scan = Fgb.selectBboxRange(rangeReader(in), len, q)
-          (scan, () => (0L, scan.bytesTransferred))
-        case _ if part.start >= 0 =>
-          // intra-shard split (manifest-sampled block boundary): the
-          // header just read is authoritative for the section start —
-          // refuse a stale/forged boundary list loudly rather than
-          // emitting shifted feature-offset ids
-          require(header.featuresOffset == part.dataStart,
-            s"${part.file}: manifest split base ${part.dataStart} != feature section " +
-              s"at ${header.featuresOffset} — stale manifest splits; re-run a writer commit")
-          in.seek(part.start)
-          (Fgb.selectRangeStream(in, header, part.start, part.end, onBlock = onBlock,
-            geomOnly = geomOnly), () => (0L, bytes))
-        case _ =>
-          (Fgb.selectAllStream(in, len, onBlock = onBlock, geomOnly = geomOnly),
-            () => (0L, bytes))
+          new Decode(scan, () => (0L, scan.bytesTransferred), in)
+        case None =>
+          val (start, end) = streamRange(part, header.featuresOffset, len)
+          in.seek(start)
+          var bytes = 0L
+          new Decode(Fgb.selectRangeStream(in, header, start, end, onBlock = b => bytes += b,
+            geomOnly = geomOnly), () => (0L, bytes), in)
       }
-      // pushed limit: per-partition stop (decoding halts with the
-      // iterator — later blocks are never read off the stream)
-      new Decode(limit.fold(raw)(raw.take), counters, in)
     }
 
     def spool(options: CaseInsensitiveStringMap, splitGranularity: Long): () => FeatureSpool = {

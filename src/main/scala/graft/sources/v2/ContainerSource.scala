@@ -30,8 +30,11 @@ import org.apache.spark.util.SerializableConfiguration
   * Writes and streams take one path.
   *
   * Scale shape: one input partition per file (the formats are
-  * single-node containers; a data lake of them fans out per file, same as
-  * `GeomedeaSpark.readDir`). Pushed bbox filters prune twice:
+  * single-node containers; a data lake of them fans out per file), or per
+  * manifest-sampled split of an oversized one. Each partition reads in one
+  * of two shapes ([[ContainerFormat.decode]]): one forward stream over its
+  * byte range, or, with a bbox, the ranged index descent. A pushed limit
+  * is a prefix of either. Pushed bbox filters prune twice:
   *  1. at PLANNING, whole files whose extent (manifest entry, or the
   *     header read — never the whole file) misses the query rect are
   *     never planned as partitions;
@@ -229,7 +232,7 @@ class IndexCountScan(format: ContainerFormat, paths: Seq[String], stats: Seq[Hea
     val conf = SparkSession.active.sessionState.newHadoopConf()
     val n = PlannerPool.mapFiles(files) { f =>
       val p = new Path(f.path)
-      format.indexCount(p.getFileSystem(conf), p, q)
+      format.indexCount(p.getFileSystem(conf), p, f.len, q)
     }.sum
     stats.map(_ => n: Any).toArray
   }
@@ -483,8 +486,11 @@ class ContainerReaderFactory(format: ContainerFormat, bbox: Option[Envelope],
     // geometry-only decode: when no property column is projected, the
     // scan jumps over each feature's props bytes instead of materializing
     // strings/values the query never reads
-    val decode = format.decode(p.getFileSystem(conf.value), part, bbox, limit,
+    val decode = format.decode(p.getFileSystem(conf.value), part, bbox,
       FeatureRows.geomOnly(required))
+    // the pushed limit, applied once for every shape: decoding stops with
+    // the iterator, so later pages/blocks are never read
+    val features = limit.fold(decode.features)(decode.features.take)
     new PartitionReader[InternalRow] {
       // column-pruned direct row building: only the projected columns
       // are generated, props included
@@ -495,8 +501,8 @@ class ContainerReaderFactory(format: ContainerFormat, bbox: Option[Envelope],
       private var rowsDecoded = 0L
       private var current: InternalRow = _
       override def next(): Boolean = {
-        if (!decode.features.hasNext) return false
-        val (loc, f) = decode.features.next()
+        if (!features.hasNext) return false
+        val (loc, f) = features.next()
         rowsDecoded += 1
         current = toRow(loc, f)
         true

@@ -45,7 +45,7 @@ object Info {
     val h =
       try graft.sources.FlatGeobuf.readHeaderRanged((off, k) => {
         val b = new Array[Byte](k); raf.seek(off); raf.readFully(b); b
-      })
+      }, raf.length())
       finally raf.close()
     val env = h.envelope.map { case (a, b, c, d) => s"RECT($a $b,$c $d)" }.getOrElse("EMPTY")
     s"""fgb: $path

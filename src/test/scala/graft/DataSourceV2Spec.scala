@@ -2,7 +2,7 @@ package graft
 
 import graft.codec.FeatureCodec.{Feature, PInt64, PString}
 import graft.geom.{Envelope, Wkb}
-import graft.sources.{GeomedeaFile, GeomedeaSpark}
+import graft.sources.GeomedeaFile
 import graft.sources.v2.ContainerScan
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
@@ -57,14 +57,23 @@ class DataSourceV2Spec extends AnyFunSuite {
   test("full scan reads every feature of every shard with stable FeatureLocations") {
     val df = spark.read.format("geomedea").load(shardDir)
     assert(df.count() == 80)
-    // row surface matches the functional bridge (same columns, same rows)
-    val viaBridge = GeomedeaSpark.readDir(spark, shardDir)
-    assert(df.columns.toSet == viaBridge.columns.toSet)
+    // row surface: the table columns, and per file the same rows as the
+    // in-memory scan of that file
+    assert(df.columns.toSet == Set("source_file", "page_offset", "feature_offset", "wkb",
+      "props", "prop_keys", "prop_vals", "min_lng", "min_lat", "max_lng", "max_lat"))
     def key(d: DataFrame) = d
       .select(regexp_extract(col("source_file"), "([a-z]+)\\.geomedea", 1),
         col("page_offset"), col("feature_offset"), element_at(col("prop_vals"), 1))
       .collect().map(_.toSeq).toSet
-    assert(key(df) == key(viaBridge))
+    val inMemory = new java.io.File(shardDir).listFiles.filter(_.getName.endsWith(".geomedea"))
+      .flatMap { f =>
+        GeomedeaFile.selectAllLocated(java.nio.file.Files.readAllBytes(f.toPath)).map {
+          case ((pageOff, featOff), feat) => Seq(f.getName.stripSuffix(".geomedea"), pageOff, featOff,
+            graft.sources.GeoJson.propValueString(feat.props.head._2))
+        }
+      }.toSet
+    assert(inMemory.size == 80)
+    assert(key(df) == inMemory)
     // full scan plans one partition per non-empty-or-not file (no filter
     // pushed -> no planning-time prune; the empty file just yields 0 rows)
     assert(scanOf(df).toBatch.planInputPartitions().length == 3)
@@ -142,28 +151,6 @@ class DataSourceV2Spec extends AnyFunSuite {
     assert(scanOf(out).toBatch.planInputPartitions().length == 1)
   }
 
-  test("X5 analog: .geomedea dir split packing follows openCostInBytes/maxPartitionBytes") {
-    // The reference's HTTP reader merges nearby byte ranges (16,000-byte
-    // threshold, packed_r_tree/reader.rs:159-161) and batches feature
-    // fetches (http_reader.rs:121-187). BASELINE.md maps those constants
-    // to Spark's split-packing knobs; this pins the mapping over the
-    // sharded .geomedea directory itself (binaryFile-planned readDir):
-    // a huge openCostInBytes means "never merge" -> one split per file;
-    // zero open cost + one-partition floor packs all files together.
-    def partitionsWith(maxPB: String, openCost: String): Int = {
-      spark.conf.set("spark.sql.files.maxPartitionBytes", maxPB)
-      spark.conf.set("spark.sql.files.openCostInBytes", openCost)
-      spark.conf.set("spark.sql.files.minPartitionNum", "1")
-      try GeomedeaSpark.readDir(spark, shardDir).rdd.getNumPartitions
-      finally Seq("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes",
-        "spark.sql.files.minPartitionNum").foreach(spark.conf.unset)
-    }
-    val onePerFile = partitionsWith("134217728", (1L << 30).toString)
-    assert(onePerFile == 3, s"huge open cost must plan one split per file, got $onePerFile")
-    val packed = partitionsWith("134217728", "0")
-    assert(packed == 1, s"zero open cost + 1-partition floor must pack all files, got $packed")
-  }
-
   test("limit pushdown: plans only enough files, decodes only enough pages, reports metrics") {
     val df = spark.read.format("geomedea").load(shardDir).limit(10)
     assert(df.count() == 10)
@@ -195,18 +182,31 @@ class DataSourceV2Spec extends AnyFunSuite {
     assert(scan.supportedCustomMetrics().map(_.name()).toSet ==
       Set("pagesDecoded", "bytesDecoded", "rowsDecoded"))
 
-    // file-level: the range-read limited scan is exactly the full scan's
-    // prefix, and its transfer is header + needed pages only
+    // file-level: a limit is a prefix of the one stream — exactly the
+    // full scan's prefix, and its transfer is header + needed pages only
     val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
       new java.io.File(shardDir).listFiles.filter(_.getName.endsWith(".geomedea"))
         .minBy(_.getName).toString))
     val all = GeomedeaFile.selectAllLocated(bytes)
-    var transferred = 0L
-    val lim = GeomedeaFile.selectLimitRange((off, k) => {
-      transferred += k; bytes.slice(off.toInt, off.toInt + k)
-    }, 7)
-    assert(lim.features.map(_._1) == all.take(7).map(_._1))
-    assert(lim.features.map(f => Wkb.asText(f._2.geom)) ==
+    val (compressed, _, featureCount) = GeomedeaFile.header(bytes)
+    val dataStart = GeomedeaFile.dataStart(featureCount)
+    var transferred = graft.codec.FeatureCodec.HeaderBytes.toLong
+    val in = new java.io.DataInputStream(new java.io.InputStream {
+      private var pos = dataStart.toInt
+      override def read(): Int = {
+        val b = Array.ofDim[Byte](1)
+        if (read(b, 0, 1) < 0) -1 else b(0) & 0xFF
+      }
+      override def read(b: Array[Byte], off: Int, len: Int): Int = {
+        val n = math.min(len, bytes.length - pos)
+        if (n <= 0) -1
+        else { System.arraycopy(bytes, pos, b, off, n); pos += n; transferred += n; n }
+      }
+    })
+    val lim = GeomedeaFile.selectPageRange(in, compressed, dataStart, bytes.length.toLong,
+      dataStart).take(7).toVector
+    assert(lim.map(_._1) == all.take(7).map(_._1))
+    assert(lim.map(f => Wkb.asText(f._2.geom)) ==
       all.take(7).map(f => Wkb.asText(f._2.geom)))
     assert(transferred < bytes.length / 2,
       s"bounded transfer: $transferred of ${bytes.length} bytes")
@@ -480,13 +480,16 @@ class DataSourceV2Spec extends AnyFunSuite {
       s"${scan.bytesTransferred} of ${bytes.length}; tree=$treeBytes")
   }
 
-  test("selectAllStream: page-by-page full scan equals the materialized scan") {
+  test("selectPageRange over the whole data section equals the materialized scan") {
     val bytes = rangedFixture
     val expect = GeomedeaFile.selectAllLocated(bytes)
+    val (compressed, _, featureCount) = GeomedeaFile.header(bytes)
+    val dataStart = GeomedeaFile.dataStart(featureCount)
     var pages = 0L
-    val got = GeomedeaFile.selectAllStream(
-      new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes)),
-      onPage = _ => pages += 1).toVector
+    val got = GeomedeaFile.selectPageRange(
+      new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes, dataStart.toInt,
+        bytes.length - dataStart.toInt)),
+      compressed, dataStart, bytes.length.toLong, dataStart, onPage = _ => pages += 1).toVector
     assert(got.map(_._1) == expect.map(_._1))
     assert(got.map(f => Wkb.asText(f._2.geom)) == expect.map(f => Wkb.asText(f._2.geom)))
     assert(pages == GeomedeaFile.header(bytes)._2)

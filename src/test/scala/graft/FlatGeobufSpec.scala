@@ -289,9 +289,11 @@ class FlatGeobufSpec extends AnyFunSuite {
       }
     }
     // streaming full scan == materialized, with stable offsets
-    val streamed = FlatGeobuf.selectAllStream(
-      new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes)),
-      bytes.length.toLong).toVector
+    val h = FlatGeobuf.readHeader(bytes)
+    val streamed = FlatGeobuf.selectRangeStream(
+      new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes,
+        h.featuresOffset.toInt, bytes.length - h.featuresOffset.toInt)),
+      h, h.featuresOffset, bytes.length.toLong).toVector
     assert(streamed.map(f => Wkb.asText(f._2.geom)) ==
       FlatGeobuf.selectAll(bytes).map(f => Wkb.asText(f.geom)))
     assert(streamed.map(_._1) == streamed.map(_._1).sorted, "offsets ascend")
@@ -700,21 +702,47 @@ class FlatGeobufSpec extends AnyFunSuite {
 
   test("fuzz: mutated containers never hang the reader (exceptions are fine, loops are not)") {
     // planning runs on the driver over UNTRUSTED bytes — a corrupt file
-    // must fail, not spin (the index_node_size=1 class of bug). Seeded
-    // byte flips over a real container; every parse either returns or
-    // throws. The suite's own timeout is the hang detector.
+    // must fail, not spin (the index_node_size=1 class of bug) and not
+    // size an allocation from a corrupt length field. Seeded byte flips
+    // over a real container; every parse — the in-memory readers, the one
+    // forward stream and the ranged bbox scan — either returns or throws,
+    // and allocates at most 64 MB. The suite's own timeout is the hang
+    // detector.
+    import scala.util.control.NonFatal
+    val threads = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val q = Envelope.fromDegrees(0, 0, 5, 5)
+    var parsed = 0; var rejected = 0
+    def parse(what: String, b: Array[Byte])(body: => Any): Boolean = {
+      val before = threads.getCurrentThreadAllocatedBytes
+      val ok = try { body; true } catch { case NonFatal(_) => false }
+      val used = threads.getCurrentThreadAllocatedBytes - before
+      assert(used <= (64L << 20), s"$what allocated $used bytes on a mutated file")
+      ok
+    }
+    // a positioned read, strict like FSDataInputStream.readFully
+    def ranged(b: Array[Byte]): (Long, Int) => Array[Byte] = (off, k) => {
+      require(off >= 0 && k >= 0 && off + k <= b.length, s"read [$off, +$k) past ${b.length}")
+      java.util.Arrays.copyOfRange(b, off.toInt, off.toInt + k)
+    }
+    def streamAt(b: Array[Byte], at: Long) =
+      new java.io.DataInputStream(new java.io.ByteArrayInputStream(b, at.toInt, b.length - at.toInt))
     val base = FlatGeobuf.write((0 until 50).map(i => pt(i % 10, i / 10, i.toLong)))
     val rnd = new scala.util.Random(4242)
-    var parsed = 0; var rejected = 0
     (0 until 300).foreach { _ =>
       val b = base.clone()
       (0 until 1 + rnd.nextInt(4)).foreach { _ =>
         b(rnd.nextInt(b.length)) = rnd.nextInt(256).toByte
       }
-      try { FlatGeobuf.selectAll(b); parsed += 1 }
-      catch { case _: Throwable => rejected += 1 }
-      try { FlatGeobuf.selectBbox(b, Envelope.fromDegrees(0, 0, 5, 5)); () }
-      catch { case _: Throwable => () }
+      if (parse("FlatGeobuf.selectAll", b)(FlatGeobuf.selectAll(b))) parsed += 1 else rejected += 1
+      parse("FlatGeobuf.selectBbox", b)(FlatGeobuf.selectBbox(b, q))
+      parse("FlatGeobuf.selectRangeStream", b) {
+        val h = FlatGeobuf.readHeaderRanged(ranged(b), b.length.toLong)
+        FlatGeobuf.selectRangeStream(streamAt(b, h.featuresOffset), h, h.featuresOffset,
+          b.length.toLong).size
+      }
+      parse("FlatGeobuf.selectBboxRange", b)(
+        FlatGeobuf.selectBboxRange(ranged(b), b.length.toLong, q).size)
     }
     assert(parsed + rejected == 300)
     // the geomedea container reader gets the same treatment
@@ -725,11 +753,35 @@ class FlatGeobufSpec extends AnyFunSuite {
       (0 until 1 + rnd.nextInt(4)).foreach { _ =>
         b(rnd.nextInt(b.length)) = rnd.nextInt(256).toByte
       }
-      try { graft.sources.GeomedeaFile.selectAll(b); () }
-      catch { case _: Throwable => () }
-      try { graft.sources.GeomedeaFile.selectBbox(b, Envelope.fromDegrees(0, 0, 5, 5)); () }
-      catch { case _: Throwable => () }
+      import graft.sources.GeomedeaFile
+      parse("GeomedeaFile.selectAll", b)(GeomedeaFile.selectAll(b))
+      parse("GeomedeaFile.selectBbox", b)(GeomedeaFile.selectBbox(b, q))
+      parse("GeomedeaFile.selectPageRange", b) {
+        val (compressed, _, featureCount) = GeomedeaFile.header(b)
+        val dataStart = GeomedeaFile.dataStart(featureCount)
+        GeomedeaFile.selectPageRange(streamAt(b, dataStart), compressed, dataStart,
+          b.length.toLong, dataStart).size
+      }
+      parse("GeomedeaFile.selectBboxRange", b)(
+        GeomedeaFile.selectBboxRange(ranged(b), b.length.toLong, q).size)
+      parse("GeomedeaFile.countBboxRange", b)(
+        GeomedeaFile.countBboxRange(ranged(b), b.length.toLong, q))
     }
+    // a page whose decoded length is under the 1 GiB cap but is not what
+    // its zstd frame declares is refused before the output is allocated
+    import graft.sources.GeomedeaFile
+    val forged = gmBase.clone()
+    val (compressed, _, featureCount) = GeomedeaFile.header(forged)
+    val dataStart = GeomedeaFile.dataStart(featureCount)
+    java.nio.ByteBuffer.wrap(forged).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      .putInt(dataStart.toInt + 4, 512 << 20)
+    val all = Envelope(Int.MinValue, Int.MinValue, Int.MaxValue, Int.MaxValue)
+    assert(!parse("forged selectAll", forged)(GeomedeaFile.selectAll(forged)))
+    assert(!parse("forged selectBbox", forged)(GeomedeaFile.selectBbox(forged, all)))
+    assert(!parse("forged selectPageRange", forged)(GeomedeaFile.selectPageRange(
+      streamAt(forged, dataStart), compressed, dataStart, forged.length.toLong, dataStart).size))
+    assert(!parse("forged selectBboxRange", forged)(
+      GeomedeaFile.selectBboxRange(ranged(forged), forged.length.toLong, all).size))
   }
 
   test("geomedea vs FlatGeobuf head-to-head on the same data (the README comparison)") {
@@ -760,7 +812,7 @@ class FlatGeobufSpec extends AnyFunSuite {
     s
   }
 
-  test("Spark bridge: write -> read parity and pruned readDir") {
+  test("Spark bridge: write -> read parity and pruned load(dir)") {
     val spark = org.apache.spark.sql.SparkSession.builder().master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false").getOrCreate()
@@ -778,16 +830,22 @@ class FlatGeobufSpec extends AnyFunSuite {
     val one = FlatGeobufSpark.read(spark, s"$dir/a.fgb")
     assert(one.count() == 60)
     assert(one.columns.contains("min_lng"))
-    val all = FlatGeobufSpark.readDir(spark, dir)
-    assert(all.count() == 60 + 30)
-    // bbox-pruned dir scan equals post-filter
+    // collect, not count: COUNT(*) pushes to headers and would skip the read
+    val all = spark.read.format("flatgeobuf").load(dir)
+    assert(all.collect().length == 60 + 30)
+    // bbox-pruned dir scan equals a post-filter of the driver-side reads
+    import org.apache.spark.sql.functions.col
     val q = Envelope.fromDegrees(-0.5, -0.5, 2.5, 2.5)
-    val pruned = FlatGeobufSpark.readDir(spark, dir, Some(q)).count()
-    val brute = all.where(
-      org.apache.spark.sql.functions.col("max_lng") >= q.minLng &&
-        org.apache.spark.sql.functions.col("max_lat") >= q.minLat &&
-        org.apache.spark.sql.functions.col("min_lng") <= q.maxLng &&
-        org.apache.spark.sql.functions.col("min_lat") <= q.maxLat).count()
+    def window(d: org.apache.spark.sql.DataFrame) = d.where(
+      col("max_lng") >= q.minLng && col("max_lat") >= q.minLat &&
+        col("min_lng") <= q.maxLng && col("min_lat") <= q.maxLat)
+    val pruned = window(all).collect().length
+    val brute = Seq("a", "b").map(f => FlatGeobufSpark.read(spark, s"$dir/$f.fgb"))
+      .reduce(_ union _).collect().count { r =>
+        r.getAs[Int]("max_lng") >= q.minLng && r.getAs[Int]("max_lat") >= q.minLat &&
+          r.getAs[Int]("min_lng") <= q.maxLng && r.getAs[Int]("min_lat") <= q.maxLat
+      }
+    assert(brute > 0 && brute < 90)
     assert(pruned == brute)
   }
 }

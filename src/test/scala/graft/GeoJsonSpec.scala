@@ -229,22 +229,27 @@ class GeoJsonSpec extends AnyFunSuite {
     for (i <- 0 until 3)
       GeomedeaSpark.write(df.where(col("feature_id") % 3 === i), s"$dir/part-$i.geomedea",
         compressed = i % 2 == 0, pageSizeGoal = 8 * 1024)
-    val all = GeomedeaSpark.readDir(spark, dir)
-    assert(all.count() == 1249)
-    assert(all.select("source_file").distinct().count() == 3)
+    val all = spark.read.format("geomedea").load(dir)
+    val allRows = all.collect()
+    assert(allRows.length == 1249)
+    assert(allRows.map(_.getAs[String]("source_file")).distinct.length == 3)
     val q = Envelope.fromDegrees(90, 40, 100, 50)
-    // pushed bbox (index-pruned per file) equals post-hoc filtering
-    val pushedDf = GeomedeaSpark.readDir(spark, dir, bbox = Some(q))
-    val post = all.where(
+    // pushed bbox (files and index pruned) equals post-hoc filtering of
+    // the full scan's rows
+    val pushedDf = all.where(
       col("max_lng") >= q.minLng && col("max_lat") >= q.minLat &&
         col("min_lng") <= q.maxLng && col("min_lat") <= q.maxLat)
-    assert(pushedDf.count() == 3 && post.count() == 3)
+    val post = allRows.filter(r =>
+      r.getAs[Int]("max_lng") >= q.minLng && r.getAs[Int]("max_lat") >= q.minLat &&
+        r.getAs[Int]("min_lng") <= q.maxLng && r.getAs[Int]("min_lat") <= q.maxLat)
     // (source_file, page_offset, feature_offset) is a STABLE id: the
     // pruned scan's ids are exactly the full scan's ids for those rows
-    def ids(d: org.apache.spark.sql.DataFrame) =
-      d.select("source_file", "page_offset", "feature_offset")
-        .collect().map(_.toSeq).toSet
-    assert(ids(pushedDf) == ids(post))
+    def ids(rows: Array[org.apache.spark.sql.Row]) =
+      rows.map(r => Seq(r.getAs[String]("source_file"), r.getAs[Long]("page_offset"),
+        r.getAs[Int]("feature_offset"))).toSet
+    val pushed = pushedDf.collect()
+    assert(pushed.length == 3 && post.length == 3)
+    assert(ids(pushed) == ids(post))
   }
 
   test("export job emits parseable features preserving property order") {
