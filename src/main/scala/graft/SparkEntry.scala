@@ -511,9 +511,9 @@ object SparkEntry {
         .select(col("poly_id"), col("doc_id")).orderBy("poly_id", "doc_id")
     }),
 
-    // spatial join, strategy 5: distance-within (DWithin) join — the
-    // radius bounds the cell ring a priori (no histogram pass), one
-    // broadcast cell equi-join + exact distance filter, no cross product
+    // spatial join, strategy 5: distance-within (DWithin) join — kNN's
+    // keyed probe with the radius as its bound: one broadcast key
+    // equi-join + exact distance filter, no cross product
     "q52_distance_join" -> ((s, dir) => {
       SpatialJoin.distanceJoin(geo(s, dir),
           InterleavedDocs.nationQueryPoints(s, dir), radius = 300000000L)

@@ -128,10 +128,6 @@ object GraftFunctions {
     inv(Adapters.getClass, ArrayType(LongType, containsNull = false), "coverKeysEnv",
       Seq(i(minLng), i(minLat), i(maxLng), i(maxLat), ex(lit(maxRes))))
 
-  def gmKRing(cell: Column, res: Int, k: Column): Column =
-    inv(Adapters.getClass, ArrayType(LongType, containsNull = false), "kring",
-      Seq(l(cell), ex(lit(res)), i(k)))
-
   def gmTile(lng: Column, lat: Column, zoom: Int): Column =
     inv(Adapters.getClass, LongType, "cellId", Seq(i(lng), i(lat), ex(lit(zoom))))
 

@@ -83,6 +83,14 @@ object Knn {
       heap.head
     }
 
+  /** The at most 4 level-tagged keys covering the box q ± r, clamped to
+    * the Int range ([[Cells.coverKeys]]): each box hit matches one key.
+    */
+  private[jobs] def boxKeys(qlng: Int, qlat: Int, r: Long): Array[Long] = {
+    def c(v: Long): Int = math.max(Int.MinValue.toLong, math.min(Int.MaxValue.toLong, v)).toInt
+    Cells.coverKeys(Envelope(c(qlng - r), c(qlat - r), c(qlng + r), c(qlat + r)), Cells.MaxRes)
+  }
+
   /** One query's bound and the level-tagged keys covering every point
     * within it. Pure: runs on the driver for broadcastable query sets and
     * in the executor flatMap past them.
@@ -90,70 +98,68 @@ object Knn {
   private def probe(sample: Array[(Int, Int)], qlng: Int, qlat: Int, k: Int): (Double, Array[Long]) = {
     val d = bound(sample, qlng, qlat, k)
     if (d.isInfinite) (d, Cells.pointKeys(qlng, qlat, 0))
-    else {
-      val r = math.ceil(math.sqrt(d)).toLong + 1
-      def c(v: Long): Int = math.max(Int.MinValue.toLong, math.min(Int.MaxValue.toLong, v)).toInt
-      (d, Cells.coverKeys(Envelope(c(qlng - r), c(qlat - r), c(qlng + r), c(qlat + r)), Cells.MaxRes))
-    }
+    else (d, boxKeys(qlng, qlat, math.ceil(math.sqrt(d)).toLong + 1))
   }
 
-  /** points: (doc_id, lng, lat, ...); queries: (query_id, q_lng, q_lat).
-    * Returns (query_id, rank, doc_id, dist2), rank 1..k. Exact.
-    *
-    * Query sets up to `maxBroadcast` rows are planned on the driver and
-    * broadcast into the key join (the point side never shuffles), and
-    * points emit keys only at the levels those probes use. Larger sets
-    * switch AUTOMATICALLY to the same plan run distributed: the sample is
-    * broadcast, each query plans its own probe inside a flatMap, points
-    * emit every level 0..MaxRes, and the key join shuffles both sides.
-    * Results are identical; only the join strategy changes.
-    *
-    * The broadcastability probe evaluates the query plan once (a
-    * short-circuiting `limit(maxBroadcast+1)`), and the distributed
-    * branch then re-evaluates it in full — cache expensive query plans
-    * before calling, and never pass a non-deterministic one (a
-    * re-sampled plan could diverge between probe and join).
+  /** The probe side of a keyed distance query, and the key levels in
+    * use: each query (query_id, q_lng, q_lat) with `f(q_lng, q_lat)` =
+    * (bound, keys) becomes rows (query_id, q_lng, q_lat, bound, key). Up
+    * to `maxBroadcast` queries are planned on the driver and broadcast (the
+    * point side never shuffles); larger sets switch AUTOMATICALLY to `f`
+    * in an executor flatMap, every level, and a shuffled key join. The
+    * branch-picking collect holds at most maxBroadcast+1 rows; the
+    * distributed branch re-evaluates the query plan, so cache an expensive
+    * one and never pass a non-deterministic one. A query with a null id
+    * or coordinate matches nothing.
     */
-  def knn(points: DataFrame, queries: DataFrame, k: Int,
-          maxBroadcast: Int = MaxQueries): DataFrame = {
-    val spark = points.sparkSession
+  private[jobs] def planProbes(queries: DataFrame, maxBroadcast: Int)(
+      f: (Int, Int) => (Double, Array[Long])): (DataFrame, Seq[Int]) = {
+    val spark = queries.sparkSession
     import spark.implicits._
-
-    val smp = sample(points)
-    // same casts in both branches: the driver branch must not crash on
-    // int query ids / long coords the other path accepts
+    // same casts in both branches
     val qs = queries.select(col("query_id").cast("long"), col("q_lng").cast("int"),
-      col("q_lat").cast("int"))
-    // the limit bounds the branch-picking collect itself: an oversized set
-    // costs maxBroadcast+1 rows of driver memory, never the full set
+      col("q_lat").cast("int")).na.drop()
     val qRows: Array[Row] = qs.limit(maxBroadcast + 1).collect()
-    val (probes, levels) = if (qRows.length <= maxBroadcast) {
+    if (qRows.length <= maxBroadcast) {
       val planned = qRows.toSeq.flatMap { row =>
         val (qid, qlng, qlat) = (row.getLong(0), row.getInt(1), row.getInt(2))
-        val (d, keys) = probe(smp, qlng, qlat, k)
+        val (d, keys) = f(qlng, qlat)
         keys.map(key => (qid, qlng, qlat, d, key))
       }
       (broadcast(planned.toDF("query_id", "q_lng", "q_lat", "bound", "key")),
         planned.map(p => Cells.keyLevel(p._5)).distinct)
-    } else {
-      val bc = spark.sparkContext.broadcast(smp)
-      val kk = k
+    } else
       (qs.as[(Long, Int, Int)].flatMap { case (qid, qlng, qlat) =>
-        val (d, keys) = probe(bc.value, qlng, qlat, kk)
+        val (d, keys) = f(qlng, qlat)
         keys.map(key => (qid, qlng, qlat, d, key))
       }.toDF("query_id", "q_lng", "q_lat", "bound", "key"), 0 to Cells.MaxRes)
-    }
+  }
 
+  /** The keyed probe: points (doc_id, lng, lat) keyed at the `levels` in
+    * use, equi-joined to the planned probes, pairs with dist2 <= bound.
+    */
+  private[jobs] def withinBound(points: DataFrame, probes: DataFrame, levels: Seq[Int]): DataFrame = {
     val top = if (levels.isEmpty) 0 else levels.max
     val pk = gmPointKeys(col("lng"), col("lat"), top)
     val keys = if (levels.size == top + 1) pk else filter(pk, (_, level) => level.isin(levels: _*))
     val pts = points.select(col("doc_id"), col("lng"), col("lat"), explode(keys).as("key"))
     val dx = (col("lng").cast("long") - col("q_lng").cast("long")).cast("double")
     val dy = (col("lat").cast("long") - col("q_lat").cast("long")).cast("double")
-    val w = Window.partitionBy(col("query_id")).orderBy(col("dist2").asc, col("doc_id").asc)
     pts.join(probes, "key")
       .withColumn("dist2", dx * dx + dy * dy)
       .where(col("dist2") <= col("bound"))
+  }
+
+  /** points: (doc_id, lng, lat, ...); queries: (query_id, q_lng, q_lat).
+    * Returns (query_id, rank, doc_id, dist2), rank 1..k. Exact, on either
+    * [[planProbes]] branch; only the join strategy changes.
+    */
+  def knn(points: DataFrame, queries: DataFrame, k: Int,
+          maxBroadcast: Int = MaxQueries): DataFrame = {
+    val smp = sample(points)
+    val (probes, levels) = planProbes(queries, maxBroadcast)(probe(smp, _, _, k))
+    val w = Window.partitionBy(col("query_id")).orderBy(col("dist2").asc, col("doc_id").asc)
+    withinBound(points, probes, levels)
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
       .select("query_id", "rank", "doc_id", "dist2")

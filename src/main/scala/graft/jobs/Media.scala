@@ -60,31 +60,6 @@ object Media {
       .mapPartitions(_.map(decodeStub))
   }
 
-  /** Resize stage (1 -> 1 map shape): deterministic stride subsample of
-    * the payload to the target dimensions' byte budget — the STUB stands
-    * in for a real image resize; metadata carries the new dims, plumbing
-    * (typed map, constant memory per row) is the real thing.
-    */
-  def resize(media: DataFrame, targetW: Int, targetH: Int): Dataset[MediaRow] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    require(targetW > 0 && targetH > 0 && targetW.toLong * targetH <= (1L << 30),
-      s"target dims ${targetW}x$targetH out of range (w*h must be <= 2^30)")
-    val budget = math.max(1, targetW * targetH / 64)
-    media.select("doc_id", "media_type", "width", "height", "payload")
-      .as[MediaRow]
-      .map { row =>
-        // >>> STUB resize: replace with a real scaler <<<
-        val out =
-          if (row.payload.length <= budget) row.payload
-          else {
-            val stride = row.payload.length.toDouble / budget
-            Array.tabulate(budget)(i => row.payload((i * stride).toInt))
-          }
-        MediaRow(row.doc_id, row.media_type, targetW, targetH, out)
-      }
-  }
-
   final case class Frame(doc_id: Long, frame_idx: Int, n_bytes: Int, checksum: Long)
 
   /** Frame sampling for video rows (1 -> N flatMap shape): the payload is

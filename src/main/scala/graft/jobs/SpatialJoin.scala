@@ -27,12 +27,12 @@ import org.apache.spark.sql.functions._
   *     literal byte blob, probed per row (reader: packed_r_tree/reader.rs:
   *     25-49) producing candidate indices, then exact refinement. No
   *     shuffle of the probe side at all.
-  *  3. [[saltedCellJoin]] — a single-level cell join ([[DefaultRes]])
-  *     with the hot-cell skew handled explicitly, for when the planner may
-  *     pick a shuffle: build rows replicate x saltFactor, probe rows pick a
-  *     deterministic salt, so one hot cell spreads over saltFactor tasks
+  *  3. [[saltedCellJoin]] — [[cellJoin]]'s level-tagged keys with the
+  *     hot-key skew handled explicitly, for when the planner may pick a
+  *     shuffle: build rows replicate x [[SaltFactor]], probe rows pick a
+  *     deterministic salt, so one hot key spreads over SaltFactor tasks
   *     (north_rule requires explicit skew handling; AQE skew join remains
-  *     on as backstop).
+  *     on as backstop). Its candidate pairs are cellJoin's.
   *
   * Points DF contract: columns (lng, lat) scaled ints + carried columns.
   * Polys DF contract: (poly_id, poly_wkb, p_min_lng, p_min_lat, p_max_lng,
@@ -42,12 +42,14 @@ import org.apache.spark.sql.functions._
   */
 object SpatialJoin {
 
-  /** Fixed cell level of the single-level strategies: [[saltedCellJoin]],
-    * [[distanceJoin]] and [[polyPolyJoin]]. [[cellJoin]], [[antiJoin]] and
-    * [[zonalStats]] pick a level per polygon instead (capped at
-    * Cells.MaxRes by default).
+  /** Fixed cell level of [[polyPolyJoin]], whose report-once rule needs
+    * both covers at one level. The point joins key at levels up to
+    * Cells.MaxRes, each polygon or query box at its own level.
     */
   val DefaultRes = 4
+
+  /** How many tasks [[saltedCellJoin]] spreads one hot key over. */
+  val SaltFactor = 8
 
   // envelope conjuncts first, so only envelope hits reach containsWkb
   private def refined(joined: DataFrame): DataFrame =
@@ -55,15 +57,22 @@ object SpatialJoin {
       col("lat") >= col("p_min_lat") && col("lat") <= col("p_max_lat") &&
       stContains(col("poly_wkb"), col("lng"), col("lat")))
 
-  /** Strategy 1: multi-level cell-key equi-join (broadcast the exploded
-    * build side, at most 4 rows per polygon). `res` caps the finest level.
-    * Exact with no dedup: a point in a polygon's envelope matches exactly
-    * one of its keys (see [[Cells.coverKeys]]).
+  /** The level-tagged `cell` keys of (points, polys) both cell joins
+    * share: a point's at every level, a polygon's at most 4 at its own
+    * level. A point in a polygon's envelope matches exactly one of them
+    * ([[Cells.coverKeys]]).
     */
-  def cellJoin(points: DataFrame, polys: DataFrame, res: Int = Cells.MaxRes): DataFrame = {
-    val polyCells = polys.withColumn("cell",
-      explode(gmCoverKeys(col("p_min_lng"), col("p_min_lat"), col("p_max_lng"), col("p_max_lat"), res)))
-    val pts = points.withColumn("cell", explode(gmPointKeys(col("lng"), col("lat"), res)))
+  private[graft] def cellKeys(points: DataFrame, polys: DataFrame): (DataFrame, DataFrame) =
+    (points.withColumn("cell", explode(gmPointKeys(col("lng"), col("lat"), Cells.MaxRes))),
+      polys.withColumn("cell", explode(gmCoverKeys(col("p_min_lng"), col("p_min_lat"),
+        col("p_max_lng"), col("p_max_lat"), Cells.MaxRes))))
+
+  /** Strategy 1: multi-level cell-key equi-join (broadcast the exploded
+    * build side, at most 4 rows per polygon), keyed by [[cellKeys]]. Exact
+    * with no dedup.
+    */
+  def cellJoin(points: DataFrame, polys: DataFrame): DataFrame = {
+    val (pts, polyCells) = cellKeys(points, polys)
     refined(pts.join(broadcast(polyCells), Seq("cell"), "inner")).drop("cell")
   }
 
@@ -100,18 +109,21 @@ object SpatialJoin {
     refined(pts.join(broadcast(polys), Seq("poly_id"), "inner"))
   }
 
-  /** Strategy 3: salted cell join for skewed hot cells. Identical output to
-    * [[cellJoin]]; the salt only spreads the shuffle/probe work.
+  /** [[cellKeys]] plus a `salt`: each point hashes its doc_id into
+    * [0, SaltFactor), each polygon key is replicated once per salt.
     */
-  def saltedCellJoin(points: DataFrame, polys: DataFrame,
-                     res: Int = DefaultRes, saltFactor: Int = 8): DataFrame = {
-    val polyCells = polys
-      .withColumn("cell",
-        explode(gmCellCover(col("p_min_lng"), col("p_min_lat"), col("p_max_lng"), col("p_max_lat"), res)))
-      .withColumn("salt", explode(lit((0 until saltFactor).toArray)))
-    val pts = points
-      .withColumn("cell", gmCell(col("lng"), col("lat"), res))
-      .withColumn("salt", pmod(xxhash64(col("doc_id")), lit(saltFactor)).cast("int"))
+  private[graft] def saltedKeys(points: DataFrame, polys: DataFrame): (DataFrame, DataFrame) = {
+    val (pts, polyCells) = cellKeys(points, polys)
+    (pts.withColumn("salt", pmod(xxhash64(col("doc_id")), lit(SaltFactor)).cast("int")),
+      polyCells.withColumn("salt", explode(lit((0 until SaltFactor).toArray))))
+  }
+
+  /** Strategy 3: salted cell join for skewed hot keys ([[saltedKeys]]), no
+    * broadcast hint. Identical output and candidate pairs to [[cellJoin]];
+    * the salt only spreads the shuffle/probe work.
+    */
+  def saltedCellJoin(points: DataFrame, polys: DataFrame): DataFrame = {
+    val (pts, polyCells) = saltedKeys(points, polys)
     refined(pts.join(polyCells, Seq("cell", "salt"), "inner")).drop("cell", "salt")
   }
 
@@ -134,39 +146,26 @@ object SpatialJoin {
     refined(pts.join(polyChunks, Seq("hchunk"), "inner")).drop("hchunk")
   }
 
-  /** Strategy 5 (DWithin): distance-within join — every (query, point)
-    * pair with squared Euclidean distance (scaled-int space, computed in
-    * double like [[Knn]] — IEEE-reproducible by the SQL oracle) at most
-    * radius². The radius bounds the search ring a priori, so unlike kNN
-    * no histogram pass is needed: each query explodes to the cells that
-    * can contain a match — Chebyshev ring k = floor(radius/minCellDim)+1,
-    * which dominates any per-axis cell-index shift a coordinate move of
-    * `radius` can cause — and one cell equi-join + exact distance filter
-    * finishes. Fully declarative: no driver collect, one shuffle-free
-    * broadcast join when the query side is small (`broadcastQueries`,
-    * default), a plain shuffled equi-join AQE can skew-split otherwise.
+  /** Strategy 5 (DWithin): every (query, point) pair with squared
+    * Euclidean distance (scaled-int space, in double like [[Knn]] —
+    * IEEE-reproducible by the SQL oracle) at most radius². kNN's keyed
+    * probe ([[Knn.planProbes]], [[Knn.withinBound]]) with a fixed bound: a
+    * point within the radius lies in the box q ± radius and matches
+    * exactly one of its cover keys (no dedup).
     *
     * points: (doc_id, lng, lat, ...); queries: (query_id, q_lng, q_lat).
-    * Returns (query_id, doc_id) pairs. Exact (bruteForce-equal).
+    * Returns (query_id, doc_id), query_id as a long. Exact.
     */
   def distanceJoin(points: DataFrame, queries: DataFrame, radius: Long,
-                   res: Int = DefaultRes,
-                   broadcastQueries: Boolean = true): DataFrame = {
+                   maxBroadcast: Int = Knn.MaxQueries): DataFrame = {
     require(radius >= 0, s"radius must be >= 0; got $radius")
-    val minDim = math.min(Cells.cellWidth(res), Cells.cellHeight(res))
-    // clamp at the grid size BEFORE narrowing: kRing clips to the world
-    // anyway, and an unclamped huge radius would overflow the Int and
-    // silently shrink the ring (dropping matches)
-    val k = math.min(Cells.cellsPerAxis(res), radius / minDim + 1).toInt
-    val qcells = queries
-      .withColumn("cell",
-        explode(gmKRing(gmCell(col("q_lng"), col("q_lat"), res), res, lit(k))))
-    val pts = points.withColumn("cell", gmCell(col("lng"), col("lat"), res))
-    val dx = (col("lng").cast("long") - col("q_lng").cast("long")).cast("double")
-    val dy = (col("lat").cast("long") - col("q_lat").cast("long")).cast("double")
-    pts.join(if (broadcastQueries) broadcast(qcells) else qcells, Seq("cell"), "inner")
-      .where(dx * dx + dy * dy <= lit(radius.toDouble * radius.toDouble))
-      .select("query_id", "doc_id")
+    val bound = radius.toDouble * radius.toDouble
+    // 2^33 exceeds the world span on both axes: a box that wide already
+    // covers every point, and q ± radius cannot overflow a Long
+    val r = math.min(radius, 1L << 33)
+    val (probes, levels) = Knn.planProbes(queries, maxBroadcast)((qlng, qlat) =>
+      (bound, Knn.boxKeys(qlng, qlat, r)))
+    Knn.withinBound(points, probes, levels).select("query_id", "doc_id")
   }
 
   /** Spatial ANTI-join: the points contained by NO polygon (the
@@ -177,8 +176,8 @@ object SpatialJoin {
     * or hash on a key, never a cross product, and the anti side
     * deduplicates matches map-side (semi-join output is id-only).
     */
-  def antiJoin(points: DataFrame, polys: DataFrame, res: Int = Cells.MaxRes): DataFrame = {
-    val matched = cellJoin(points.select("doc_id", "lng", "lat"), polys, res)
+  def antiJoin(points: DataFrame, polys: DataFrame): DataFrame = {
+    val matched = cellJoin(points.select("doc_id", "lng", "lat"), polys)
       .select("doc_id").distinct()
     points.join(matched, Seq("doc_id"), "left_anti")
   }
@@ -190,8 +189,8 @@ object SpatialJoin {
     * against the BROADCAST aggregate output (per-poly rows — tiny by the
     * cellJoin contract) — never a shuffle of either side.
     */
-  def zonalStats(points: DataFrame, polys: DataFrame, res: Int = Cells.MaxRes): DataFrame = {
-    val zones = cellJoin(points, polys, res)
+  def zonalStats(points: DataFrame, polys: DataFrame): DataFrame = {
+    val zones = cellJoin(points, polys)
       .groupBy("poly_id")
       .agg(count(lit(1)).as("n"),
         min("lng").cast("long").as("z_min_lng"), min("lat").cast("long").as("z_min_lat"),

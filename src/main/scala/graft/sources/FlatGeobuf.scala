@@ -974,22 +974,20 @@ object FlatGeobuf {
     * [[PackedRTree.descend]]) -> hit feature blocks via
     * batched forward windows (leaf offsets are non-decreasing because
     * leaves follow the Hilbert layout). Streams with O(window) memory.
+    * `h` is the file's header, already read by [[readHeaderRanged]]; its
+    * bytes count once in [[bytesTransferred]].
     */
-  final class RangedFgbScan(readRange: (Long, Int) => Array[Byte], fileLen: Long,
+  final class RangedFgbScan(readRange: (Long, Int) => Array[Byte], fileLen: Long, h: FgbHeader,
                             q: Envelope, batchBytes: Int)
       extends Iterator[(Long, Feature)] { // (feature byte offset = the format's stable id, feature)
-    private var _requests = 0L
-    private var _transferred = 0L
-    def requests: Long = _requests
+    private var _transferred = h.indexOffset
     def bytesTransferred: Long = _transferred
 
     private def fetch(off: Long, len: Int): Array[Byte] = {
       val n = math.min(len.toLong, fileLen - off).toInt
-      _requests += 1; _transferred += n
+      _transferred += n
       readRange(off, n)
     }
-
-    private val h = readHeaderRanged(fetch, fileLen)
 
     private val offsets: Vector[Long] = {
       require(h.featuresCount == 0 || h.nodeSize > 0, "FGB file has no index; use selectAll + filter")
@@ -1039,7 +1037,7 @@ object FlatGeobuf {
 
   def selectBboxRange(readRange: (Long, Int) => Array[Byte], fileLen: Long, q: Envelope,
                       batchBytes: Int = GeomedeaFile.PageBatchBytes): RangedFgbScan =
-    new RangedFgbScan(readRange, fileLen, q, batchBytes)
+    new RangedFgbScan(readRange, fileLen, readHeaderRanged(readRange, fileLen), q, batchBytes)
 
   /** Streaming scan of ONE block-aligned byte range `[start, end)` of
     * the feature section — the reader's one forward stream, O(feature)

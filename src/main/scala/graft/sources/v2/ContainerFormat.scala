@@ -66,10 +66,25 @@ sealed abstract class ContainerFormat(val name: String, val suffix: String,
     * the ranged index descent to the hit pages/blocks; otherwise one
     * forward stream over a byte range — the partition's intra-shard split,
     * or the whole data section. A pushed limit is the reader factory's
-    * prefix of either.
+    * prefix of either. The file is opened here and only here, with the
+    * length planning recorded (no status call per task); a read that
+    * fails before the iterator exists — a corrupt header, a stale split —
+    * closes it before rethrowing.
     */
-  def decode(fs: FileSystem, part: GeomedeaPartition, bbox: Option[Envelope],
-             geomOnly: Boolean): ContainerFormat.Decode[Loc]
+  final def decode(fs: FileSystem, part: GeomedeaPartition, bbox: Option[Envelope],
+                   geomOnly: Boolean): ContainerFormat.Decode[Loc] = {
+    val in = fs.open(new Path(part.file))
+    try {
+      val (features, counters) = read(in, part, bbox, geomOnly)
+      new ContainerFormat.Decode(features, counters, in)
+    } catch { case e: Throwable => in.close(); throw e }
+  }
+
+  /** [[decode]] over the open stream of the partition's `part.len`-byte
+    * file: the features and the live (pages, bytes) decode counters.
+    */
+  protected def read(in: FSDataInputStream, part: GeomedeaPartition, bbox: Option[Envelope],
+                     geomOnly: Boolean): (Iterator[(Loc, Feature)], () => (Long, Long))
 
   /** Validated write options -> a task-side spool factory. */
   def spool(options: CaseInsensitiveStringMap, splitGranularity: Long): () => FeatureSpool
@@ -220,11 +235,8 @@ object ContainerFormat {
     // both shapes stream with bounded memory and bounded transfer —
     // nothing ever materializes a whole file, so shard size is
     // unconstrained on the read side
-    def decode(fs: FileSystem, part: GeomedeaPartition, bbox: Option[Envelope],
-               geomOnly: Boolean): Decode[Loc] = {
-      val p = new Path(part.file)
-      val len = fs.getFileStatus(p).getLen
-      val in = fs.open(p)
+    protected def read(in: FSDataInputStream, part: GeomedeaPartition, bbox: Option[Envelope],
+                       geomOnly: Boolean): (Iterator[(Loc, Feature)], () => (Long, Long)) =
       bbox match {
         case Some(q) =>
           // bounded TRANSFER bbox read (the reference's partial-download
@@ -232,23 +244,22 @@ object ContainerFormat {
           // header -> needed index levels (range-merged) -> hit pages
           // (batched windows); pruned pages and index subtrees never
           // leave storage
-          val scan = GeomedeaFile.selectBboxRange(rangeReader(in), len, q)
-          new Decode(scan, () => (scan.pagesDecoded, scan.bytesTransferred), in)
+          val scan = GeomedeaFile.selectBboxRange(rangeReader(in), part.len, q)
+          (scan, () => (scan.pagesDecoded, scan.bytesTransferred))
         case None =>
           // positioned header read for the compressed flag and the data
           // section start, then one page-by-page forward stream
           val head = new Array[Byte](FeatureCodec.HeaderBytes)
           in.readFully(0, head)
-          val (compressed, _, featureCount) = GeomedeaFile.header(head, len)
+          val (compressed, _, featureCount) = GeomedeaFile.header(head, part.len)
           val dataStart = GeomedeaFile.dataStart(featureCount)
-          val (start, end) = streamRange(part, dataStart, len)
+          val (start, end) = streamRange(part, dataStart, part.len)
           in.seek(start)
           var pages = 0L
           var bytes = 0L
-          new Decode(GeomedeaFile.selectPageRange(in, compressed, start, end, dataStart,
-            onPage = b => { pages += 1; bytes += b }, geomOnly = geomOnly), () => (pages, bytes), in)
+          (GeomedeaFile.selectPageRange(in, compressed, start, end, dataStart,
+            onPage = b => { pages += 1; bytes += b }, geomOnly = geomOnly), () => (pages, bytes))
       }
-    }
 
     def spool(options: CaseInsensitiveStringMap, splitGranularity: Long): () => FeatureSpool = {
       val compressed = options.getBoolean("compressed", true)
@@ -326,26 +337,25 @@ object ContainerFormat {
 
     def metrics: Array[CustomMetric] = Array(new GmBytesMetric, new GmRowsMetric)
 
-    def decode(fs: FileSystem, part: GeomedeaPartition, bbox: Option[Envelope],
-               geomOnly: Boolean): Decode[Loc] = {
-      val p = new Path(part.file)
-      val len = fs.getFileStatus(p).getLen
-      val in = fs.open(p)
-      val header = Fgb.readHeaderRanged(rangeReader(in), len)
+    protected def read(in: FSDataInputStream, part: GeomedeaPartition, bbox: Option[Envelope],
+                       geomOnly: Boolean): (Iterator[(Loc, Feature)], () => (Long, Long)) = {
+      val header = Fgb.readHeaderRanged(rangeReader(in), part.len)
       // an index needs BOTH node_size > 0 and a trustworthy count (0 =
       // unknown, spec-legal for streamed writers); otherwise stream the
       // whole file — Spark re-applies the residual filters either way
       bbox.filter(_ => header.nodeSize > 0 && header.featuresCount > 0) match {
         case Some(q) =>
-          // bounded transfer: header -> needed index levels -> hit blocks
-          val scan = Fgb.selectBboxRange(rangeReader(in), len, q)
-          new Decode(scan, () => (0L, scan.bytesTransferred), in)
+          // bounded transfer: the header read above -> needed index
+          // levels -> hit blocks
+          val scan = new Fgb.RangedFgbScan(rangeReader(in), part.len, header, q,
+            GeomedeaFile.PageBatchBytes)
+          (scan, () => (0L, scan.bytesTransferred))
         case None =>
-          val (start, end) = streamRange(part, header.featuresOffset, len)
+          val (start, end) = streamRange(part, header.featuresOffset, part.len)
           in.seek(start)
           var bytes = 0L
-          new Decode(Fgb.selectRangeStream(in, header, start, end, onBlock = b => bytes += b,
-            geomOnly = geomOnly), () => (0L, bytes), in)
+          (Fgb.selectRangeStream(in, header, start, end, onBlock = b => bytes += b,
+            geomOnly = geomOnly), () => (0L, bytes))
       }
     }
 

@@ -89,6 +89,7 @@ class ContainerMicroBatchStream(format: ContainerFormat, path: String,
     // matches the live file: a compaction or out-of-protocol rewrite
     // invalidates by length. One read serves the whole batch.
     val lenByName = statuses.map(s => s.getPath.getName -> s.getLen).toMap
+    val statusOf = statuses.map(s => s.getPath.toString -> s).toMap
     val manifest = GeomedeaManifest.read(f, dir).getOrElse(Map.empty)
       .filter { case (n, e) => lenByName.get(n).contains(e.len) }
     bbox match {
@@ -103,7 +104,7 @@ class ContainerMicroBatchStream(format: ContainerFormat, path: String,
         fresh.flatMap { x =>
           manifest.get(new Path(x).getName) match {
             case Some(e) => ContainerTable.splitPartitions(x, e.len, e.validSplits)
-            case _       => Seq(GeomedeaPartition(x))
+            case _       => Seq(GeomedeaPartition(x, statusOf(x).getLen))
           }
         }.map(p => p: InputPartition).toArray
       case Some(q) =>
@@ -125,10 +126,10 @@ class ContainerMicroBatchStream(format: ContainerFormat, path: String,
         val (known, unknown) = fresh.partition(x => manifest.contains(new Path(x).getName))
         val keptKnown = known.filter(x => format.mayIntersect(manifest(new Path(x).getName), q))
         val keptUnknown = PlannerPool.mapFiles(unknown) { x =>
-          if (format.mayIntersect(format.headerEntry(f, f.getFileStatus(new Path(x))), q)) Some(x)
+          if (format.mayIntersect(format.headerEntry(f, statusOf(x)), q)) Some(x)
           else None
         }.flatten
-        (keptKnown ++ keptUnknown).sorted.map(x => GeomedeaPartition(x): InputPartition).toArray
+        (keptKnown ++ keptUnknown).sorted.map(x => GeomedeaPartition(x, statusOf(x).getLen): InputPartition).toArray
     }
   }
 

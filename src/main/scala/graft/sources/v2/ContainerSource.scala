@@ -95,11 +95,11 @@ object ContainerTable {
     */
   def splitPartitions(path: String, len: Long,
                       splits: Vector[Long]): Seq[GeomedeaPartition] =
-    if (splits.size < 2) Seq(GeomedeaPartition(path))
+    if (splits.size < 2) Seq(GeomedeaPartition(path, len))
     else {
       val bounds = splits :+ len
       bounds.zip(bounds.tail).map { case (s, e) =>
-        GeomedeaPartition(path, s, e, splits.head)
+        GeomedeaPartition(path, len, s, e, splits.head)
       }
     }
 
@@ -407,11 +407,11 @@ class ContainerScan(format: ContainerFormat, paths: Seq[String], bbox: Option[En
       case (None, Some(n)) if countsKnown =>
         var cum = 0L
         keptFiles.takeWhile { f => val need = cum < n; cum += f.count; need }
-          .map(f => GeomedeaPartition(f.path): InputPartition).toArray
+          .map(f => GeomedeaPartition(f.path, f.len): InputPartition).toArray
       case (None, None) =>
         keptFiles.flatMap(f => ContainerTable.splitPartitions(f.path, f.len, f.splits))
           .map(p => p: InputPartition).toArray
-      case _ => keptFiles.map(f => GeomedeaPartition(f.path): InputPartition).toArray
+      case _ => keptFiles.map(f => GeomedeaPartition(f.path, f.len): InputPartition).toArray
     }
   }
 
@@ -467,12 +467,12 @@ class GmRowsMetric extends org.apache.spark.sql.connector.metric.CustomSumMetric
 final case class GmTaskMetric(name: String, value: Long)
     extends org.apache.spark.sql.connector.metric.CustomTaskMetric
 
-/** `start >= 0` selects a page/block-aligned byte range `[start, end)` of
-  * the file (an intra-shard split from the manifest's sampled boundaries;
-  * `dataStart` anchors the stable location ids); the defaults mean "the
-  * whole file".
+/** One `len`-byte container file, as planning listed it. `start >= 0`
+  * selects a page/block-aligned byte range `[start, end)` of the file (an
+  * intra-shard split from the manifest's sampled boundaries; `dataStart`
+  * anchors the stable location ids); the defaults mean "the whole file".
   */
-final case class GeomedeaPartition(file: String, start: Long = -1L, end: Long = -1L,
+final case class GeomedeaPartition(file: String, len: Long, start: Long = -1L, end: Long = -1L,
                                    dataStart: Long = -1L) extends InputPartition
 
 class ContainerReaderFactory(format: ContainerFormat, bbox: Option[Envelope],

@@ -279,13 +279,26 @@ class FlatGeobufSpec extends AnyFunSuite {
       Envelope.fromDegrees(60, 60, 61, 61))) {
       val expect = FlatGeobuf.selectBbox(bytes, q).features.map(f => Wkb.asText(f.geom))
       for (batch <- Seq(4096, 64, 8)) {
-        val scan = FlatGeobuf.selectBboxRange(
-          (off, k) => bytes.slice(off.toInt, off.toInt + k), bytes.length.toLong, q, batch)
+        val reads = scala.collection.mutable.ArrayBuffer.empty[Long]
+        def read(off: Long, k: Int) = { reads += off; bytes.slice(off.toInt, off.toInt + k) }
+        val scan = FlatGeobuf.selectBboxRange(read, bytes.length.toLong, q, batch)
         val got = scan.toVector
         assert(got.map(f => Wkb.asText(f._2.geom)) == expect, s"q=$q batch=$batch")
         if (expect.nonEmpty && expect.length < 150 && batch == 4096)
           assert(scan.bytesTransferred < bytes.length / 2,
             s"bounded transfer: ${scan.bytesTransferred} of ${bytes.length}")
+        // positioned reads: the header's two (magic + length, header
+        // block), then index levels and feature windows past it
+        val h = FlatGeobuf.readHeader(bytes)
+        assert(reads.take(2) == Seq(0L, 12L) && reads.drop(2).forall(_ >= h.indexOffset),
+          s"q=$q batch=$batch: reads at $reads")
+        // a header handed in (the DSv2 bbox partition's shape) is not read
+        // again, and still counts once in the transferred bytes
+        val after = reads.size
+        val given = new FlatGeobuf.RangedFgbScan(read, bytes.length.toLong, h, q, batch)
+        assert(given.toVector.map(_._1) == got.map(_._1))
+        assert(reads.drop(after) == reads.slice(2, after), s"q=$q batch=$batch")
+        assert(given.bytesTransferred == scan.bytesTransferred)
       }
     }
     // streaming full scan == materialized, with stable offsets

@@ -116,7 +116,7 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(!b.contains("CartesianProduct") && !b.contains("BroadcastNestedLoopJoin"), b)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val s = plan(SpatialJoin.distanceJoin(geo, queries, 150000000L, broadcastQueries = false))
+      val s = plan(SpatialJoin.distanceJoin(geo, queries, 150000000L, maxBroadcast = 0))
       assert(s.contains("SortMergeJoin") || s.contains("ShuffledHashJoin"), s)
       assert(!s.contains("CartesianProduct") && !s.contains("BroadcastNestedLoopJoin"), s)
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
@@ -355,22 +355,21 @@ class PlanQualitySpec extends AnyFunSuite {
     // exogenous stalls), so the salting benefit is recorded as the thing
     // salting actually changes: the size of the largest shuffle-key
     // group, which bounds the slowest task of the probe-side shuffle.
-    import graft.expr.GraftFunctions._
-    val saltFactor = 8
+    val saltFactor = SpatialJoin.SaltFactor
     val total = geo.count()
-    val keyed = geo.withColumn("cell", gmCell(col("lng"), col("lat"), SpatialJoin.DefaultRes))
+    // the join's own salted keys, over the keys the build side holds: the
+    // probe rows that reach the join
+    val (pts, build) = SpatialJoin.saltedKeys(geo, rects)
+    val keyed = pts.join(build.select("cell").distinct(), "cell")
     val unsalted = keyed.groupBy("cell").count()
       .agg(max("count")).head().getLong(0)
-    // the exact salt expression saltedCellJoin uses (SpatialJoin.scala)
-    val salted = keyed
-      .withColumn("salt", pmod(xxhash64(col("doc_id")), lit(saltFactor)).cast("int"))
-      .groupBy("cell", "salt").count()
+    val salted = keyed.groupBy("cell", "salt").count()
       .agg(max("count")).head().getLong(0)
     info(s"max key group: unsalted=$unsalted salted=$salted total=$total")
     // skew by construction: the 2x2-degree hot cluster (90% of docs)
-    // straddles one res-4 lat boundary, so its larger half — still >half
-    // the corpus in ONE key — is the hot cell
-    assert(unsalted * 2 >= total, s"hot cell $unsalted of $total")
+    // sits in one nation rect, and the larger part of it that shares one
+    // of that rect's keys — still >half the corpus — is the hot key
+    assert(unsalted * 2 >= total, s"hot key $unsalted of $total")
     // ...and the deterministic hash salt spreads it to within 30% of the
     // ideal factor-of-8 split
     assert(salted <= (unsalted * 13) / (saltFactor * 10),

@@ -39,7 +39,6 @@ class PolyFixturesSpec extends AnyFunSuite {
     def key(df: org.apache.spark.sql.DataFrame) =
       df.select("poly_id", "doc_id").collect().map(r => (r.getLong(0), r.getString(1))).toSet
     val brute = key(SpatialJoin.bruteForce(geo, counties))
-    assert(key(SpatialJoin.cellJoin(geo, counties, res = 6)) == brute)
     // the default cap keys each county at its own level (8 or 9), so the
     // hot cluster no longer shares one coarse cell with ~500 counties
     assert(key(SpatialJoin.cellJoin(geo, counties)) == brute)
@@ -70,8 +69,13 @@ class PolyFixturesSpec extends AnyFunSuite {
       Cells.pointKeys(x, y, Cells.MaxRes).iterator.map(perKey.getOrElse(_, 0L)).sum
     }.sum
     val results = SpatialJoin.bruteForce(geo, counties).count()
-    info(s"${pts.length} docs: $matches key matches for $results result pairs")
+    // saltedCellJoin's candidates: its own salted keys, joined before
+    // refinement — each probe row meets one salt copy of each key
+    val (saltedPts, saltedPolys) = SpatialJoin.saltedKeys(geo, counties)
+    val salted = saltedPts.join(saltedPolys, Seq("cell", "salt")).count()
+    info(s"${pts.length} docs: $matches key matches ($salted salted) for $results result pairs")
     assert(results > 0 && matches <= 10 * results, s"$matches matches for $results results")
+    assert(salted == matches, s"saltedCellJoin: $salted candidates vs cellJoin's $matches")
   }
 
   test("Describe.layout/summary and the Info CLI reflect the written table") {

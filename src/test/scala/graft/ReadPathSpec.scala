@@ -5,7 +5,7 @@ import graft.geom.{Envelope, Wkb}
 import graft.index.PackedRTree
 import graft.sources.{FlatGeobuf, GeomedeaFile}
 import graft.sources.v2.{ContainerFormat, ContainerScan, ContainerTable, GeomedeaManifest, GeomedeaPartition}
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FSDataInputStream, FSInputStream, FileStatus, FileSystem, FilterFileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.scalatest.funsuite.AnyFunSuite
@@ -83,7 +83,7 @@ class ReadPathSpec extends AnyFunSuite {
       val parts = ContainerTable.splitPartitions(path, bytes.length.toLong, entry.validSplits)
       assert(parts.size == entry.validSplits.size)
       val splits = parts.flatMap(decoded(container, _)).toVector
-      val whole = decoded(container, GeomedeaPartition(path))
+      val whole = decoded(container, GeomedeaPartition(path, bytes.length.toLong))
       assert(splits == reference)
       assert(whole == reference)
     }
@@ -122,10 +122,75 @@ class ReadPathSpec extends AnyFunSuite {
       java.nio.file.Files.write(java.nio.file.Paths.get(file),
         if (format == "geomedea") GeomedeaFile.write(Seq.empty, compressed = true)
         else FlatGeobuf.write(Seq.empty))
-      assert(decoded(container, GeomedeaPartition(file)).isEmpty)
-      assert(decoded(container, GeomedeaPartition(file),
+      val len = new java.io.File(file).length
+      assert(decoded(container, GeomedeaPartition(file, len)).isEmpty)
+      assert(decoded(container, GeomedeaPartition(file, len),
         Some(Envelope.fromDegrees(-180, -90, 180, 90))).isEmpty)
       assert(spark.read.format(format).load(file).collect().isEmpty)
+    }
+  }
+
+  /** The local file system, counting what the readers ask of it: opens,
+    * closes, status calls and the offsets of positioned reads.
+    */
+  private final class CountingFs extends FilterFileSystem(FileSystem.getLocal(
+      spark.sessionState.newHadoopConf())) {
+    var opens, closes, statuses = 0
+    val reads = scala.collection.mutable.ArrayBuffer.empty[Long]
+    override def getFileStatus(f: Path): FileStatus = { statuses += 1; super.getFileStatus(f) }
+    override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+      opens += 1
+      val in = super.open(f, bufferSize)
+      new FSDataInputStream(new FSInputStream {
+        def seek(pos: Long): Unit = in.seek(pos)
+        def getPos: Long = in.getPos
+        def seekToNewSource(target: Long): Boolean = false
+        def read(): Int = in.read()
+        override def read(b: Array[Byte], off: Int, len: Int): Int = in.read(b, off, len)
+        override def read(pos: Long, b: Array[Byte], off: Int, len: Int): Int = {
+          reads += pos; in.read(pos, b, off, len)
+        }
+        override def readFully(pos: Long, b: Array[Byte], off: Int, len: Int): Unit = {
+          reads += pos; in.readFully(pos, b, off, len)
+        }
+        override def close(): Unit = { closes += 1; in.close() }
+      })
+    }
+  }
+
+  for ((format, container) <- Seq("geomedea" -> ContainerFormat.Geomedea,
+    "flatgeobuf" -> ContainerFormat.FlatGeobuf)) {
+    test(s"$format: decode opens the file once, asks no status, and closes it when it throws") {
+      val (path, entry) = splitShard(format)
+      val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
+      val whole = GeomedeaPartition(path, bytes.length.toLong)
+      val all = Some(Envelope.fromDegrees(-180, -90, 180, 90))
+      for (bbox <- Seq(None, all)) {
+        val cfs = new CountingFs
+        val d = container.decode(cfs, whole, bbox, geomOnly = false)
+        assert(d.features.size == 3000)
+        d.stream.close()
+        assert((cfs.opens, cfs.closes, cfs.statuses) == (1, 1, 0), s"bbox $bbox")
+        // the header is read once, FGB's ranged scan included
+        assert(cfs.reads.count(_ == 0L) == 1, s"bbox $bbox: reads at ${cfs.reads}")
+      }
+      // a corrupt header, in both shapes
+      val dir = java.nio.file.Files.createTempDirectory(s"readpath_corrupt_$format").toString
+      val corrupt = s"$dir/corrupt${container.suffix}"
+      java.nio.file.Files.write(java.nio.file.Paths.get(corrupt),
+        Array.fill[Byte](64)(0x7f) ++ bytes.drop(64))
+      for (bbox <- Seq(None, all)) {
+        val cfs = new CountingFs
+        intercept[IllegalArgumentException](
+          container.decode(cfs, GeomedeaPartition(corrupt, bytes.length.toLong), bbox, geomOnly = false))
+        assert((cfs.opens, cfs.closes, cfs.statuses) == (1, 1, 0), s"corrupt header, bbox $bbox")
+      }
+      // a stale manifest split: its data-section base disagrees with the header
+      val split = ContainerTable.splitPartitions(path, bytes.length.toLong, entry.validSplits).head
+      val cfs = new CountingFs
+      intercept[IllegalArgumentException](
+        container.decode(cfs, split.copy(dataStart = split.dataStart + 1), None, geomOnly = false))
+      assert((cfs.opens, cfs.closes, cfs.statuses) == (1, 1, 0), "stale split")
     }
   }
 

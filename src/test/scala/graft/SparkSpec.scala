@@ -116,7 +116,6 @@ class SparkSpec extends AnyFunSuite {
     assert(brute.map(_.head) == shapes.map(_._1).toSet)
     for ((name, df) <- Seq(
         "cellJoin" -> SpatialJoin.cellJoin(pts, polys),
-        "cellJoin res 6" -> SpatialJoin.cellJoin(pts, polys, res = 6),
         "saltedCellJoin" -> SpatialJoin.saltedCellJoin(pts, polys),
         "rtreeJoin" -> SpatialJoin.rtreeJoin(pts, polys),
         "hilbertRangeJoin" -> SpatialJoin.hilbertRangeJoin(pts, polys)))
@@ -182,12 +181,23 @@ class SparkSpec extends AnyFunSuite {
     assert(anti.nonEmpty)
     for ((name, df) <- Seq(
         "cellJoin" -> SpatialJoin.cellJoin(pts, polys),
-        "cellJoin res 0" -> SpatialJoin.cellJoin(pts, polys, res = 0),
-        "cellJoin res 4" -> SpatialJoin.cellJoin(pts, polys, res = 4),
-        "cellJoin res 6" -> SpatialJoin.cellJoin(pts, polys, res = 6))) {
+        "saltedCellJoin" -> SpatialJoin.saltedCellJoin(pts, polys))) {
       val got = df.select("poly_id", "doc_id").collect().map(_.toSeq)
       assert(got.length == brute.size, s"$name: ${got.length} rows for ${brute.size} pairs")
       assert(got.toSet == brute, name)
+    }
+    // the same key scheme at coarser caps: each envelope hit meets its
+    // polygon exactly once, so the refined key matches are brute force
+    import graft.expr.GraftFunctions.{gmCoverKeys, gmPointKeys, stContains}
+    for (cap <- Seq(0, 4, 6)) {
+      val got = pts.withColumn("cell", explode(gmPointKeys(col("lng"), col("lat"), cap)))
+        .join(polys.withColumn("cell", explode(gmCoverKeys(col("p_min_lng"), col("p_min_lat"),
+          col("p_max_lng"), col("p_max_lat"), cap))), "cell")
+        .where(col("lng").between(col("p_min_lng"), col("p_max_lng")) &&
+          col("lat").between(col("p_min_lat"), col("p_max_lat")) &&
+          stContains(col("poly_wkb"), col("lng"), col("lat")))
+        .select("poly_id", "doc_id").collect().map(_.toSeq)
+      assert(got.length == brute.size && got.toSet == brute, s"cap $cap")
     }
     assert(rows(SpatialJoin.antiJoin(pts, polys), "doc_id") == anti)
     val zoneCols = Seq("poly_id", "n", "z_min_lng", "z_min_lat", "z_max_lng", "z_max_lat")
@@ -203,16 +213,49 @@ class SparkSpec extends AnyFunSuite {
     val queries = InterleavedDocs.nationQueryPoints(spark, Sf)
     // radii straddling cell sizes at res 4 (225e6 x 112.5e6): sub-cell,
     // cell-ish, multi-cell, and 0 (exact-hit only — likely empty, must
-    // not error); plus a non-default res and the shuffled-join variant
+    // not error); the driver-planned broadcast probe and the distributed one
     for (r <- Seq(0L, 50000000L, 150000000L, 400000000L)) {
       val brute = rows(SpatialJoin.distanceBruteForce(geo, queries, r), "query_id", "doc_id")
       assert(rows(SpatialJoin.distanceJoin(geo, queries, r), "query_id", "doc_id") == brute)
-      assert(rows(SpatialJoin.distanceJoin(geo, queries, r, res = 6), "query_id", "doc_id") == brute)
-      assert(rows(SpatialJoin.distanceJoin(geo, queries, r, broadcastQueries = false),
+      assert(rows(SpatialJoin.distanceJoin(geo, queries, r, maxBroadcast = 0),
         "query_id", "doc_id") == brute)
     }
     // the headline radius used by q52 returns rows on this data
     assert(rows(SpatialJoin.distanceJoin(geo, queries, 300000000L), "query_id", "doc_id").nonEmpty)
+  }
+
+  test("distanceJoin edge fixtures: radius 0, past the world, Long.MaxValue / 2, Int-extreme queries, null points") {
+    import spark.implicits._
+    val (lo, hi) = (Int.MinValue, Int.MaxValue)
+    val extremes = Seq[(String, Option[Int], Option[Int])](("x0", Some(0), Some(0)),
+      ("x1", Some(lo), Some(lo)), ("x2", Some(hi), Some(hi)), ("x3", Some(lo), Some(hi)),
+      ("x4", Some(-1800000000), Some(900000000)), ("x5", Some(1), Some(-1)),
+      ("n0", None, Some(0)), ("n1", Some(0), None), ("n2", None, None)).toDF("doc_id", "lng", "lat")
+    val pts = geo.select("doc_id", "lng", "lat").unionByName(extremes)
+    val queries = InterleavedDocs.nationQueryPoints(spark, Sf).unionByName(
+      Seq[(Option[Long], Option[Int], Option[Int])]((Some(100L), Some(0), Some(0)),
+        (Some(101L), Some(lo), Some(lo)), (Some(102L), Some(hi), Some(hi)),
+        (Some(103L), Some(hi), Some(lo)), (Some(104L), Some(lo), Some(0)),
+        (Some(105L), None, Some(0)), (None, Some(1), Some(-1))).toDF("query_id", "q_lng", "q_lat"))
+    for (r <- Seq(0L, 1L, 4000000000L, Long.MaxValue / 2)) {
+      // a query with a null id matches nothing
+      val brute = rows(SpatialJoin.distanceBruteForce(pts, queries.where(col("query_id").isNotNull), r),
+        "query_id", "doc_id")
+      for (mb <- Seq(Knn.MaxQueries, 0)) {
+        val got = SpatialJoin.distanceJoin(pts, queries, r, maxBroadcast = mb)
+          .select("query_id", "doc_id").collect().map(_.toSeq)
+        assert(got.length == brute.size && got.toSet == brute, s"radius $r maxBroadcast $mb")
+      }
+      // the query at a point matches it even at radius 0; the Int-extreme
+      // corners find their own points
+      assert(brute.contains(Seq(100L, "x0")) && brute.contains(Seq(101L, "x1")) &&
+        brute.contains(Seq(102L, "x2")), s"radius $r")
+      assert(!brute.exists(p => p(1).toString.startsWith("n") || p.head == 105L), "nulls never match")
+    }
+    // past the world: every non-null point is within reach of every query
+    val all = rows(SpatialJoin.distanceJoin(pts, queries, Long.MaxValue / 2), "query_id", "doc_id")
+    assert(all.size.toLong == pts.where(col("lng").isNotNull && col("lat").isNotNull).count() *
+      queries.na.drop().count())
   }
 
   test("tile pyramid: every zoom's counts sum to the doc count; parents sum their children") {
