@@ -88,16 +88,27 @@ object Cells {
 
   @inline private def levelBase(res: Int): Long = ((1L << (2 * res)) - 1) / 3
 
-  /** Level-tagged keys of a point's cells at levels 0..maxRes, coarsest
-    * first: exactly one key per level.
+  /** The level mask of every level 0..MaxRes (bit r set for level r). */
+  final val AllLevels = (1 << (MaxRes + 1)) - 1
+
+  /** The level mask of `levels`: bit r set for each level r in it. */
+  def levelMask(levels: Iterable[Int]): Int =
+    levels.foldLeft(0) { (mask, r) => checkRes(r); mask | (1 << r) }
+
+  /** Level-tagged keys of a point's cells at the levels set in `mask`
+    * (bit r for level r, see [[levelMask]]), coarsest first: exactly one
+    * key per set level; none for mask 0.
     */
-  def pointKeys(lng: Int, lat: Int, maxRes: Int): Array[Long] = {
-    checkRes(maxRes)
-    val out = new Array[Long](maxRes + 1)
-    var r = 0
-    while (r <= maxRes) {
-      out(r) = levelBase(r) + cellX(lng, r) * cellsPerAxis(r) + cellY(lat, r)
-      r += 1
+  def pointKeys(lng: Int, lat: Int, mask: Int): Array[Long] = {
+    require((mask & ~AllLevels) == 0, f"level mask must hold levels 0..$MaxRes only; got 0x$mask%x")
+    val out = new Array[Long](Integer.bitCount(mask))
+    var m = mask
+    var i = 0
+    while (m != 0) {
+      val r = Integer.numberOfTrailingZeros(m)
+      out(i) = levelBase(r) + cellX(lng, r) * cellsPerAxis(r) + cellY(lat, r)
+      i += 1
+      m &= m - 1
     }
     out
   }

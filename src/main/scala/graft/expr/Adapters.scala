@@ -5,7 +5,7 @@ import graft.curve.{Cells, Hilbert}
 import graft.geom.{PointInPolygon, ScaledCoord, Wkb}
 import graft.index.PackedRTree
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -13,7 +13,10 @@ import java.util.{Arrays => JArrays, LinkedHashMap => JLinkedHashMap, Map => JMa
 
 /** Static methods invoked from generated code via StaticInvoke; all
   * non-primitive returns use Catalyst internal types (ArrayData /
-  * UTF8String / InternalRow). Geometry decode results are memoized
+  * UTF8String / InternalRow). A primitive array is returned as
+  * `UnsafeArrayData.fromPrimitiveArray`: one copy, no per-element boxing
+  * (a `GenericArrayData` over an `Array[Long]` boxes every element).
+  * Geometry decode results are memoized
   * per-thread so joins that repeatedly probe the same small build-side
   * WKB blobs (or the same broadcast R-tree literal) parse each blob once
   * per task, not once per row.
@@ -33,19 +36,21 @@ object Adapters {
   def cellId(lng: Int, lat: Int, res: Int): Long = Cells.cellId(lng, lat, res)
 
   def coverEnv(minLng: Int, minLat: Int, maxLng: Int, maxLat: Int, res: Int): ArrayData =
-    new GenericArrayData(Cells.cover(graft.geom.Envelope(minLng, minLat, maxLng, maxLat), res))
+    UnsafeArrayData.fromPrimitiveArray(
+      Cells.cover(graft.geom.Envelope(minLng, minLat, maxLng, maxLat), res))
 
   def coverWkb(wkb: Array[Byte], res: Int): ArrayData =
-    new GenericArrayData(Cells.cover(cachedEnvelope(wkb), res))
+    UnsafeArrayData.fromPrimitiveArray(Cells.cover(cachedEnvelope(wkb), res))
 
-  def pointKeys(lng: Int, lat: Int, maxRes: Int): ArrayData =
-    new GenericArrayData(Cells.pointKeys(lng, lat, maxRes))
+  def pointKeys(lng: Int, lat: Int, mask: Int): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(Cells.pointKeys(lng, lat, mask))
 
   def coverKeysEnv(minLng: Int, minLat: Int, maxLng: Int, maxLat: Int, maxRes: Int): ArrayData =
-    new GenericArrayData(Cells.coverKeys(graft.geom.Envelope(minLng, minLat, maxLng, maxLat), maxRes))
+    UnsafeArrayData.fromPrimitiveArray(
+      Cells.coverKeys(graft.geom.Envelope(minLng, minLat, maxLng, maxLat), maxRes))
 
   def kring(cell: Long, res: Int, k: Int): ArrayData =
-    new GenericArrayData(Cells.kRing(cell, res, k))
+    UnsafeArrayData.fromPrimitiveArray(Cells.kRing(cell, res, k))
 
   def envelope(wkb: Array[Byte]): InternalRow = {
     val e = cachedEnvelope(wkb)
@@ -127,10 +132,11 @@ object Adapters {
 
   def rtreeHits(treeBytes: Array[Byte], numLeaves: Long,
                 minLng: Int, minLat: Int, maxLng: Int, maxLat: Int): ArrayData =
-    new GenericArrayData(cachedTree(treeBytes, numLeaves).hits(minLng, minLat, maxLng, maxLat))
+    UnsafeArrayData.fromPrimitiveArray(
+      cachedTree(treeBytes, numLeaves).hits(minLng, minLat, maxLng, maxLat))
 
   def dzEncode(ints: ArrayData): Array[Byte] = DeltaZigZag.encode(ints.toIntArray())
-  def dzDecode(bytes: Array[Byte]): ArrayData = new GenericArrayData(DeltaZigZag.decode(bytes))
+  def dzDecode(bytes: Array[Byte]): ArrayData = UnsafeArrayData.fromPrimitiveArray(DeltaZigZag.decode(bytes))
 
   /** WKT text -> WKB bytes (F6 runtime parser, `wkt.rs:24-142` analog). */
   def wktToWkb(text: UTF8String): Array[Byte] = graft.geom.Wkt.toWkb(text.toString)
@@ -177,7 +183,7 @@ object Adapters {
     Hilbert.chunk(lng, lat, World, res)
 
   def hilbertChunksEnv(minLng: Int, minLat: Int, maxLng: Int, maxLat: Int, res: Int): ArrayData =
-    new GenericArrayData(Hilbert.chunksOfEnvelope(
+    UnsafeArrayData.fromPrimitiveArray(Hilbert.chunksOfEnvelope(
       graft.geom.Envelope(minLng, minLat, maxLng, maxLat), World, res))
 
   // --- text fingerprints (training-data pipeline ops) ----------------------

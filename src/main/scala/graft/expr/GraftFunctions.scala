@@ -12,7 +12,8 @@ import org.apache.spark.sql.functions._
   * codegen-compatible (the generated code is a direct static call inside
   * WholeStageCodegen, no Scala-UDF serialization or row boxing). Methods
   * that return arrays/strings/structs go through [[Adapters]], which
-  * produce Catalyst internal types (ArrayData / UTF8String / InternalRow).
+  * produce Catalyst internal types (ArrayData / UTF8String / InternalRow;
+  * a primitive array as an unboxed `UnsafeArrayData`).
   *
   * DSL entry points return [[Column]]s; [[GraftFunctions.register]] also
   * exposes them to SQL as `gm_*` / `st_*` names.
@@ -116,10 +117,15 @@ object GraftFunctions {
     inv(Adapters.getClass, ArrayType(LongType, containsNull = false), "coverEnv",
       Seq(i(minLng), i(minLat), i(maxLng), i(maxLat), ex(lit(res))))
 
-  /** Level-tagged cell keys of a point, one per level 0..maxRes. */
-  def gmPointKeys(lng: Column, lat: Column, maxRes: Int): Column =
+  /** Level-tagged cell keys of a point, one per level in `levels`,
+    * coarsest first. The levels are lowered to one `Int` mask literal
+    * ([[graft.curve.Cells.levelMask]]), so the kernel emits exactly those
+    * keys as a primitive `UnsafeArrayData` and an `explode` of it stays in
+    * whole-stage codegen (a higher-order `filter` over the keys would not).
+    */
+  def gmPointKeys(lng: Column, lat: Column, levels: Seq[Int]): Column =
     inv(Adapters.getClass, ArrayType(LongType, containsNull = false), "pointKeys",
-      Seq(i(lng), i(lat), ex(lit(maxRes))))
+      Seq(i(lng), i(lat), ex(lit(graft.curve.Cells.levelMask(levels)))))
 
   /** Level-tagged cell keys of an envelope at its own level (<= maxRes):
     * at most 4 (see [[graft.curve.Cells.coverKeys]]).

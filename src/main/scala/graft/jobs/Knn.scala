@@ -3,9 +3,12 @@ package graft.jobs
 import graft.curve.Cells
 import graft.expr.GraftFunctions._
 import graft.geom.Envelope
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import scala.jdk.CollectionConverters._
 
 /** Exact kNN from a sampled distance bound (SURVEY.md §2.11). The point
   * side is scanned exactly twice, whatever k or the data skew:
@@ -20,9 +23,12 @@ import org.apache.spark.sql.functions._
   *  3. **Keyed probe.** The box q ± (ceil(sqrt(D)) + 1), clamped to the
   *     Int range, is covered by at most 4 level-tagged keys
   *     ([[Cells.coverKeys]]); an infinite D probes the one level-0 (world)
-  *     cell. The +1 absorbs double rounding; the inclusive `dist2 <= D`
-  *     in the join condition decides membership: every row that can
-  *     rank reaches the window, and only rows within D do.
+  *     cell. Points are keyed at exactly the levels the probes use (one
+  *     level mask, [[Cells.pointKeys]]), so the explode runs in whole-stage
+  *     codegen over primitive key arrays. The +1 absorbs double rounding;
+  *     the inclusive `dist2 <= D` in the join condition decides
+  *     membership: every row that can rank reaches the window, and only
+  *     rows within D do.
   *  4. **Native top-k.** `row_number() over (partition by query_id order
   *     by dist2, doc_id)` with `rank <= k`. For k up to
   *     `spark.sql.optimizer.windowGroupLimitThreshold` (default 1000)
@@ -58,7 +64,7 @@ object Knn {
   private[graft] def sample(points: DataFrame, rows: Int = SampleRows,
                             key: Column = col("doc_id"), lng: Column = col("lng"),
                             lat: Column = col("lat")): Array[(Int, Int)] =
-    points.select(key.as("key"), lng.cast("int").as("lng"), lat.cast("int").as("lat"))
+    points.select(key.as("key"), lng.cast(IntegerType).as("lng"), lat.cast(IntegerType).as("lat"))
       .where(col("lng").isNotNull && col("lat").isNotNull)
       .withColumn("hash", xxhash64(col("key"), col("lng"), col("lat")))
       .orderBy(col("hash"), col("key"), col("lng"), col("lat"))
@@ -97,9 +103,17 @@ object Knn {
     */
   private def probe(sample: Array[(Int, Int)], qlng: Int, qlat: Int, k: Int): (Double, Array[Long]) = {
     val d = bound(sample, qlng, qlat, k)
-    if (d.isInfinite) (d, Cells.pointKeys(qlng, qlat, 0))
+    if (d.isInfinite) (d, Cells.pointKeys(qlng, qlat, Cells.levelMask(Seq(0))))
     else (d, boxKeys(qlng, qlat, math.ceil(math.sqrt(d)).toLong + 1))
   }
+
+  /** The planned probe rows; every column is non-null. */
+  private val ProbeSchema = StructType(Seq(
+    StructField("query_id", LongType, nullable = false),
+    StructField("q_lng", IntegerType, nullable = false),
+    StructField("q_lat", IntegerType, nullable = false),
+    StructField("bound", DoubleType, nullable = false),
+    StructField("key", LongType, nullable = false)))
 
   /** The probe side of a keyed distance query, and the key levels in
     * use: each query (query_id, q_lng, q_lat) with `f(q_lng, q_lat)` =
@@ -110,41 +124,38 @@ object Knn {
     * branch-picking collect holds at most maxBroadcast+1 rows; the
     * distributed branch re-evaluates the query plan, so cache an expensive
     * one and never pass a non-deterministic one. A query with a null id
-    * or coordinate matches nothing.
+    * or coordinate matches nothing. Both branches build [[ProbeSchema]]
+    * rows directly, with no tuple encoder to derive per call.
     */
   private[jobs] def planProbes(queries: DataFrame, maxBroadcast: Int)(
       f: (Int, Int) => (Double, Array[Long])): (DataFrame, Seq[Int]) = {
-    val spark = queries.sparkSession
-    import spark.implicits._
+    def rows(qid: Long, qlng: Int, qlat: Int): Array[Row] = {
+      val (d, keys) = f(qlng, qlat)
+      keys.map(key => Row(qid, qlng, qlat, d, key))
+    }
     // same casts in both branches
-    val qs = queries.select(col("query_id").cast("long"), col("q_lng").cast("int"),
-      col("q_lat").cast("int")).na.drop()
+    val qs = queries.select(col("query_id").cast(LongType), col("q_lng").cast(IntegerType),
+      col("q_lat").cast(IntegerType)).na.drop()
     val qRows: Array[Row] = qs.limit(maxBroadcast + 1).collect()
     if (qRows.length <= maxBroadcast) {
-      val planned = qRows.toSeq.flatMap { row =>
-        val (qid, qlng, qlat) = (row.getLong(0), row.getInt(1), row.getInt(2))
-        val (d, keys) = f(qlng, qlat)
-        keys.map(key => (qid, qlng, qlat, d, key))
-      }
-      (broadcast(planned.toDF("query_id", "q_lng", "q_lat", "bound", "key")),
-        planned.map(p => Cells.keyLevel(p._5)).distinct)
+      val planned = qRows.flatMap(q => rows(q.getLong(0), q.getInt(1), q.getInt(2)))
+      (broadcast(queries.sparkSession.createDataFrame(planned.toSeq.asJava, ProbeSchema)),
+        planned.map(p => Cells.keyLevel(p.getLong(4))).distinct.toSeq)
     } else
-      (qs.as[(Long, Int, Int)].flatMap { case (qid, qlng, qlat) =>
-        val (d, keys) = f(qlng, qlat)
-        keys.map(key => (qid, qlng, qlat, d, key))
-      }.toDF("query_id", "q_lng", "q_lat", "bound", "key"), 0 to Cells.MaxRes)
+      (qs.flatMap(q => rows(q.getLong(0), q.getInt(1), q.getInt(2)))(Encoders.row(ProbeSchema)),
+        0 to Cells.MaxRes)
   }
 
-  /** The keyed probe: points (doc_id, lng, lat) keyed at the `levels` in
-    * use, equi-joined to the planned probes, pairs with dist2 <= bound.
+  /** The keyed probe: points (doc_id, lng, lat) keyed at exactly the
+    * `levels` in use (one level-mask [[gmPointKeys]] call, so the explode
+    * stays in whole-stage codegen), equi-joined to the planned probes,
+    * pairs with dist2 <= bound.
     */
   private[jobs] def withinBound(points: DataFrame, probes: DataFrame, levels: Seq[Int]): DataFrame = {
-    val top = if (levels.isEmpty) 0 else levels.max
-    val pk = gmPointKeys(col("lng"), col("lat"), top)
-    val keys = if (levels.size == top + 1) pk else filter(pk, (_, level) => level.isin(levels: _*))
-    val pts = points.select(col("doc_id"), col("lng"), col("lat"), explode(keys).as("key"))
-    val dx = (col("lng").cast("long") - col("q_lng").cast("long")).cast("double")
-    val dy = (col("lat").cast("long") - col("q_lat").cast("long")).cast("double")
+    val pts = points.select(col("doc_id"), col("lng"), col("lat"),
+      explode(gmPointKeys(col("lng"), col("lat"), levels)).as("key"))
+    val dx = (col("lng").cast(LongType) - col("q_lng").cast(LongType)).cast(DoubleType)
+    val dy = (col("lat").cast(LongType) - col("q_lat").cast(LongType)).cast(DoubleType)
     pts.join(probes, "key")
       .withColumn("dist2", dx * dx + dy * dy)
       .where(col("dist2") <= col("bound"))

@@ -63,7 +63,7 @@ object SpatialJoin {
     * ([[Cells.coverKeys]]).
     */
   private[graft] def cellKeys(points: DataFrame, polys: DataFrame): (DataFrame, DataFrame) =
-    (points.withColumn("cell", explode(gmPointKeys(col("lng"), col("lat"), Cells.MaxRes))),
+    (points.withColumn("cell", explode(gmPointKeys(col("lng"), col("lat"), 0 to Cells.MaxRes))),
       polys.withColumn("cell", explode(gmCoverKeys(col("p_min_lng"), col("p_min_lat"),
         col("p_max_lng"), col("p_max_lat"), Cells.MaxRes))))
 

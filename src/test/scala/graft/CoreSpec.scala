@@ -278,7 +278,7 @@ class CoreSpec extends AnyFunSuite {
       val xs = Seq(e.minLng, e.maxLng, ((e.minLng.toLong + e.maxLng) / 2).toInt, within(e.minLng, e.maxLng))
       val ys = Seq(e.minLat, e.maxLat, ((e.minLat.toLong + e.maxLat) / 2).toInt, within(e.minLat, e.maxLat))
       for (x <- xs; y <- ys) { // corners, edges and interior points
-        val pk = pointKeys(x, y, maxRes)
+        val pk = pointKeys(x, y, levelMask(0 to maxRes))
         assert(pk.length == maxRes + 1)
         assert(pk.count(keySet) == 1, s"$e maxRes $maxRes point ($x, $y)")
         // key r is level r's cell: levels never collide
@@ -293,9 +293,36 @@ class CoreSpec extends AnyFunSuite {
     assert(coverKeys(Envelope(10, 10, -10, 10), MaxRes).isEmpty) // one axis inverted
     assert(coverKeys(Envelope(10, 10, 10, -10), 0).isEmpty)
     for (bad <- Seq(-1, MaxRes + 1)) {
-      intercept[IllegalArgumentException](pointKeys(0, 0, bad))
+      intercept[IllegalArgumentException](levelMask(Seq(bad)))
       intercept[IllegalArgumentException](coverKeys(Envelope(0, 0, 1, 1), bad))
     }
+  }
+
+  test("cells: pointKeys at a level mask are the full keys at those levels, coarsest first") {
+    import Cells._
+    val rnd = new scala.util.Random(20261020L)
+    val (wx0, wy0) = (WorldMinLng.toInt, WorldMinLat.toInt)
+    val (wx1, wy1) = ((WorldMinLng + WorldLngSpan).toInt, (WorldMinLat + WorldLatSpan).toInt)
+    val (lo, hi) = (Int.MinValue, Int.MaxValue)
+    val points = Seq((wx0, wy0), (wx0, wy1), (wx1, wy0), (wx1, wy1), (0, 0),
+      (lo, lo), (lo, hi), (hi, lo), (hi, hi)) ++ Seq.fill(100)((rnd.nextInt(), rnd.nextInt()))
+    val gapped = levelMask(Seq(0, 8, 9))
+    assert(gapped == 0x301 && levelMask(0 to MaxRes) == AllLevels && levelMask(Nil) == 0)
+    val masks = Seq(0, gapped, AllLevels) ++ (0 to MaxRes).map(r => 1 << r) ++
+      Seq.fill(40)(rnd.nextInt(AllLevels + 1))
+    for ((x, y) <- points) {
+      val full = pointKeys(x, y, AllLevels)
+      assert(full.length == MaxRes + 1 && full.indices.forall(r => keyLevel(full(r)) == r))
+      for (m <- masks) {
+        val want = full.filter(key => ((m >>> keyLevel(key)) & 1) == 1)
+        assert(pointKeys(x, y, m).toSeq == want.toSeq, s"mask $m point ($x, $y)")
+      }
+      assert(pointKeys(x, y, 0).isEmpty)
+      assert(pointKeys(x, y, gapped).map(keyLevel).toSeq == Seq(0, 8, 9))
+    }
+    // a bit above MaxRes, alone or beside valid levels, throws
+    for (bad <- Seq(1 << (MaxRes + 1), AllLevels | (1 << 12), -1, Int.MinValue))
+      intercept[IllegalArgumentException](pointKeys(0, 0, bad))
   }
 
   test("delta-zigzag codec roundtrip + compactness") {

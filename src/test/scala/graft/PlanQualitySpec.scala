@@ -150,6 +150,48 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(p.collect { case a: BaseAggregateExec => a }.isEmpty, s"kNN must not aggregate:\n$p")
   }
 
+  test("the keyed probe's point-key explode runs in whole-stage codegen with no lambda, kNN and distanceJoin, both branches") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, LambdaFunction}
+    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+    import org.apache.spark.sql.execution.{GenerateExec, InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def children(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case s: QueryStageExec        => Seq(s.plan)
+      case other                    => other.children
+    }
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: children(p).flatMap(nodes)
+    // every GenerateExec, with whether a codegen stage compiles it (an
+    // InputAdapter's child is evaluated outside the stage)
+    def generates(p: SparkPlan, inStage: Boolean): Seq[(GenerateExec, Boolean)] = p match {
+      case w: WholeStageCodegenExec => generates(w.child, inStage = true)
+      case i: InputAdapter          => generates(i.child, inStage = false)
+      case g: GenerateExec          => (g, inStage) +: children(g).flatMap(generates(_, inStage))
+      case other                    => children(other).flatMap(generates(_, inStage))
+    }
+    val queries = InterleavedDocs.nationQueryPoints(spark, Sf)
+    val cases = Seq(
+      "kNN broadcast" -> graft.jobs.Knn.knn(geo, queries, 3),
+      "kNN distributed" -> graft.jobs.Knn.knn(geo, queries, 3, maxBroadcast = 0),
+      "distanceJoin broadcast" -> SpatialJoin.distanceJoin(geo, queries, 150000000L),
+      "distanceJoin distributed" -> SpatialJoin.distanceJoin(geo, queries, 150000000L, maxBroadcast = 0))
+    for ((name, df) <- cases) {
+      df.collect() // the final adaptive plan holds the codegen stages
+      val p = df.queryExecution.executedPlan
+      val probe = generates(p, inStage = false).filter(_._1.generator.exists {
+        case s: StaticInvoke => s.functionName == "pointKeys"
+        case _               => false
+      })
+      assert(probe.nonEmpty && probe.forall(_._2),
+        s"$name: the point-key explode must sit inside a WholeStageCodegenExec:\n$p")
+      val lambdas = nodes(p).flatMap(_.expressions).flatMap(_.collect {
+        case e: ArrayFilter    => e
+        case e: LambdaFunction => e
+      })
+      assert(lambdas.isEmpty, s"$name: interpreted lambdas in the executed plan: $lambdas\n$p")
+    }
+  }
+
   test("as-of join plans as union + ONE key shuffle + window — no join node at all") {
     val ev = spark.read.parquet(s"$Sf/events.parquet")
     val p = ev.where(col("event_type") === "purchase").select("event_id", "user_id", "ts")

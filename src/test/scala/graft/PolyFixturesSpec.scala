@@ -66,7 +66,7 @@ class PolyFixturesSpec extends AnyFunSuite {
       .groupBy(identity).map { case (k, v) => k -> v.length.toLong }
     val pts = geo.select("lng", "lat").collect().map(r => (r.getInt(0), r.getInt(1)))
     val matches = pts.iterator.map { case (x, y) =>
-      Cells.pointKeys(x, y, Cells.MaxRes).iterator.map(perKey.getOrElse(_, 0L)).sum
+      Cells.pointKeys(x, y, Cells.AllLevels).iterator.map(perKey.getOrElse(_, 0L)).sum
     }.sum
     val results = SpatialJoin.bruteForce(geo, counties).count()
     // saltedCellJoin's candidates: its own salted keys, joined before

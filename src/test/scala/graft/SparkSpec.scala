@@ -190,7 +190,7 @@ class SparkSpec extends AnyFunSuite {
     // polygon exactly once, so the refined key matches are brute force
     import graft.expr.GraftFunctions.{gmCoverKeys, gmPointKeys, stContains}
     for (cap <- Seq(0, 4, 6)) {
-      val got = pts.withColumn("cell", explode(gmPointKeys(col("lng"), col("lat"), cap)))
+      val got = pts.withColumn("cell", explode(gmPointKeys(col("lng"), col("lat"), 0 to cap)))
         .join(polys.withColumn("cell", explode(gmCoverKeys(col("p_min_lng"), col("p_min_lat"),
           col("p_max_lng"), col("p_max_lat"), cap))), "cell")
         .where(col("lng").between(col("p_min_lng"), col("p_max_lng")) &&
@@ -444,6 +444,42 @@ class SparkSpec extends AnyFunSuite {
     check(pointsOf(nulls), 2)
   }
 
+  test("kNN gapped-level fixture: hot-cluster and empty-ocean queries in one call, both branches") {
+    import spark.implicits._
+    import graft.curve.Cells
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+    val rnd = new scala.util.Random(14)
+    // a dense 0.2-degree hot cluster and a sparse eastern band: the ocean
+    // query's nearest points are ~1e9 away, the hot queries' ~1e5
+    val hot = (0 until 2000).map(i =>
+      (f"h$i%04d", -1190000000 + rnd.nextInt(2000000), 340000000 + rnd.nextInt(2000000)))
+    val band = (0 until 100).map(i =>
+      (f"b$i%03d", rnd.nextInt(1800000000), rnd.nextInt(1800000000) - 900000000))
+    val points = (hot ++ band).toDF("doc_id", "lng", "lat")
+    val queries = Seq((1L, -1189000000, 341000000), (2L, -1181000000, 341500000),
+      (3L, -1185000000, 339000000), (4L, -1500000000, -700000000)).toDF("query_id", "q_lng", "q_lat")
+    // the level mask the broadcast branch keys the points at
+    def mask(df: DataFrame): Int = df.queryExecution.optimizedPlan.flatMap(_.expressions)
+      .flatMap(_.collect { case s: StaticInvoke if s.functionName == "pointKeys" => s.arguments(2) })
+      .collect { case Literal(m: Int, _) => m }.head
+    val cols = Seq("query_id", "rank", "doc_id", "dist2")
+    val sampled = hot.length + band.length // below Knn.SampleRows: the sample is every point
+    for (k <- Seq(1, 10, sampled + 1)) {
+      val brute = Knn.bruteForce(points, queries, k).select(cols.map(col): _*).collect().map(_.toSeq)
+      assert(brute.length == 4 * math.min(k, sampled))
+      for (mb <- Seq(Knn.MaxQueries, 0)) {
+        val got = Knn.knn(points, queries, k, maxBroadcast = mb)
+          .select(cols.map(col): _*).collect().map(_.toSeq)
+        assert(got.length == brute.length && got.toSet == brute.toSet, s"k=$k maxBroadcast=$mb")
+      }
+      val levels = (0 to Cells.MaxRes).filter(r => ((mask(Knn.knn(points, queries, k)) >>> r) & 1) == 1)
+      if (k > sampled) assert(levels == Seq(0), s"an infinite bound plans level 0 alone: $levels")
+      else assert(levels.min <= 2 && levels.max >= 8 && levels.length < levels.max - levels.min + 1,
+        s"k=$k: expected coarse and fine levels with a gap: $levels")
+    }
+  }
+
   test("kNN sample: at most SampleRows rows, the smallest hashes, the same rows, one Spark job") {
     val n = 3 * Knn.SampleRows
     val points = spark.range(n).select(format_string("p%06d", col("id")).as("doc_id"),
@@ -682,6 +718,65 @@ class SparkSpec extends AnyFunSuite {
     assert(r.getAs[Boolean]("hit"))
     assert(r.getAs[Long]("h") == 143165576L)
     assert(r.getAs[Int]("two") == 2)
+  }
+
+  test("primitive-array Adapters return UnsafeArrayData equal to their kernels, empties included") {
+    import graft.codec.DeltaZigZag
+    import graft.curve.{Cells, Hilbert}
+    import graft.expr.Adapters
+    import graft.geom.Wkb
+    import graft.index.PackedRTree
+    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    def unsafe(a: ArrayData): ArrayData = {
+      assert(a.isInstanceOf[UnsafeArrayData], a.getClass)
+      a
+    }
+    def longs(a: ArrayData): Seq[Long] = unsafe(a).toLongArray().toSeq
+    def ints(a: ArrayData): Seq[Int] = unsafe(a).toIntArray().toSeq
+    val world = Envelope(-1800000000, -900000000, 1800000000, 900000000)
+    val hot = Envelope(-1190000000, 340000000, -1170000000, 360000000)
+    val inverted = Envelope(10, 10, -10, 10)
+    val envs = Seq(world, hot, Envelope(0, 0, 0, 0), Envelope(Int.MinValue, Int.MinValue, Int.MaxValue,
+      Int.MaxValue), inverted)
+    for (e <- envs; res <- Seq(0, 4, 9)) {
+      val s = s"$e res $res"
+      assert(longs(Adapters.coverEnv(e.minLng, e.minLat, e.maxLng, e.maxLat, res)) ==
+        Cells.cover(e, res).toSeq, s)
+      assert(longs(Adapters.coverKeysEnv(e.minLng, e.minLat, e.maxLng, e.maxLat, res)) ==
+        Cells.coverKeys(e, res).toSeq, s)
+    }
+    for (e <- envs; res <- Seq(1, 4)) assert(longs(Adapters.hilbertChunksEnv(e.minLng, e.minLat,
+      e.maxLng, e.maxLat, res)) == Hilbert.chunksOfEnvelope(e, world, res).toSeq, s"$e res $res")
+    assert(longs(Adapters.hilbertChunksEnv(hot.minLng, hot.minLat, hot.maxLng, hot.maxLat, 12)) ==
+      Hilbert.chunksOfEnvelope(hot, world, 12).toSeq)
+    assert(longs(Adapters.coverEnv(10, 10, -10, 10, 9)).isEmpty) // inverted: empty, still unsafe
+    for (wkb <- Seq(Wkb.rectWkb(hot.minLng, hot.minLat, hot.maxLng, hot.maxLat), Wkb.pointWkb(5, -5));
+         res <- Seq(0, 6, 9))
+      assert(longs(Adapters.coverWkb(wkb, res)) == Cells.cover(Wkb.read(wkb).envelope, res).toSeq)
+    for ((x, y) <- Seq((0, 0), (Int.MinValue, Int.MaxValue), (-1180000000, 350000000));
+         m <- Seq(0, 1, Cells.levelMask(Seq(0, 8, 9)), Cells.AllLevels))
+      assert(longs(Adapters.pointKeys(x, y, m)) == Cells.pointKeys(x, y, m).toSeq, s"($x, $y) mask $m")
+    for (res <- Seq(0, 4, 9); k <- Seq(0, 1, 3)) {
+      val cell = Cells.cellId(-1180000000, 350000000, res)
+      assert(longs(Adapters.kring(cell, res, k)) == Cells.kRing(cell, res, k).toSeq)
+    }
+    val leaves = (0 until 40).map(i =>
+      (Envelope(i * 1000, i * 500, i * 1000 + 1500, i * 500 + 700), i.toLong, 0))
+    val tree = PackedRTree.build(leaves)
+    for (q <- Seq(Envelope(3000, 1000, 9000, 4000), Envelope(0, 0, 100000, 100000), Envelope(-9, -9, -5, -5)))
+      assert(longs(Adapters.rtreeHits(tree, leaves.length.toLong, q.minLng, q.minLat, q.maxLng, q.maxLat)) ==
+        new PackedRTree(leaves.length.toLong, tree).hits(q.minLng, q.minLat, q.maxLng, q.maxLat).toSeq, q)
+    for (v <- Seq(Array.emptyIntArray, Array(7), Array(Int.MinValue, 0, Int.MaxValue, -3, -3))) {
+      val blob = DeltaZigZag.encode(v)
+      assert(ints(Adapters.dzDecode(blob)) == DeltaZigZag.decode(blob).toSeq)
+      assert(DeltaZigZag.decode(blob).toSeq == v.toSeq)
+    }
+    // the SQL surface returns the same arrays
+    val r = spark.sql("""SELECT gm_cell_cover(10, 10, -10, 10, 9) AS inv,
+      |  gm_dz_decode(gm_dz_encode(array())) AS dz, gm_kring(0, 4, 1) AS ring""".stripMargin).head()
+    assert(r.getSeq[Long](0).isEmpty && r.getSeq[Int](1).isEmpty)
+    assert(r.getSeq[Long](2).sorted == Cells.kRing(0L, 4, 1).toSeq.sorted)
   }
 
   test("GraftExtensions injects the SQL surface (spark.sql.extensions deployment path)") {
