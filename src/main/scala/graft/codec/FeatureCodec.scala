@@ -86,9 +86,11 @@ object FeatureCodec {
       * short read with zeros up to any size).
       */
     def take(n: Int): Array[Byte] = {
-      require(n >= 0 && n <= remaining, s"corrupt length $n at $pos: $remaining bytes left")
+      checkLength(n)
       val v = java.util.Arrays.copyOfRange(bytes, pos, pos + n); pos += n; v
     }
+    private def checkLength(n: Int): Unit =
+      require(n >= 0 && n <= remaining, s"corrupt length $n at $pos: $remaining bytes left")
     /** A u64 element count, each element at least `minBytes` wide,
       * checked against the bytes left before anything is sized from it.
       */
@@ -98,7 +100,12 @@ object FeatureCodec {
       n.toInt
     }
     def lenBytes(): Array[Byte] = take(count(1))
-    def str(): String = new String(lenBytes(), StandardCharsets.UTF_8)
+    def str(): String = utf8(count(1))
+    /** The next `n` bytes as UTF-8 text, decoded in place (no copy). */
+    def utf8(n: Int): String = {
+      checkLength(n)
+      val v = new String(bytes, pos, n, StandardCharsets.UTF_8); pos += n; v
+    }
     def remaining: Int = bytes.length - pos
   }
 

@@ -482,12 +482,12 @@ object FlatGeobuf {
         case CULong  => PUInt64(r.u64())
         case CFloat  => PFloat32(java.lang.Float.intBitsToFloat(r.u32().toInt))
         case CDouble => PFloat64(java.lang.Double.longBitsToDouble(r.u64()))
-        case CString => PString(new String(r.take(r.u32().toInt), UTF_8))
-        case CJson   => jsonProp(new String(r.take(r.u32().toInt), UTF_8))
+        case CString => PString(r.utf8(r.u32().toInt))
+        case CJson   => jsonProp(r.utf8(r.u32().toInt))
         // spec DateTime (13): ISO-8601 text, wire-identical to String —
         // decoded as a string property so foreign files with date
         // columns (common in GIS data) scan instead of throwing
-        case CDateTime => PString(new String(r.take(r.u32().toInt), UTF_8))
+        case CDateTime => PString(r.utf8(r.u32().toInt))
         case CBinary => PBytes(r.take(r.u32().toInt))
         case other   => throw new IllegalArgumentException(s"unsupported FGB column type $other")
       }

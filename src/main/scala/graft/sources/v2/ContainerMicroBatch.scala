@@ -3,7 +3,6 @@ package graft.sources.v2
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, SupportsTriggerAvailableNow}
-import org.apache.spark.util.SerializableConfiguration
 
 /** Streaming READ side of a container lake — the inverse of the
   * streaming->native-format sink (`streaming/StreamIngest` +
@@ -37,10 +36,10 @@ class ContainerMicroBatchStream(format: ContainerFormat, path: String,
                                 checkpointLocation: String)
     extends MicroBatchStream with SupportsTriggerAvailableNow {
 
-  private val conf = new SerializableConfiguration(
-    org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
+  // driver-side listing; tasks get it as a broadcast per micro-batch
+  private val conf = org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()
 
-  private def fs: FileSystem = new Path(path).getFileSystem(conf.value)
+  private def fs: FileSystem = new Path(path).getFileSystem(conf)
 
   private def listStatuses(): Seq[FileStatus] = {
     val p = new Path(path)
@@ -134,7 +133,8 @@ class ContainerMicroBatchStream(format: ContainerFormat, path: String,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new ContainerReaderFactory(format, bbox, required, limit = None, conf = conf)
+    new ContainerReaderFactory(format, bbox, required, limit = None,
+      conf = ContainerTable.shipConf(conf))
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()

@@ -1,7 +1,9 @@
 package graft.sources.v2
 
 import graft.geom.Envelope
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -113,6 +115,19 @@ object ContainerTable {
     val paths = listed ++ Option(properties.get("path"))
     if (paths.isEmpty) throw new IllegalArgumentException(missing)
     paths
+  }
+
+  /** The Hadoop conf for the tasks of one scan, micro-batch or write,
+    * shipped once per executor as a broadcast (Spark's
+    * `ParquetPartitionReaderFactory.broadcastedConf`), not inside every
+    * task. It is read once here, so the driver's handle holds the value
+    * and a factory driven on the driver fetches nothing: a fetch loads
+    * Spark's compression codec through the thread's context class loader.
+    */
+  def shipConf(conf: Configuration): Broadcast[SerializableConfiguration] = {
+    val shipped = SparkSession.active.sparkContext.broadcast(new SerializableConfiguration(conf))
+    shipped.value
+    shipped
   }
 
   /** Writes and streams address one location; only batch reads take a list. */
@@ -432,7 +447,7 @@ class ContainerScan(format: ContainerFormat, paths: Seq[String], bbox: Option[En
 
   override def createReaderFactory(): PartitionReaderFactory =
     new ContainerReaderFactory(format, bbox, required, limit,
-      new SerializableConfiguration(SparkSession.active.sessionState.newHadoopConf()))
+      ContainerTable.shipConf(SparkSession.active.sessionState.newHadoopConf()))
 
   /** Streaming read (`spark.readStream.format(...)`): tail the shard
     * directory, one micro-batch partition per NEW shard, with the same
@@ -477,7 +492,7 @@ final case class GeomedeaPartition(file: String, len: Long, start: Long = -1L, e
 
 class ContainerReaderFactory(format: ContainerFormat, bbox: Option[Envelope],
                              required: StructType, limit: Option[Int],
-                             conf: SerializableConfiguration)
+                             conf: Broadcast[SerializableConfiguration])
     extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
@@ -486,7 +501,7 @@ class ContainerReaderFactory(format: ContainerFormat, bbox: Option[Envelope],
     // geometry-only decode: when no property column is projected, the
     // scan jumps over each feature's props bytes instead of materializing
     // strings/values the query never reads
-    val decode = format.decode(p.getFileSystem(conf.value), part, bbox,
+    val decode = format.decode(p.getFileSystem(conf.value.value), part, bbox,
       FeatureRows.geomOnly(required))
     // the pushed limit, applied once for every shape: decoding stops with
     // the iterator, so later pages/blocks are never read

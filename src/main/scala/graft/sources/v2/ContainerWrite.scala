@@ -3,6 +3,7 @@ package graft.sources.v2
 import graft.codec.FeatureCodec.Feature
 import graft.sources.FeatureSpool
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.StructType
@@ -57,15 +58,15 @@ final case class ContainerCommit(tmpName: String, finalName: String,
 class ContainerBatchWrite(format: ContainerFormat, path: String, schema: StructType,
                           spool: () => FeatureSpool, truncate: Boolean,
                           jobToken: String) extends BatchWrite {
-  private val conf = new SerializableConfiguration(
-    org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
+  // commit and abort run on the driver; tasks get the conf as a broadcast
+  private val conf = org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new ContainerWriterFactory(format, path, schema, spool, conf, jobToken)
+    new ContainerWriterFactory(format, path, schema, spool, ContainerTable.shipConf(conf), jobToken)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val dir = new Path(path)
-    val fs = dir.getFileSystem(conf.value)
+    val fs = dir.getFileSystem(conf)
     if (truncate && fs.exists(dir)) {
       fs.listStatus(dir).filter(_.getPath.getName.endsWith(format.suffix))
         .foreach(s => fs.delete(s.getPath, false))
@@ -92,7 +93,7 @@ class ContainerBatchWrite(format: ContainerFormat, path: String, schema: StructT
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     val dir = new Path(path)
-    val fs = dir.getFileSystem(conf.value)
+    val fs = dir.getFileSystem(conf)
     messages.foreach {
       case c: ContainerCommit => fs.delete(new Path(dir, c.tmpName), false)
       case _                  => ()
@@ -110,7 +111,7 @@ object ContainerWriterFactory {
 
 class ContainerWriterFactory(format: ContainerFormat, path: String, schema: StructType,
                              spool: () => FeatureSpool,
-                             conf: SerializableConfiguration, jobToken: String)
+                             conf: Broadcast[SerializableConfiguration], jobToken: String)
     extends DataWriterFactory {
   import ContainerWriterFactory.MaxFileBytes
 
@@ -137,7 +138,7 @@ class ContainerWriterFactory(format: ContainerFormat, path: String, schema: Stru
           require(total <= MaxFileBytes,
             s"partition $partitionId: $total bytes > $MaxFileBytes; repartition to more shards")
           val dir = new Path(path)
-          val fs = dir.getFileSystem(conf.value)
+          val fs = dir.getFileSystem(conf.value.value)
           fs.mkdirs(dir)
           wroteTmp = true
           fs.create(new Path(dir, tmp), true)
@@ -156,7 +157,7 @@ class ContainerWriterFactory(format: ContainerFormat, path: String, schema: Stru
         shard.delete()
         if (wroteTmp) {
           val dir = new Path(path)
-          try dir.getFileSystem(conf.value).delete(new Path(dir, tmp), false)
+          try dir.getFileSystem(conf.value.value).delete(new Path(dir, tmp), false)
           catch { case _: java.io.IOException => () }
         }
       }

@@ -1,10 +1,10 @@
 package graft
 
-import graft.codec.FeatureCodec.{Feature, PInt64, PString}
+import graft.codec.FeatureCodec.{Feature, PInt64, PString, PValue}
 import graft.geom.{Envelope, Wkb}
 import graft.sources.GeomedeaFile
 import graft.sources.v2.ContainerScan
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -775,4 +775,235 @@ class DataSourceV2Spec extends AnyFunSuite {
       }
     }
   }
+
+  /** Every property kind of the columnar bridge at its extremes: the 13
+    * scalars (Int/Long bounds, `PUInt64(-1)`, empty strings and bytes), a
+    * typed vec of all 13 and an insertion-ordered map of all 13, plus an
+    * empty vec and map. Two features carry the same keys and kinds, one
+    * at the lower bounds and one at the upper.
+    */
+  private def extremeProps(low: Boolean): Vector[(String, PValue)] = {
+    import graft.codec.FeatureCodec._
+    def pick[T](lo: T, hi: T): T = if (low) lo else hi
+    val scalars = Vector(
+      "bool" -> PBool(!low), "i8" -> PInt8(pick(Byte.MinValue, Byte.MaxValue)),
+      "u8" -> PUInt8(pick(0, 255)), "i16" -> PInt16(pick(Short.MinValue, Short.MaxValue)),
+      "u16" -> PUInt16(pick(0, 65535)), "i32" -> PInt32(pick(Int.MinValue, Int.MaxValue)),
+      "u32" -> PUInt32(pick(0L, 4294967295L)), "i64" -> PInt64(pick(Long.MinValue, Long.MaxValue)),
+      "u64" -> PUInt64(pick(0L, -1L)), "f32" -> PFloat32(pick(-Float.MaxValue, Float.MinPositiveValue)),
+      "f64" -> PFloat64(pick(-Double.MaxValue, Double.MinPositiveValue)),
+      "bytes" -> PBytes(if (low) Array.emptyByteArray else Array[Byte](0, -1, 127, -128)),
+      "string" -> PString(if (low) "" else "sé✓"))
+    scalars ++ Vector(
+      "vec" -> PVec(scalars.map(_._2)),
+      "map" -> PMap(scalars.reverse.map { case (k, v) => (if (k == "bool") "" else k) -> v }),
+      "vec0" -> PVec(Vector.empty), "map0" -> PMap(Vector.empty))
+  }
+
+  private lazy val extremeFeatures: Seq[Feature] = Seq(
+    Feature(Wkb.Pt(-1800000000, -900000000), extremeProps(low = true)),
+    Feature(Wkb.Pt(1800000000, 900000000), extremeProps(low = false)))
+
+  /** The props cells `toCell` gives for `props`, as Spark rows. */
+  private def cellRows(props: Seq[Vector[(String, PValue)]]): Seq[Seq[Row]] = {
+    val s = spark
+    import s.implicits._
+    props.map(_.map { case (k, v) => graft.sources.GeoJsonIngest.toCell(k, v) })
+      .toDF("props").collect().toSeq.map(_.getSeq[Row](0))
+  }
+
+  /** The rows one planned scan's reader factory builds, in partition
+    * order, converted to Spark rows without an intervening projection.
+    */
+  private def readerRows(df: DataFrame): Seq[Row] = {
+    val scan = scanOf(df).toBatch
+    val factory = scan.createReaderFactory()
+    val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToScalaConverter(scanOf(df).readSchema())
+    scan.planInputPartitions().toSeq.flatMap { p =>
+      val r = factory.createReader(p)
+      try Iterator.continually(r.next()).takeWhile(identity)
+        .map(_ => toRow(r.get()).asInstanceOf[Row]).toVector
+      finally r.close()
+    }
+  }
+
+  for (format <- Seq("geomedea", "flatgeobuf")) {
+    test(s"$format: props cells from the v2 reader equal toCell of the decoded values, all 15 kinds") {
+      val dir = java.nio.file.Files.createTempDirectory(s"props_parity_$format").toString
+      val (bytes, decoded) =
+        if (format == "geomedea") {
+          val b = GeomedeaFile.write(extremeFeatures, compressed = true)
+          (b, GeomedeaFile.selectAll(b))
+        } else {
+          val b = graft.sources.FlatGeobuf.write(extremeFeatures)
+          (b, graft.sources.FlatGeobuf.selectAll(b))
+        }
+      val suffix = if (format == "geomedea") "geomedea" else "fgb"
+      java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/x.$suffix"), bytes)
+      // geomedea carries every value exactly; FGB widens vec/map elements
+      // (its JSON column), so both compare against the format's own decode
+      def byPoint(fs: Seq[Feature], n: Int) = fs.map(f => Wkb.asText(f.geom) -> f.props.take(n)).toMap
+      val exact = if (format == "geomedea") extremeFeatures.head.props.size else 13
+      assert(byPoint(decoded, exact) == byPoint(extremeFeatures, exact))
+      val expected = cellRows(decoded.map(_.props))
+      val kinds = expected.flatten.map(_.getAs[String]("kind")).toSet
+      assert(kinds == Set("bool", "i8", "u8", "i16", "u16", "i32", "u32", "i64", "u64",
+        "f32", "f64", "bytes", "string", "vec", "map"))
+      val df = spark.read.format(format).load(dir).select("props")
+      assert(readerRows(df).map(_.getSeq[Row](0)) == expected)
+      assert(df.collect().toSeq.map(_.getSeq[Row](0)) == expected)
+    }
+  }
+
+  test("props roundtrip: v2 write -> read of all 15 kinds at their extremes, both formats") {
+    val s = spark
+    import s.implicits._
+    val df = extremeFeatures.map(f => (Wkb.write(f.geom),
+      f.props.map { case (k, v) => graft.sources.GeoJsonIngest.toCell(k, v) })).toDF("wkb", "props")
+    for (format <- Seq("geomedea", "flatgeobuf")) {
+      val out = java.nio.file.Files.createTempDirectory(s"props_rt_$format").toString + "/o"
+      df.coalesce(1).write.format(format).mode("append").save(out)
+      val shards = new java.io.File(out).listFiles.filter(_.getName.endsWith(
+        if (format == "geomedea") ".geomedea" else ".fgb"))
+      assert(shards.length == 1)
+      val written = java.nio.file.Files.readAllBytes(shards.head.toPath)
+      val decoded =
+        if (format == "geomedea") GeomedeaFile.selectAll(written)
+        else graft.sources.FlatGeobuf.selectAll(written)
+      // the writer read every cell back into the values it was given
+      val byLng = decoded.map(f => Wkb.asText(f.geom) -> f.props).toMap
+      for (f <- extremeFeatures) {
+        val got = byLng(Wkb.asText(f.geom))
+        if (format == "geomedea") assert(got == f.props)
+        else assert(got.take(13) == f.props.take(13) && got.map(_._1) == f.props.map(_._1))
+      }
+      val back = spark.read.format(format).load(out).orderBy("min_lng").select("props")
+      assert(back.collect().toSeq.map(_.getSeq[Row](0)) ==
+        cellRows(decoded.sortBy(_.geom.envelope.minLng).map(_.props)))
+    }
+    // a written cell whose kind is unknown, or whose value is missing, fails the write
+    import graft.sources.GeoJsonIngest.PropCell
+    for ((cell, message) <- Seq(PropCell("k", "i65", i = Some(1L)) -> "unknown prop kind i65",
+      PropCell("k", "i64") -> "prop kind i64 without its value",
+      PropCell("k", "vec") -> "prop kind vec without its value")) {
+      val out = java.nio.file.Files.createTempDirectory("props_bad").toString + "/o"
+      val e = intercept[Exception](Seq((Wkb.write(Wkb.Pt(0, 0)), Seq(cell))).toDF("wkb", "props")
+        .write.format("geomedea").mode("append").save(out))
+      val causes = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null).toSeq
+      assert(causes.exists(c => c.isInstanceOf[IllegalArgumentException] &&
+        c.getMessage.contains(message)), s"$cell: $causes")
+    }
+  }
+
+  test("a vec nested in a vec fails the props read with IllegalArgumentException as its cause") {
+    import graft.codec.FeatureCodec.PVec
+    val dir = java.nio.file.Files.createTempDirectory("props_vecvec").toString
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/vv.geomedea"), GeomedeaFile.write(
+      Seq(Feature(Wkb.Pt(0, 0), Vector("vv" -> PVec(Vector(PVec(Vector(PInt64(1)))))))),
+      compressed = true))
+    val df = spark.read.format("geomedea").load(dir)
+    assert(df.select("wkb", "prop_vals").collect().length == 1)
+    val e = intercept[org.apache.spark.SparkException](df.select("props").collect())
+    val causes = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null).toSeq
+    val iae = causes.collectFirst { case x: IllegalArgumentException => x }
+      .getOrElse(fail(s"no IllegalArgumentException among the causes of $e"))
+    assert(iae.getMessage.contains("one level of Vec/Map nesting"))
+  }
+
+  test("conf shipping: planned reader and writer factories hold a broadcast, no Hadoop Configuration") {
+    import org.apache.hadoop.conf.Configuration
+    import org.apache.spark.broadcast.Broadcast
+    import org.apache.spark.sql.connector.write.{LogicalWriteInfo, PhysicalWriteInfo}
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    import org.apache.spark.util.SerializableConfiguration
+    def javaBytes(o: AnyRef): Int = {
+      val bos = new java.io.ByteArrayOutputStream
+      val out = new java.io.ObjectOutputStream(bos)
+      out.writeObject(o); out.close()
+      bos.size
+    }
+    def fieldTypes(o: AnyRef): Seq[Class[_]] = o.getClass.getDeclaredFields.toSeq.map(_.getType)
+    val confBytes = javaBytes(new SerializableConfiguration(spark.sessionState.newHadoopConf()))
+    val readers = scanOf(spark.read.format("geomedea").load(shardDir)).toBatch.createReaderFactory()
+    val src = spark.read.format("geomedea").load(shardDir).select("wkb", "props")
+    val out = java.nio.file.Files.createTempDirectory("conf_ship").toString + "/o"
+    val writers = new graft.sources.v2.ContainerTable(graft.sources.v2.ContainerFormat.Geomedea, Seq(out))
+      .newWriteBuilder(new LogicalWriteInfo {
+        override def queryId(): String = "conf"
+        override def schema(): org.apache.spark.sql.types.StructType = src.schema
+        override def options(): CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty()
+      }).build().toBatch.createBatchWriterFactory(new PhysicalWriteInfo {
+        override def numPartitions(): Int = 1
+      })
+    for (factory <- Seq(readers, writers)) {
+      val types = fieldTypes(factory)
+      assert(!types.exists(t => classOf[Configuration].isAssignableFrom(t) ||
+        classOf[SerializableConfiguration].isAssignableFrom(t)), s"$factory fields: $types")
+      assert(types.exists(classOf[Broadcast[_]].isAssignableFrom), s"$factory fields: $types")
+      // the conf alone serializes to tens of KB; a factory is a few KB
+      val bytes = javaBytes(factory)
+      assert(bytes * 4 < confBytes, s"$factory: $bytes serialized bytes, the conf $confBytes")
+    }
+  }
+
+  test("conf shipping: a FileSystem set only in the session conf is reached inside tasks") {
+    import org.apache.spark.sql.streaming.Trigger
+    val s = spark
+    import s.implicits._
+    val base = java.nio.file.Files.createTempDirectory("conf_scheme").toString
+    val lake = s"${TaskSchemeFs.Scheme}://$base/lake"
+    // the FileSystem cache off: every getFileSystem, in a task too,
+    // resolves fs.<scheme>.impl from the conf it was handed
+    spark.conf.set(s"fs.${TaskSchemeFs.Scheme}.impl", classOf[TaskSchemeFs].getName)
+    spark.conf.set(s"fs.${TaskSchemeFs.Scheme}.impl.disable.cache", "true")
+    def inTasks[T](what: String)(body: => T): T = {
+      val before = TaskSchemeFs.taskInits.get()
+      val out = body
+      assert(TaskSchemeFs.taskInits.get() > before, s"$what: no task reached the scheme")
+      out
+    }
+    try {
+      inTasks("write") {
+        (0 until 40).map(i => (Wkb.write(Wkb.Pt(i * 1000000, i * 500000)),
+          Seq(graft.sources.GeoJsonIngest.toCell("id", PInt64(i.toLong)))))
+          .toDF("wkb", "props").repartition(2).write.format("geomedea").mode("append").save(lake)
+      }
+      assert(new java.io.File(s"$base/lake").listFiles.count(_.getName.endsWith(".geomedea")) == 2)
+      val ids = inTasks("batch read") {
+        spark.read.format("geomedea").load(lake).select(col("props")(0)("i")).as[Long].collect()
+      }
+      assert(ids.sorted.toSeq == (0L until 40L))
+      val got = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+      inTasks("stream read") {
+        spark.readStream.format("geomedea").load(lake).select(col("props")(0)("i").as("id"))
+          .writeStream
+          .foreachBatch { (df: DataFrame, _: Long) => df.collect().foreach(r => got.add(r.getLong(0))) }
+          .option("checkpointLocation", s"$base/ckpt")
+          .trigger(Trigger.AvailableNow()).start().awaitTermination()
+      }
+      assert(got.size == 40)
+    } finally {
+      spark.conf.unset(s"fs.${TaskSchemeFs.Scheme}.impl")
+      spark.conf.unset(s"fs.${TaskSchemeFs.Scheme}.impl.disable.cache")
+    }
+  }
+}
+
+/** The raw local file system under its own scheme, counting the instances
+  * created inside a Spark task: with the FileSystem cache off, a task can
+  * only create one from the conf the reader or writer factory shipped.
+  */
+class TaskSchemeFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create(s"${TaskSchemeFs.Scheme}:///")
+  override def getScheme: String = TaskSchemeFs.Scheme
+  override def initialize(uri: java.net.URI, conf: org.apache.hadoop.conf.Configuration): Unit = {
+    super.initialize(uri, conf)
+    if (org.apache.spark.TaskContext.get() != null) TaskSchemeFs.taskInits.incrementAndGet()
+  }
+}
+
+object TaskSchemeFs {
+  val Scheme = "gmtaskfs"
+  val taskInits = new java.util.concurrent.atomic.AtomicLong()
 }
