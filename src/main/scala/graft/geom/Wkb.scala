@@ -252,12 +252,6 @@ object Wkb {
     write(Poly(Vector(ring)))
   }
 
-  /** Envelope of a WKB blob as packed struct fields; see GraftFunctions. */
-  def envMinLng(wkb: Array[Byte]): Int = envelopeOf(wkb).minLng
-  def envMinLat(wkb: Array[Byte]): Int = envelopeOf(wkb).minLat
-  def envMaxLng(wkb: Array[Byte]): Int = envelopeOf(wkb).maxLng
-  def envMaxLat(wkb: Array[Byte]): Int = envelopeOf(wkb).maxLat
-
   /** WKT debug formatting, mirroring `geometry/mod.rs:209-280` —
     * including the reference's `EMPTY` rendering for empty (nested)
     * collections (`fmt_points` / `fmt_polygon_rings_wkt`), so

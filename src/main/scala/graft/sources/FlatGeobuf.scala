@@ -667,114 +667,55 @@ object FlatGeobuf {
     hb.finishSizePrefixed(hb.endTable())
   }
 
-  /** `splits`: absolute feature-block boundaries sampled every
-    * ~`splitGranularity` bytes (first = feature-section start) for the
-    * manifest, so the full-scan planner can split one oversized shard.
-    */
-  final case class FgbSpoolWritten(extent: Envelope, featureCount: Long, totalBytes: Long,
-                                   splits: Vector[Long] = Vector.empty)
-      extends FeatureSpool.Written
-
-  /** Spill-backed FGB shard writer — the [[graft.sources.ShardSpool]]
-    * analog for the FlatGeobuf container: O(index + one block) heap.
+  /** The FlatGeobuf [[graft.sources.FeatureSpool]]: Hilbert-ASCENDING
+    * layout, size-prefixed Feature blocks, prefix = magic ++ header ++
+    * packed R-tree, splits at block starts.
     *
     * FGB blocks cannot be encoded on arrival: the file's GLOBAL column
     * table (first-appearance key order over the HILBERT-sorted features,
     * type pinned by the first value seen) and the uniform-geometry-type
-    * decision are only known once every feature has been seen. So
-    * arrival spills the extent-independent bincode encoding
-    * ([[graft.codec.FeatureCodec]]) to a local temp file plus small
-    * per-feature metadata: envelope, length, geometry type, and the
-    * interned (key, column-type) list — everything the global pass needs
-    * WITHOUT a second decode pass over the spool. Commit computes the
-    * layout order and column table from the metadata alone, re-reads the
-    * spool once in layout order encoding size-prefixed Feature blocks to
-    * a second temp file, then streams magic ++ header ++ index ++ blocks
-    * to the destination.
+    * decision are only known once every feature has been seen. So each
+    * feature's [[note]] is its geometry type and interned (key,
+    * column-type) list — everything the global pass needs WITHOUT a
+    * second decode pass over the spill. [[layOut]] builds the column
+    * table from the notes in layout order, then decodes each spilled
+    * feature once to encode its block.
     *
     * Byte-identical to [[writeFull]] for the same features in the same
     * arrival order (asserted in PropertiesSpec).
     */
   final class FgbSpool(name: String = "graft", nodeSize: Int = DefaultNodeSize,
-                       splitGranularity: Long = ShardSpool.DefaultSplitGranularity)
-      extends FeatureSpool {
-    require(nodeSize >= 2 && nodeSize <= 0xFFFF,
-      s"nodeSize must be in [2, 65535]; got $nodeSize")
+                       splitGranularity: Long = FeatureSpool.DefaultSplitGranularity)
+      extends FeatureSpool(descending = false, {
+        // checked before the base class creates the spill file
+        require(nodeSize >= 2 && nodeSize <= 0xFFFF,
+          s"nodeSize must be in [2, 65535]; got $nodeSize")
+        splitGranularity
+      }) {
 
-    import java.io.{BufferedOutputStream, OutputStream, RandomAccessFile}
-    import java.nio.file.Files
+    import java.io.OutputStream
 
-    private val spoolPath = Files.createTempFile(ShardSpool.spillDir(), "graft-fgb-spool", ".feat")
-    private val spoolOut: OutputStream =
-      new BufferedOutputStream(Files.newOutputStream(spoolPath), 1 << 16)
-    private val minLng = new scala.collection.mutable.ArrayBuilder.ofInt
-    private val minLat = new scala.collection.mutable.ArrayBuilder.ofInt
-    private val maxLng = new scala.collection.mutable.ArrayBuilder.ofInt
-    private val maxLat = new scala.collection.mutable.ArrayBuilder.ofInt
-    private val lens = new scala.collection.mutable.ArrayBuilder.ofInt
     private val gTypes = new scala.collection.mutable.ArrayBuilder.ofInt
     // per-feature (keyId << 5 | columnType) in prop order; ColumnType <= 12
     private val propMeta = new scala.collection.mutable.ArrayBuffer[Array[Int]]
     private val keyIds = scala.collection.mutable.LinkedHashMap.empty[String, Int]
     private val keyNames = new scala.collection.mutable.ArrayBuffer[String]
-    private var n = 0
-    private var done = false
 
-    def add(f: Feature): Unit = {
-      require(!done, "spool already committed/deleted")
-      val enc = encodeFeature(f)
-      spoolOut.write(enc)
-      val env = f.geom.envelope
-      minLng += env.minLng; minLat += env.minLat
-      maxLng += env.maxLng; maxLat += env.maxLat
-      lens += enc.length
+    override protected def note(f: Feature): Unit = {
       gTypes += geomTypeOf(f.geom)
       propMeta += f.props.iterator.map { case (k, v) =>
         val id = keyIds.getOrElseUpdate(k, { keyNames += k; keyNames.length - 1 })
         (id << 5) | columnTypeOf(v)
       }.toArray
-      n += 1
     }
 
-    def count: Int = n
-
-    /** Assemble and stream the container; `open` receives the exact final
-      * byte count before any destination I/O. The sink is closed here.
-      */
-    def commit(open: Long => OutputStream): FgbSpoolWritten = {
-      require(!done, "spool already committed/deleted")
-      done = true
-      spoolOut.close()
-      val mnLng = minLng.result(); val mnLat = minLat.result()
-      val mxLng = maxLng.result(); val mxLat = maxLat.result()
-      val len = lens.result(); val gt = gTypes.result()
-      def envOf(i: Int): Envelope = Envelope(mnLng(i), mnLat(i), mxLng(i), mxLat(i))
-
-      var extent = Envelope.empty
-      var i = 0
-      while (i < n) { extent = extent.union(envOf(i)); i += 1 }
-      val hkeys = new Array[Long](n)
-      i = 0
-      while (i < n) {
-        val e = envOf(i)
-        hkeys(i) = Hilbert.scaled(e.centerLng, e.centerLat, extent)
-        i += 1
-      }
-      val offs = new Array[Long](n)
-      i = 1
-      while (i < n) { offs(i) = offs(i - 1) + len(i - 1); i += 1 }
-      // Hilbert ASC (FGB convention), ties by arrival == writeFull's stable sortBy
-      val order = Array.tabulate[Integer](n)(Integer.valueOf)
-      java.util.Arrays.sort(order, (a: Integer, b: Integer) => {
-        val c = java.lang.Long.compare(hkeys(a.intValue), hkeys(b.intValue))
-        if (c != 0) c else Integer.compare(a.intValue, b.intValue)
-      })
-
+    protected def layOut(order: Array[Int], ordered: Iterator[(Array[Byte], Envelope)],
+                         extent: Envelope, body: OutputStream): FeatureSpool.Layout = {
       // global column table: first appearance in LAYOUT order, type
       // pinned by the first value seen (== writeFull over `ordered`)
       val colOrder = scala.collection.mutable.LinkedHashMap.empty[Int, Int]
       order.foreach { j =>
-        propMeta(j.intValue).foreach { packed =>
+        propMeta(j).foreach { packed =>
           val id = packed >>> 5
           if (!colOrder.contains(id)) colOrder(id) = packed & 31
         }
@@ -782,70 +723,21 @@ object FlatGeobuf {
       val names = colOrder.keys.map(keyNames(_)).toArray
       val types = colOrder.values.toArray
       val colIdx = names.zipWithIndex.toMap
-      val uniformType = {
-        var t = if (n == 0) 0 else gt(0)
-        i = 1
-        while (i < n && t != 0) { if (gt(i) != t) t = 0; i += 1 }
-        t
-      }
+      val gt = gTypes.result()
+      val uniformType = if (gt.nonEmpty && gt.forall(_ == gt(0))) gt(0) else 0
 
-      val blockPath = Files.createTempFile(ShardSpool.spillDir(), "graft-fgb-spool", ".blocks")
-      try {
-        val leaves = Vector.newBuilder[(Envelope, Long)]
-        var featOff = 0L
-        val raf = new RandomAccessFile(spoolPath.toFile, "r")
-        try {
-          val blocksOut = new BufferedOutputStream(Files.newOutputStream(blockPath), 1 << 16)
-          try order.foreach { j =>
-            val buf = new Array[Byte](len(j.intValue))
-            raf.seek(offs(j.intValue)); raf.readFully(buf)
-            val block = featureBlock(decodeFeature(buf), uniformType, colIdx, types)
-            blocksOut.write(block)
-            leaves += ((envOf(j.intValue), featOff))
-            featOff += block.length
-          } finally blocksOut.close()
-        } finally raf.close()
-        val leafVec = leaves.result()
-        val tree =
-          if (n == 0) Array.emptyByteArray
-          else buildTree(leafVec, nodeSize)
-        val hdr = headerBlock(name, extent, n.toLong, nodeSize, names, types, uniformType)
-        val total = Magic.length.toLong + hdr.length + tree.length + featOff
-        val dataStart = Magic.length.toLong + hdr.length + tree.length
-        // sample block boundaries every ~splitGranularity encoded bytes
-        // (leafVec walks the layout order: block offsets ascend)
-        val splitsB = Vector.newBuilder[Long]
-        splitsB += dataStart
-        var lastRel = 0L
-        var sampled = 1
-        leafVec.foreach { case (_, blockRel) =>
-          if (blockRel > 0 && blockRel - lastRel >= splitGranularity) {
-            splitsB += dataStart + blockRel
-            lastRel = blockRel
-            sampled += 1
-          }
-        }
-        val splits = if (sampled >= 2) splitsB.result() else Vector.empty[Long]
-        val out = open(total)
-        try {
-          out.write(Magic)
-          out.write(hdr)
-          out.write(tree)
-          Files.copy(blockPath, out)
-        } finally out.close()
-        FgbSpoolWritten(extent, n.toLong, total, splits)
-      } finally {
-        Files.deleteIfExists(blockPath)
-        Files.deleteIfExists(spoolPath)
-        ()
+      val leaves = Vector.newBuilder[(Envelope, Long)]
+      var featOff = 0L
+      ordered.foreach { case (enc, env) =>
+        val block = featureBlock(decodeFeature(enc), uniformType, colIdx, types)
+        body.write(block)
+        leaves += ((env, featOff))
+        featOff += block.length
       }
-    }
-
-    /** Abort: drop the spool and its temp file. Safe to call twice. */
-    def delete(): Unit = {
-      if (!done) { done = true; try spoolOut.close() catch { case _: Exception => () } }
-      Files.deleteIfExists(spoolPath)
-      ()
+      val leafVec = leaves.result()
+      val tree = if (leafVec.isEmpty) Array.emptyByteArray else buildTree(leafVec, nodeSize)
+      val hdr = headerBlock(name, extent, leafVec.length.toLong, nodeSize, names, types, uniformType)
+      FeatureSpool.Layout(Magic ++ hdr ++ tree, leafVec.iterator.map(_._2))
     }
   }
 

@@ -69,18 +69,19 @@ object GeomedeaFile {
   }
 
   /** Page-assembly result: index leaves in layout order
-    * (bounds, page_starting_offset, in-page offset), finished-page count,
-    * and the page section's total byte length (headers included).
+    * (bounds, page_starting_offset, in-page offset) and the finished-page
+    * count.
     */
   private[sources] final case class PageAssembly(
-      leaves: Vector[(Envelope, Long, Int)], pageCount: Long, pageBytes: Long)
+      leaves: Vector[(Envelope, Long, Int)], pageCount: Long)
 
   /** Shared page-assembly core: consumes already-encoded features in
     * LAYOUT order and writes finished page blocks (PageHeader ++ body)
     * to `sink`, holding only the current page in memory. [[writeFull]]
-    * feeds it an in-memory iterator (byte-golden tested); [[ShardSpool]]
-    * feeds it a temp-file-backed iterator so an executor task never
-    * holds its shard.
+    * feeds it an in-memory iterator (byte-golden tested); [[ShardSpool]],
+    * the geomedea body encoder of the one spill-backed [[FeatureSpool]],
+    * feeds it the spill re-read in layout order so an executor task never
+    * holds its shard, and takes its page starts as the split boundaries.
     */
   private[sources] def assemblePages(
       ordered: Iterator[(Array[Byte], Envelope)], compressed: Boolean,
@@ -111,7 +112,7 @@ object GeomedeaFile {
       if (body.size.toLong > pageSizeGoal) closePage()
     }
     if (pageFeatures > 0 || pagesClosed == 0) closePage()
-    PageAssembly(leaves.result(), pagesClosed, pageStart)
+    PageAssembly(leaves.result(), pagesClosed)
   }
 
   /** Decoded pages can never legitimately approach this (the goal is

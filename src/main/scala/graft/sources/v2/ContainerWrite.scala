@@ -14,11 +14,16 @@ import org.apache.spark.util.SerializableConfiguration
   * per input partition, written EXECUTOR-side — the scale path the
   * functional bridges (`GeomedeaSpark.write`, `FlatGeobufSpark.write`,
   * driver collect) deliberately are not. Each shard is a complete
-  * container in its format's own layout (geomedea: header + packed R-tree
-  * + zstd pages, Hilbert-desc, [[graft.sources.ShardSpool]]; FGB:
-  * spec-conformant, Hilbert-asc + packed R-tree,
-  * [[graft.sources.FlatGeobuf.FgbSpool]]) — spill-backed, so task heap
-  * stays O(index + one page) regardless of shard size — and the result
+  * container in its format's own layout, written by the one spill-backed
+  * [[graft.sources.FeatureSpool]], so task heap stays O(index + one page)
+  * regardless of shard size. The spool owns the spill, the Hilbert layout
+  * sort, the body temp file, split sampling and the stream-out; each
+  * format supplies its layout direction, an optional per-feature note and
+  * its body encoder, which also builds its prefix (geomedea,
+  * [[graft.sources.ShardSpool]]: Hilbert-desc zstd pages, header + packed
+  * R-tree, page starts as splits; FGB, [[graft.sources.FlatGeobuf.FgbSpool]]:
+  * Hilbert-asc Feature blocks noting geometry type and columns, magic +
+  * header + packed R-tree, block starts as splits). The result
   * directory is exactly what [[ContainerSource]] consumes, with per-file
   * pruning intact. Callers control shard count/size via `repartition`;
   * shards are capped at [[ContainerWriterFactory.MaxFileBytes]].
@@ -41,7 +46,7 @@ class ContainerWriteBuilder(format: ContainerFormat, path: String, info: Logical
       // split sampling granularity for the manifest's intra-shard
       // boundaries (Parquet row-group-split analog on the read side)
       val splitGranularity = info.options.getLong("splitGranularity",
-        graft.sources.ShardSpool.DefaultSplitGranularity)
+        FeatureSpool.DefaultSplitGranularity)
       require(splitGranularity > 0, s"splitGranularity must be positive; got $splitGranularity")
       new ContainerBatchWrite(format, path, info.schema(),
         format.spool(info.options, splitGranularity), doTruncate, ShardToken.from(info))
@@ -102,7 +107,7 @@ class ContainerBatchWrite(format: ContainerFormat, path: String, schema: StructT
 }
 
 object ContainerWriterFactory {
-  /** Shard byte cap: a format/reader ergonomics bound (the spools keep
+  /** Shard byte cap: a format/reader ergonomics bound (the spool keeps
     * task heap O(index + one page)), also the driver-side bridges' file
     * bound.
     */

@@ -648,4 +648,56 @@ class CompactionSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("compaction output is deterministic: equal shard bytes and masked manifests across runs") {
+    import spark.implicits._
+    import java.nio.file.{Files, Path => JPath}
+    def copyLake(from: JPath): JPath = {
+      val to = Files.createTempDirectory(s"${from.getFileName}_copy")
+      val ls = Files.list(from)
+      try ls.forEach { f =>
+        require(Files.isRegularFile(f), s"unexpected lake entry $f")
+        Files.copy(f, to.resolve(f.getFileName))
+      } finally ls.close()
+      to
+    }
+    def sha(f: JPath): String = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(Files.readAllBytes(f)).map("%02x".format(_)).mkString
+    for (fmt <- Seq(ContainerFormat.Geomedea, ContainerFormat.FlatGeobuf)) {
+      val lake = Files.createTempDirectory(s"${fmt.name}_determinism")
+      // Hilbert ties by construction: a hot cell on a 0.01 deg grid whose
+      // every point holds three features (distinct props, so their order
+      // shows in the bytes), plus spread points far away
+      for (a <- 0 until 4) {
+        (0 until 300).map { i =>
+          val id = (a * 1000 + i).toLong
+          val (lng, lat) =
+            if (i % 10 == 0) (100.0 + i % 7, 40.0 + i % 11)
+            else (5.0 + (i / 3) % 10 * 0.01, 5.0 + (i / 30) % 10 * 0.01)
+          (Wkb.write(Wkb.Pt((lng * 1e7).toInt, (lat * 1e7).toInt)),
+            Seq(graft.sources.GeoJsonIngest.toCell("doc", PString(s"doc-$id")),
+              graft.sources.GeoJsonIngest.toCell("id", PInt64(id))))
+        }.toDF("wkb", "props")
+          .repartition(2).write.format(fmt.name).mode("append").save(lake.toString)
+      }
+      val runs = Seq(copyLake(lake), copyLake(lake)).map { dir =>
+        assert(Compact.compact(spark, dir.toString, numShards = 2, format = fmt.name) == 2)
+        // a job of many tasks between the two compactions: the task ids
+        // in the second run's shard names differ from the first's
+        spark.sparkContext.parallelize(1 to 200, 200).count()
+        val shards = Files.list(dir)
+        val shas =
+          try shards.toArray.map(_.asInstanceOf[JPath])
+            .filter(_.getFileName.toString.endsWith(fmt.suffix)).map(sha).sorted.toSeq
+          finally shards.close()
+        val hdir = new org.apache.hadoop.fs.Path(dir.toString)
+        val manifest = GeomedeaManifest.read(
+          hdir.getFileSystem(spark.sessionState.newHadoopConf()), hdir).get
+        (shas, manifest.values.map(_.copy(name = "part").line).toSeq.sorted)
+      }
+      assert(runs(0)._1.size == 2, fmt.name)
+      assert(runs(0)._1 == runs(1)._1, s"${fmt.name}: shard bytes differ")
+      assert(runs(0)._2 == runs(1)._2, s"${fmt.name}: masked manifest entries differ")
+    }
+  }
 }

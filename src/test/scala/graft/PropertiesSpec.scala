@@ -129,7 +129,7 @@ object PropertiesSpec extends Properties("graft") {
         val got = sink.toByteArray
         java.util.Arrays.equals(got, expect.bytes) &&
           w.totalBytes == expect.bytes.length.toLong &&
-          w.extent == expect.extent && w.pageCount == expect.pageCount &&
+          w.extent == expect.extent &&
           w.featureCount == feats.length.toLong
     }
 
