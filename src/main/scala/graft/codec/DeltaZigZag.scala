@@ -38,6 +38,11 @@ object DeltaZigZag {
     out.toByteArray
   }
 
+  /** Inverse of [[encode]]. A corrupt blob fails with
+    * IllegalArgumentException before anything is allocated: every value
+    * takes at least one byte, so a count that is negative or larger than
+    * the bytes left is rejected, as is a varint longer than 10 bytes.
+    */
   def decode(bytes: Array[Byte]): Array[Int] = {
     var pos = 0
     def varint(): Long = {
@@ -45,6 +50,8 @@ object DeltaZigZag {
       var result = 0L
       var b = 0
       do {
+        if (shift > 63 || pos >= bytes.length)
+          throw new IllegalArgumentException(s"truncated or overlong varint at byte $pos")
         b = bytes(pos) & 0xFF
         pos += 1
         result |= (b & 0x7FL) << shift
@@ -52,55 +59,17 @@ object DeltaZigZag {
       } while ((b & 0x80) != 0)
       result
     }
-    val n = varint().toInt
+    val count = varint()
+    if (count < 0 || count > bytes.length - pos)
+      throw new IllegalArgumentException(
+        s"delta-zigzag count $count does not fit the ${bytes.length - pos} bytes left")
+    val n = count.toInt
     val out = new Array[Int](n)
     var prev = 0L
     var i = 0
     while (i < n) {
       prev += unzigzag(varint())
       out(i) = prev.toInt
-      i += 1
-    }
-    out
-  }
-
-  /** Long-array variants (for Hilbert keys). */
-  def encodeLongs(values: Array[Long]): Array[Byte] = {
-    val out = new ByteArrayOutputStream(values.length * 3 + 4)
-    putVarint(out, values.length.toLong)
-    var prev = 0L
-    var i = 0
-    while (i < values.length) {
-      putVarint(out, zigzag(values(i) - prev))
-      prev = values(i)
-      i += 1
-    }
-    out.toByteArray
-  }
-
-  def decodeLongs(bytes: Array[Byte]): Array[Long] = {
-    var pos = 0
-    def varint(): Long = {
-      var shift = 0
-      var result = 0L
-      var b = 0
-      do {
-        b = bytes(pos) & 0xFF
-        pos += 1
-        result |= (b & 0x7FL) << shift
-        shift += 7
-      } while ((b & 0x80) != 0)
-      result
-    }
-    val n = varint().toInt
-    // primitive array like decode(): a growable buffer boxes every
-    // element and allocates twice on the UDF hot path
-    val out = new Array[Long](n)
-    var prev = 0L
-    var i = 0
-    while (i < n) {
-      prev += unzigzag(varint())
-      out(i) = prev
       i += 1
     }
     out

@@ -163,14 +163,4 @@ object Cells {
     }
     out
   }
-
-  /** Web-map-style tile assignment (z, x, y) packed into a long:
-    * tileId = x * 2^z + y at zoom z over the same world rectangle
-    * (SURVEY.md §2.11 "TileAssign"). Identical arithmetic to cellId, kept
-    * as a named concept because tiles are a materialization target.
-    */
-  def tileId(lng: Int, lat: Int, zoom: Int): Long = cellId(lng, lat, zoom)
-
-  def tileX(tile: Long, zoom: Int): Long = tile / cellsPerAxis(zoom)
-  def tileY(tile: Long, zoom: Int): Long = tile % cellsPerAxis(zoom)
 }

@@ -128,7 +128,7 @@ object Wkb {
       case 2 => Line(readCoords(buf))
       case 3 => Poly(readRings(buf))
       case 4 =>
-        val n = buf.getInt()
+        val n = count(buf, 21)
         val out = new Array[Long](n)
         var i = 0
         while (i < n) {
@@ -140,26 +140,39 @@ object Wkb {
         }
         MultiPt(out)
       case 5 =>
-        val n = buf.getInt()
+        val n = count(buf, 9)
         MultiLine(Vector.fill(n)(readGeom(buf) match {
           case Line(cs) => cs
           case other    => throw new IllegalArgumentException(s"MultiLineString child: $other")
         }))
       case 6 =>
-        val n = buf.getInt()
+        val n = count(buf, 9)
         MultiPoly(Vector.fill(n)(readGeom(buf) match {
           case Poly(rs) => rs
           case other    => throw new IllegalArgumentException(s"MultiPolygon child: $other")
         }))
       case 7 =>
-        val n = buf.getInt()
+        val n = count(buf, 9)
         Collection(Vector.fill(n)(readGeom(buf)))
       case other => throw new IllegalArgumentException(s"unsupported WKB type $other")
     }
   }
 
-  private def readCoords(buf: ByteBuffer): Array[Long] = {
+  /** A WKB count, checked before anything is sized from it: each of the
+    * n items takes at least `minBytes` (a coordinate 16, a point 21, a
+    * ring's count 4, any other geometry 9), so a negative count or one
+    * the bytes left cannot hold is a corrupt blob, not an allocation.
+    */
+  private def count(buf: ByteBuffer, minBytes: Int): Int = {
     val n = buf.getInt()
+    if (n < 0 || n > buf.remaining / minBytes)
+      throw new IllegalArgumentException(
+        s"WKB count $n does not fit the ${buf.remaining} bytes left")
+    n
+  }
+
+  private def readCoords(buf: ByteBuffer): Array[Long] = {
+    val n = count(buf, 16)
     val out = new Array[Long](n)
     var i = 0
     while (i < n) {
@@ -170,7 +183,7 @@ object Wkb {
   }
 
   private def readRings(buf: ByteBuffer): Vector[Array[Long]] = {
-    val n = buf.getInt()
+    val n = count(buf, 4)
     Vector.fill(n)(readCoords(buf))
   }
 

@@ -7,10 +7,9 @@ import org.apache.spark.sql.functions._
 /** Batch gap-based sessionization: the classic clickstream/etl operator —
   * consecutive events of one key belong to one session while the gap
   * between them stays <= `gapSeconds`; a larger gap starts a new session.
-  * The streaming twin (graft.streaming.StreamAgg.sessionize) keeps open
-  * sessions in keyed state; this is the one-shot batch replay over the
-  * full history, bit-exact and cross-engine replayable (pure integer
-  * epoch-microsecond math — no float, no timezone).
+  * It is a one-shot batch pass over the full history, bit-exact and
+  * cross-engine replayable (pure integer epoch-microsecond math — no
+  * float, no timezone).
   *
   * Scale shape: ONE hash shuffle on the key. The boundary lag, the
   * running boundary sum (= session ordinal) and the final per-session

@@ -4,9 +4,9 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, SupportsTriggerAvailableNow}
 
-/** Streaming READ side of a container lake — the inverse of the
-  * streaming->native-format sink (`streaming/StreamIngest` +
-  * foreachBatch writer): `spark.readStream.format("geomedea" |
+/** Streaming READ side of a container lake — the inverse of a
+  * foreachBatch sink that appends shards with the container writer:
+  * `spark.readStream.format("geomedea" |
   * "flatgeobuf").load(dir)` tails a directory that another job keeps
   * appending shards to, emitting each NEW shard's features exactly once.
   *

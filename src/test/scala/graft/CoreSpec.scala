@@ -228,9 +228,7 @@ class CoreSpec extends AnyFunSuite {
     assert(Cells.kRing(0L, res, 1).toSet == Set(0L, 1L, 16L, 17L))
     assert(Cells.kRing(Cells.cellId(0, 0, res), res, 1).length == 9)
     // tile == cell arithmetic
-    assert(Cells.tileId(0, 0, 3) == Cells.cellId(0, 0, 3))
-    val t = Cells.tileId(ScaledCoord.toScaled(10), ScaledCoord.toScaled(10), 3)
-    assert(Cells.tileX(t, 3) == 4L && Cells.tileY(t, 3) == 4L)
+    assert(Cells.cellId(ScaledCoord.toScaled(10), ScaledCoord.toScaled(10), 3) == 4L * 8 + 4)
   }
 
   test("cells: level-tagged keys — every point in an envelope matches exactly one cover key") {
@@ -334,9 +332,24 @@ class CoreSpec extends AnyFunSuite {
     val near = Array.tabulate(1000)(i => 500000000 + i * 3)
     assert(DeltaZigZag.encode(near).length < 1200)
     assert(DeltaZigZag.decode(DeltaZigZag.encode(near)).toSeq == near.toSeq)
-    val longs = Array(143165576L, 2720145952L, 0L, -5L)
-    assert(DeltaZigZag.decodeLongs(DeltaZigZag.encodeLongs(longs)).toSeq == longs.toSeq)
     assert(DeltaZigZag.decode(DeltaZigZag.encode(Array.empty[Int])).isEmpty)
+  }
+
+  test("wkb and delta-zigzag reject counts larger than the bytes left") {
+    def blob(bs: Int*): Array[Byte] = bs.map(_.toByte).toArray
+    // count 2^31-1, 2^28 and 2^32-1 (-1 as an Int) in a 5-byte blob
+    Seq(blob(0xFF, 0xFF, 0xFF, 0xFF, 0x07), blob(0x80, 0x80, 0x80, 0x80, 0x01),
+        blob(0xFF, 0xFF, 0xFF, 0xFF, 0x0F)).foreach { b =>
+      intercept[IllegalArgumentException](DeltaZigZag.decode(b))
+    }
+    // an 11-byte varint
+    intercept[IllegalArgumentException](DeltaZigZag.decode(Array.fill[Byte](11)(0x80.toByte)))
+    // LineString with 2^28 coordinates, MultiPoint with 2^31-1 points,
+    // LineString with a negative count: no bytes follow any of them
+    Seq(blob(1, 2, 0, 0, 0, 0, 0, 0, 0x10), blob(1, 4, 0, 0, 0, 0xFF, 0xFF, 0xFF, 0x7F),
+        blob(1, 2, 0, 0, 0, 0xFF, 0xFF, 0xFF, 0xFF)).foreach { b =>
+      intercept[IllegalArgumentException](Wkb.read(b))
+    }
   }
 
   test("WKT parser goldens (wkt.rs:150-300)") {

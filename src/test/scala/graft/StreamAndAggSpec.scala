@@ -1,8 +1,5 @@
 package graft
 
-import graft.expr.ExtentAggregator
-import graft.geom.Envelope
-import graft.streaming.StreamIngest
 import graft.table.InterleavedDocs
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -21,164 +18,6 @@ class StreamAndAggSpec extends AnyFunSuite {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
-  }
-
-  test("ExtentAggregator equals the 4-way min/max and obeys the empty monoid") {
-    val geo = InterleavedDocs.withGeometry(InterleavedDocs.docs(spark, Sf))
-    val viaAgg = geo.select(ExtentAggregator.stExtent(
-      col("min_lng"), col("min_lat"), col("max_lng"), col("max_lat"))).head()
-      .getStruct(0)
-    val viaMinMax = geo.agg(
-      min("min_lng"), min("min_lat"), max("max_lng"), max("max_lat")).head()
-    assert(viaAgg.getInt(0) == viaMinMax.getInt(0))
-    assert(viaAgg.getInt(1) == viaMinMax.getInt(1))
-    assert(viaAgg.getInt(2) == viaMinMax.getInt(2))
-    assert(viaAgg.getInt(3) == viaMinMax.getInt(3))
-    // empty input -> the inverted-rectangle identity (bounds.rs:41-46)
-    val empty = geo.where(lit(false)).select(ExtentAggregator.stExtent(
-      col("min_lng"), col("min_lat"), col("max_lng"), col("max_lat"))).head().getStruct(0)
-    assert(Envelope(empty.getInt(0), empty.getInt(1), empty.getInt(2), empty.getInt(3)) == Envelope.empty)
-  }
-
-  test("streaming availableNow ingest: all rows land, per-batch lineage, spans preserved") {
-    val base = java.nio.file.Files.createTempDirectory("graft_stream").toString
-    val docs = InterleavedDocs.docs(spark, Sf)
-    // several source files -> several micro-batches (maxFilesPerTrigger=1)
-    docs.repartition(3).write.parquet(s"$base/src")
-
-    val nBatches = StreamIngest.runAvailableNow(spark, s"$base/src", s"$base/out", s"$base/ckpt")
-    assert(nBatches >= 3)
-
-    val written = spark.read.parquet(s"$base/out/docs")
-    assert(written.count() == docs.count())
-    // span-sequence invariant through the streaming path
-    val in = docs.withColumnRenamed("spans", "spans_in")
-    assert(written.join(in, "doc_id").where(not(col("spans") === col("spans_in"))).count() == 0)
-
-    val lineage = spark.read.parquet(s"$base/out/_stream_lineage")
-    assert(lineage.count() == nBatches)
-    assert(lineage.agg(sum("rows")).head().getLong(0) == docs.count())
-
-    // resume semantics: a second availableNow run over the same source +
-    // checkpoint processes nothing new
-    val again = StreamIngest.runAvailableNow(spark, s"$base/src", s"$base/out", s"$base/ckpt")
-    assert(spark.read.parquet(s"$base/out/docs").count() == docs.count())
-  }
-
-  test("watermarked windowed agg: on-time windows emit once and match batch; late rows drop") {
-    import java.sql.Timestamp
-    val base = java.nio.file.Files.createTempDirectory("graft_winagg").toString
-    val src = s"$base/src"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(src))
-    import spark.implicits._
-    def ts(h: Double) = new Timestamp((h * 3600000L).toLong)
-    def write(name: String, rows: Seq[(Long, Timestamp, Long, String, Double)]): Unit =
-      rows.toDF("event_id", "ts", "user_id", "event_type", "value")
-        .coalesce(1).write.parquet(s"$src/$name")
-    def run(): Unit = {
-      val stream = spark.readStream
-        .schema("event_id long, ts timestamp, user_id long, event_type string, value double")
-        .option("maxFilesPerTrigger", "1000")
-        .parquet(s"$src/*")
-      val q = graft.streaming.StreamAgg.windowedCounts(stream).writeStream
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .format("parquet").option("path", out)
-        .start()
-      q.awaitTermination()
-    }
-    // phase A: hours 0..3 -> after this run the watermark is 3:00-2h = 1:00
-    write("a", (0 until 18).map(i => (i.toLong, ts(i / 6.0), 1L + i % 3, "view", 1.0)))
-    run()
-    // phase B: hours 10..13 -> watermark 11:00; windows [1,2),[2,3),[10,11) close
-    write("b", (100 until 118).map(i => (i.toLong, ts(10 + (i - 100) / 6.0), 2L, "click", 2.0)))
-    run()
-    // phase C: a LATE row at hour 0.5 (far behind the 11:00 watermark) +
-    // an on-time row at hour 20
-    write("c", Seq((200L, ts(0.5), 9L, "view", 100.0), (201L, ts(20), 9L, "view", 1.0)))
-    run()
-
-    val emitted = spark.read.parquet(out)
-    // every emitted window ends at or before the final watermark: the
-    // last batch sees the on-time hour-20 row, so the closing flush runs
-    // at watermark 20:00 - 2h = 18:00
-    val lateWm = ts(18).getTime
-    assert(emitted.where((col("w_start").cast("double") * 1000 + 3600000) > lateWm).count() == 0)
-    // emitted windows match the batch aggregation over ON-TIME rows only:
-    // the late hour-0.5 row (value 100) must not appear anywhere
-    assert(emitted.where(col("sum_value") >= 100.0).count() == 0)
-    val batch = graft.streaming.StreamAgg.windowedCounts(
-      spark.read.parquet(s"$src/a", s"$src/b").withColumn("dummy", lit(1)).drop("dummy"))
-    // batch path of the same code is an aggregation without streaming
-    // semantics; restrict to the emitted (closed) windows and compare
-    val closed = batch.where((col("w_start").cast("double") * 1000 + 3600000) <= lateWm)
-    val em = emitted.select("w_start", "event_type", "n", "sum_value")
-      .collect().map(_.toSeq).toSet
-    val ex = closed.select("w_start", "event_type", "n", "sum_value")
-      .collect().map(_.toSeq).toSet
-    assert(em == ex, s"emitted $em != expected $ex")
-    assert(em.nonEmpty)
-  }
-
-  test("flatMapGroupsWithState sessionization equals the batch gap-session oracle") {
-    import java.sql.Timestamp
-    val base = java.nio.file.Files.createTempDirectory("graft_sess").toString
-    val src = s"$base/src"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(src))
-    import spark.implicits._
-    // +1h shift: an event AT the initial watermark (epoch 0) is dropped
-    // as late before it reaches the state function
-    def ts(h: Double) = new Timestamp(((h + 1.0) * 3600000L).toLong)
-    def write(name: String, rows: Seq[(Long, Timestamp, Long, String, Double)]): Unit =
-      rows.toDF("event_id", "ts", "user_id", "event_type", "value")
-        .coalesce(1).write.parquet(s"$src/$name")
-    def run(): Unit = {
-      val stream = spark.readStream
-        .schema("event_id long, ts timestamp, user_id long, event_type string, value double")
-        .parquet(s"$src/*")
-      val q = graft.streaming.StreamAgg.sessionize(stream, gapMinutes = 30).toDF().writeStream
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .format("parquet").option("path", out)
-        .start()
-      q.awaitTermination()
-    }
-    // user 1: two sessions (10-min steps, then a 2h jump); user 2: one
-    val evs =
-      (0 until 4).map(i => (i.toLong, ts(i / 6.0), 1L, "view", 1.0)) ++
-        (10 until 13).map(i => (i.toLong, ts(3 + (i - 10) / 6.0), 1L, "view", 2.0)) ++
-        Seq((20L, ts(1.0), 2L, "view", 5.0), (21L, ts(1.2), 2L, "view", 5.0))
-    write("a", evs)
-    run()
-    // OUT-OF-ORDER but inside the watermark (wm after batch a = 2.33h in
-    // ts() args), arriving a batch LATER: one event strictly between
-    // user 1's sessions (a separate singleton — single-session state
-    // used to merge it into whatever was open), and one just before the
-    // open session's start (must extend it BACKWARD — start was never
-    // lowered before)
-    val late = Seq((30L, ts(2.4), 1L, "view", 3.0), (31L, ts(2.95), 1L, "view", 7.0))
-    write("a2", late)
-    run()
-    // sentinel phases: advance the watermark so every real session's
-    // event-time timeout fires and flushes it
-    write("b", Seq((900L, ts(100), 999L, "view", 0.0)))
-    run()
-    write("c", Seq((901L, ts(200), 999L, "view", 0.0)))
-    run()
-
-    val emitted = spark.read.parquet(out).where(col("user_id") =!= 999L)
-      .select("user_id", "start", "end", "n", "total")
-      .collect().map(_.toSeq).toSet
-    val oracle = graft.streaming.StreamAgg.sessionizeBatch(
-        (evs ++ late).toDF("event_id", "ts", "user_id", "event_type", "value"))
-      .select("user_id", "start", "end", "n", "total")
-      .collect().map(_.toSeq).toSet
-    assert(emitted == oracle, s"emitted $emitted != oracle $oracle")
-    // three sessions for user 1 (the late singleton stays separate, the
-    // backward-extender joins the last session), one for user 2
-    assert(emitted.size == 4)
   }
 
   test("native format -> streaming agg: readStream(geomedea) feeds a grouped aggregation") {
