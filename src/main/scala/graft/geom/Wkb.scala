@@ -202,7 +202,7 @@ object Wkb {
   }
 
   private def envScanCoords(buf: ByteBuffer, e0: Envelope): Envelope = {
-    val n = buf.getInt()
+    val n = count(buf, 16)
     var e = e0
     var i = 0
     while (i < n) {
@@ -215,7 +215,7 @@ object Wkb {
   }
 
   private def skipCoords(buf: ByteBuffer): Unit = {
-    val n = buf.getInt()
+    val n = count(buf, 16)
     buf.position(buf.position() + 16 * n)
   }
 
@@ -233,7 +233,7 @@ object Wkb {
         Envelope(lng, lat, lng, lat)
       case 2 => envScanCoords(buf, Envelope.empty)
       case 3 =>
-        val rings = buf.getInt()
+        val rings = count(buf, 4)
         if (rings == 0) Envelope.empty
         else {
           val e = envScanCoords(buf, Envelope.empty) // exterior ring only
@@ -242,7 +242,7 @@ object Wkb {
           e
         }
       case 4 | 5 | 6 | 7 =>
-        val n = buf.getInt()
+        val n = count(buf, if (raw == 4) 21 else 9)
         var e = Envelope.empty
         var i = 0
         while (i < n) { e = e.union(envScan(buf)); i += 1 }

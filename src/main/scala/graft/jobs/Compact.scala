@@ -79,12 +79,6 @@ object Compact {
     */
   val DefaultTargetShardBytes: Long = 64L << 20
 
-  /** Legacy (round 4) crashed-swap journal: names condemned by an
-    * already-committed compaction append, one per line. Superseded by
-    * the generation record but still honored on recovery.
-    */
-  val PendingFile = "_compact_pending.tsv"
-
   /** Staging subdirectory prefix — invisible to every planner and stream
     * (they list only direct FILES with the container suffix).
     */
@@ -122,12 +116,11 @@ object Compact {
       s"compact expects a shard DIRECTORY; $dir is a single file (the v2 writer " +
         "cannot overwrite a file path with a shard dir)")
     finishPendingSwap(fs, p)
-    val shards =
-      fs.listStatus(p).toSeq.filter(s => s.isFile && s.getPath.getName.endsWith(fmt.suffix))
+    val shards = fmt.shards(fs, p)
     if (shards.isEmpty) return 0
     rewriteSlices(spark, p, fs, shards, numShards, compressed, targetShardBytes,
       fmt, maxShardsPerCall)
-    fs.listStatus(p).count(s => s.isFile && s.getPath.getName.endsWith(fmt.suffix))
+    fmt.shards(fs, p).size
   }
 
   private def validateArgs(numShards: Int, targetShardBytes: Long,
@@ -177,19 +170,6 @@ object Compact {
     }
   }
 
-  /** Truncate-overwrite rewrites a lake OUTSIDE the maintenance
-    * protocol: drop every maintenance artifact — the generation log (a
-    * retained one would resurrect its recorded replacement names and
-    * permanently break streaming; the lake restarts at generation 0) and
-    * the legacy crashed-swap journal whose condemned rows no longer
-    * exist. Shared by both container writers' truncate paths.
-    */
-  def clearMaintenanceState(fs: FileSystem, dir: Path): Unit = {
-    LakeGenerations.clear(fs, dir)
-    val pending = new Path(dir, PendingFile)
-    if (fs.exists(pending)) fs.delete(pending, false)
-  }
-
   /** INCREMENTAL compaction: rewrite only the shards that erode pruning,
     * leaving already-clustered shards byte-untouched. Returns the number
     * of shards rewritten (0 = the lake is already clustered — the
@@ -228,8 +208,7 @@ object Compact {
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(p) || !fs.getFileStatus(p).isDirectory) return 0
     val log = finishPendingSwap(fs, p)
-    val shards =
-      fs.listStatus(p).toSeq.filter(s => s.isFile && s.getPath.getName.endsWith(fmt.suffix))
+    val shards = fmt.shards(fs, p)
     val manifest = GeomedeaManifest.read(fs, p).getOrElse(Map.empty)
     val picked = pickCandidates(shards, targetShardBytes, spreadFactor,
       manifest, log)
@@ -255,14 +234,12 @@ object Compact {
   def retire(spark: SparkSession, dir: String,
              condemn: FileStatus => Boolean,
              format: String = "geomedea"): Int = {
-    val suffix = formatNamed(format).suffix
+    val fmt = formatNamed(format)
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(p) || !fs.getFileStatus(p).isDirectory) return 0
     finishPendingSwap(fs, p)
-    val victims = fs.listStatus(p).toSeq
-      .filter(s => s.isFile && s.getPath.getName.endsWith(suffix))
-      .filter(condemn)
+    val victims = fmt.shards(fs, p).filter(condemn)
     if (victims.isEmpty) return 0
     val token = newToken("r")
     val names = victims.map(_.getPath.getName)
@@ -384,9 +361,7 @@ object Compact {
         catch { case scala.util.control.NonFatal(_) => () }
         throw t
     }
-    val replacements = fs.listStatus(stage).toSeq
-      .filter(s => s.isFile && s.getPath.getName.endsWith(fmt.suffix))
-      .map(_.getPath.getName)
+    val replacements = fmt.shards(fs, stage).map(_.getPath.getName)
     val condemned = shards.map(_.getPath.getName)
     // the record makes the swap durable + resumable; from here every
     // appearing replacement name is explained to tailing streams
@@ -437,8 +412,8 @@ object Compact {
   /** Finish an interrupted swap before planning: the LAST generation
     * record (swaps are serial; only the newest can be incomplete) with a
     * surviving stage dir or live condemned shards is re-completed, then
-    * any legacy round-4 journal, then orphan stage dirs from rewrites
-    * that failed before their record existed.
+    * orphan stage dirs from rewrites that failed before their record
+    * existed are dropped.
     */
   private def finishPendingSwap(fs: FileSystem, p: Path): Seq[LakeGenerations.Gen] = {
     // one log read serves the outstanding-swap check, the orphan sweep's
@@ -447,27 +422,9 @@ object Compact {
     // reads could race a concurrent publish into an inconsistent
     // newest-token decision within this one call
     val log = LakeGenerations.read(fs, p)
-    log.lastOption.foreach { g =>
-      val stage = new Path(p, s"$StagePrefix${g.token}")
-      val outstanding = fs.exists(stage) ||
-        g.condemned.exists(nm =>
-          !nm.contains('/') && !nm.contains('\\') && fs.exists(new Path(p, nm)))
-      if (outstanding) completeSwap(fs, p, g.token, g.condemned, g.replacements)
-    }
-    val pending = new Path(p, PendingFile)
-    if (fs.exists(pending)) {
-      val buf = new Array[Byte](fs.getFileStatus(pending).getLen.toInt)
-      val in = fs.open(pending)
-      try in.readFully(0, buf) finally in.close()
-      val names = new String(buf, java.nio.charset.StandardCharsets.UTF_8)
-        .split('\n').toSeq.filter(_.nonEmpty)
-        .filter(nm => !nm.contains('/') && !nm.contains('\\'))
-      names.foreach(nm => fs.delete(new Path(p, nm), false))
-      try GeomedeaManifest.read(fs, p).foreach { m =>
-        GeomedeaManifest.write(fs, p,
-          m.values.toSeq.filterNot(e => names.contains(e.name)), "compact")
-      } catch { case scala.util.control.NonFatal(_) => () }
-      fs.delete(pending, false)
+    if (hasPendingSwap(fs, p, log)) {
+      val g = log.last
+      completeSwap(fs, p, g.token, g.condemned, g.replacements)
     }
     // orphan stages: a rewrite that died before its generation record is
     // invisible residue; compaction is single-maintainer by contract, so
@@ -491,12 +448,10 @@ object Compact {
     * avoids a redundant object-store GET per describe).
     */
   def hasPendingSwap(fs: FileSystem, p: Path,
-                     log: Seq[LakeGenerations.Gen]): Boolean = {
-    val rec = log.lastOption.exists { g =>
+                     log: Seq[LakeGenerations.Gen]): Boolean =
+    log.lastOption.exists { g =>
       fs.exists(new Path(p, s"$StagePrefix${g.token}")) ||
         g.condemned.exists(nm =>
           !nm.contains('/') && !nm.contains('\\') && fs.exists(new Path(p, nm)))
     }
-    rec || fs.exists(new Path(p, PendingFile))
-  }
 }

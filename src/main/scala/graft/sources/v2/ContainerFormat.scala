@@ -11,10 +11,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** What differs between the two single-file containers the DSv2 stack
   * serves ([[ContainerTable]], its scan, stream and writer). Everything
-  * else — file planning over manifests and headers, limit planning,
-  * header-only aggregates, index-only window counts, statistics, the
-  * commit/abort/manifest protocol, stream pruning — is written once
-  * against this descriptor.
+  * else — file planning over manifests and headers (one step for scans
+  * and streams), limit planning, header-only aggregates, index-only
+  * window counts, statistics, the commit/abort/manifest protocol — is
+  * written once against this descriptor.
   */
 sealed abstract class ContainerFormat(val name: String, val suffix: String,
                                       location: StructField*) extends Serializable {
@@ -99,11 +99,36 @@ sealed abstract class ContainerFormat(val name: String, val suffix: String,
   def mayIntersect(e: GeomedeaManifest.Entry, q: Envelope): Boolean =
     e.extent.fold(!countKnown(e.count))(_.intersects(q))
 
+  /** The container files directly inside `dir`, in listing order. */
+  private[graft] def shards(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    fs.listStatus(dir).toSeq.filter(s => s.isFile && s.getPath.getName.endsWith(suffix))
+
   /** The plannable files of `paths` (each a container file or a directory
-    * of them). A directory written by the v2 writer carries a
-    * [[GeomedeaManifest]] — extents/counts for the whole lake in ONE
-    * driver read (validated against the listing: exact file-name coverage
-    * with matching byte lengths, else ignored), so a 100k-shard lake plans
+    * of them): [[planFiles]] over each directory's whole listing.
+    */
+  def scanFiles(paths: Seq[String], bbox: Option[Envelope]): Seq[ContainerTable.ScanFile] = {
+    val conf = org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()
+    planFiles(paths.map { path =>
+      val p = new Path(path)
+      val fs = p.getFileSystem(conf)
+      val st = fs.getFileStatus(p)
+      if (!st.isDirectory) ContainerFormat.Listing(fs, None, Seq(st), Seq(st))
+      else {
+        val files = shards(fs, p)
+        ContainerFormat.Listing(fs, Some(p), files, files)
+      }
+    }, bbox)
+  }
+
+  /** [[scanFiles]] of one `load(path)`. */
+  def scanFiles(path: String, bbox: Option[Envelope]): Seq[ContainerTable.ScanFile] =
+    scanFiles(Seq(path), bbox)
+
+  /** The one file-planning step of batch scans and streams: the `plan`
+    * subset of each listing. A directory written by the v2 writer carries
+    * a [[GeomedeaManifest]] — extents/counts for the whole lake in ONE
+    * driver read, trusted only when [[GeomedeaManifest.validated]] accepts
+    * it against the directory's whole listing — so a 100k-shard lake plans
     * without 100k header round trips on every query. Every other file (a
     * listed file, or a directory without a valid manifest) has its header
     * read, all of them fanned out on one bounded pool — serial
@@ -112,20 +137,12 @@ sealed abstract class ContainerFormat(val name: String, val suffix: String,
     * cannot intersect it are dropped ([[mayIntersect]]). Sorted by path
     * for deterministic planning.
     */
-  def scanFiles(paths: Seq[String], bbox: Option[Envelope]): Seq[ContainerTable.ScanFile] = {
-    val conf = org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()
-    val (described, unread) = paths.partitionMap { path =>
-      val p = new Path(path)
-      val fs = p.getFileSystem(conf)
-      val st = fs.getFileStatus(p)
-      if (!st.isDirectory) Right(Seq(fs -> st))
-      else {
-        val files =
-          fs.listStatus(p).toSeq.filter(s => s.isFile && s.getPath.getName.endsWith(suffix))
-        GeomedeaManifest.validated(fs, p, files) match {
-          case Some(m) => Left(files.map(f => f -> m(f.getPath.getName)))
-          case None    => Right(files.map(fs -> _)) // absent or stale: header reads
-        }
+  private[v2] def planFiles(listings: Seq[ContainerFormat.Listing],
+                            bbox: Option[Envelope]): Seq[ContainerTable.ScanFile] = {
+    val (described, unread) = listings.partitionMap { l =>
+      l.dir.flatMap(GeomedeaManifest.validated(l.fs, _, l.files)) match {
+        case Some(m) => Left(l.plan.map(f => f -> m(f.getPath.getName)))
+        case None    => Right(l.plan.map(l.fs -> _)) // absent or stale: header reads
       }
     }
     val headed = PlannerPool.mapFiles(unread.flatten) { case (fs, s) => s -> headerEntry(fs, s) }
@@ -134,10 +151,6 @@ sealed abstract class ContainerFormat(val name: String, val suffix: String,
         ContainerTable.ScanFile(s.getPath.toString, s.getLen, e.count, e.validSplits, e.extent)
     }.sortBy(_.path)
   }
-
-  /** [[scanFiles]] of one `load(path)`. */
-  def scanFiles(path: String, bbox: Option[Envelope]): Seq[ContainerTable.ScanFile] =
-    scanFiles(Seq(path), bbox)
 }
 
 object ContainerFormat {
@@ -145,6 +158,13 @@ object ContainerFormat {
   val all: Seq[ContainerFormat] = Seq(Geomedea, FlatGeobuf)
 
   def named(name: String): Option[ContainerFormat] = all.find(_.name == name)
+
+  /** What one planning call lists: `files`, the container files of `dir`
+    * (None for a path naming one file, which only its header describes),
+    * and the subset `plan` of them to plan.
+    */
+  private[v2] final case class Listing(fs: FileSystem, dir: Option[Path],
+                                       files: Seq[FileStatus], plan: Seq[FileStatus])
 
   /** One partition's open read: located features, the live (pages, bytes)
     * decode counters, and the stream to close.

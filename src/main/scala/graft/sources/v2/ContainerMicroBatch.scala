@@ -25,10 +25,12 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, 
   * only mixed into replacement shards), as does any rewrite outside the
   * generation protocol — never silent re-emission or loss.
   *
-  * Scale shape: one input partition per new shard, decoded by the SAME
-  * streaming reader as the batch path (O(page) memory, no file-size
-  * ceiling). In-flight `_tmp_` names are invisible by construction
-  * (suffix filter), so a batch never observes a half-written shard.
+  * Scale shape: a micro-batch's new shards are planned and partitioned
+  * exactly as a batch scan of them would be ([[ContainerFormat.planFiles]],
+  * [[ContainerScan.partitions]]) and decoded by the SAME streaming reader
+  * (O(page) memory, no file-size ceiling). In-flight `_tmp_` names are
+  * invisible by construction (suffix filter), so a batch never observes a
+  * half-written shard.
   */
 class ContainerMicroBatchStream(format: ContainerFormat, path: String,
                                 bbox: Option[graft.geom.Envelope],
@@ -41,14 +43,17 @@ class ContainerMicroBatchStream(format: ContainerFormat, path: String,
 
   private def fs: FileSystem = new Path(path).getFileSystem(conf)
 
-  private def listStatuses(): Seq[FileStatus] = {
+  /** The lake directory (None when `path` names one file) and its
+    * container files.
+    */
+  private def listShards(): (Option[Path], Seq[FileStatus]) = {
     val p = new Path(path)
     val f = fs
-    if (!f.exists(p)) Seq.empty
-    else if (f.getFileStatus(p).isFile) Seq(f.getFileStatus(p))
-    else f.listStatus(p).toSeq
-      .filter(s => s.isFile && s.getPath.getName.endsWith(format.suffix))
-      .sortBy(_.getPath.toString)
+    if (!f.exists(p)) (None, Seq.empty)
+    else {
+      val st = f.getFileStatus(p)
+      if (st.isFile) (None, Seq(st)) else (Some(p), format.shards(f, p))
+    }
   }
 
   private var availableNowTarget: Option[GeomedeaOffset] = None
@@ -58,7 +63,7 @@ class ContainerMicroBatchStream(format: ContainerFormat, path: String,
 
   private def snapshot(): GeomedeaOffset =
     GeomedeaOffset.snapshot(fs, new Path(path),
-      () => listStatuses().map(_.getPath.toString))
+      () => listShards()._2.map(_.getPath.toString))
 
   override def latestOffset(): Offset = availableNowTarget.getOrElse(snapshot())
 
@@ -77,59 +82,28 @@ class ContainerMicroBatchStream(format: ContainerFormat, path: String,
 
   override def deserializeOffset(json: String): Offset = GeomedeaOffset.fromJson(json)
 
+  /** The batch's fresh shards, planned by the batch scan's own step
+    * ([[ContainerFormat.planFiles]]) against the listing [[GeomedeaOffset.
+    * resolveFresh]] checked: the manifest serves only while it matches
+    * that whole listing, else the fresh shards' headers are read. With a
+    * bbox (the `bbox` READ OPTION — Spark's MicroBatchExecution builds
+    * this scan straight from newScanBuilder and never calls pushFilters,
+    * so the option is the streaming push channel), shards that cannot
+    * intersect the rect are skipped ENTIRELY; the offset still advances
+    * past them (offsets track names, not survivors), which is why an
+    * unvalidated manifest entry must never prune. Filters stay residual,
+    * so pruning is a superset and Spark re-applies them.
+    */
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val statuses = listStatuses()
-    val dir = new Path(path)
+    val (lakeDir, statuses) = listShards()
     val f = fs
-    val fresh = GeomedeaOffset.resolveFresh(path, f, dir,
+    val fresh = GeomedeaOffset.resolveFresh(path, f, new Path(path),
       statuses.map(_.getPath.toString),
       start.asInstanceOf[GeomedeaOffset], end.asInstanceOf[GeomedeaOffset])
-    // manifest entries are used only when their recorded byte length
-    // matches the live file: a compaction or out-of-protocol rewrite
-    // invalidates by length. One read serves the whole batch.
-    val lenByName = statuses.map(s => s.getPath.getName -> s.getLen).toMap
-    val statusOf = statuses.map(s => s.getPath.toString -> s).toMap
-    val manifest = GeomedeaManifest.read(f, dir).getOrElse(Map.empty)
-      .filter { case (n, e) => lenByName.get(n).contains(e.len) }
-    bbox match {
-      case None =>
-        // full-scan partitions split at the manifest's sampled boundaries
-        // under the SAME rules as the batch planner: shape-validated
-        // ([[GeomedeaManifest.Entry.validSplits]]), and the readers
-        // re-derive the data-section base from the authoritative header,
-        // so a stale list that survives both checks still fails LOUDLY
-        // instead of shifting location ids. A backlogged stream that
-        // receives one huge compacted shard decodes it as several tasks.
-        fresh.flatMap { x =>
-          manifest.get(new Path(x).getName) match {
-            case Some(e) => ContainerTable.splitPartitions(x, e.len, e.validSplits)
-            case _       => Seq(GeomedeaPartition(x, statusOf(x).getLen))
-          }
-        }.map(p => p: InputPartition).toArray
-      case Some(q) =>
-        // same planning-time file pruning as the batch scan: with a bbox
-        // (the `bbox` READ OPTION — Spark's MicroBatchExecution builds this
-        // scan straight from newScanBuilder and never calls pushFilters,
-        // so the option is the streaming push channel), new shards that
-        // cannot intersect the rect ([[ContainerFormat.mayIntersect]]) are
-        // skipped ENTIRELY (the offset still advances past them — offsets
-        // track names, not survivors, so pruned shards never replan; a
-        // stale same-named manifest entry could therefore lose a fresh
-        // shard silently and permanently, hence the length check). Shards
-        // the manifest does not describe have their headers read on a
-        // POOLED fan-out — a large backlog must not serialize planning on
-        // one object-store round trip per shard. Filters stay residual, so
-        // pruning is a superset and Spark re-applies them. Partitions stay
-        // whole-file: the indexed reader scans per file, and a split copy
-        // of it would re-emit hits.
-        val (known, unknown) = fresh.partition(x => manifest.contains(new Path(x).getName))
-        val keptKnown = known.filter(x => format.mayIntersect(manifest(new Path(x).getName), q))
-        val keptUnknown = PlannerPool.mapFiles(unknown) { x =>
-          if (format.mayIntersect(format.headerEntry(f, statusOf(x)), q)) Some(x)
-          else None
-        }.flatten
-        (keptKnown ++ keptUnknown).sorted.map(x => GeomedeaPartition(x, statusOf(x).getLen): InputPartition).toArray
-    }
+      .map(new Path(_).getName).toSet
+    val files = format.planFiles(Seq(ContainerFormat.Listing(f, lakeDir, statuses,
+      statuses.filter(s => fresh(s.getPath.getName)))), bbox)
+    ContainerScan.partitions(format, files, bbox, limit = None)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -141,19 +115,20 @@ class ContainerMicroBatchStream(format: ContainerFormat, path: String,
 }
 
 /** Offset = `(generation, shard names already emitted within it)`,
-  * JSON-encoded with the name set as a sorted array (deterministic
-  * equality across restarts). Legacy round-4 offsets (a bare array) parse
-  * as generation 0.
+  * JSON-encoded as `{"gen":N,"files":[...]}` with the name set sorted
+  * (deterministic equality across restarts).
   */
 final case class GeomedeaOffset(gen: Long, files: Seq[String]) extends Offset {
-  override def json(): String =
-    files.sorted.map(GeomedeaOffset.quote)
-      .mkString(s"""{"gen":$gen,"files":[""", ",", "]}")
+  override def json(): String = {
+    val node = GeomedeaOffset.Json.createObjectNode()
+    node.put("gen", gen)
+    val names = node.putArray("files")
+    files.sorted.foreach(n => names.add(n))
+    GeomedeaOffset.Json.writeValueAsString(node)
+  }
 }
 
 object GeomedeaOffset {
-
-  def apply(files: Seq[String]): GeomedeaOffset = GeomedeaOffset(0L, files)
 
   private def nameOf(f: String): String = new Path(f).getName
 
@@ -308,67 +283,25 @@ object GeomedeaOffset {
     end.files.filter(f => freshNames(nameOf(f)))
   }
 
-  private[v2] def quote(s: String): String =
-    "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c    => c.toString
-    } + "\""
-
+  /** A checkpointed offset; anything but a non-negative integral `gen`
+    * and a `files` array of strings is an IllegalArgumentException.
+    */
   def fromJson(json: String): GeomedeaOffset = {
-    val t = json.trim
-    // legacy (round 4) offsets were the bare name array — generation 0
-    if (t.startsWith("[")) return GeomedeaOffset(0L, parseStringArray(t))
-    require(t.startsWith("{") && t.endsWith("}"), s"bad geomedea offset: $json")
-    // our own json() writes "gen" first, so the first match is the key
-    val gen = """"gen"\s*:\s*(\d+)""".r.findFirstMatchIn(t)
-      .getOrElse(throw new IllegalArgumentException(s"bad geomedea offset (no gen): $json"))
-      .group(1).toLong
-    val fi = t.indexOf("\"files\"")
-    require(fi >= 0, s"bad geomedea offset (no files): $json")
-    val open = t.indexOf('[', fi)
-    require(open >= 0, s"bad geomedea offset (no files array): $json")
-    // string-aware close-bracket scan: names may legally contain ']'
-    var i = open
-    var inStr = false
-    var close = -1
-    while (i < t.length && close < 0) {
-      val c = t.charAt(i)
-      if (inStr) { if (c == '\\') i += 1 else if (c == '"') inStr = false }
-      else if (c == '"') inStr = true
-      else if (c == ']') close = i
-      i += 1
-    }
-    require(close > open, s"bad geomedea offset (unterminated files): $json")
-    GeomedeaOffset(gen, parseStringArray(t.substring(open, close + 1)))
+    def bad(why: String, cause: Throwable = null) =
+      new IllegalArgumentException(s"bad geomedea offset ($why): $json", cause)
+    val node =
+      try Json.readTree(json)
+      catch { case e: com.fasterxml.jackson.core.JacksonException => throw bad("not JSON", e) }
+    if (node == null || !node.isObject) throw bad("not an object")
+    val gen = node.get("gen")
+    if (gen == null || !gen.isIntegralNumber || !gen.canConvertToLong || gen.asLong < 0)
+      throw bad("no non-negative integral gen")
+    val files = node.get("files")
+    if (files == null || !files.isArray) throw bad("no files array")
+    val names = (0 until files.size).map(files.get)
+    if (!names.forall(_.isTextual)) throw bad("non-string file name")
+    GeomedeaOffset(gen.asLong, names.map(_.asText))
   }
 
-  /** Inverse of the sorted-quoted-array encoding only. */
-  private def parseStringArray(t: String): Seq[String] = {
-    val body = t.substring(1, t.length - 1)
-    if (body.trim.isEmpty) return Seq.empty
-    val out = Seq.newBuilder[String]
-    val sb = new StringBuilder
-    var i = 0
-    var inStr = false
-    while (i < body.length) {
-      val c = body.charAt(i)
-      if (!inStr) {
-        if (c == '"') inStr = true
-        // commas/whitespace between strings ignored
-      } else c match {
-        case '"' => inStr = false; out += sb.result(); sb.clear()
-        case '\\' =>
-          i += 1
-          body.charAt(i) match {
-            case 'u' => sb += Integer.parseInt(body.substring(i + 1, i + 5), 16).toChar; i += 4
-            case e   => sb += e
-          }
-        case other => sb += other
-      }
-      i += 1
-    }
-    out.result()
-  }
+  private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
 }

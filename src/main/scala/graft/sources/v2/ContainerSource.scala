@@ -407,28 +407,8 @@ class ContainerScan(format: ContainerFormat, paths: Seq[String], bbox: Option[En
 
   private def countsKnown: Boolean = keptFiles.forall(f => format.countKnown(f.count))
 
-  /** With a pushed limit and no bbox (no residual filtering possible —
-    * filters block limit pushdown upstream), only enough files to cover
-    * the limit are planned: header counts accumulate until >= n, when
-    * every count is known — an unknown one could hide any number of rows,
-    * and the reader-side per-partition stop carries the bound. A plain
-    * full scan (no bbox, no limit) additionally SPLITS each shard at the
-    * manifest's writer-sampled boundaries, so one oversized shard decodes
-    * as several tasks instead of one serial read — parallelism is no
-    * longer capped at the shard count.
-    */
-  override def planInputPartitions(): Array[InputPartition] = {
-    (bbox, limit) match {
-      case (None, Some(n)) if countsKnown =>
-        var cum = 0L
-        keptFiles.takeWhile { f => val need = cum < n; cum += f.count; need }
-          .map(f => GeomedeaPartition(f.path, f.len): InputPartition).toArray
-      case (None, None) =>
-        keptFiles.flatMap(f => ContainerTable.splitPartitions(f.path, f.len, f.splits))
-          .map(p => p: InputPartition).toArray
-      case _ => keptFiles.map(f => GeomedeaPartition(f.path, f.len): InputPartition).toArray
-    }
-  }
+  override def planInputPartitions(): Array[InputPartition] =
+    ContainerScan.partitions(format, keptFiles, bbox, limit)
 
   /** True statistics from the headers — Catalyst's join-side sizing (e.g.
     * auto-broadcast of a small container table) sees real numbers, not a
@@ -450,14 +430,43 @@ class ContainerScan(format: ContainerFormat, paths: Seq[String], bbox: Option[En
       ContainerTable.shipConf(SparkSession.active.sessionState.newHadoopConf()))
 
   /** Streaming read (`spark.readStream.format(...)`): tail the shard
-    * directory, one micro-batch partition per NEW shard, with the same
-    * pushed-bbox file pruning and column pruning as the batch scan.
+    * directory, planning each micro-batch's NEW shards through the same
+    * file planner and partition builder as the batch scan.
     */
   override def toMicroBatchStream(checkpointLocation: String)
   : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new ContainerMicroBatchStream(format,
       ContainerTable.onePath(paths, s"a ${format.name} stream"), bbox, required,
       checkpointLocation)
+}
+
+object ContainerScan {
+
+  /** Input partitions over planned files, for a batch scan and a
+    * micro-batch alike (a stream passes no limit). With a pushed limit and
+    * no bbox (no residual filtering possible — filters block limit
+    * pushdown upstream), only enough files to cover the limit are
+    * planned: header counts accumulate until >= n, when every count is
+    * known — an unknown one could hide any number of rows, and the
+    * reader-side per-partition stop carries the bound. A plain full scan
+    * (no bbox, no limit) additionally SPLITS each shard at the manifest's
+    * writer-sampled boundaries, so one oversized shard decodes as several
+    * tasks instead of one serial read. With a bbox, partitions stay
+    * whole-file: the indexed reader scans per file, and a split copy of
+    * it would re-emit hits.
+    */
+  private[v2] def partitions(format: ContainerFormat, files: Seq[ContainerTable.ScanFile],
+                             bbox: Option[Envelope], limit: Option[Int]): Array[InputPartition] =
+    (bbox, limit) match {
+      case (None, Some(n)) if files.forall(f => format.countKnown(f.count)) =>
+        var cum = 0L
+        files.takeWhile { f => val need = cum < n; cum += f.count; need }
+          .map(f => GeomedeaPartition(f.path, f.len): InputPartition).toArray
+      case (None, None) =>
+        files.flatMap(f => ContainerTable.splitPartitions(f.path, f.len, f.splits))
+          .map(p => p: InputPartition).toArray
+      case _ => files.map(f => GeomedeaPartition(f.path, f.len): InputPartition).toArray
+    }
 }
 
 /** Sum-aggregated scan metrics. Concrete 0-arg classes, NOT a

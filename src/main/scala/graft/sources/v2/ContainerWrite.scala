@@ -75,7 +75,7 @@ class ContainerBatchWrite(format: ContainerFormat, path: String, schema: StructT
     if (truncate && fs.exists(dir)) {
       fs.listStatus(dir).filter(_.getPath.getName.endsWith(format.suffix))
         .foreach(s => fs.delete(s.getPath, false))
-      graft.jobs.Compact.clearMaintenanceState(fs, dir)
+      LakeGenerations.clear(fs, dir)
     }
     val fresh = messages.collect {
       case c: ContainerCommit =>
@@ -92,8 +92,7 @@ class ContainerBatchWrite(format: ContainerFormat, path: String, schema: StructT
     // GeomedeaManifest.refresh's contract: a corrupt foreign file in
     // the dir degrades planning to header reads, never fails a commit
     // whose data is already published.
-    GeomedeaManifest.refresh(fs, dir, format.suffix, fresh.toSeq, jobToken)(
-      format.headerEntry(fs, _))
+    GeomedeaManifest.refresh(fs, dir, format, fresh.toSeq, jobToken)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {

@@ -11,7 +11,7 @@ import java.nio.charset.StandardCharsets
   * query from one small file instead of 100k tiny range reads.
   *
   * Consistency model: advisory cache, never trusted blindly. The
-  * planner ([[ContainerFormat.scanFiles]]) validates that the manifest
+  * planner ([[ContainerFormat.planFiles]]) validates that the manifest
   * covers EXACTLY the listed `.geomedea` files with matching byte
   * lengths and silently falls back to header reads otherwise — so
   * hand-copied files, partial manifests, or a crash between delete and
@@ -63,9 +63,10 @@ object GeomedeaManifest {
       splits)
 
   /** The manifest iff it covers EXACTLY `files` (every listed shard by
-    * name with a matching byte length, no extras) — the validation both
-    * DSv2 planners apply before trusting it; anything else means fall
-    * back to per-file header reads.
+    * name with a matching byte length, no extras) — the one rule for
+    * trusting it, applied by the planning step batch scans and streams
+    * share ([[ContainerFormat.planFiles]]) and by LakeHealth; anything
+    * else means fall back to per-file header reads.
     */
   def validated(fs: FileSystem, dir: Path,
                 files: Seq[org.apache.hadoop.fs.FileStatus]): Option[Map[String, Entry]] =
@@ -81,28 +82,26 @@ object GeomedeaManifest {
       files.forall(f => m.get(f.getPath.getName).exists(_.len == f.getLen)))
 
   /** Commit-side refresh shared by both container writers: entries for
-    * every live `suffix` shard — fresh ones from the job's commit
+    * every live `format` shard — fresh ones from the job's commit
     * messages, pre-existing ones carried from the old manifest when the
-    * byte length still matches, else re-read via `selfHeal`. BEST
+    * byte length still matches, else re-read from their headers. BEST
     * EFFORT by contract: any failure (a corrupt foreign file failing
     * the self-heal read, a publish race) leaves the old/no manifest in
     * place and returns — the data is already published by the time this
     * runs, and a job commit must never fail over an advisory cache;
     * planning degrades to header reads until the next refresh.
     */
-  def refresh(fs: FileSystem, dir: Path, suffix: String, fresh: Seq[Entry], token: String)
-             (selfHeal: org.apache.hadoop.fs.FileStatus => Entry): Unit =
+  def refresh(fs: FileSystem, dir: Path, format: ContainerFormat, fresh: Seq[Entry],
+              token: String): Unit =
     try {
       val old = read(fs, dir).getOrElse(Map.empty[String, Entry])
       val freshByName = fresh.map(e => e.name -> e).toMap
-      val entries = fs.listStatus(dir).toSeq
-        .filter(s => s.isFile && s.getPath.getName.endsWith(suffix))
-        .map { s =>
-          val name = s.getPath.getName
-          freshByName.get(name)
-            .orElse(old.get(name).filter(_.len == s.getLen))
-            .getOrElse(selfHeal(s))
-        }
+      val entries = format.shards(fs, dir).map { s =>
+        val name = s.getPath.getName
+        freshByName.get(name)
+          .orElse(old.get(name).filter(_.len == s.getLen))
+          .getOrElse(format.headerEntry(fs, s))
+      }
       write(fs, dir, entries, token)
     } catch { case scala.util.control.NonFatal(_) => () }
 

@@ -3,7 +3,7 @@ package graft.sources.v2
 import org.apache.hadoop.fs.{FileSystem, Path}
 import java.nio.charset.StandardCharsets
 
-/** Generation log for a container-shard lake (`_generations.tsv`) — the
+/** Generation log for a container-shard lake (`_generations.v<N>.tsv`) — the
   * piece that lets a tailing stream RESUME across compaction instead of
   * demanding a fresh checkpoint (the one place round 4's engine said
   * "restart your pipeline" where a production lake format would not).
@@ -33,19 +33,19 @@ import java.nio.charset.StandardCharsets
   * Durability: each publish EXCLUSIVELY CREATES a FRESH versioned name
   * (`_generations.v<gen>.tsv`, `create(overwrite = false)` — the atomic
   * claim; an exists+rename pair would both race and silently overwrite
-  * on the local FS) carrying a `v1` record-count header. Readers try
-  * versions newest-first and skip a torn file (count mismatch / parse
-  * failure), falling back to the previous version — which is deleted
-  * only after the new one is fully written — so no crash point loses
-  * the log and no reader window sees an absent one (the advisory
-  * manifest can afford such windows; this file is correctness-bearing
-  * for resume-across-compaction). Racing publishers of the same
-  * generation fail the create loudly — records are never silently
-  * dropped (a TORN claimant is reclaimed only once it is older than
-  * [[TornReclaimGraceMs]], i.e. provably a crashed publisher's residue
-  * and not a live writer's in-flight file). If the log is missing or
-  * unparseable, streams degrade to
-  * round 4's loud rewrite error (never to silent re-emission or loss).
+  * on the local FS) whose first line is a `v1` record-count header.
+  * Readers try versions newest-first and skip a torn file (count
+  * mismatch / parse failure), falling back to the previous version —
+  * which is deleted only after the new one is fully written — so no
+  * crash point loses the log and no reader window sees an absent one
+  * (the advisory manifest can afford such windows; this file is
+  * correctness-bearing for resume-across-compaction). Racing publishers
+  * of the same generation fail the create loudly — records are never
+  * silently dropped (a TORN claimant is reclaimed only once it is older
+  * than [[TornReclaimGraceMs]], i.e. provably a crashed publisher's
+  * residue and not a live writer's in-flight file). If the log is
+  * missing or unparseable, streams degrade to the loud rewrite error
+  * (never to silent re-emission or loss).
   * Records are capped at [[MaxGenerations]] — a checkpoint older than
   * the horizon fails loudly with the missing-generation error.
   *
@@ -74,11 +74,6 @@ private[graft] object ShardToken {
 }
 
 object LakeGenerations {
-
-  /** Legacy single-file name (pre-versioned lakes); still read when no
-    * versioned log exists, deleted best-effort on the next publish.
-    */
-  val FileName = "_generations.tsv"
 
   /** Oldest records kept; resuming from before the horizon fails loudly. */
   val MaxGenerations = 1024
@@ -120,16 +115,14 @@ object LakeGenerations {
     * previous version, so no crash point loses the whole log.
     */
   def read(fs: FileSystem, dir: Path): Seq[Gen] = {
-    val candidates = versions(fs, dir).reverse :+ new Path(dir, FileName)
-    candidates.iterator.map(readOne(fs, _)).collectFirst { case Some(g) => g }
+    versions(fs, dir).reverseIterator.map(readOne(fs, _)).collectFirst { case Some(g) => g }
       .getOrElse(Seq.empty)
   }
 
   /** One file's records, or None when absent/torn/unparseable. The `v1`
-    * count header (versioned files) makes a partially-written file —
-    * even one torn at a line boundary, which would parse as a silently
-    * TRUNCATED history — detectably incomplete. Round-4 legacy files
-    * have no header and parse best-effort.
+    * count header makes a partially-written file — even one torn at a
+    * line boundary, which would parse as a silently TRUNCATED history —
+    * detectably incomplete; a file without it is unparseable.
     */
   private def readOne(fs: FileSystem, f: Path): Option[Seq[Gen]] = {
     try {
@@ -139,11 +132,9 @@ object LakeGenerations {
       try in.readFully(0, buf) finally in.close()
       val lines = new String(buf, StandardCharsets.UTF_8)
         .split('\n').toVector.filter(_.nonEmpty)
-      val (expect, body) =
-        if (lines.headOption.exists(_.startsWith("v1\t")))
-          (Some(lines.head.split('\t')(1).toInt), lines.tail)
-        else (None, lines)
-      if (expect.exists(_ != body.size)) return None // torn write
+      if (!lines.headOption.exists(_.startsWith("v1\t"))) return None
+      val body = lines.tail
+      if (lines.head.split('\t')(1).toInt != body.size) return None // torn write
       val gens = body.map { line =>
         val p = line.split('\t')
         require(p.length >= 4, s"bad generation line: $line")
@@ -169,8 +160,7 @@ object LakeGenerations {
     */
   def clear(fs: FileSystem, dir: Path): Unit = {
     if (!fs.exists(dir)) return
-    // every variant: versioned logs, the legacy unversioned file, and any
-    // torn/orphaned _generations.* residue
+    // every version, torn/orphaned _generations.* residue included
     fs.listStatus(dir)
       .filter(s => s.isFile && s.getPath.getName.startsWith("_generations"))
       .foreach(s => fs.delete(s.getPath, false))
@@ -247,13 +237,10 @@ object LakeGenerations {
     try out.write((s"v1\t${all.size}\n" + all.map(_.line).mkString("", "\n", "\n"))
       .getBytes(StandardCharsets.UTF_8))
     finally out.close()
-    // superseded versions + the legacy unversioned file go away
-    // best-effort — a failed delete only costs a stale extra file that
-    // every reader already ignores in favor of the highest version
-    try {
-      versions(fs, dir).filter(_.getName < fin.getName).foreach(fs.delete(_, false))
-      val legacy = new Path(dir, FileName)
-      if (fs.exists(legacy)) fs.delete(legacy, false)
-    } catch { case scala.util.control.NonFatal(_) => () }
+    // superseded versions go away best-effort — a failed delete only
+    // costs a stale extra file that every reader already ignores in
+    // favor of the highest version
+    try versions(fs, dir).filter(_.getName < fin.getName).foreach(fs.delete(_, false))
+    catch { case scala.util.control.NonFatal(_) => () }
   }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
 
 /** One lake-health view over the engine's three on-disk layouts —
   * parquet tables with `_lineage/v=N` snapshots, `.geomedea` shard lakes
-  * and `.fgb` shard lakes with `_manifest.tsv` + `_generations.tsv` —
+  * and `.fgb` shard lakes with `_manifest.tsv` + `_generations.v<N>.tsv` —
   * so an operator (and the Info CLI) reads the same fields regardless of
   * layout:
   *
@@ -66,8 +66,7 @@ object LakeHealth {
       throw new IllegalArgumentException(s"no container format has the suffix $suffix"))
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val files = fs.listStatus(p).toSeq
-      .filter(s => s.isFile && s.getPath.getName.endsWith(suffix))
+    val files = format.shards(fs, p)
     // ONE manifest GET and ONE log GET serve every field below (an
     // object-store describe should not fan out metadata reads)
     val raw = GeomedeaManifest.read(fs, p)

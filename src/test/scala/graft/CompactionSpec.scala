@@ -126,9 +126,9 @@ class CompactionSpec extends AnyFunSuite {
     val manifest = GeomedeaManifest.read(fs, p)
     assert(manifest.isDefined && manifest.get.size == 6)
     // old append-* shards are gone (targeted planned-set delete), and
-    // the swap journal was cleaned up
+    // no stage directory is left
     assert(fs.listStatus(p).forall(s => !s.getPath.getName.startsWith("append-")))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(p, Compact.PendingFile)))
+    assert(fs.listStatus(p).forall(s => !s.getPath.getName.startsWith(Compact.StagePrefix)))
   }
 
   test("Info.renderLake reports shard totals, manifest health, pending swap") {
@@ -140,12 +140,15 @@ class CompactionSpec extends AnyFunSuite {
     val r2 = graft.table.Info.renderLake(spark, dir, ".geomedea")
     assert(r2.contains("shards: 2") && r2.contains("valid") && r2.contains("features: 60"))
     assert(r2.contains("pending_compaction_swap: no"))
-    // a pending journal is surfaced
+    // an interrupted swap — the newest record's stage directory still
+    // present — is surfaced
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.create(new org.apache.hadoop.fs.Path(p, Compact.PendingFile), true).close()
+    val token = graft.sources.v2.LakeGenerations.read(fs, p).last.token
+    val stage = new org.apache.hadoop.fs.Path(p, s"${Compact.StagePrefix}$token")
+    fs.mkdirs(stage)
     assert(graft.table.Info.renderLake(spark, dir, ".geomedea").contains("YES"))
-    fs.delete(new org.apache.hadoop.fs.Path(p, Compact.PendingFile), false)
+    fs.delete(stage, true)
   }
 
   test("LakeHealth: one consistent view over parquet, geomedea and fgb layouts") {
@@ -175,23 +178,6 @@ class CompactionSpec extends AnyFunSuite {
     Seq("lake:", "shards:", "manifest:", "generation:", "pending_compaction_swap:")
       .foreach(k => assert(block.contains(k), s"missing $k in:\n$block"))
     assert(graft.table.Info.render(spark, out).contains("generation: 1"))
-  }
-
-  test("crashed swap: a pending journal is completed before the next compaction plans") {
-    val dir = overlappingLake(3)
-    // simulate a compact that crashed after its append commit: the
-    // journal condemns append-00 but the delete never ran
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(new org.apache.hadoop.fs.Path(p, Compact.PendingFile), true)
-    out.write("append-00.geomedea\n".getBytes("UTF-8")); out.close()
-    Compact.compact(spark, dir, numShards = 2)
-    // recovery deleted the condemned shard BEFORE planning: its rows are
-    // not in the compacted lake; the other two appends' rows all are
-    val after = idsAt(dir)
-    assert(after.map(_._1) == (100 until 120).map(_.toLong).toSet ++
-      (200 until 220).map(_.toLong).toSet, s"got ${after.map(_._1).toSeq.sorted}")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(p, Compact.PendingFile)))
   }
 
   test("flatgeobuf lakes compact through the same job") {
@@ -307,7 +293,7 @@ class CompactionSpec extends AnyFunSuite {
     assert(idsAt(dir) == rows)
   }
 
-  test("generation log is versioned: one file per publish, legacy logs still read") {
+  test("generation log is versioned: one file per publish, clear() drops every version") {
     import graft.sources.v2.LakeGenerations
     // the log is correctness-bearing for exactly-once resume, so publish
     // renames to a FRESH versioned name (a delete-then-rename would have
@@ -325,25 +311,13 @@ class CompactionSpec extends AnyFunSuite {
     assert(g2.length == 1 && g2.head > g1.head,
       s"superseded version must be cleaned after the new one is visible: ${g2.mkString(",")}")
 
-    // a round-4 lake's unversioned log is still read; the next publish
-    // migrates it to a versioned file; clear() (truncate semantics)
-    // removes every variant
-    val legacyDir = java.nio.file.Files.createTempDirectory("gm_legacy").toString
-    val lp = new org.apache.hadoop.fs.Path(legacyDir)
-    val fs = lp.getFileSystem(spark.sessionState.newHadoopConf())
-    val rec = LakeGenerations.Gen(1L, "tok1", Set("a.geomedea"), Set("b.geomedea"))
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(legacyDir, LakeGenerations.FileName),
-      (rec.line + "\n").getBytes("UTF-8"))
-    assert(LakeGenerations.read(fs, lp) == Seq(rec))
-    LakeGenerations.append(fs, lp, "tok2", Seq("b.geomedea"), Seq("c.geomedea"))
-    assert(LakeGenerations.read(fs, lp).map(_.gen) == Seq(1L, 2L))
-    assert(!new java.io.File(legacyDir, LakeGenerations.FileName).exists(),
-      "legacy log must be migrated away after a versioned publish")
-    LakeGenerations.clear(fs, lp)
-    assert(LakeGenerations.read(fs, lp).isEmpty)
-    assert(new java.io.File(legacyDir).listFiles()
-      .forall(f => !f.getName.startsWith("_generations")))
+    // clear() (truncate semantics) removes every version
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    assert(LakeGenerations.read(fs, p).map(_.gen) == Seq(1L, 2L))
+    LakeGenerations.clear(fs, p)
+    assert(LakeGenerations.read(fs, p).isEmpty)
+    assert(genFiles().isEmpty)
   }
 
   test("LakeHealth: empty lineage snapshot reports 0 features instead of an NPE") {
@@ -354,6 +328,33 @@ class CompactionSpec extends AnyFunSuite {
       .repartition(1).write.parquet(s"$dir/_lineage/v=1")
     val h = graft.table.LakeHealth.describe(spark, dir)
     assert(h.layout == "parquet" && h.rows.contains(0L) && h.generation == 1)
+  }
+
+  test("offset JSON: checkpoints of the earlier encoder parse unchanged; malformed offsets are rejected") {
+    import graft.sources.v2.GeomedeaOffset
+    // json() output of the hand-written encoder the Jackson codec
+    // replaced (it wrote control chars as 4-hex-digit escapes), byte for
+    // byte: checkpoints it wrote must keep resuming
+    val odd = Seq("q\"uote.geomedea", "back\\slash.fgb", "br]acket}.geomedea",
+      "co,mma.geomedea", "new\nline.geomedea", "z\u00fcrich-\u6771\u4eac.geomedea")
+    Seq(
+      "{\"gen\":0,\"files\":[]}" -> GeomedeaOffset(0L, Seq.empty),
+      "{\"gen\":3,\"files\":[\"part-abc-0.geomedea\",\"part-abc-1.geomedea\"]}" ->
+        GeomedeaOffset(3L, Seq("part-abc-1.geomedea", "part-abc-0.geomedea")),
+      ("{\"gen\":7,\"files\":[\"back\\\\slash.fgb\",\"br]acket}.geomedea\"," +
+        "\"co,mma.geomedea\",\"new\\u000aline.geomedea\",\"q\\\"uote.geomedea\"," +
+        "\"z\u00fcrich-\u6771\u4eac.geomedea\"]}") -> GeomedeaOffset(7L, odd)
+    ).foreach { case (golden, want) =>
+      val got = GeomedeaOffset.fromJson(golden)
+      assert(got.gen == want.gen && got.files == want.files.sorted, golden)
+      assert(GeomedeaOffset.fromJson(want.json()).files == want.files.sorted)
+    }
+    // no gen, a negative gen, a string gen, non-string files, no files,
+    // a bare name array (the old unversioned form), not JSON at all
+    Seq("{\"files\":[]}", "{\"gen\":-1,\"files\":[]}", "{\"gen\":\"1\",\"files\":[]}",
+      "{\"gen\":1,\"files\":[1,2]}", "{\"gen\":1}", "[\"a.geomedea\"]", "", "{\"gen\":").foreach { bad =>
+      intercept[IllegalArgumentException](GeomedeaOffset.fromJson(bad))
+    }
   }
 
   test("offset snapshot: mid-swap replacements tracked; a swap landing during the listing retries") {

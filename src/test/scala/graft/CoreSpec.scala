@@ -352,6 +352,29 @@ class CoreSpec extends AnyFunSuite {
     }
   }
 
+  test("wkb envelope scan rejects counts larger than the bytes left, as read does") {
+    def le(n: Int) = java.nio.ByteBuffer.allocate(4).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      .putInt(n).array()
+    def deg(d: Double) = java.nio.ByteBuffer.allocate(8).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      .putDouble(d).array()
+    // 37-byte Polygon: three rings, the exterior one coordinate, then a
+    // hole claiming 2^28 coordinates (16 * 2^28 wraps to 0 in Int) and an
+    // empty hole
+    val poly = Array[Byte](1) ++ le(3) ++ le(3) ++ le(1) ++ deg(1.0) ++ deg(2.0) ++
+      le(1 << 28) ++ le(0)
+    assert(poly.length == 37)
+    // LineString claiming 2^28 coordinates and MultiPolygon claiming 1000
+    // polygons with no bytes after the count; MultiPoint claiming 2
+    // points with one after it
+    val line = Array[Byte](1) ++ le(2) ++ le(1 << 28)
+    val multiPoly = Array[Byte](1) ++ le(6) ++ le(1000)
+    val multiPt = Array[Byte](1) ++ le(4) ++ le(2) ++ Array[Byte](1) ++ le(1) ++ deg(0) ++ deg(0)
+    Seq(poly, line, multiPoly, multiPt).foreach { b =>
+      intercept[IllegalArgumentException](Wkb.envelopeOf(b))
+      intercept[IllegalArgumentException](Wkb.read(b))
+    }
+  }
+
   test("WKT parser goldens (wkt.rs:150-300)") {
     import graft.geom.Wkt
     def deg(d: Double) = ScaledCoord.toScaled(d)

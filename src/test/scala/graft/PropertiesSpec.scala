@@ -248,8 +248,8 @@ object PropertiesSpec extends Properties("graft") {
     Prop.forAll(
       Gen.chooseNum(0L, Long.MaxValue / 2),
       Gen.choose(0, 12).flatMap(n => Gen.listOfN(n,
-        // exercise the hand-rolled quoting/scanning: quotes, backslashes,
-        // control chars, ']' and '}' inside names, unicode
+        // exercise the codec's escaping: quotes, backslashes, control
+        // chars, ']' and '}' inside names, unicode
         Gen.listOf(Gen.oneOf(Gen.alphaNumChar, Gen.oneOf('"', '\\', ']', '}', ',', '\n', '\t', 'ü', '')))
           .map(_.mkString).suchThat(_.nonEmpty)))) { (gen: Long, names: List[String]) =>
       val off = graft.sources.v2.GeomedeaOffset(gen, names)

@@ -317,6 +317,64 @@ class StreamAndAggSpec extends AnyFunSuite {
       "a length-consistent manifest extent must drive streaming planning-time pruning")
   }
 
+  test("streaming planning: a hand-copied shard leaves the manifest stale; every row still emits once") {
+    // a shard copied in outside the writer leaves a manifest that no
+    // longer matches the listing: the stream then plans its fresh shards
+    // from their headers, as a batch scan of the lake does — with and
+    // without the bbox option, across restarts from the same checkpoint
+    import spark.implicits._
+    import org.apache.spark.sql.streaming.Trigger
+    import graft.codec.FeatureCodec.{Feature, PInt64}
+    import graft.sources.v2.{ContainerFormat, GeomedeaManifest}
+    val base = java.nio.file.Files.createTempDirectory("gm_stale_copy").toString
+    val lake = s"$base/lake"
+    def pt(i: Int) = graft.geom.Wkb.Pt(i * 1000000, i * 500000)
+    def append(ids: Range): Unit =
+      ids.map(i => (graft.geom.Wkb.write(pt(i)),
+        Seq(graft.sources.GeoJsonIngest.toCell("id", PInt64(i.toLong)))))
+        .toDF("wkb", "props").repartition(2).write.format("geomedea").mode("append").save(lake)
+    def copyIn(name: String, ids: Range): Unit =
+      java.nio.file.Files.write(java.nio.file.Paths.get(lake, name),
+        graft.sources.GeomedeaFile.write(ids.map(i => Feature(pt(i), Vector("id" -> PInt64(i.toLong)))),
+          compressed = true, pageSizeGoal = 256))
+    def manifestValid(): Boolean = {
+      val p = new org.apache.hadoop.fs.Path(lake)
+      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+      GeomedeaManifest.validated(fs, p, ContainerFormat.Geomedea.shards(fs, p)).isDefined
+    }
+    val emitted = Map(true -> new java.util.concurrent.ConcurrentLinkedQueue[Long](),
+      false -> new java.util.concurrent.ConcurrentLinkedQueue[Long]())
+    // ids 0..79 lie inside the rect, ids 100..119 outside it
+    def run(bbox: Boolean): Unit = {
+      val r = spark.readStream.format("geomedea")
+      (if (bbox) r.option("bbox", "0,0,80000000,40000000") else r).load(lake)
+        .writeStream.foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+          df.select(col("props")(0)("i")).collect().foreach(row => emitted(bbox).add(row.getLong(0)))
+          ()
+        }
+        .option("checkpointLocation", s"$base/ckpt_$bbox")
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    }
+    def check(ids: Seq[Long]): Unit = {
+      Seq(true, false).foreach(run)
+      assert(emitted(false).asScala.toSeq.sorted == ids.sorted)
+      assert(emitted(true).asScala.toSeq.sorted == ids.filter(_ < 100).sorted)
+    }
+
+    append(0 until 40)
+    copyIn("copied-a.geomedea", 100 until 120)
+    copyIn("copied-b.geomedea", 40 until 50)
+    assert(!manifestValid())
+    check((0 until 50).map(_.toLong) ++ (100 until 120).map(_.toLong))
+    // the next commit's refresh covers the copies; a new copy makes the
+    // manifest stale again, and only the new rows are emitted
+    append(50 until 60)
+    assert(manifestValid())
+    copyIn("copied-c.geomedea", 60 until 80)
+    assert(!manifestValid())
+    check((0 until 80).map(_.toLong) ++ (100 until 120).map(_.toLong))
+  }
+
   test("streaming -> native format: foreachBatch writes reference-format shards per batch") {
     // the streaming story composes with the distributed .geomedea writer:
     // readStream -> foreachBatch -> write.format("geomedea") appends
